@@ -249,17 +249,13 @@ class ClickHouseStore:
         written-sample count (A3)."""
         from remote_tsdb_clickhouse_spark.sources.writer import write_request_rows
 
-        rows = write_request_rows(req)
+        rows = write_request_rows(req).to_pylist()
         url = insert_url(self.base_url, self.table)
         if self.database:
             from urllib.parse import quote
 
             url += f"&database={quote(self.database)}"
-        dicts = (
-            {"ts": ts, "metric_name": name, "labels": labels, "value": value}
-            for ts, name, labels, value in rows
-        )
-        for payload in rows_to_jsoneachrow(dicts, self.batch_rows):
+        for payload in rows_to_jsoneachrow(rows, self.batch_rows):
             self._http(url, payload, {**self._headers, "Content-Type": "application/x-ndjson"})
         return len(rows)
 

@@ -36,7 +36,7 @@ from remote_tsdb_clickhouse_spark.plans.read_plan import (
     downsample_interval_seconds,
     read_query_grouped,
 )
-from remote_tsdb_clickhouse_spark.sources.samples_store import SamplesStore
+from remote_tsdb_clickhouse_spark.sources.samples_store import SamplesStore, sorted_partitioned_write
 
 
 class RollupStore:
@@ -78,12 +78,7 @@ class RollupStore:
             .select("ts", "metric_name", "labels", "value")
             .withColumn(PARTITION_COLUMN, F.to_date("ts"))
         )
-        (
-            rolled.sortWithinPartitions("metric_name", "labels", "ts")
-            .write.partitionBy(PARTITION_COLUMN)
-            .mode("overwrite")
-            .parquet(self._res_path(interval_s))
-        )
+        sorted_partitioned_write(rolled).mode("overwrite").parquet(self._res_path(interval_s))
 
     def resolutions(self) -> list[int]:
         if not os.path.isdir(self.path):

@@ -10,7 +10,15 @@ The reference's storage is one ClickHouse MergeTree table ordered by
 - **Sorted within files by** ``(metric_name, labels, ts)`` via
   ``sortWithinPartitions`` at write — parquet row-group min/max statistics
   on ``metric_name`` then prune like the MergeTree primary-key prefix, and
-  series rows are physically adjacent (cheap grouping).
+  series rows are physically adjacent (cheap grouping).  Every write goes
+  through :func:`sorted_partitioned_write`, whose sort keys lead with
+  ``ts_date``: a ``partitionBy`` write needs its rows ordered by the
+  partition column, and Spark's planned write
+  (``spark.sql.optimizer.plannedWrite.enabled``) otherwise adds its own
+  sort on ``ts_date`` alone, which replaces the series sort and leaves the
+  files unsorted.  With ``ts_date`` first the requirement is already met,
+  no sort is added, and since ``ts_date`` is constant within a file the
+  file order is ``(metric_name, labels, ts)``.
 - **Append-atomicity**: each ``append()`` lands via parquet's committed-file
   protocol — readers never see partial batches, the analog of the
   reference's per-request transaction (``write.go:14-22,60``).
@@ -30,7 +38,7 @@ The reference's storage is one ClickHouse MergeTree table ordered by
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 
 from remote_tsdb_clickhouse_spark.model import (
@@ -38,6 +46,14 @@ from remote_tsdb_clickhouse_spark.model import (
     PARTITIONED_SAMPLES_SCHEMA,
     SAMPLES_FIELDS,
 )
+
+
+def sorted_partitioned_write(df: DataFrame) -> DataFrameWriter:
+    """The writer of a date-partitioned samples table whose every file is
+    sorted by ``(metric_name, labels, ts)``; ``df`` carries ``ts_date``.
+    Callers pick the mode and the path."""
+    keys = (PARTITION_COLUMN, "metric_name", "labels", "ts")
+    return df.sortWithinPartitions(*keys).write.partitionBy(PARTITION_COLUMN)
 
 
 class SamplesStore:
@@ -62,18 +78,13 @@ class SamplesStore:
     def append(self, df: DataFrame) -> None:
         """Append canonical-schema rows (one micro-batch / one request).
 
-        Sorting within partitions gives every file the MergeTree-like
-        physical order; partitionBy(date) keeps time pruning.
+        Each task writes one file per date partition it holds, in the
+        MergeTree-like physical order; partitionBy(date) keeps time pruning.
         """
         with self._append_lock:
-            (
-                df.select(*SAMPLES_FIELDS)
-                .withColumn(PARTITION_COLUMN, F.to_date("ts"))
-                .sortWithinPartitions("metric_name", "labels", "ts")
-                .write.partitionBy(PARTITION_COLUMN)
-                .mode("append")
-                .parquet(self.path)
-            )
+            sorted_partitioned_write(
+                df.select(*SAMPLES_FIELDS).withColumn(PARTITION_COLUMN, F.to_date("ts"))
+            ).mode("append").parquet(self.path)
 
     # -- read path ----------------------------------------------------------
 
@@ -133,8 +144,7 @@ class SamplesStore:
         }
         if survivor_dates:
             (
-                survivors.sortWithinPartitions("metric_name", "labels", "ts")
-                .write.partitionBy(PARTITION_COLUMN)
+                sorted_partitioned_write(survivors)
                 .option("partitionOverwriteMode", "dynamic")
                 .mode("overwrite")
                 .parquet(self.path)
@@ -214,9 +224,7 @@ class SamplesStore:
         the OPTIMIZE analog for the micro-batch small-file problem."""
         df = self.read().withColumn(PARTITION_COLUMN, F.to_date("ts")).localCheckpoint()
         (
-            df.repartition(files_per_partition, F.col(PARTITION_COLUMN))
-            .sortWithinPartitions("metric_name", "labels", "ts")
-            .write.partitionBy(PARTITION_COLUMN)
+            sorted_partitioned_write(df.repartition(files_per_partition, F.col(PARTITION_COLUMN)))
             .option("partitionOverwriteMode", "dynamic")
             .mode("overwrite")
             .parquet(self.path)

@@ -8,31 +8,52 @@ truncated to DateTime seconds (``write.go:49``); one atomic batch per
 request (``write.go:14-22,60``).
 
 Here the flatten runs driver-side over the decoded request (requests are
-bounded — 32 MiB wire cap — so this is not a scale risk), producing one
-Arrow-backed DataFrame appended atomically via the parquet commit protocol.
-The ingest *volume* path is Structured Streaming over many requests
-(``streaming/ingest.py``), where the same row shape arrives via staged
-batches.
+bounded — 32 MiB wire cap — so this is not a scale risk).  One pass over
+the series collects the per-series name and labelset and the per-sample
+timestamps and values; the result is one ``pyarrow.Table`` in
+``SAMPLES_SCHEMA`` column order, with the series columns ``take``-n out to
+their samples.  ``createDataFrame`` ships that table to the JVM as an Arrow
+stream, so no Python worker unpickles and re-pickles the rows, and
+:class:`TimeseriesWriter` appends it as one task: one parquet file per date
+partition per request, committed atomically.  The ingest *volume* path is
+Structured Streaming over many requests (``streaming/ingest.py``), where
+the same row shape arrives via staged batches.
 """
 
 from __future__ import annotations
 
-from datetime import datetime, timezone
-
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from remote_tsdb_clickhouse_spark import prompb
 from remote_tsdb_clickhouse_spark.model import NAME_LABEL, SAMPLES_SCHEMA
 from remote_tsdb_clickhouse_spark.sources.samples_store import SamplesStore
 
+#: Seconds of 0001-01-01T00:00:00Z and 9999-12-31T23:59:59Z: the span of a
+#: Python ``datetime`` and of Spark's TIMESTAMP.  A sample outside it is
+#: rejected, not wrapped by the int64 microsecond arithmetic below.
+_MIN_TS_S = -62_135_596_800
+_MAX_TS_S = 253_402_300_799
 
-def write_request_rows(req: prompb.WriteRequest) -> list[tuple]:
-    """Flatten a WriteRequest into canonical-schema row tuples.
+#: ``SAMPLES_SCHEMA`` in Arrow: ``ts`` is ``timestamp[us, UTC]``.
+_ARROW_SCHEMA = to_arrow_schema(SAMPLES_SCHEMA)
 
-    Returns ``(ts, metric_name, labels, value)`` tuples; ms -> seconds
-    truncation and ``__name__`` extraction per the reference semantics.
+
+def write_request_rows(req: prompb.WriteRequest) -> pa.Table:
+    """Flatten a WriteRequest into one canonical-schema Arrow table.
+
+    One row per sample: ``ts`` is the ms timestamp floored to whole UTC
+    seconds, ``__name__`` becomes ``metric_name`` and the other labels the
+    ``"name=value"`` list, per the reference semantics.  Raises
+    ``ValueError`` if a timestamp falls outside years 1-9999.
     """
-    rows: list[tuple] = []
+    names: list[str] = []
+    labelsets: list[list[str]] = []
+    counts: list[int] = []
+    ts_ms: list[int] = []
+    values: list[float] = []
     for ts_msg in req.timeseries:
         name = ""
         labels: list[str] = []
@@ -41,12 +62,28 @@ def write_request_rows(req: prompb.WriteRequest) -> list[tuple]:
                 name = lb.value
                 continue
             labels.append(f"{lb.name}={lb.value}")
+        names.append(name)
+        labelsets.append(labels)
+        counts.append(len(ts_msg.samples))
         for s in ts_msg.samples:
-            # ms -> whole seconds (DateTime parity, write.go:49); tz-naive
-            # UTC to match the engine's UTC session zone
-            ts = datetime.fromtimestamp(s.timestamp // 1000, tz=timezone.utc).replace(tzinfo=None)
-            rows.append((ts, name, labels, float(s.value)))
-    return rows
+            ts_ms.append(s.timestamp)
+            values.append(s.value)
+    # ms -> whole seconds (DateTime parity, write.go:49), floored like
+    # Python's // so pre-1970 samples land in the second they fall in
+    secs = np.array(ts_ms, dtype=np.int64) // 1000
+    if len(secs) and not (_MIN_TS_S <= secs.min() and secs.max() <= _MAX_TS_S):
+        raise ValueError(f"sample timestamp outside years 1-9999: {secs.min()}s..{secs.max()}s")
+    series_of_sample = np.repeat(np.arange(len(names)), counts)
+    types = _ARROW_SCHEMA.types
+    return pa.Table.from_arrays(
+        [
+            pa.array(secs * 1_000_000, types[0]),
+            pa.array(names, types[1]).take(series_of_sample),
+            pa.array(labelsets, types[2]).take(series_of_sample),
+            pa.array(np.array(values, dtype=np.float64), types[3]),
+        ],
+        schema=_ARROW_SCHEMA,
+    )
 
 
 def write_request_df(spark: SparkSession, req: prompb.WriteRequest) -> DataFrame:
@@ -61,9 +98,10 @@ class TimeseriesWriter:
         self.store = store
 
     def write(self, req: prompb.WriteRequest) -> int:
-        rows = write_request_rows(req)
-        if not rows:
+        table = write_request_rows(req)
+        if not table.num_rows:
             return 0
-        df = self.store.spark.createDataFrame(rows, SAMPLES_SCHEMA)
+        # one task writes the request: one file per date partition
+        df = self.store.spark.createDataFrame(table, SAMPLES_SCHEMA).coalesce(1)
         self.store.append(df)
-        return len(rows)
+        return table.num_rows

@@ -107,6 +107,31 @@ def test_write_error_counted(server):
     assert app.metrics.write_errors_total.value == 1
 
 
+def test_out_of_range_timestamp_write_is_500_and_stores_nothing(server, tmp_path):
+    """A sample whose second lies outside years 1-9999 fails the whole
+    request: 500, one write error, and not one of its rows (nor a file)
+    lands.  2**62 ms would wrap to 1969 in int64 microseconds if the
+    flatten did not check the range."""
+    srv, app = server
+    ok = prompb.WriteRequest(timeseries=[prompb.TimeSeries(
+        labels=[prompb.Label("__name__", "up")], samples=[prompb.Sample(1.0, 1704067200000)],
+    )])
+    assert _post(srv.port, "/write", codec.encode_write_request(ok))[0] == 200
+    before = sorted(tuple(r) for r in app.samples_provider().collect())
+    files_before = sorted((tmp_path / "samples").rglob("*.parquet"))
+
+    bad = prompb.WriteRequest(timeseries=[prompb.TimeSeries(
+        labels=[prompb.Label("__name__", "up")],
+        samples=[prompb.Sample(2.0, 1704067215000), prompb.Sample(3.0, 2**62)],
+    )])
+    errs0 = app.metrics.write_errors_total.value
+    status, body = _post(srv.port, "/write", codec.encode_write_request(bad))
+    assert status == 500 and b"outside years 1-9999" in body
+    assert app.metrics.write_errors_total.value == errs0 + 1
+    assert sorted(tuple(r) for r in app.samples_provider().collect()) == before
+    assert sorted((tmp_path / "samples").rglob("*.parquet")) == files_before
+
+
 def test_canceled_read_not_counted_as_error(spark, tmp_path):
     """context.Canceled parity (main.go:147-152): a client that disconnects
     mid-query is swallowed — no read-error increment, no 500."""

@@ -3,11 +3,12 @@ compaction, partition layout."""
 
 from __future__ import annotations
 
-from datetime import datetime
+from datetime import datetime, timezone
 
 from pyspark.sql import functions as F
 
 from remote_tsdb_clickhouse_spark import prompb
+from remote_tsdb_clickhouse_spark.model import PARTITION_COLUMN, SAMPLES_FIELDS
 from remote_tsdb_clickhouse_spark.sources.samples_store import SamplesStore
 from remote_tsdb_clickhouse_spark.sources.writer import TimeseriesWriter, write_request_rows
 
@@ -34,14 +35,16 @@ def test_write_request_flatten_semantics():
         [("instance", "10.0.0.1:9100"), ("job", "omada")],
         [(35.5, 1704067200123)],  # ms with sub-second junk
     )
-    rows = write_request_rows(req)
-    assert rows == [
-        (
-            datetime(2024, 1, 1, 0, 0, 0),  # truncated to the second
-            "go_goroutines",
-            ["instance=10.0.0.1:9100", "job=omada"],
-            35.5,
-        )
+    table = write_request_rows(req)
+    assert table.schema.names == SAMPLES_FIELDS
+    assert str(table.schema.field("ts").type) == "timestamp[us, tz=UTC]"
+    assert table.to_pylist() == [
+        {
+            "ts": datetime(2024, 1, 1, 0, 0, 0, tzinfo=timezone.utc),  # truncated to the second
+            "metric_name": "go_goroutines",
+            "labels": ["instance=10.0.0.1:9100", "job=omada"],
+            "value": 35.5,
+        }
     ]
 
 
@@ -392,3 +395,65 @@ def test_partition_pruning_keeps_the_end_instant_day(spark, tmp_path):
     q = ReadQuery(start_ms=1704153600000, end_ms=1704240000000)  # end = day-3 00:00:00Z
     got = sorted(r["max_0"] for r in read_query_grouped(store.read(), q).collect())
     assert got == [1.0, 2.0]  # the midnight sample is IN (inclusive F2 upper)
+
+
+def _assert_files_sorted(root) -> int:
+    """Every parquet file under ``root`` holds its rows in the store's
+    physical order ``(metric_name, labels, ts)``; returns the file count."""
+    import pyarrow.parquet as pq
+
+    files = sorted(root.rglob("*.parquet"))
+    assert files
+    for f in files:
+        rows = pq.read_table(f, columns=["metric_name", "labels", "ts"]).to_pylist()
+        keys = [(r["metric_name"], r["labels"], r["ts"]) for r in rows]
+        assert keys == sorted(keys), f"unsorted: {f.relative_to(root)}"
+    return len(files)
+
+
+def test_every_write_path_lands_sorted_files(spark, tmp_path):
+    """Physical layout after an append, a range delete, a compaction and a
+    rollup build: every file is sorted by (metric_name, labels, ts), and
+    one request of one day lands as exactly one file.
+
+    Mutant M105: without ``ts_date`` leading the sort keys, Spark's planned
+    write sorts by ``ts_date`` alone and the series sort is dropped, so the
+    files keep the request's order — here series and samples arrive
+    reversed."""
+    from remote_tsdb_clickhouse_spark.sources.rollup import RollupStore
+
+    store = make_store(spark, tmp_path)
+    writer = TimeseriesWriter(store)
+    root = tmp_path / "samples"
+    day_ms = 86_400_000
+    base = 1704067200000
+
+    def reversed_request(days, k):
+        return prompb.WriteRequest(timeseries=[
+            prompb.TimeSeries(
+                labels=[prompb.Label("__name__", f"m{i % 3}"), prompb.Label("instance", f"i{i * 7 % 10}")],
+                samples=[
+                    prompb.Sample(float(k * 100 + s), base + d * day_ms + s * 60_000 + k)
+                    for d in reversed(days) for s in reversed(range(10))
+                ],
+            )
+            for i in reversed(range(30))
+        ])
+
+    writer.write(reversed_request([0], 0))
+    assert _assert_files_sorted(root) == 1  # one request, one day: one file
+    writer.write(reversed_request([0, 1], 1))
+    assert _assert_files_sorted(root) == 3  # one more file per day written
+    writer.write(reversed_request([1], 2))
+    assert _assert_files_sorted(root) == 4
+
+    store.delete_time_range(datetime(2024, 1, 1, 0, 4), datetime(2024, 1, 1, 0, 6))
+    assert store.read().where(F.col(PARTITION_COLUMN) == "2024-01-01").count() == 2 * 30 * 8
+    _assert_files_sorted(root)
+
+    store.compact(files_per_partition=1)
+    assert _assert_files_sorted(root) == 2
+
+    rollups = RollupStore(spark, store, str(tmp_path / "rollup"))
+    rollups.build(300)
+    _assert_files_sorted(tmp_path / "rollup")

@@ -728,6 +728,12 @@ MUTANTS = [
      'F.sum(F.when(F.col("hv") < 10, 1).otherwise(0))',
      'F.sum(F.when(F.col("hv") <= 10, 1).otherwise(0))',
      ["tests/test_entry_clauses.py"]),
+    # -- batch 19: physical layout of the samples store --------------------
+    ("M105", "store write sort loses its ts_date prefix (planned write drops the sort)",
+     "remote_tsdb_clickhouse_spark/sources/samples_store.py",
+     'keys = (PARTITION_COLUMN, "metric_name", "labels", "ts")',
+     'keys = ("metric_name", "labels", "ts")',
+     ["tests/test_store_writer.py"]),
 ]
 
 
