@@ -112,8 +112,8 @@ def _samples_spread(default_parallelism: int) -> int | None:
     defaultParallelism so the scale guard is unit-testable.  At local[32]
     this returns exactly the pre-guard constant — a provable local no-op
     (tests/test_entry_misc.py::test_samples_spread_guard asserts both the
-    function and the cached frame's partition count), so the r8-hashed
-    tsdb cohort's driver hashes stay valid."""
+    function and the cached frame's partition count), so no tsdb query's
+    local result changes."""
     if default_parallelism <= _LOCAL_BENCH_PARALLELISM:
         return _SAMPLES_SPREAD
     return None
@@ -131,8 +131,9 @@ def _samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     # OBJECT is additionally memoized per session/sf (_TABLE_CACHE, same
     # catalog-metastore argument as _tbl): rebuilding it per call re-ran
     # the parquet file-listing + footer-schema driver job every query.
-    # Re-persist after the bench's family-boundary clearCache (which
-    # unregisters every cached plan): is_cached is a driver-side flag.
+    # is_cached is a driver-side flag that clearCache does not reset, so
+    # after a clearCache only an explicit persist() re-registers the frame
+    # (family_warmup does that at the bench's family boundaries).
     # spread() BEFORE the label derivation (r7 verdict task 1): the
     # testdata events table is a single parquet row group, so the scan is
     # ONE partition and the family's first map stage (regexp label
@@ -2041,7 +2042,7 @@ def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     1 + id % 5 solid-gray JPEG frames at dwMicroSecPerFrame = 500_000, so
     their schedule derives from PARSING the container (frame count x
     500 ms — deliberately different from meta.duration_ms, which the AVI
-    branch ignores) and the driver row hash-verifies the RIFF walk +
+    branch ignores) and the oracle compare verifies the RIFF walk +
     MJPEG timeline.  Even ids keep the stub duration-driven schedule.
     Frame bytes are dropped from the emitted columns (PNG payloads are
     not SQL-expressible; their pixel content is pytest-pinned in
@@ -3628,7 +3629,7 @@ def q_multimodal_jpeg_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     Huffman decode -> dequant -> IDCT -> channel-mean features — even
     doc_ids as BASELINE (SOF0) streams, odd doc_ids as PROGRESSIVE (SOF2,
     DC first/refine + per-component AC first/refine scans), so the r6
-    progressive decode path is driver-hashed, not just pytest'd.
+    progressive decode path is oracle-checked, not just pytest'd.
     Grayscale is the exact path for both modes: a solid block is DC-only
     (IDCT = DC/8 uniformly, all-ones quant stores it exactly — the
     successive-approximation scans reassemble the same DC bit-exactly)
@@ -4510,7 +4511,7 @@ def _ch_fake_transport():
 
 
 def q_ch_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ClickHouse sink under the driver hash: a deterministic samples
+    """ClickHouse sink under the oracle compare: a deterministic samples
     slice flows through the partition-parallel JSONEachRow encoder
     (``ClickHouseSink.write`` — the reference's bulk insert path,
     ``write.go:25-60``) into a spool-capturing transport, and the spooled
@@ -4633,8 +4634,10 @@ def family_warmup(spark: SparkSession, sf_dir: str, family: str) -> None:
        must execute its full serving plan from the persisted inputs.
     """
     if family == "tsdb":
-        # all tsdb_* queries derive from this persisted frame
-        _samples(spark, sf_dir).count()
+        # all tsdb_* queries derive from this persisted frame; persist it
+        # explicitly, because _samples() skips the persist once the frame's
+        # driver-side is_cached flag is set, and a clearCache leaves it set
+        _samples(spark, sf_dir).persist().count()
         # the rollup query's store build (base write + 60 s rollup) is the
         # continuous-aggregate maintenance job, not the serve path
         _rollup_store(spark, sf_dir)
@@ -4701,8 +4704,8 @@ def family_warmup(spark: SparkSession, sf_dir: str, family: str) -> None:
         # ...and the REAL codec composition the fake frame never touched:
         # the AVI walk -> JPEG entropy decode (baseline AND progressive)
         # -> PNG encode chain JIT-compiles its numpy kernels on first use,
-        # which r6's driver run showed landing inside the window leader's
-        # timed trial (multimodal_frame_sample 2.70 s driver vs 0.49 s
+        # which r6's driver run showed landing inside the first multimodal
+        # query's timed trial (multimodal_frame_sample 2.70 s driver vs 0.49 s
         # local — the gap was exactly this warmup; r6 verdict task 3).
         # One 8x8 2-frame fixture per codec path keeps the warmup ~ms-
         # sized while touching every kernel the real queries hit.
@@ -4725,969 +4728,25 @@ def family_warmup(spark: SparkSession, sf_dir: str, family: str) -> None:
         multimodal.extract_features(warm).collect()
 
 
-#: The round-9 driver correctness window (the harness hashes the FIRST 50
-#: ``queries()`` entries each round — VERDICT r1).  Exactly the r8
-#: verdict's task-1 rotation: retire the ENTIRE 42-row staleness ledger —
-#: the 22 rows whose last driver hash is r5 (the oldest surviving cohort,
-#: all pre-dating the r6 ``_tbl`` memoization), then the 10 tsdb rows with
-#: r6 hashes and the 10 with r7 hashes (the ``_samples`` readers staled by
-#: the r8 spread), then the last 8 slots filled oldest-r6-first.  Within
-#: each cohort the rows keep the relative order of the window that last
-#: hashed them (r5/r6/r7 respectively), which preserves the load-bearing
-#: build chains: sim_pq_codes -> sim_pq_adc_topk -> sim_pq_trained (one
-#: ``_TRAIN_CACHE`` build serves the family) and the dedup rows' staged
-#: order.  After this round NO driver row's hash predates r6, and every
-#: ``_samples`` reader's hash postdates the r8 spread (22 tsdb rows were
-#: re-hashed through it in r8; the remaining 20 are re-hashed here).
-#:
-#: Staleness ledger AFTER this round (r10 planning): the strict
-#: at-current-revision debt is expected to be EMPTY of pre-r8 load-path
-#: concerns — post-r9 hash distribution: r6×20, r7×40, r8×50, r9×50,
-#: where the r6/r7 survivors never read ``_samples`` and their operator
-#: files are untouched since their hashes.  The r9 advisor fixes are
-#: scoped to stay out of hashed paths: the ``_samples_spread`` guard is a
-#: provable local no-op (dp==32 keeps the knee; regression-tested), so the
-#: r8 tsdb cohort is NOT re-staled; the ivf_pq legacy-index guard adds a
-#: check only on the prebuilt-index serve path, so sim_ivf_pq_topk and
-#: sim_ivf_pq_recall (r7 hashes) are the natural FIRST two rows of the
-#: r10 window; the staging lstat/marker hardening touches only
-#: streaming_dedup's setup (r7 hash, rows-only check) — queue it third.
-#: Fill the rest of r10 oldest-first from the r6 cohort (multimodal_*,
-#: streaming_sessionize, events_asof_*, orders_market_basket, ...) then
-#: the r7 cohort (TPC-H block) — pure rotation hygiene, no known debt.
-def _require(cond: bool, what: str) -> None:
-    """Window-invariant check that survives ``python -O`` (ADVICE r18
-    item 2: plain ``assert`` statements are stripped under -O, leaving
-    only the test suite to catch a drifted window literal).  Raises
-    explicitly so the module fails to import on drift in every
-    interpreter mode; tests/test_entry_contract.py duplicates each
-    invariant independently."""
-    if not cond:
-        raise AssertionError("window invariant violated: " + what)
-
-
-
-_R9_WINDOW = [
-    # 22 r5-hashed rows (oldest cohort), r5-window relative order —
-    # keeps the PQ build chain and staged dedup order intact
-    "text_pii_scrub", "doc_chunk_windows", "doc_chunk_texts",
-    "streaming_windowed_max", "text_quality_filter", "events_salted_stats",
-    "sim_pq_codes", "sim_pq_adc_topk", "sim_pq_trained",
-    "sim_topk_lsh_multiprobe", "ch_pushdown_read", "q2_min_cost_region",
-    "q11_important_parts", "q20_promotable_suppliers",
-    "q21_waiting_suppliers", "dedup_lines", "dedup_bloom",
-    "sim_matryoshka_topk", "dataset_shuffle_shards", "text_vocab",
-    "events_bucketed_join", "text_bigram_lm",
-    # 10 spread-staled tsdb rows with r6 hashes, r6-window relative order
-    "tsdb_rollup_hierarchy", "tsdb_subquery_maxrate", "tsdb_retention_serve",
-    "tsdb_mad_over_time", "tsdb_sum_by_label", "tsdb_topk_series",
-    "tsdb_max_gap", "tsdb_stale_series", "tsdb_label_values",
-    "tsdb_series_count",
-    # 10 spread-staled tsdb rows with r7 hashes, r7-window relative order
-    "tsdb_read_eq", "tsdb_read_name_regex", "tsdb_read_nre",
-    "tsdb_label_regex", "tsdb_downsample_30s", "tsdb_downsample_range_clamp",
-    "tsdb_series_assembly", "tsdb_ignore_label", "tsdb_rate",
-    "tsdb_label_project",
-    # 8 fill slots, oldest-r6-first, r6-window relative order
-    "dedup_minhash_recall", "ch_sink_roundtrip", "dedup_containment",
-    "dataset_interleave", "dedup_simhash", "doc_stats_by_source",
-    "customers_lapsed", "dataset_split",
-]
-_require(len(_R9_WINDOW) == 50 and len(set(_R9_WINDOW)) == 50,
-         "len(_R9_WINDOW) == 50 and len(set(_R9_WINDOW)) == 50")
-
-
-#: The round-10 rotation (prepared in r9 while the staleness map was
-#: fresh, hoisted live in r10 with no membership change, hashed by
-#: CORRECTNESS_r10).  Construction, per the plan in the r9 docstring
-#: above, against the post-r9 hash map (r6x20, r7x40, r8x50, r9x50 —
-#: verified against CORRECTNESS_r0{1..9}.json):
-#:
-#: 1. The three rows whose serve/setup paths the r9 advisor fixes
-#:    touched, first: ``sim_ivf_pq_topk`` / ``sim_ivf_pq_recall`` (the
-#:    legacy-index structural guard sits on their prebuilt-serve path)
-#:    and ``streaming_dedup`` (lstat/marker staging hardening).  All
-#:    other r9 diffs are test-only or provable local no-ops
-#:    (``_samples_spread`` at dp=32).
-#: 2. The ENTIRE r6 cohort (20 rows — oldest surviving hashes after r9),
-#:    r6-window relative order.
-#: 3. 27 of the 37 remaining r7-cohort rows, r7-window relative order
-#:    (the TPC-H block, sales_rollup, the multimodal block,
-#:    sim_ivf_balance) — exactly filling the 50 slots.
-#:
-#: After this round's driver run NO row's hash predates r7 and zero
-#: strict-stale rows remain (the advisor-touched trio heads the window).
-_R10_WINDOW = [
-    # r9-advisor-touched serve/setup paths first
-    "sim_ivf_pq_topk", "sim_ivf_pq_recall", "streaming_dedup",
-    # the full r6 cohort (20), r6-window relative order
-    "streaming_sessionize", "events_asof_tolerance", "events_asof_next",
-    "orders_market_basket", "sim_topk_filtered", "streaming_dropduplicates",
-    "events_bucketed_agg", "sim_topk_lsh", "sim_topk_ivf",
-    "sim_ivf_trained", "protocol_roundtrip_read",
-    "protocol_response_assembly", "events_value_histogram",
-    "events_daily_pivot", "events_retention", "emb_label_centroids",
-    "min_cost_supplier", "orders_with_returns", "orders_no_returns",
-    "order_value_quantiles",
-    # 27 r7-cohort rows, r7-window relative order
-    "q1_pricing_summary", "q3_shipping_priority",
-    "q4_late_shipment_priority", "q5_local_supplier_volume",
-    "q7_nation_trade_volume", "q8_market_share", "q9_product_type_profit",
-    "q10_returned_item_reporting", "q12_ship_lateness_priority",
-    "q13_customer_order_distribution", "q14_promo_revenue",
-    "q15_top_supplier", "q16_supplier_part_cardinality",
-    "q17_small_quantity_revenue", "q18_large_orders",
-    "q19_or_predicate_revenue", "q22_inactive_customer_balance",
-    "sales_rollup", "multimodal_features", "multimodal_png_features",
-    "multimodal_jpeg_features", "multimodal_gif_frames",
-    "multimodal_frame_sample", "multimodal_resize", "multimodal_resample",
-    "multimodal_audio_energy", "sim_ivf_balance",
-]
-_require(len(_R10_WINDOW) == 50 and len(set(_R10_WINDOW)) == 50,
-         "len(_R10_WINDOW) == 50 and len(set(_R10_WINDOW)) == 50")
-
-
-#: The ACTIVE round-11 rotation (hoisted in ``queries()`` below).  The
-#: r10 session prepared a draft; r11 rebuilt the fill per the deferred
-#: RE2-guard note before flipping the hoist, so the window absorbs every
-#: row the guard diff staled.  Construction against the post-r10 hash
-#: map (r7x10, r8x50, r9x50, r10x50 — verified mechanically:
-#: ``python tools/staleness_ledger.py --pending _R11_WINDOW --check
-#: _R12_WINDOW``):
-#:
-#: 1. The complete r7 cohort (10 rows — the oldest hashes after r10):
-#:    the recall-diagnostic family plus dedup_groups/dedup_cluster_stats.
-#:    They share the memoized exact-top-10 baseline + trained IVF/PQ
-#:    builds (and the dedup pair shares the checkpointed components
-#:    build), so they stay contiguous in r7-window relative order.
-#: 2. All 40 matcher-path rows the r11 RE2-guard extension touches that
-#:    this window can hold (the r10 plan's deferred note, executed): the
-#:    22 r8-hashed tsdb derived-function rows (every one routes its input
-#:    through the matcher compiler) in r8-window relative order, then the
-#:    18 r9-hashed matcher rows (ch_pushdown_read + the tsdb matcher /
-#:    downsample / serve block) in r9-window relative order.  The
-#:    matcher-path set was computed mechanically (AST reachability from
-#:    each queries() entry to LabelMatcher/ReadQuery/handle_read_request/
-#:    pushdown_read_request): 42 rows total — the remaining two,
-#:    protocol_roundtrip_read and protocol_response_assembly, carry r10
-#:    hashes (the freshest possible) and head _R12_WINDOW; the guard
-#:    extension is additionally a proven no-op on every driver row
-#:    (tests/test_entry_contract.py::
-#:    test_driver_row_regexes_unaffected_by_re2_guard_extension — no row's
-#:    regex uses the newly-rejected constructs).
-#:
-#: The 18 non-matcher r8-cohort rows this swap displaces (streaming/
-#: events/text/dataset blocks + doc_packing) move to _R12_WINDOW below,
-#: joining the 10 r8 rows already planned for the r12 head.
-_R11_WINDOW = [
-    # the complete r7 cohort (10): recall diagnostics + dedup graph rows,
-    # r7-window relative order (shared memoized builds stay contiguous)
-    "sim_pq_recall", "sim_pq_trained_recall", "sim_pq_opq_recall",
-    "sim_lsh_recall", "sim_lsh_multiprobe_recall", "sim_ivf_recall",
-    "sim_ivf_trained_recall", "sim_matryoshka_recall", "dedup_groups",
-    "dedup_cluster_stats",
-    # 22 r8-hashed matcher-path rows (tsdb derived-function block),
-    # r8-window relative order
-    "tsdb_irate", "tsdb_delta", "tsdb_increase", "tsdb_resets_changes",
-    "tsdb_range_agg", "tsdb_moving_avg", "tsdb_rollup_serve",
-    "tsdb_binary_ratio", "tsdb_compact_serve", "tsdb_count_values",
-    "tsdb_deriv", "tsdb_exp_smooth", "tsdb_histogram_buckets",
-    "tsdb_histogram_quantile", "tsdb_label_join", "tsdb_label_replace",
-    "tsdb_offset_ratio", "tsdb_predict_linear", "tsdb_quantile_over_time",
-    "tsdb_sliding_range_max", "tsdb_stddev_over_time",
-    "tsdb_topk_per_bucket",
-    # 18 r9-hashed matcher-path rows, r9-window relative order
-    "ch_pushdown_read", "tsdb_rollup_hierarchy", "tsdb_subquery_maxrate",
-    "tsdb_retention_serve", "tsdb_mad_over_time", "tsdb_sum_by_label",
-    "tsdb_topk_series", "tsdb_max_gap", "tsdb_stale_series",
-    "tsdb_read_eq", "tsdb_read_name_regex", "tsdb_read_nre",
-    "tsdb_label_regex", "tsdb_downsample_30s", "tsdb_downsample_range_clamp",
-    "tsdb_series_assembly", "tsdb_ignore_label", "tsdb_rate",
-]
-_require(len(_R11_WINDOW) == 50 and len(set(_R11_WINDOW)) == 50,
-         "len(_R11_WINDOW) == 50 and len(set(_R11_WINDOW)) == 50")
-
-
-#: The round-12 rotation (hoisted r12, landed 50/50 green in
-#: CORRECTNESS_r12.json), flipped exactly as the r11 session prepared it.  The r12 diffs (the
-#: backslash-parity RE2-guard scan in ``plans/matchers.py`` and the
-#: trunc-toward-zero ms division in ``plans/read_plan.py`` /
-#: ``sources/clickhouse.py``) touch only matcher-path code, so this
-#: window's two head rows are re-hashed through the new code this round
-#: and the remaining 40 matcher-path rows (all r11-hashed, and proven
-#: behavior-unaffected —
-#: tests/test_entry_contract.py::test_driver_row_regexes_unaffected_by_backslash_parity_scan
-#: and tests/test_read_plan.py::test_driver_row_read_bounds_are_nonnegative)
-#: are scheduled across _R13_WINDOW + _R14_HEAD below.  Construction
-#: against the post-r11 hash map (r8x28, r9x32, r10x50, r11x50 — verify
-#: with ``python tools/staleness_ledger.py --pending _R11_WINDOW --check
-#: _R12_WINDOW``):
-#:
-#: 1. The two r10-hashed matcher-path rows first (the only residue of
-#:    the r11 RE2-guard diff, and a proven no-op for them — see the
-#:    _R11_WINDOW note): protocol_roundtrip_read,
-#:    protocol_response_assembly.
-#: 2. The COMPLETE post-r11 r8 cohort (28 rows — the oldest hashes),
-#:    r8-window relative order: the streaming/events/text/dataset blocks
-#:    displaced from the r11 window by the matcher swap, doc_packing,
-#:    the 4 analytics rows, and the 6-row dedup chain (shares the staged
-#:    shingle/signature persists — keep contiguous, this order).
-#: 3. The first 20 of the 32 r9-cohort rows, r9-window relative order
-#:    (keeps the sim_pq_codes -> sim_pq_adc_topk -> sim_pq_trained
-#:    _TRAIN_CACHE chain contiguous).
-#:
-_R12_WINDOW = [
-    # the r11 RE2-guard residue: the two r10-hashed matcher-path rows
-    "protocol_roundtrip_read", "protocol_response_assembly",
-    # the complete post-r11 r8 cohort (28), r8-window relative order
-    "streaming_stateful_rate", "events_sessionize", "events_asof_click",
-    "events_window_agg", "events_funnel", "text_decontaminate",
-    "text_pipeline", "text_langid", "text_quality", "text_tokens",
-    "text_fingerprint", "text_tfidf_keywords", "text_repetition",
-    "dataset_dedup_apply", "dataset_length_histogram", "dataset_sample",
-    "dataset_mixture_sample", "doc_packing", "q6_revenue_delta",
-    "top_customers_per_segment", "sim_topk_bruteforce",
-    "emb_quantize_int8", "dedup_exact", "dedup_embedding_cosine",
-    "dedup_embedding_cosine_lsh", "dedup_ngram_jaccard",
-    "dedup_minhash_lsh", "dedup_incremental",
-    # first 20 r9-cohort rows, r9-window relative order (_TRAIN_CACHE
-    # chain contiguous)
-    "text_pii_scrub", "doc_chunk_windows", "doc_chunk_texts",
-    "streaming_windowed_max", "text_quality_filter", "events_salted_stats",
-    "sim_pq_codes", "sim_pq_adc_topk", "sim_pq_trained",
-    "sim_topk_lsh_multiprobe", "q2_min_cost_region", "q11_important_parts",
-    "q20_promotable_suppliers", "q21_waiting_suppliers", "dedup_lines",
-    "dedup_bloom", "sim_matryoshka_topk", "dataset_shuffle_shards",
-    "text_vocab", "events_bucketed_join",
-]
-_require(len(_R12_WINDOW) == 50 and len(set(_R12_WINDOW)) == 50,
-         "len(_R12_WINDOW) == 50 and len(set(_R12_WINDOW)) == 50")
-
-
-#: The round-13 rotation (hoisted r13, landed 50/50 green in
-#: CORRECTNESS_r13.json), flipped exactly as the r12 session prepared it
-#: — the r13 session's only rotation change, per plan.  Construction against
-#: the post-r12 hash map (r9x12, r10x48, r11x50, r12x50 — verify with
-#: ``python tools/staleness_ledger.py --pending _R12_WINDOW --check
-#: _R13_WINDOW``):
-#:
-#: 1. The complete post-r12 r9 cohort (12 rows — the oldest hashes), in
-#:    r9-window relative order: the ledger's oldest-cohort-covered rule,
-#:    no known debt beyond hash age.
-#: 2. 38 of the 40 r11-hashed matcher-path rows the r12 diffs touch (the
-#:    backslash-parity guard scan + trunc-toward-zero ms division — both
-#:    proven no-ops on every driver row's inputs, see the _R12_WINDOW
-#:    note, so the rows are hash-stale-by-diff but not behavior-stale in
-#:    the interim), in r11-window relative order: the 22 r8-origin tsdb
-#:    derived-function rows, then 16 of the 18 r9-origin matcher rows.
-#: 3. The final 2 matcher-path rows (_R14_HEAD below) do not fit the 50
-#:    slots and head the r14 window — the same 2-row residue pattern the
-#:    r11 rotation used for the protocol pair.
-_R13_WINDOW = [
-    # the complete post-r12 r9 cohort (12), r9-window relative order
-    "text_bigram_lm", "tsdb_label_values", "tsdb_series_count",
-    "tsdb_label_project", "dedup_minhash_recall", "ch_sink_roundtrip",
-    "dedup_containment", "dataset_interleave", "dedup_simhash",
-    "doc_stats_by_source", "customers_lapsed", "dataset_split",
-    # 22 r8-origin matcher-path rows (tsdb derived-function block),
-    # r11-window relative order
-    "tsdb_irate", "tsdb_delta", "tsdb_increase", "tsdb_resets_changes",
-    "tsdb_range_agg", "tsdb_moving_avg", "tsdb_rollup_serve",
-    "tsdb_binary_ratio", "tsdb_compact_serve", "tsdb_count_values",
-    "tsdb_deriv", "tsdb_exp_smooth", "tsdb_histogram_buckets",
-    "tsdb_histogram_quantile", "tsdb_label_join", "tsdb_label_replace",
-    "tsdb_offset_ratio", "tsdb_predict_linear", "tsdb_quantile_over_time",
-    "tsdb_sliding_range_max", "tsdb_stddev_over_time",
-    "tsdb_topk_per_bucket",
-    # 16 r9-origin matcher-path rows, r11-window relative order
-    "ch_pushdown_read", "tsdb_rollup_hierarchy", "tsdb_subquery_maxrate",
-    "tsdb_retention_serve", "tsdb_mad_over_time", "tsdb_sum_by_label",
-    "tsdb_topk_series", "tsdb_max_gap", "tsdb_stale_series",
-    "tsdb_read_eq", "tsdb_read_name_regex", "tsdb_read_nre",
-    "tsdb_label_regex", "tsdb_downsample_30s", "tsdb_downsample_range_clamp",
-    "tsdb_series_assembly",
-]
-_require(len(_R13_WINDOW) == 50 and len(set(_R13_WINDOW)) == 50,
-         "len(_R13_WINDOW) == 50 and len(set(_R13_WINDOW)) == 50")
-
-#: The 2 matcher-path rows the r13 slots cannot hold — they head the r14
-#: window (r11-window relative order preserved).  Until then they carry
-#: r11 hashes with the r12 diffs proven no-ops for their inputs.
-_R14_HEAD = ["tsdb_ignore_label", "tsdb_rate"]
-
-#: The round-14 rotation (hoisted r14, landed 50/50 green in
-#: CORRECTNESS_r14.json), flipped exactly as the r13 session prepared it
-#: — the r14 session's only rotation change, per plan.  Construction against
-#: the post-r13 hash map (r10x48, r11x12, r12x50, r13x50 — verify with
-#: ``python tools/staleness_ledger.py --pending _R13_WINDOW --check
-#: _R14_WINDOW``):
-#:
-#: 1. The 2 named _R14_HEAD matcher-path rows first (the only residue of
-#:    the r12 parity-fix diffs, proven no-ops on their inputs — see the
-#:    _R12_WINDOW note): after this window lands, no matcher-path row's
-#:    hash predates r13 and the r12-diff staleness debt is fully retired.
-#: 2. The COMPLETE post-r13 r10 cohort (48 rows — the then-oldest
-#:    hashes), in r10-window relative order: the ledger's
-#:    oldest-cohort-covered rule, no known debt beyond hash age.  The
-#:    multimodal block stays contiguous (shares the content-addressed
-#:    codec memo), as do the sim_ivf/PQ pairs (shared _TRAIN_CACHE
-#:    builds).
-_R14_WINDOW = [
-    # the 2 named _R14_HEAD matcher-path rows (r11-window relative order)
-    "tsdb_ignore_label", "tsdb_rate",
-    # the complete post-r13 r10 cohort (48), r10-window relative order
-    "sim_ivf_pq_topk", "sim_ivf_pq_recall", "streaming_dedup",
-    "streaming_sessionize", "events_asof_tolerance", "events_asof_next",
-    "orders_market_basket", "sim_topk_filtered", "streaming_dropduplicates",
-    "events_bucketed_agg", "sim_topk_lsh", "sim_topk_ivf",
-    "sim_ivf_trained", "events_value_histogram", "events_daily_pivot",
-    "events_retention", "emb_label_centroids", "min_cost_supplier",
-    "orders_with_returns", "orders_no_returns", "order_value_quantiles",
-    "q1_pricing_summary", "q3_shipping_priority",
-    "q4_late_shipment_priority", "q5_local_supplier_volume",
-    "q7_nation_trade_volume", "q8_market_share", "q9_product_type_profit",
-    "q10_returned_item_reporting", "q12_ship_lateness_priority",
-    "q13_customer_order_distribution", "q14_promo_revenue",
-    "q15_top_supplier", "q16_supplier_part_cardinality",
-    "q17_small_quantity_revenue", "q18_large_orders",
-    "q19_or_predicate_revenue", "q22_inactive_customer_balance",
-    "sales_rollup", "multimodal_features", "multimodal_png_features",
-    "multimodal_jpeg_features", "multimodal_gif_frames",
-    "multimodal_frame_sample", "multimodal_resize", "multimodal_resample",
-    "multimodal_audio_energy", "sim_ivf_balance",
-]
-_require(len(_R14_WINDOW) == 50 and len(set(_R14_WINDOW)) == 50,
-         "len(_R14_WINDOW) == 50 and len(set(_R14_WINDOW)) == 50")
-_require(_R14_WINDOW[:2] == _R14_HEAD,
-         "_R14_WINDOW[:2] == _R14_HEAD")
-
-#: The ACTIVE round-15 rotation (hoisted in ``queries()`` below), flipped
-#: exactly as the r14 session prepared it — the r15 session's only
-#: rotation change, per plan.  Construction
-#: against the post-r14 map (r11x10, r12x50, r13x50, r14x50 — verify with
-#: ``python tools/staleness_ledger.py --pending _R14_WINDOW --check
-#: _R15_WINDOW``):
-#:
-#: 1. The COMPLETE post-r14 r11 cohort first (10 rows — the then-oldest
-#:    hashes), in r11-window relative order: the 8 recall diagnostics
-#:    (contiguous — they share the broadcast exact-top-10 baseline and
-#:    the _TRAIN_CACHE builds) + the 2 connected-components rows.
-#: 2. The first 40 rows of the r12 cohort, in r12-window relative order:
-#:    pure hash-age rotation, no known behavior debt.  The remaining 10
-#:    r12 rows (q2/q11/q20/q21, dedup_lines, dedup_bloom,
-#:    sim_matryoshka_topk, dataset_shuffle_shards, text_vocab,
-#:    events_bucketed_join) are the natural _R16 head.
-_R15_WINDOW = [
-    # the complete post-r14 r11 cohort (10), r11-window relative order
-    "sim_pq_recall", "sim_pq_trained_recall", "sim_pq_opq_recall",
-    "sim_lsh_recall", "sim_lsh_multiprobe_recall", "sim_ivf_recall",
-    "sim_ivf_trained_recall", "sim_matryoshka_recall",
-    "dedup_groups", "dedup_cluster_stats",
-    # the first 40 rows of the r12 cohort, r12-window relative order
-    "protocol_roundtrip_read", "protocol_response_assembly",
-    "streaming_stateful_rate", "events_sessionize", "events_asof_click",
-    "events_window_agg", "events_funnel", "text_decontaminate",
-    "text_pipeline", "text_langid", "text_quality", "text_tokens",
-    "text_fingerprint", "text_tfidf_keywords", "text_repetition",
-    "dataset_dedup_apply", "dataset_length_histogram", "dataset_sample",
-    "dataset_mixture_sample", "doc_packing", "q6_revenue_delta",
-    "top_customers_per_segment", "sim_topk_bruteforce",
-    "emb_quantize_int8", "dedup_exact", "dedup_embedding_cosine",
-    "dedup_embedding_cosine_lsh", "dedup_ngram_jaccard",
-    "dedup_minhash_lsh", "dedup_incremental", "text_pii_scrub",
-    "doc_chunk_windows", "doc_chunk_texts", "streaming_windowed_max",
-    "text_quality_filter", "events_salted_stats", "sim_pq_codes",
-    "sim_pq_adc_topk", "sim_pq_trained", "sim_topk_lsh_multiprobe",
-]
-_require(len(_R15_WINDOW) == 50 and len(set(_R15_WINDOW)) == 50,
-         "len(_R15_WINDOW) == 50 and len(set(_R15_WINDOW)) == 50")
-
-#: The 10 r12-cohort rows the r15 slots cannot hold — they head the r16
-#: window (r12-window relative order preserved).  Pure hash-age residue:
-#: no code diff since r12 touches them (engine code has been
-#: diff-identical since r13 per VERDICT r14).
-_R16_HEAD = [
-    "q2_min_cost_region", "q11_important_parts",
-    "q20_promotable_suppliers", "q21_waiting_suppliers", "dedup_lines",
-    "dedup_bloom", "sim_matryoshka_topk", "dataset_shuffle_shards",
-    "text_vocab", "events_bucketed_join",
-]
-
-#: The round-16 rotation (hoisted r16, landed 50/50 green in
-#: CORRECTNESS_r16.json), flipped exactly as the r15 session prepared it
-#: — the r16 session's only rotation change, per plan.  Construction
-#: against the post-r15 map (r12x10, r13x50, r14x50, r15x50 — verify with
-#: ``python tools/staleness_ledger.py --pending _R15_WINDOW --check
-#: _R16_WINDOW``):
-#:
-#: 1. The 10 named _R16_HEAD rows first (the complete post-r15 r12
-#:    cohort — the then-oldest hashes), in r12-window relative order:
-#:    after this window lands no row's hash predates r13.
-#: 2. The first 40 rows of the r13 cohort, in r13-window relative order:
-#:    pure hash-age rotation, no known behavior debt.  The remaining 10
-#:    r13 rows (tsdb_topk_series, tsdb_max_gap, tsdb_stale_series,
-#:    tsdb_read_eq, tsdb_read_name_regex, tsdb_read_nre, tsdb_label_regex,
-#:    tsdb_downsample_30s, tsdb_downsample_range_clamp,
-#:    tsdb_series_assembly) are the natural _R17 head.  Spelled as a list
-#: literal (not ``_R16_HEAD + _R13_WINDOW[:40]``) because
-#: tools/staleness_ledger.py parses window lists from SOURCE.
-_R16_WINDOW = [
-    # the 10 named _R16_HEAD rows: the complete post-r15 r12 cohort
-    # (r12-window relative order)
-    "q2_min_cost_region", "q11_important_parts",
-    "q20_promotable_suppliers", "q21_waiting_suppliers", "dedup_lines",
-    "dedup_bloom", "sim_matryoshka_topk", "dataset_shuffle_shards",
-    "text_vocab", "events_bucketed_join",
-    # the first 40 rows of the r13 cohort, r13-window relative order
-    "text_bigram_lm", "tsdb_label_values", "tsdb_series_count",
-    "tsdb_label_project", "dedup_minhash_recall", "ch_sink_roundtrip",
-    "dedup_containment", "dataset_interleave", "dedup_simhash",
-    "doc_stats_by_source", "customers_lapsed", "dataset_split",
-    "tsdb_irate", "tsdb_delta", "tsdb_increase", "tsdb_resets_changes",
-    "tsdb_range_agg", "tsdb_moving_avg", "tsdb_rollup_serve",
-    "tsdb_binary_ratio", "tsdb_compact_serve", "tsdb_count_values",
-    "tsdb_deriv", "tsdb_exp_smooth", "tsdb_histogram_buckets",
-    "tsdb_histogram_quantile", "tsdb_label_join", "tsdb_label_replace",
-    "tsdb_offset_ratio", "tsdb_predict_linear", "tsdb_quantile_over_time",
-    "tsdb_sliding_range_max", "tsdb_stddev_over_time",
-    "tsdb_topk_per_bucket", "ch_pushdown_read", "tsdb_rollup_hierarchy",
-    "tsdb_subquery_maxrate", "tsdb_retention_serve", "tsdb_mad_over_time",
-    "tsdb_sum_by_label",
-]
-_require(len(_R16_WINDOW) == 50 and len(set(_R16_WINDOW)) == 50,
-         "len(_R16_WINDOW) == 50 and len(set(_R16_WINDOW)) == 50")
-_require(_R16_WINDOW[:10] == _R16_HEAD,
-         "_R16_WINDOW[:10] == _R16_HEAD")
-_require(_R16_WINDOW[10:] == _R13_WINDOW[:40],
-         "_R16_WINDOW[10:] == _R13_WINDOW[:40]")
-_require(not set(_R16_WINDOW) & set(_R15_WINDOW),
-         "not set(_R16_WINDOW) & set(_R15_WINDOW)")
-
-#: The 10 r13-cohort rows the r16 slots cannot hold — they head the r17
-#: window (r13-window relative order preserved).  Pure hash-age residue:
-#: all 10 are tsdb matcher-path rows whose code has been diff-identical
-#: since r13 (VERDICT r15 re-verified the package diff), so the debt is
-#: hash age only.
-_R17_HEAD = [
-    "tsdb_topk_series", "tsdb_max_gap", "tsdb_stale_series",
-    "tsdb_read_eq", "tsdb_read_name_regex", "tsdb_read_nre",
-    "tsdb_label_regex", "tsdb_downsample_30s",
-    "tsdb_downsample_range_clamp", "tsdb_series_assembly",
-]
-
-#: The round-17 rotation (hoisted r17, landed 50/50 green in
-#: CORRECTNESS_r17.json), flipped exactly as the r16 session prepared it
-#: — the r17 session's only rotation change, per plan.  Construction
-#: against the post-r16 map (r13x10, r14x50, r15x50, r16x50 — verify with
-#: ``python tools/staleness_ledger.py --pending _R16_WINDOW --check
-#: _R17_WINDOW``):
-#:
-#: 1. The 10 named _R17_HEAD rows first (the complete post-r16 r13
-#:    cohort — the then-oldest hashes), in r13-window relative order:
-#:    after this window lands no row's hash predates r14.
-#: 2. The first 40 rows of the r14 cohort, in r14-window relative order:
-#:    pure hash-age rotation, no known behavior debt.  The remaining 10
-#:    r14 rows (sales_rollup, the 8-row contiguous multimodal block —
-#:    which shares the content-addressed codec memo and so stays whole —
-#:    and sim_ivf_balance) are the natural _R18 head.  Spelled as a list
-#:    literal (not ``_R17_HEAD + _R14_WINDOW[:40]``) because
-#:    tools/staleness_ledger.py parses window lists from SOURCE.
-_R17_WINDOW = [
-    # the 10 named _R17_HEAD rows: the complete post-r16 r13 cohort
-    # (r13-window relative order)
-    "tsdb_topk_series", "tsdb_max_gap", "tsdb_stale_series",
-    "tsdb_read_eq", "tsdb_read_name_regex", "tsdb_read_nre",
-    "tsdb_label_regex", "tsdb_downsample_30s",
-    "tsdb_downsample_range_clamp", "tsdb_series_assembly",
-    # the first 40 rows of the r14 cohort, r14-window relative order
-    "tsdb_ignore_label", "tsdb_rate",
-    "sim_ivf_pq_topk", "sim_ivf_pq_recall", "streaming_dedup",
-    "streaming_sessionize", "events_asof_tolerance", "events_asof_next",
-    "orders_market_basket", "sim_topk_filtered", "streaming_dropduplicates",
-    "events_bucketed_agg", "sim_topk_lsh", "sim_topk_ivf",
-    "sim_ivf_trained", "events_value_histogram", "events_daily_pivot",
-    "events_retention", "emb_label_centroids", "min_cost_supplier",
-    "orders_with_returns", "orders_no_returns", "order_value_quantiles",
-    "q1_pricing_summary", "q3_shipping_priority",
-    "q4_late_shipment_priority", "q5_local_supplier_volume",
-    "q7_nation_trade_volume", "q8_market_share", "q9_product_type_profit",
-    "q10_returned_item_reporting", "q12_ship_lateness_priority",
-    "q13_customer_order_distribution", "q14_promo_revenue",
-    "q15_top_supplier", "q16_supplier_part_cardinality",
-    "q17_small_quantity_revenue", "q18_large_orders",
-    "q19_or_predicate_revenue", "q22_inactive_customer_balance",
-]
-_require(len(_R17_WINDOW) == 50 and len(set(_R17_WINDOW)) == 50,
-         "len(_R17_WINDOW) == 50 and len(set(_R17_WINDOW)) == 50")
-_require(_R17_WINDOW[:10] == _R17_HEAD,
-         "_R17_WINDOW[:10] == _R17_HEAD")
-_require(_R17_HEAD == _R13_WINDOW[40:],
-         "_R17_HEAD == _R13_WINDOW[40:]")
-_require(_R17_WINDOW[10:] == _R14_WINDOW[:40],
-         "_R17_WINDOW[10:] == _R14_WINDOW[:40]")
-_require(not set(_R17_WINDOW) & set(_R16_WINDOW),
-         "not set(_R17_WINDOW) & set(_R16_WINDOW)")
-
-#: The 10 r14-cohort rows the r17 slots cannot hold — they head the r18
-#: window (r14-window relative order preserved).  Pure hash-age residue:
-#: sales_rollup, the 8-row contiguous multimodal block (which shares the
-#: content-addressed codec memo and so stays whole), and sim_ivf_balance.
-#: All 10 sit on code paths that have been diff-identical since r14, so
-#: the debt is hash age only.
-_R18_HEAD = [
-    "sales_rollup", "multimodal_features", "multimodal_png_features",
-    "multimodal_jpeg_features", "multimodal_gif_frames",
-    "multimodal_frame_sample", "multimodal_resize", "multimodal_resample",
-    "multimodal_audio_energy", "sim_ivf_balance",
-]
-
-#: The round-18 rotation (hoisted r18, landed 50/50 green in
-#: CORRECTNESS_r18.json), flipped exactly as the r17 session prepared it
-#: — the r18 session's only rotation change, per plan.  Construction
-#: against the post-r17 map (r14x10, r15x50, r16x50, r17x50 — verify with
-#: ``python tools/staleness_ledger.py --pending _R17_WINDOW --check
-#: _R18_WINDOW``):
-#:
-#: 1. The 10 named _R18_HEAD rows first (the complete post-r17 r14
-#:    cohort — the then-oldest hashes), in r14-window relative order:
-#:    after this window lands no row's hash predates r15.
-#: 2. The first 40 rows of the r15 cohort, in r15-window relative order:
-#:    pure hash-age rotation, no known behavior debt.  The r11-cohort
-#:    recall-diagnostic block stays contiguous (shares the broadcast
-#:    exact-top-10 baseline and the _TRAIN_CACHE builds).  The remaining
-#:    10 r15 rows (text_pii_scrub, doc_chunk_windows, doc_chunk_texts,
-#:    streaming_windowed_max, text_quality_filter, events_salted_stats,
-#:    and the contiguous sim_pq_codes/adc/trained trio +
-#:    sim_topk_lsh_multiprobe) are the natural _R19 head.  Spelled as a
-#:    list literal (not ``_R18_HEAD + _R15_WINDOW[:40]``) because
-#:    tools/staleness_ledger.py parses window lists from SOURCE.
-_R18_WINDOW = [
-    # the 10 named _R18_HEAD rows: the complete post-r17 r14 cohort
-    # (r14-window relative order)
-    "sales_rollup", "multimodal_features", "multimodal_png_features",
-    "multimodal_jpeg_features", "multimodal_gif_frames",
-    "multimodal_frame_sample", "multimodal_resize", "multimodal_resample",
-    "multimodal_audio_energy", "sim_ivf_balance",
-    # the first 40 rows of the r15 cohort, r15-window relative order
-    "sim_pq_recall", "sim_pq_trained_recall", "sim_pq_opq_recall",
-    "sim_lsh_recall", "sim_lsh_multiprobe_recall", "sim_ivf_recall",
-    "sim_ivf_trained_recall", "sim_matryoshka_recall",
-    "dedup_groups", "dedup_cluster_stats",
-    "protocol_roundtrip_read", "protocol_response_assembly",
-    "streaming_stateful_rate", "events_sessionize", "events_asof_click",
-    "events_window_agg", "events_funnel", "text_decontaminate",
-    "text_pipeline", "text_langid", "text_quality", "text_tokens",
-    "text_fingerprint", "text_tfidf_keywords", "text_repetition",
-    "dataset_dedup_apply", "dataset_length_histogram", "dataset_sample",
-    "dataset_mixture_sample", "doc_packing", "q6_revenue_delta",
-    "top_customers_per_segment", "sim_topk_bruteforce",
-    "emb_quantize_int8", "dedup_exact", "dedup_embedding_cosine",
-    "dedup_embedding_cosine_lsh", "dedup_ngram_jaccard",
-    "dedup_minhash_lsh", "dedup_incremental",
-]
-_require(len(_R18_WINDOW) == 50 and len(set(_R18_WINDOW)) == 50,
-         "len(_R18_WINDOW) == 50 and len(set(_R18_WINDOW)) == 50")
-_require(_R18_WINDOW[:10] == _R18_HEAD,
-         "_R18_WINDOW[:10] == _R18_HEAD")
-_require(_R18_HEAD == _R14_WINDOW[40:],
-         "_R18_HEAD == _R14_WINDOW[40:]")
-_require(_R18_WINDOW[10:] == _R15_WINDOW[:40],
-         "_R18_WINDOW[10:] == _R15_WINDOW[:40]")
-_require(not set(_R18_WINDOW) & set(_R17_WINDOW),
-         "not set(_R18_WINDOW) & set(_R17_WINDOW)")
-
-#: The 10 r15-cohort rows the r18 slots cannot hold — they head the r19
-#: window (r15-window relative order preserved).  Pure hash-age residue:
-#: the scrub/chunk trio, the windowed-max streaming row, the salted-skew
-#: row, and the contiguous sim_pq codes/ADC/trained trio +
-#: sim_topk_lsh_multiprobe (which share the _TRAIN_CACHE builds and so
-#: stay together).  All 10 sit on code paths diff-identical since r13
-#: (per VERDICT r15–r17's empty engine diffs), so the debt is hash age
-#: only.
-_R19_HEAD = [
-    "text_pii_scrub", "doc_chunk_windows", "doc_chunk_texts",
-    "streaming_windowed_max", "text_quality_filter", "events_salted_stats",
-    "sim_pq_codes", "sim_pq_adc_topk", "sim_pq_trained",
-    "sim_topk_lsh_multiprobe",
-]
-
-#: The round-19 rotation (hoisted r19, landed 50/50 green in
-#: CORRECTNESS_r19.json), flipped exactly as the r18 session prepared it
-#: — the r19 session's only rotation change, per plan.  Construction
-#: against the post-r18 map (r15x10, r16x50, r17x50, r18x50 — verify with
-#: ``python tools/staleness_ledger.py --pending _R18_WINDOW --check
-#: _R19_WINDOW``):
-#:
-#: 1. The 10 named _R19_HEAD rows first (the complete post-r18 r15
-#:    cohort — the then-oldest hashes), in r15-window relative order:
-#:    after this window lands no row's hash predates r16.
-#: 2. The first 40 rows of the r16 cohort, in r16-window relative order:
-#:    pure hash-age rotation, no known behavior debt.  The remaining 10
-#:    r16 rows (tsdb_quantile_over_time, tsdb_sliding_range_max,
-#:    tsdb_stddev_over_time, tsdb_topk_per_bucket, ch_pushdown_read,
-#:    tsdb_rollup_hierarchy, tsdb_subquery_maxrate, tsdb_retention_serve,
-#:    tsdb_mad_over_time, tsdb_sum_by_label) are
-#:    the natural _R20 head.  Spelled as a list literal (not
-#:    ``_R19_HEAD + _R16_WINDOW[:40]``) because
-#:    tools/staleness_ledger.py parses window lists from SOURCE.
-_R19_WINDOW = [
-    # the 10 named _R19_HEAD rows: the complete post-r18 r15 cohort
-    # (r15-window relative order)
-    "text_pii_scrub", "doc_chunk_windows", "doc_chunk_texts",
-    "streaming_windowed_max", "text_quality_filter", "events_salted_stats",
-    "sim_pq_codes", "sim_pq_adc_topk", "sim_pq_trained",
-    "sim_topk_lsh_multiprobe",
-    # the first 40 rows of the r16 cohort, r16-window relative order
-    "q2_min_cost_region", "q11_important_parts",
-    "q20_promotable_suppliers", "q21_waiting_suppliers", "dedup_lines",
-    "dedup_bloom", "sim_matryoshka_topk", "dataset_shuffle_shards",
-    "text_vocab", "events_bucketed_join",
-    "text_bigram_lm", "tsdb_label_values", "tsdb_series_count",
-    "tsdb_label_project", "dedup_minhash_recall", "ch_sink_roundtrip",
-    "dedup_containment", "dataset_interleave", "dedup_simhash",
-    "doc_stats_by_source", "customers_lapsed", "dataset_split",
-    "tsdb_irate", "tsdb_delta", "tsdb_increase", "tsdb_resets_changes",
-    "tsdb_range_agg", "tsdb_moving_avg", "tsdb_rollup_serve",
-    "tsdb_binary_ratio", "tsdb_compact_serve", "tsdb_count_values",
-    "tsdb_deriv", "tsdb_exp_smooth", "tsdb_histogram_buckets",
-    "tsdb_histogram_quantile", "tsdb_label_join", "tsdb_label_replace",
-    "tsdb_offset_ratio", "tsdb_predict_linear",
-]
-_require(len(_R19_WINDOW) == 50 and len(set(_R19_WINDOW)) == 50,
-         "len(_R19_WINDOW) == 50 and len(set(_R19_WINDOW)) == 50")
-_require(_R19_WINDOW[:10] == _R19_HEAD,
-         "_R19_WINDOW[:10] == _R19_HEAD")
-_require(_R19_HEAD == _R15_WINDOW[40:],
-         "_R19_HEAD == _R15_WINDOW[40:]")
-_require(_R19_WINDOW[10:] == _R16_WINDOW[:40],
-         "_R19_WINDOW[10:] == _R16_WINDOW[:40]")
-_require(not set(_R19_WINDOW) & set(_R18_WINDOW),
-         "not set(_R19_WINDOW) & set(_R18_WINDOW)")
-
-#: The 10 r16-cohort rows the r19 slots cannot hold — they head the r20
-#: window (r16-window relative order preserved).  Pure hash-age residue:
-#: all 10 are tsdb over-time / serve rows (plus ch_pushdown_read) whose
-#: code paths have been diff-identical since r13 (per VERDICT r15–r18's
-#: empty engine diffs), so the debt is hash age only.
-_R20_HEAD = [
-    "tsdb_quantile_over_time", "tsdb_sliding_range_max",
-    "tsdb_stddev_over_time", "tsdb_topk_per_bucket", "ch_pushdown_read",
-    "tsdb_rollup_hierarchy", "tsdb_subquery_maxrate",
-    "tsdb_retention_serve", "tsdb_mad_over_time", "tsdb_sum_by_label",
-]
-
-#: The ACTIVE round-20 rotation (hoisted in ``queries()`` below), flipped
-#: exactly as the r19 session prepared it — the r20 session's only
-#: rotation change, per plan (judge pre-gated all 50 rows green at
-#: sf0.01 during r19 via ``tools/pregate_window.py``).  Construction
-#: against the post-r19 map (r16x10, r17x50, r18x50, r19x50 — verify with
-#: ``python tools/staleness_ledger.py --pending _R19_WINDOW --check
-#: _R20_WINDOW``):
-#:
-#: 1. The 10 named _R20_HEAD rows first (the complete post-r19 r16
-#:    cohort — the then-oldest hashes), in r16-window relative order:
-#:    after this window lands no row's hash predates r17.
-#: 2. The first 40 rows of the r17 cohort, in r17-window relative order:
-#:    pure hash-age rotation, no known behavior debt.  The remaining 10
-#:    r17 rows (q10_returned_item_reporting, q12_ship_lateness_priority,
-#:    q13_customer_order_distribution, q14_promo_revenue,
-#:    q15_top_supplier, q16_supplier_part_cardinality,
-#:    q17_small_quantity_revenue, q18_large_orders,
-#:    q19_or_predicate_revenue, q22_inactive_customer_balance) are the
-#:    natural _R21 head.  Spelled as a list literal (not
-#:    ``_R20_HEAD + _R17_WINDOW[:40]``) because
-#:    tools/staleness_ledger.py parses window lists from SOURCE.
-_R20_WINDOW = [
-    # the 10 named _R20_HEAD rows: the complete post-r19 r16 cohort
-    # (r16-window relative order)
-    "tsdb_quantile_over_time", "tsdb_sliding_range_max",
-    "tsdb_stddev_over_time", "tsdb_topk_per_bucket", "ch_pushdown_read",
-    "tsdb_rollup_hierarchy", "tsdb_subquery_maxrate",
-    "tsdb_retention_serve", "tsdb_mad_over_time", "tsdb_sum_by_label",
-    # the first 40 rows of the r17 cohort, r17-window relative order
-    "tsdb_topk_series", "tsdb_max_gap", "tsdb_stale_series",
-    "tsdb_read_eq", "tsdb_read_name_regex", "tsdb_read_nre",
-    "tsdb_label_regex", "tsdb_downsample_30s",
-    "tsdb_downsample_range_clamp", "tsdb_series_assembly",
-    "tsdb_ignore_label", "tsdb_rate",
-    "sim_ivf_pq_topk", "sim_ivf_pq_recall", "streaming_dedup",
-    "streaming_sessionize", "events_asof_tolerance", "events_asof_next",
-    "orders_market_basket", "sim_topk_filtered", "streaming_dropduplicates",
-    "events_bucketed_agg", "sim_topk_lsh", "sim_topk_ivf",
-    "sim_ivf_trained", "events_value_histogram", "events_daily_pivot",
-    "events_retention", "emb_label_centroids", "min_cost_supplier",
-    "orders_with_returns", "orders_no_returns", "order_value_quantiles",
-    "q1_pricing_summary", "q3_shipping_priority",
-    "q4_late_shipment_priority", "q5_local_supplier_volume",
-    "q7_nation_trade_volume", "q8_market_share", "q9_product_type_profit",
-]
-_require(len(_R20_WINDOW) == 50 and len(set(_R20_WINDOW)) == 50,
-         "len(_R20_WINDOW) == 50 and len(set(_R20_WINDOW)) == 50")
-_require(_R20_WINDOW[:10] == _R20_HEAD,
-         "_R20_WINDOW[:10] == _R20_HEAD")
-_require(_R20_HEAD == _R16_WINDOW[40:],
-         "_R20_HEAD == _R16_WINDOW[40:]")
-_require(_R20_WINDOW[10:] == _R17_WINDOW[:40],
-         "_R20_WINDOW[10:] == _R17_WINDOW[:40]")
-_require(not set(_R20_WINDOW) & set(_R19_WINDOW),
-         "not set(_R20_WINDOW) & set(_R19_WINDOW)")
-
-#: The 10 r17-cohort rows the r20 slots cannot hold — they head the r21
-#: window (r17-window relative order preserved).  Pure hash-age residue:
-#: the TPC-H q10..q22 tail, all on classic-SQL code paths diff-identical
-#: since r13 (per VERDICT r15–r19's empty engine diffs), so the debt is
-#: hash age only.
-_R21_HEAD = [
-    "q10_returned_item_reporting", "q12_ship_lateness_priority",
-    "q13_customer_order_distribution", "q14_promo_revenue",
-    "q15_top_supplier", "q16_supplier_part_cardinality",
-    "q17_small_quantity_revenue", "q18_large_orders",
-    "q19_or_predicate_revenue", "q22_inactive_customer_balance",
-]
-
-#: The PREPARED round-21 rotation — defined now (while the post-r20 hash
-#: map is deterministic) but NOT hoisted; a future r21 session's only
-#: rotation change would be flipping the hoist line to ``_R21_WINDOW``.
-#: Pre-gated 50/50 green at sf0.01 during r20 via
-#: ``tools/pregate_window.py _R21_WINDOW`` (driver-exact compare, 55 s).
-#: Construction against the post-r20 map (r17x10, r18x50, r19x50, r20x50
-#: — verify with ``python tools/staleness_ledger.py --pending _R20_WINDOW
-#: --check _R21_WINDOW``):
-#:
-#: 1. The 10 named _R21_HEAD rows first (the complete post-r20 r17
-#:    cohort — the then-oldest hashes), in r17-window relative order:
-#:    after this window lands no row's hash predates r18.
-#: 2. The first 40 rows of the r18 cohort, in r18-window relative order:
-#:    pure hash-age rotation, no known behavior debt.  The 8-row
-#:    contiguous multimodal block (which shares the content-addressed
-#:    codec memo) and the r11-cohort recall-diagnostic block (which
-#:    shares the broadcast exact-top-10 baseline and the _TRAIN_CACHE
-#:    builds) both stay whole.  The remaining 10 r18 rows
-#:    (q6_revenue_delta, top_customers_per_segment, sim_topk_bruteforce,
-#:    emb_quantize_int8, dedup_exact, dedup_embedding_cosine,
-#:    dedup_embedding_cosine_lsh, dedup_ngram_jaccard, dedup_minhash_lsh,
-#:    dedup_incremental) are the natural _R22 head.  Spelled as a list
-#:    literal (not ``_R21_HEAD + _R18_WINDOW[:40]``) because
-#:    tools/staleness_ledger.py parses window lists from SOURCE.
-_R21_WINDOW = [
-    # the 10 named _R21_HEAD rows: the complete post-r20 r17 cohort
-    # (r17-window relative order — the TPC-H q10..q22 tail)
-    "q10_returned_item_reporting", "q12_ship_lateness_priority",
-    "q13_customer_order_distribution", "q14_promo_revenue",
-    "q15_top_supplier", "q16_supplier_part_cardinality",
-    "q17_small_quantity_revenue", "q18_large_orders",
-    "q19_or_predicate_revenue", "q22_inactive_customer_balance",
-    # the first 40 rows of the r18 cohort, r18-window relative order
-    "sales_rollup", "multimodal_features", "multimodal_png_features",
-    "multimodal_jpeg_features", "multimodal_gif_frames",
-    "multimodal_frame_sample", "multimodal_resize", "multimodal_resample",
-    "multimodal_audio_energy", "sim_ivf_balance",
-    "sim_pq_recall", "sim_pq_trained_recall", "sim_pq_opq_recall",
-    "sim_lsh_recall", "sim_lsh_multiprobe_recall", "sim_ivf_recall",
-    "sim_ivf_trained_recall", "sim_matryoshka_recall",
-    "dedup_groups", "dedup_cluster_stats",
-    "protocol_roundtrip_read", "protocol_response_assembly",
-    "streaming_stateful_rate", "events_sessionize", "events_asof_click",
-    "events_window_agg", "events_funnel", "text_decontaminate",
-    "text_pipeline", "text_langid", "text_quality", "text_tokens",
-    "text_fingerprint", "text_tfidf_keywords", "text_repetition",
-    "dataset_dedup_apply", "dataset_length_histogram", "dataset_sample",
-    "dataset_mixture_sample", "doc_packing",
-]
-_require(len(_R21_WINDOW) == 50 and len(set(_R21_WINDOW)) == 50,
-         "len(_R21_WINDOW) == 50 and len(set(_R21_WINDOW)) == 50")
-_require(_R21_WINDOW[:10] == _R21_HEAD,
-         "_R21_WINDOW[:10] == _R21_HEAD")
-_require(_R21_HEAD == _R17_WINDOW[40:],
-         "_R21_HEAD == _R17_WINDOW[40:]")
-_require(_R21_WINDOW[10:] == _R18_WINDOW[:40],
-         "_R21_WINDOW[10:] == _R18_WINDOW[:40]")
-_require(not set(_R21_WINDOW) & set(_R20_WINDOW),
-         "not set(_R21_WINDOW) & set(_R20_WINDOW)")
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Dict ORDER is a driver contract: the window above is hoisted to the
-    # front; everything else keeps the historical grouping below.
-    # Rotation history: r1 TSDB core + classic analytics; r2 protocol +
-    # LLM-pipeline families; r3 tsdb-extended + classic-SQL; r4 the tsdb
-    # matcher/downsample/rate block + r4-touched families; r5 all 50
-    # never-verified adds (union after r5: 140/160 with zero failures
-    # ever); r6 the late-r5/IVF/oldest-r3 rotation (union 160/160); r7
-    # the _R7_WINDOW rotation (stale-TPC-H + r7-touched + oldest-r4);
-    # r8 the _R8_WINDOW rotation (all 35 r4 rows + 15 oldest spread-staled
-    # tsdb rows); r9 the _R9_WINDOW rotation (the full 42-row staleness
-    # ledger: 22 r5 rows + 20 spread-staled r6/r7 tsdb rows + 8
-    # oldest-r6 fill); r10 the _R10_WINDOW rotation (the 3 r9-advisor-
-    # touched rows + the full r6 cohort + 27 r7 rows — after it no hash
-    # predates r7 and zero strict-stale rows remain); r11 the _R11_WINDOW
-    # rotation (the full r7 cohort + the 40 oldest-hashed matcher-path
-    # rows re-hashed through the r11 RE2-guard extension; the 2 freshest
-    # matcher rows head _R12_WINDOW); r12 the _R12_WINDOW rotation, flipped
-    # exactly as prepared (the 2 r10-hashed protocol rows re-hashed through
-    # the r12 matcher/read-plan parity fixes + the complete 28-row r8
-    # cohort + 20 r9 rows; the 40 r11-hashed matcher-path rows the r12
-    # diffs touch are scheduled across _R13_WINDOW + _R14_HEAD with
-    # driver-input no-op proofs pinned in tests); r13 the _R13_WINDOW
-    # rotation, flipped exactly as prepared (the complete 12-row r9
-    # cohort + 38 of the 40 r12-diff-touched matcher-path rows, re-hashed
-    # through the r12 parity fixes at driver level; the final 2 head
-    # _R14_WINDOW below, which also absorbs the complete 48-row r10
-    # cohort); r14 the _R14_WINDOW rotation, flipped exactly as prepared
-    # (the 2 _R14_HEAD matcher rows retiring the r12-diff staleness debt
-    # + the complete 48-row r10 cohort — after it no matcher-path row's
-    # hash predates r13 and the residue is r11x10 + r12x50, scheduled
-    # across _R15_WINDOW + the named _R16 head); r15 the _R15_WINDOW
-    # rotation, flipped exactly as prepared (the complete 10-row r11
-    # cohort — the recall diagnostics + connected components — + the
-    # first 40 r12 rows; after it the residue is r12x10 + r13x50,
-    # scheduled across _R16_WINDOW + the named _R17 head); r16 the
-    # _R16_WINDOW rotation, flipped exactly as prepared (the complete
-    # 10-row r12 cohort + the first 40 r13 rows; after it the residue is
-    # r13x10 + r14x50, scheduled across _R17_WINDOW + the named _R18
-    # head); r17 the _R17_WINDOW rotation, flipped exactly as prepared
-    # (the complete 10-row r13 cohort + the first 40 r14 rows; after it
-    # the residue is r14x10 + r15x50, scheduled across _R18_WINDOW + the
-    # named _R19 head); r18 the _R18_WINDOW rotation, flipped exactly as
-    # prepared (the complete 10-row r14 cohort — sales_rollup + the
-    # contiguous 8-row multimodal block + sim_ivf_balance — + the first
-    # 40 r15 rows; after it the residue is r15x10 + r16x50, scheduled
-    # across _R19_WINDOW + the named _R20 head); r19 the _R19_WINDOW
-    # rotation, flipped exactly as prepared (the complete 10-row r15
-    # cohort + the first 40 r16 rows; after it the residue is r16x10 +
-    # r17x50, scheduled across _R20_WINDOW + the named _R21 head); r20
-    # the _R20_WINDOW rotation, flipped exactly as prepared (the complete
-    # 10-row r16 cohort — the quantile/stddev/MAD over-time tail +
-    # rollup/retention serving + ch_pushdown_read — + the first 40 r17
-    # rows; after it the residue is r17x10 + r18x50, scheduled across
-    # _R21_WINDOW + the named _R22 head).
-    base = {
-        # --- never driver-verified: added in round 4 (16) ---
-        "text_pii_scrub": q_text_pii_scrub,
-        "doc_chunk_windows": q_doc_chunk_windows,
-        "doc_chunk_texts": q_doc_chunk_texts,
-        "tsdb_label_replace": q_tsdb_label_replace,
+    # Dict ORDER is a contract: bench.py runs the families in order of
+    # first appearance (and each family's queries in dict order), and
+    # perfbench's tsdb_analytics workload takes every 5th tsdb_* name in
+    # this order.  tests/test_entry_contract.py pins it.
+    return {
         "tsdb_quantile_over_time": q_tsdb_quantile_over_time,
-        "tsdb_label_join": q_tsdb_label_join,
-        "streaming_windowed_max": q_streaming_windowed_max,
-        "text_quality_filter": q_text_quality_filter,
-        "tsdb_binary_ratio": q_tsdb_binary_ratio,
         "tsdb_sliding_range_max": q_tsdb_sliding_range_max,
-        "events_salted_stats": q_events_salted_stats,
-        "multimodal_png_features": q_multimodal_png_features,
-        "tsdb_topk_per_bucket": q_tsdb_topk_per_bucket,
-        "sim_pq_codes": q_sim_pq_codes,
-        "sim_pq_adc_topk": q_sim_pq_adc_topk,
-        "sim_pq_recall": q_sim_pq_recall,
-        # --- never driver-verified: added in round 5 (9) ---
-        "multimodal_jpeg_features": q_multimodal_jpeg_features,
-        "multimodal_gif_frames": q_multimodal_gif_frames,
-        "sim_pq_trained": q_sim_pq_trained,
-        "sim_pq_trained_recall": q_sim_pq_trained_recall,
-        "sim_topk_lsh_multiprobe": q_sim_topk_lsh_multiprobe,
-        "sim_lsh_recall": q_sim_lsh_recall,
-        "sim_lsh_multiprobe_recall": q_sim_lsh_multiprobe_recall,
-        "sim_ivf_recall": q_sim_ivf_recall,
-        "ch_pushdown_read": q_ch_pushdown_read,
-        # --- never driver-verified: TPC-H completion, added mid-round-5
-        # (the four shapes the suite lacked: correlated min, scalar-
-        # threshold HAVING, excess-stock semi-join, sole-late-supplier) ---
-        "q2_min_cost_region": q2_min_cost_region,
-        "q11_important_parts": q11_important_parts,
-        "q20_promotable_suppliers": q20_promotable_suppliers,
-        "q21_waiting_suppliers": q21_waiting_suppliers,
-        # --- never driver-verified: trained IVF pair, added mid-round-5 ---
-        "sim_ivf_trained": q_sim_ivf_trained,
-        "sim_ivf_trained_recall": q_sim_ivf_trained_recall,
-        # --- never driver-verified: PromQL depth, added mid-round-5
-        # (count_values, deriv, predict_linear, histogram ingestion +
-        # histogram_quantile in exact micro-units) ---
-        "tsdb_count_values": q_tsdb_count_values,
-        "tsdb_deriv": q_tsdb_deriv,
-        "tsdb_predict_linear": q_tsdb_predict_linear,
-        "tsdb_histogram_buckets": q_tsdb_histogram_buckets,
-        "tsdb_histogram_quantile": q_tsdb_histogram_quantile,
-        # --- never driver-verified: CCNet-style line-level dedup,
-        # added mid-round-5 ---
-        "dedup_lines": q_dedup_lines,
-        # --- never driver-verified: round-5 session-2 additions ---
-        "dedup_bloom": q_dedup_bloom,
-        "streaming_dedup": q_streaming_dedup,
-        "sim_matryoshka_topk": q_sim_matryoshka_topk,
-        "sim_matryoshka_recall": q_sim_matryoshka_recall,
         "tsdb_stddev_over_time": q_tsdb_stddev_over_time,
-        "tsdb_offset_ratio": q_tsdb_offset_ratio,
-        "dataset_shuffle_shards": q_dataset_shuffle_shards,
-        "text_vocab": q_text_vocab,
-        "sim_ivf_balance": q_sim_ivf_balance,
-        "tsdb_exp_smooth": q_tsdb_exp_smooth,
-        "events_bucketed_join": q_events_bucketed_join,
-        "tsdb_compact_serve": q_tsdb_compact_serve,
-        "text_bigram_lm": q_text_bigram_lm,
-        "multimodal_audio_energy": q_multimodal_audio_energy,
+        "tsdb_topk_per_bucket": q_tsdb_topk_per_bucket,
+        "ch_pushdown_read": q_ch_pushdown_read,
         "tsdb_rollup_hierarchy": q_tsdb_rollup_hierarchy,
         "tsdb_subquery_maxrate": q_tsdb_subquery_maxrate,
-        "sim_pq_opq_recall": q_sim_pq_opq_recall,
-        "dedup_minhash_recall": q_dedup_minhash_recall,
         "tsdb_retention_serve": q_tsdb_retention_serve,
-        "streaming_sessionize": q_streaming_sessionize,
         "tsdb_mad_over_time": q_tsdb_mad_over_time,
-        "dedup_cluster_stats": q_dedup_cluster_stats,
-        "ch_sink_roundtrip": q_ch_sink_roundtrip,
-        "events_asof_tolerance": q_events_asof_tolerance,
-        "events_asof_next": q_events_asof_next,
-        "orders_market_basket": q_orders_market_basket,
-        "dedup_containment": q_dedup_containment,
-        "sim_topk_filtered": q_sim_topk_filtered,
-        "dataset_interleave": q_dataset_interleave,
-        "streaming_dropduplicates": q_streaming_dropduplicates,
-        "events_bucketed_agg": q_events_bucketed_agg,
-        "sim_ivf_pq_topk": q_sim_ivf_pq_topk,
-        "sim_ivf_pq_recall": q_sim_ivf_pq_recall,
-        # --- code or oracle touched by round 5 (3) ---
-        "sim_topk_lsh": q_sim_topk_lsh,
-        "sim_topk_ivf": q_sim_topk_ivf,
-        "multimodal_features": q_multimodal_features,
-        # --- oldest remaining rows (r3, code unchanged): 22 fill slots ---
-        "protocol_roundtrip_read": q_protocol_roundtrip_read,
-        "protocol_response_assembly": q_protocol_response_assembly,
         "tsdb_sum_by_label": q_tsdb_sum_by_label,
         "tsdb_topk_series": q_tsdb_topk_series,
         "tsdb_max_gap": q_tsdb_max_gap,
         "tsdb_stale_series": q_tsdb_stale_series,
-        "tsdb_label_values": q_tsdb_label_values,
-        "tsdb_series_count": q_tsdb_series_count,
-        "events_value_histogram": q_events_value_histogram,
-        "emb_label_centroids": q_emb_label_centroids,
-        "doc_stats_by_source": q_doc_stats_by_source,
-        "events_daily_pivot": q_events_daily_pivot,
-        "customers_lapsed": q_customers_lapsed,
-        # --- driver 50-entry window ends BELOW this line
-        # (customers_lapsed is entry 50; events_retention/q1/q3 joined
-        # q4/q5/q7/q8/q9/q10 below it when the 5 PromQL-depth entries
-        # landed — all keep green r3/r4 rows on code unchanged since) ---
-        "events_retention": q_events_retention,
-        "q1_pricing_summary": q1_pricing_summary,
-        "q3_shipping_priority": q3_shipping_priority,
-        "q4_late_shipment_priority": q4_late_shipment_priority,
-        "q5_local_supplier_volume": q5_local_supplier_volume,
-        "q7_nation_trade_volume": q7_nation_trade_volume,
-        "q8_market_share": q8_market_share,
-        "q9_product_type_profit": q9_product_type_profit,
-        "q10_returned_item_reporting": q10_returned_item_reporting,
-        "q13_customer_order_distribution": q13_customer_order_distribution,
-        "q12_ship_lateness_priority": q12_ship_lateness_priority,
-        # --- every entry below has a green r4 driver row produced by code
-        # r5 does not modify, or an r3 row on code untouched since.
-        # Intra-family ORDER is a bench contract (bench.py runs families in
-        # dict order): the embedding/exact/simhash dedup queries never
-        # consume the shared exploded-shingle + signature persists, so they
-        # run BEFORE any persist exists; the shingle-sharing chain
-        # (ngram -> minhash_lsh -> groups -> incremental) runs last so one
-        # materialization serves all four. ---
-        "text_decontaminate": q_text_decontaminate,
-        "dataset_dedup_apply": q_dataset_dedup_apply,
-        "dataset_length_histogram": q_dataset_length_histogram,
         "tsdb_read_eq": q_tsdb_read_eq,
         "tsdb_read_name_regex": q_tsdb_read_name_regex,
         "tsdb_read_nre": q_tsdb_read_nre,
@@ -5697,6 +4756,97 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tsdb_series_assembly": q_tsdb_series_assembly,
         "tsdb_ignore_label": q_tsdb_ignore_label,
         "tsdb_rate": q_tsdb_rate,
+        "sim_ivf_pq_topk": q_sim_ivf_pq_topk,
+        "sim_ivf_pq_recall": q_sim_ivf_pq_recall,
+        "streaming_dedup": q_streaming_dedup,
+        "streaming_sessionize": q_streaming_sessionize,
+        "events_asof_tolerance": q_events_asof_tolerance,
+        "events_asof_next": q_events_asof_next,
+        "orders_market_basket": q_orders_market_basket,
+        "sim_topk_filtered": q_sim_topk_filtered,
+        "streaming_dropduplicates": q_streaming_dropduplicates,
+        "events_bucketed_agg": q_events_bucketed_agg,
+        "sim_topk_lsh": q_sim_topk_lsh,
+        "sim_topk_ivf": q_sim_topk_ivf,
+        "sim_ivf_trained": q_sim_ivf_trained,
+        "events_value_histogram": q_events_value_histogram,
+        "events_daily_pivot": q_events_daily_pivot,
+        "events_retention": q_events_retention,
+        "emb_label_centroids": q_emb_label_centroids,
+        "min_cost_supplier": q_min_cost_supplier,
+        "orders_with_returns": q_orders_with_returns,
+        "orders_no_returns": q_orders_no_returns,
+        "order_value_quantiles": q_order_value_quantiles,
+        "q1_pricing_summary": q1_pricing_summary,
+        "q3_shipping_priority": q3_shipping_priority,
+        "q4_late_shipment_priority": q4_late_shipment_priority,
+        "q5_local_supplier_volume": q5_local_supplier_volume,
+        "q7_nation_trade_volume": q7_nation_trade_volume,
+        "q8_market_share": q8_market_share,
+        "q9_product_type_profit": q9_product_type_profit,
+        "text_pii_scrub": q_text_pii_scrub,
+        "doc_chunk_windows": q_doc_chunk_windows,
+        "doc_chunk_texts": q_doc_chunk_texts,
+        "tsdb_label_replace": q_tsdb_label_replace,
+        "tsdb_label_join": q_tsdb_label_join,
+        "streaming_windowed_max": q_streaming_windowed_max,
+        "text_quality_filter": q_text_quality_filter,
+        "tsdb_binary_ratio": q_tsdb_binary_ratio,
+        "events_salted_stats": q_events_salted_stats,
+        "multimodal_png_features": q_multimodal_png_features,
+        "sim_pq_codes": q_sim_pq_codes,
+        "sim_pq_adc_topk": q_sim_pq_adc_topk,
+        "sim_pq_recall": q_sim_pq_recall,
+        "multimodal_jpeg_features": q_multimodal_jpeg_features,
+        "multimodal_gif_frames": q_multimodal_gif_frames,
+        "sim_pq_trained": q_sim_pq_trained,
+        "sim_pq_trained_recall": q_sim_pq_trained_recall,
+        "sim_topk_lsh_multiprobe": q_sim_topk_lsh_multiprobe,
+        "sim_lsh_recall": q_sim_lsh_recall,
+        "sim_lsh_multiprobe_recall": q_sim_lsh_multiprobe_recall,
+        "sim_ivf_recall": q_sim_ivf_recall,
+        "q2_min_cost_region": q2_min_cost_region,
+        "q11_important_parts": q11_important_parts,
+        "q20_promotable_suppliers": q20_promotable_suppliers,
+        "q21_waiting_suppliers": q21_waiting_suppliers,
+        "sim_ivf_trained_recall": q_sim_ivf_trained_recall,
+        "tsdb_count_values": q_tsdb_count_values,
+        "tsdb_deriv": q_tsdb_deriv,
+        "tsdb_predict_linear": q_tsdb_predict_linear,
+        "tsdb_histogram_buckets": q_tsdb_histogram_buckets,
+        "tsdb_histogram_quantile": q_tsdb_histogram_quantile,
+        "dedup_lines": q_dedup_lines,
+        "dedup_bloom": q_dedup_bloom,
+        "sim_matryoshka_topk": q_sim_matryoshka_topk,
+        "sim_matryoshka_recall": q_sim_matryoshka_recall,
+        "tsdb_offset_ratio": q_tsdb_offset_ratio,
+        "dataset_shuffle_shards": q_dataset_shuffle_shards,
+        "text_vocab": q_text_vocab,
+        "sim_ivf_balance": q_sim_ivf_balance,
+        "tsdb_exp_smooth": q_tsdb_exp_smooth,
+        "events_bucketed_join": q_events_bucketed_join,
+        "tsdb_compact_serve": q_tsdb_compact_serve,
+        "text_bigram_lm": q_text_bigram_lm,
+        "multimodal_audio_energy": q_multimodal_audio_energy,
+        "sim_pq_opq_recall": q_sim_pq_opq_recall,
+        "dedup_minhash_recall": q_dedup_minhash_recall,
+        "dedup_cluster_stats": q_dedup_cluster_stats,
+        "ch_sink_roundtrip": q_ch_sink_roundtrip,
+        "dedup_containment": q_dedup_containment,
+        "dataset_interleave": q_dataset_interleave,
+        "multimodal_features": q_multimodal_features,
+        "protocol_roundtrip_read": q_protocol_roundtrip_read,
+        "protocol_response_assembly": q_protocol_response_assembly,
+        "tsdb_label_values": q_tsdb_label_values,
+        "tsdb_series_count": q_tsdb_series_count,
+        "doc_stats_by_source": q_doc_stats_by_source,
+        "customers_lapsed": q_customers_lapsed,
+        "q10_returned_item_reporting": q10_returned_item_reporting,
+        "q13_customer_order_distribution": q13_customer_order_distribution,
+        "q12_ship_lateness_priority": q12_ship_lateness_priority,
+        "text_decontaminate": q_text_decontaminate,
+        "dataset_dedup_apply": q_dataset_dedup_apply,
+        "dataset_length_histogram": q_dataset_length_histogram,
         "tsdb_label_project": q_tsdb_label_project,
         "tsdb_irate": q_tsdb_irate,
         "tsdb_delta": q_tsdb_delta,
@@ -5720,6 +4870,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dataset_sample": q_dataset_sample,
         "doc_packing": q_doc_packing,
         "q6_revenue_delta": q6_revenue_delta,
+        # Intra-family ORDER is a bench contract: the embedding/exact/
+        # simhash dedup queries never consume the shared exploded-
+        # shingle + signature persists, so they run BEFORE any persist
+        # exists; the shingle-sharing chain (ngram -> minhash_lsh ->
+        # groups -> incremental) runs last so one materialization
+        # serves all four.
         "dedup_embedding_cosine": q_dedup_embedding_cosine,
         "dedup_embedding_cosine_lsh": q_dedup_embedding_cosine_lsh,
         "dedup_exact": q_dedup_exact,
@@ -5740,20 +4896,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q22_inactive_customer_balance": q22_inactive_customer_balance,
         "q14_promo_revenue": q14_promo_revenue,
         "q18_large_orders": q18_large_orders,
-        "orders_with_returns": q_orders_with_returns,
-        "orders_no_returns": q_orders_no_returns,
-        "order_value_quantiles": q_order_value_quantiles,
         "sales_rollup": q_sales_rollup,
         "dataset_split": q_dataset_split,
         "multimodal_frame_sample": q_multimodal_frame_sample,
         "multimodal_resize": q_multimodal_resize,
-        "min_cost_supplier": q_min_cost_supplier,
     }
-    # hoist the round's verification window to the front (dict order is
-    # the driver contract); everything else keeps its historical position
-    out = {name: base[name] for name in _R20_WINDOW}
-    out.update((name, fn) for name, fn in base.items() if name not in out)
-    return out
 
 
 #: Exact cosine top-10 (shared by the bruteforce oracle and the PQ recall

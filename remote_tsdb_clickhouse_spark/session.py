@@ -23,6 +23,11 @@ def ensure_query_confs(spark: SparkSession) -> SparkSession:
     zone (and matches DuckDB's naive-timestamp interpretation in the oracle
     comparisons); AQE re-plans shuffles at runtime (skew joins, coalesced
     partitions) — essential at 100 TB, harmless locally.
+
+    The confs are set once per session (``_CONFS_ENSURED``): a later call
+    returns at once, so it will NOT re-apply a conf that other code unset
+    or changed mid-session.  Code that changes one of these confs must
+    restore it itself.
     """
     if _CONFS_ENSURED.get(spark):
         return spark

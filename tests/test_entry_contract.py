@@ -23,115 +23,30 @@ def test_queries_are_callables():
         assert callable(fn), name
 
 
-def test_verification_windows_are_valid_rotations():
-    """The driver hashes the FIRST 50 queries() entries each round, so the
-    active window must be hoisted to the front, and the prepared next-round
-    window must name only real queries (a typo'd name would silently shrink
-    the next rotation)."""
+def test_registry_order_is_pinned():
+    """queries() dict order is a contract: bench.py runs the families in
+    order of first appearance, and perfbench's tsdb_analytics workload
+    takes every 5th tsdb_* name (leaving out the store-served ones) in
+    this order.  A reorder silently changes both, so pin it."""
+    import hashlib
+
     names = list(entry.queries())
-    assert names[:50] == entry._R20_WINDOW  # active round's hoist
-    for window in (
-        entry._R9_WINDOW, entry._R10_WINDOW, entry._R11_WINDOW,
-        entry._R12_WINDOW, entry._R13_WINDOW, entry._R14_WINDOW,
-        entry._R15_WINDOW, entry._R16_WINDOW, entry._R17_WINDOW,
-        entry._R18_WINDOW, entry._R19_WINDOW, entry._R20_WINDOW,
-        entry._R21_WINDOW,
-    ):
-        assert len(window) == 50 and len(set(window)) == 50
-        missing = set(window) - set(names)
-        assert not missing, f"window names not in queries(): {missing}"
-    assert not set(entry._R14_HEAD) - set(names)
-    # r12 leads with the 2 r10-hashed matcher-path rows (the r11 RE2-guard
-    # residue), re-hashed this round through the r12 parity fixes
-    assert entry._R12_WINDOW[:2] == [
-        "protocol_roundtrip_read", "protocol_response_assembly",
+    assert len(names) == 160 and len(set(names)) == 160
+    digest = hashlib.sha256("\n".join(names).encode()).hexdigest()
+    assert digest == (
+        "b0bbc5a65dbbb84bb8cd580ce91fbd2f295ae996e45af82dd366e80f1f7e4251"
+    )
+    # perfbench.workloads.STORE_SERVED
+    store_served = {
+        "tsdb_rollup_serve", "tsdb_rollup_hierarchy",
+        "tsdb_retention_serve", "tsdb_compact_serve",
+    }
+    tsdb = [n for n in names if n.startswith("tsdb_") and n not in store_served]
+    assert tsdb[::5] == [
+        "tsdb_quantile_over_time", "tsdb_mad_over_time", "tsdb_read_eq",
+        "tsdb_downsample_range_clamp", "tsdb_label_join",
+        "tsdb_histogram_buckets", "tsdb_series_count", "tsdb_resets_changes",
     ]
-    # r13 leads with the complete post-r12 r9 cohort (the then-oldest
-    # hashes), then absorbs the r12-diff-touched matcher-path rows
-    assert entry._R13_WINDOW[:12] == [
-        "text_bigram_lm", "tsdb_label_values", "tsdb_series_count",
-        "tsdb_label_project", "dedup_minhash_recall", "ch_sink_roundtrip",
-        "dedup_containment", "dataset_interleave", "dedup_simhash",
-        "doc_stats_by_source", "customers_lapsed", "dataset_split",
-    ]
-    # the r13 fill + r14 head together are exactly the 40 matcher-path
-    # rows the r12 diffs touched, in r11-window relative order
-    assert entry._R13_WINDOW[12:] + entry._R14_HEAD == entry._R11_WINDOW[10:]
-    # r14 leads with the 2 matcher-path rows the r13 slots could not hold
-    # (retiring the r12-diff staleness debt), then absorbs the complete
-    # post-r13 r10 cohort — the then-oldest hashes
-    assert entry._R14_WINDOW[:2] == entry._R14_HEAD
-    assert len(entry._R14_WINDOW) == 50
-    # r15 leads with the complete post-r14 r11 cohort (the then-oldest
-    # hashes: the 8 recall diagnostics + the 2 connected-components rows),
-    # then absorbs the first 40 rows of the r12 cohort; windows must not
-    # overlap with the active round (every r15 row's hash would otherwise
-    # be refreshed twice while older rows wait)
-    assert entry._R15_WINDOW[:10] == [
-        "sim_pq_recall", "sim_pq_trained_recall", "sim_pq_opq_recall",
-        "sim_lsh_recall", "sim_lsh_multiprobe_recall", "sim_ivf_recall",
-        "sim_ivf_trained_recall", "sim_matryoshka_recall",
-        "dedup_groups", "dedup_cluster_stats",
-    ]
-    assert not set(entry._R15_WINDOW) & set(entry._R14_WINDOW)
-    # r16 leads with the complete post-r15 r12 cohort (the then-oldest
-    # hashes — the 10 named _R16_HEAD rows the r15 slots could not hold),
-    # then absorbs the first 40 rows of the r13 cohort in r13-window
-    # relative order; the remaining 10 r13 rows are the natural _R17 head
-    assert entry._R16_WINDOW[:10] == entry._R16_HEAD
-    assert entry._R16_HEAD == entry._R12_WINDOW[40:]
-    assert entry._R16_WINDOW[10:] == entry._R13_WINDOW[:40]
-    assert not set(entry._R16_WINDOW) & set(entry._R15_WINDOW)
-    # r17 leads with the complete post-r16 r13 cohort (the then-oldest
-    # hashes — the 10 named _R17_HEAD tsdb rows the r16 slots could not
-    # hold), then absorbs the first 40 rows of the r14 cohort in
-    # r14-window relative order; the remaining 10 r14 rows (sales_rollup,
-    # the contiguous 8-row multimodal block, sim_ivf_balance) are the
-    # natural _R18 head
-    assert entry._R17_WINDOW[:10] == entry._R17_HEAD
-    assert entry._R17_HEAD == entry._R13_WINDOW[40:]
-    assert entry._R17_WINDOW[10:] == entry._R14_WINDOW[:40]
-    assert not set(entry._R17_WINDOW) & set(entry._R16_WINDOW)
-    # r18 leads with the complete post-r17 r14 cohort (the then-oldest
-    # hashes — the 10 named _R18_HEAD rows the r17 slots could not hold:
-    # sales_rollup, the contiguous 8-row multimodal block,
-    # sim_ivf_balance), then absorbs the first 40 rows of the r15 cohort
-    # in r15-window relative order; the remaining 10 r15 rows are the
-    # natural _R19 head
-    assert entry._R18_WINDOW[:10] == entry._R18_HEAD
-    assert entry._R18_HEAD == entry._R14_WINDOW[40:]
-    assert entry._R18_WINDOW[10:] == entry._R15_WINDOW[:40]
-    assert not set(entry._R18_WINDOW) & set(entry._R17_WINDOW)
-    # r19 leads with the complete post-r18 r15 cohort (the then-oldest
-    # hashes — the 10 named _R19_HEAD rows the r18 slots could not hold:
-    # the scrub/chunk trio, streaming_windowed_max, text_quality_filter,
-    # events_salted_stats, the contiguous sim_pq trio +
-    # sim_topk_lsh_multiprobe), then absorbs the first 40 rows of the r16
-    # cohort in r16-window relative order; the remaining 10 r16 rows are
-    # the natural _R20 head
-    assert entry._R19_WINDOW[:10] == entry._R19_HEAD
-    assert entry._R19_HEAD == entry._R15_WINDOW[40:]
-    assert entry._R19_WINDOW[10:] == entry._R16_WINDOW[:40]
-    assert not set(entry._R19_WINDOW) & set(entry._R18_WINDOW)
-    # r20 leads with the complete post-r19 r16 cohort (the then-oldest
-    # hashes — the 10 named _R20_HEAD rows the r19 slots could not hold:
-    # the tsdb over-time/serve block + ch_pushdown_read), then absorbs
-    # the first 40 rows of the r17 cohort in r17-window relative order;
-    # the remaining 10 r17 rows (the TPC-H q10..q22 tail) are the
-    # natural _R21 head
-    assert entry._R20_WINDOW[:10] == entry._R20_HEAD
-    assert entry._R20_HEAD == entry._R16_WINDOW[40:]
-    assert entry._R20_WINDOW[10:] == entry._R17_WINDOW[:40]
-    assert not set(entry._R20_WINDOW) & set(entry._R19_WINDOW)
-    # r21 (prepared, not hoisted) leads with the complete post-r20 r17
-    # cohort (the then-oldest hashes — the 10 named _R21_HEAD rows the
-    # r20 slots could not hold: the TPC-H q10..q22 tail), then absorbs
-    # the first 40 rows of the r18 cohort in r18-window relative order;
-    # the remaining 10 r18 rows are the natural _R22 head
-    assert entry._R21_WINDOW[:10] == entry._R21_HEAD
-    assert entry._R21_HEAD == entry._R17_WINDOW[40:]
-    assert entry._R21_WINDOW[10:] == entry._R18_WINDOW[:40]
-    assert not set(entry._R21_WINDOW) & set(entry._R20_WINDOW)
 
 
 def test_oracle_sql_compiles_in_duckdb():
@@ -149,126 +64,13 @@ def test_oracle_sql_compiles_in_duckdb():
         con.execute(f"SELECT * FROM ({sql}) LIMIT 0")
 
 
-def test_matcher_path_rows_covered_by_r11_rotation():
-    """Staleness accounting for the r11 matchers.py diff, computed the
-    same way the rotation was planned: AST reachability from each
-    queries() entry to the matcher compiler's entry points.  Every
-    matcher-path row must sit in _R11_WINDOW or head _R12_WINDOW — a row
-    outside both would carry a hash predating the RE2-guard extension
-    with no scheduled re-hash."""
-    import ast
-    import os as _os
-
-    repo = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    tree = ast.parse(open(_os.path.join(repo, "__spark_entry__.py")).read())
-
-    funcs = {}
-    for node in ast.walk(tree):
-        if isinstance(node, ast.FunctionDef):
-            refs = set()
-            for n in ast.walk(node):
-                if isinstance(n, ast.Name):
-                    refs.add(n.id)
-                elif isinstance(n, ast.Attribute):
-                    refs.add(n.attr)
-            funcs[node.name] = refs
-
-    seeds = {
-        "LabelMatcher", "ReadQuery", "handle_read_request",
-        "pushdown_read_request", "read_filter", "matcher_condition",
-        "compile_matchers", "compile_matcher", "plan_read_query",
-    }
-    matcher_funcs = set()
-    changed = True
-    while changed:
-        changed = False
-        for fname, refs in funcs.items():
-            if fname not in matcher_funcs and (refs & seeds or refs & matcher_funcs):
-                matcher_funcs.add(fname)
-                changed = True
-
-    qnode = next(
-        n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "queries"
-    )
-    matcher_rows = set()
-    for n in ast.walk(qnode):
-        if isinstance(n, ast.Dict):
-            for k, v in zip(n.keys, n.values):
-                if isinstance(k, ast.Constant):
-                    refs = {
-                        x.id if isinstance(x, ast.Name) else x.attr
-                        for x in ast.walk(v)
-                        if isinstance(x, (ast.Name, ast.Attribute))
-                    }
-                    if refs & matcher_funcs or refs & seeds:
-                        matcher_rows.add(k.value)
-
-    assert matcher_rows, "reachability extraction broke"
-    scheduled = set(entry._R11_WINDOW) | set(entry._R12_WINDOW[:2])
-    uncovered = matcher_rows - scheduled
-    assert not uncovered, f"matcher-path rows with no scheduled re-hash: {uncovered}"
-    # r12 staleness accounting, same computation: the r12 parity fixes
-    # (matchers.py backslash-parity scan, read_plan/clickhouse
-    # trunc-toward-zero division) touch exactly this matcher-path set, so
-    # every row must be re-hashed post-diff: 2 in the active _R12_WINDOW,
-    # 38 in the prepared _R13_WINDOW, 2 in the named _R14_HEAD
-    r12_scheduled = (
-        set(entry._R12_WINDOW) | set(entry._R13_WINDOW) | set(entry._R14_HEAD)
-    )
-    uncovered_r12 = matcher_rows - r12_scheduled
-    assert not uncovered_r12, (
-        f"matcher-path rows with no post-r12-diff re-hash: {uncovered_r12}"
-    )
-
-    # Post-r15 hash-age floor (r14 verdict task 1's acceptance line): once
-    # _R15_WINDOW lands, every matcher-path row's hash is >= r13 with NO
-    # exceptions — the two protocol rows (the last pre-r13 matcher-path
-    # hashes, age-only residue whose r12 hashes postdated the r12 parity
-    # diff) head _R15_WINDOW's r12 cohort and re-hash this round.  The
-    # hash-age map is order-independent (max, not last-write-wins — ADVICE
-    # r14: lexicographic glob order silently inverts at r100) and the
-    # _R15_WINDOW bump keeps the assertion valid in every artifact state:
-    # before CORRECTNESS_r15 lands the bump models the upcoming driver
-    # run; after it lands the bump is a no-op; r16+ rotations only raise
-    # ages further.
-    import glob as _glob
-    import json as _json
-    import re as _re2
-
-    age: dict[str, int] = {}
-    for p in _glob.glob(_os.path.join(repo, "CORRECTNESS_r*.json")):
-        rnd = int(_re2.search(r"r0*(\d+)", _os.path.basename(p)).group(1))
-        for k in _json.load(open(p)):
-            age[k] = max(age.get(k, 0), rnd)
-    for k in entry._R15_WINDOW:
-        age[k] = max(age.get(k, 0), 15)
-    # same modeling for the later rotations (r19 landed; r20 now
-    # active): before each CORRECTNESS file lands the bump models the
-    # upcoming driver run; after it lands the bump is a no-op
-    for k in entry._R16_WINDOW:
-        age[k] = max(age.get(k, 0), 16)
-    for k in entry._R17_WINDOW:
-        age[k] = max(age.get(k, 0), 17)
-    for k in entry._R18_WINDOW:
-        age[k] = max(age.get(k, 0), 18)
-    for k in entry._R19_WINDOW:
-        age[k] = max(age.get(k, 0), 19)
-    for k in entry._R20_WINDOW:
-        age[k] = max(age.get(k, 0), 20)
-    stale = {r for r in matcher_rows if age.get(r, 0) < 13}
-    assert not stale, (
-        f"matcher-path rows with pre-r13 hashes after the r15 rotation "
-        f"(the protocol-pair exception cleared with _R15_WINDOW): {stale}"
-    )
-
-
 def _driver_regex_patterns(src: str | None = None) -> list[str]:
     """Extract the pattern of EVERY RE/NRE ``LabelMatcher`` in the entry
     source, failing CLOSED (ADVICE r12): the previous extraction matched
     only bare-Name-type positional calls with a constant third argument,
     so a future matcher spelled ``MatcherType.RE``, via keyword args, or
     with a non-literal pattern would have been silently excluded from the
-    no-op proofs.  This walker classifies every LabelMatcher call and
+    regex checks below.  This walker classifies every LabelMatcher call and
     raises on any spelling it cannot prove is either non-regex or a
     constant-pattern regex.  ``src`` overrides the entry source so the
     fail-closed promise is itself testable."""
@@ -346,14 +148,10 @@ def test_driver_regex_extraction_fails_closed():
 
 
 def test_driver_row_regexes_unaffected_by_re2_guard_extension():
-    """Staleness no-op proof for the r11 RE2-guard extension: every regex
-    literal any driver row hands to the matcher compiler is accepted by
-    the extended guard, so the matchers.py diff cannot change any driver
-    row's result — the possessive/atomic rejection only fires on patterns
-    no row uses.  (The matcher-path rows are still rotated through
-    _R11_WINDOW / the _R12_WINDOW head; this pins the argument that the
-    two r10-hashed protocol rows awaiting the r12 rotation are not
-    behavior-stale in the interim.)"""
+    """Every regex literal any queries() entry hands to the matcher
+    compiler is accepted by the RE2-portability guard, so the guard's
+    possessive/atomic rejection only fires on patterns no query uses and
+    cannot change any query's result."""
     from remote_tsdb_clickhouse_spark.plans.matchers import check_re2_portable
 
     for pat in _driver_regex_patterns():
@@ -361,310 +159,19 @@ def test_driver_row_regexes_unaffected_by_re2_guard_extension():
 
 
 def test_driver_row_regexes_unaffected_by_backslash_parity_scan():
-    """Staleness no-op proof for the r12 backslash-parity fix: the pair
-    collapse only changes guard decisions for patterns containing an
-    escaped literal backslash (``\\\\``) — NO driver row's regex does, and
-    every one is still accepted, so the matchers.py diff cannot change any
-    driver row's result.  (The matcher-path rows are rotated through
-    _R12_WINDOW's head and _R13_WINDOW regardless; this pins the argument
-    that rows awaiting the r13 rotation are not behavior-stale in the
-    interim.  The scoped-diff property itself is pinned by
+    """The guard's backslash-parity scan only changes decisions for
+    patterns containing an escaped literal backslash (``\\\\``) — NO
+    queries() regex does, and every one is still accepted, so the scan
+    cannot change any query's result.  (The scoped-diff property itself
+    is pinned by
     test_matchers.py::test_backslash_parity_scan_is_noop_without_escaped_pairs.)
 
-    The r13 lookaround-guard fix (ADVICE r12) rides the same proof: it can
-    only SHRINK the rejection set
+    The lookaround guard rides the same check: it can only SHRINK the
+    rejection set
     (test_matchers.py::test_lookaround_parity_guard_only_shrinks_rejections),
-    so the acceptance of every driver regex asserted here is preserved
-    verbatim — the remaining _R14_HEAD rows are not behavior-stale."""
+    so the acceptance of every queries() regex asserted here holds."""
     from remote_tsdb_clickhouse_spark.plans.matchers import check_re2_portable
 
     for pat in _driver_regex_patterns():
         assert "\\\\" not in pat, f"driver regex {pat!r} has an escaped pair"
         assert check_re2_portable(pat) == pat
-
-
-def test_staleness_tool_validates_prepared_window():
-    """tools/staleness_ledger.py is the mechanical check behind the
-    rotation plan: the prepared window must verify against the recorded
-    correctness files plus the active (pending) window."""
-    import subprocess
-    import sys as _sys
-    import os as _os
-
-    import re as _re
-
-    repo = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    # derive the (hoisted, prepared) pair from the entry source so the test
-    # follows each rotation instead of hardcoding round numbers (VERDICT
-    # r13: live-tree contract tests must hold across artifact states)
-    src = open(_os.path.join(repo, "__spark_entry__.py")).read()
-    hoisted = _re.search(r"for name in (_R(\d+)_WINDOW)\b", src)
-    assert hoisted is not None, (
-        "queries() hoist line not found — expected "
-        "'out = {name: base[name] for name in _R<N>_WINDOW}' (ADVICE r14: "
-        "fail with a pointer at the expected pattern, not an AttributeError)"
-    )
-    prepared = f"_R{int(hoisted.group(2)) + 1}_WINDOW"
-    proc = subprocess.run(
-        [_sys.executable, _os.path.join(repo, "tools", "staleness_ledger.py"),
-         "--pending", hoisted.group(1), "--check", prepared],
-        capture_output=True, text=True, timeout=60,
-    )
-    assert proc.returncode == 0, proc.stdout + proc.stderr
-    assert f"{prepared}: OK" in proc.stdout, proc.stdout
-
-
-def test_staleness_tool_skips_landed_pending_bump():
-    """ADVICE r9/r10: once a pending window's own CORRECTNESS file lands
-    (some recorded round holds exactly its rows), --pending must not bump
-    them to a phantom next round — the printed distribution should top out
-    at the max recorded round.  The window to pend is DERIVED by matching
-    the max recorded round's key list against the entry's window lists
-    (r10 verdict: hardcoding a window name time-bombs the test every time
-    the driver lands a newer CORRECTNESS file; r22: deriving the NAME from
-    the round number broke too — an optimization round may legitimately
-    keep the previous hoist, so CORRECTNESS_r{top} can hold an older
-    window's rows.  Landed-ness is the exact key-list match, same as the
-    tool's own rule)."""
-    import glob
-    import json as _json
-    import os as _os
-    import re as _re
-    import subprocess
-    import sys as _sys
-
-    repo = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    top, top_path = max(
-        (int(_re.search(r"r0*(\d+)", _os.path.basename(p)).group(1)), p)
-        for p in glob.glob(_os.path.join(repo, "CORRECTNESS_r*.json"))
-    )
-    with open(top_path) as fh:
-        landed_keys = list(_json.load(fh))
-    # the landed window is the one whose rows the top round's driver run
-    # actually hashed — found by key-list identity, not by name arithmetic
-    landed_window = next(
-        name
-        for name in dir(entry)
-        if _re.fullmatch(r"_R\d+_WINDOW", name)
-        and list(getattr(entry, name)) == landed_keys
-    )
-    proc = subprocess.run(
-        [_sys.executable, _os.path.join(repo, "tools", "staleness_ledger.py"),
-         "--pending", landed_window],
-        capture_output=True, text=True, timeout=60,
-    )
-    assert proc.returncode == 0, proc.stdout + proc.stderr
-    rounds = [int(m) for m in _re.findall(r"^  r(\d+): ", proc.stdout, _re.M)]
-    assert rounds and max(rounds) <= top, proc.stdout
-
-
-def test_staleness_tool_skips_bump_for_older_landed_window(tmp_path):
-    """ADVICE r10 regression, pinned to a frozen fixture: pending a window
-    whose run landed in an OLDER round (a newer round's file exists) must
-    still skip the bump — landed-ness is the exact key-list match against
-    any recorded round, not a comparison with the global max round."""
-    import json
-    import os as _os
-    import re as _re
-    import shutil
-    import subprocess
-    import sys as _sys
-
-    repo = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    (tmp_path / "tools").mkdir()
-    shutil.copy(
-        _os.path.join(repo, "tools", "staleness_ledger.py"),
-        tmp_path / "tools" / "staleness_ledger.py",
-    )
-    (tmp_path / "__spark_entry__.py").write_text(
-        '_R1_WINDOW = [\n    "a", "b",\n]\n_R2_WINDOW = [\n    "c", "d",\n]\n'
-    )
-    (tmp_path / "CORRECTNESS_r01.json").write_text(json.dumps({"a": {}, "b": {}}))
-    (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps({"c": {}, "d": {}}))
-    proc = subprocess.run(
-        [_sys.executable, str(tmp_path / "tools" / "staleness_ledger.py"),
-         "--pending", "_R1_WINDOW"],
-        capture_output=True, text=True, timeout=60,
-    )
-    assert proc.returncode == 0, proc.stdout + proc.stderr
-    rounds = [int(m) for m in _re.findall(r"^  r(\d+): ", proc.stdout, _re.M)]
-    assert rounds and max(rounds) == 2, proc.stdout
-
-
-def test_staleness_tool_bare_check_agrees_with_pending():
-    """VERDICT r11 "what's wrong": bare --check used to assume the hoisted
-    window's driver run had landed, printing a verdict that contradicted
-    the documented --pending invocation whenever the CORRECTNESS file had
-    not been committed yet.  Bare --check now defaults --pending to the
-    hoisted window, so both spellings must emit the identical verdict line
-    for the prepared next-round window — in every landed state."""
-    import re as _re
-    import subprocess
-    import sys as _sys
-    import os as _os
-
-    repo = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    src = open(_os.path.join(repo, "__spark_entry__.py")).read()
-    hoisted = _re.search(r"for name in (_R(\d+)_WINDOW)\b", src)
-    assert hoisted is not None, (
-        "queries() hoist line not found — expected "
-        "'out = {name: base[name] for name in _R<N>_WINDOW}' (ADVICE r14: "
-        "fail with a pointer at the expected pattern, not an AttributeError)"
-    )
-    prepared = f"_R{int(hoisted.group(2)) + 1}_WINDOW"
-    assert prepared in src, f"no prepared {prepared} next to hoisted {hoisted.group(1)}"
-
-    def run(argv):
-        return subprocess.run(
-            [_sys.executable, _os.path.join(repo, "tools", "staleness_ledger.py"), *argv],
-            capture_output=True, text=True, timeout=60,
-        )
-
-    bare = run(["--check", prepared])
-    explicit = run(["--pending", hoisted.group(1), "--check", prepared])
-    # The "(--pending defaulted to hoisted ...)" notice is printed iff the
-    # hoisted window's own CORRECTNESS file has NOT landed (the ledger
-    # suppresses the no-op announcement once it has — VERDICT r12 nit).
-    # This live-tree test must hold in BOTH artifact states (VERDICT r13:
-    # asserting the notice unconditionally broke the suite the moment the
-    # driver wrote the round's CORRECTNESS file), so the un-landed notice
-    # itself is pinned hermetically by the tmp-fixture test below; here we
-    # only require the two spellings to agree on the verdict.
-    verdict = lambda p: [ln for ln in p.stdout.splitlines() if prepared in ln]
-    assert bare.returncode == explicit.returncode, bare.stdout + explicit.stdout
-    assert verdict(bare) == verdict(explicit), bare.stdout + explicit.stdout
-
-
-def test_staleness_tool_bare_check_defaults_to_unlanded_hoist(tmp_path):
-    """The exact r11 disagreement shape, pinned as a fixture: the hoisted
-    window's CORRECTNESS file is NOT yet committed, so the old bare
-    --check judged the planned window against a pre-hoist map (FAIL:
-    oldest cohort not covered) while --pending passed.  With the default,
-    bare --check must match the --pending spelling exactly."""
-    import json
-    import os as _os
-    import shutil
-    import subprocess
-    import sys as _sys
-
-    repo = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    (tmp_path / "tools").mkdir()
-    shutil.copy(
-        _os.path.join(repo, "tools", "staleness_ledger.py"),
-        tmp_path / "tools" / "staleness_ledger.py",
-    )
-    # 100 queries; r1 hashed q00..q59, r2 (landed) hashed q50..q99; the
-    # hoisted _R3_WINDOW (q00..q49, UNLANDED — its key list matches no
-    # recorded round) re-hashes the residual r1 cohort, and the planned
-    # _R4_WINDOW (q50..q99) covers the then-oldest r2 cohort
-    names = [f"q{i:02d}" for i in range(100)]
-    def window(rows):
-        return "[\n" + "".join(f'    "{n}",\n' for n in rows) + "]\n"
-    (tmp_path / "__spark_entry__.py").write_text(
-        f"_R3_WINDOW = {window(names[:50])}"
-        f"_R4_WINDOW = {window(names[50:])}"
-        "def queries():\n"
-        "    out = {name: base[name] for name in _R3_WINDOW}\n"
-        "    return out\n"
-    )
-    (tmp_path / "CORRECTNESS_r01.json").write_text(
-        json.dumps({n: {} for n in names[:60]})
-    )
-    (tmp_path / "CORRECTNESS_r02.json").write_text(
-        json.dumps({n: {} for n in names[50:]})
-    )
-
-    def run(argv):
-        return subprocess.run(
-            [_sys.executable, str(tmp_path / "tools" / "staleness_ledger.py"), *argv],
-            capture_output=True, text=True, timeout=60,
-        )
-
-    bare = run(["--check", "_R4_WINDOW"])
-    explicit = run(["--pending", "_R3_WINDOW", "--check", "_R4_WINDOW"])
-    assert "(--pending defaulted to hoisted _R3_WINDOW)" in bare.stdout
-    assert explicit.returncode == 0 and "_R4_WINDOW: OK" in explicit.stdout
-    assert bare.returncode == 0 and "_R4_WINDOW: OK" in bare.stdout, bare.stdout
-
-
-def test_staleness_tool_rejects_bad_planned_windows(tmp_path):
-    """The --check FAIL paths, pinned to a frozen fixture (every green
-    rotation r11-r14 exercised only the OK verdict): a planned window
-    that misses an oldest-cohort row, names a never-hashed query, or has
-    the wrong size must exit 1 and say why — a silently-accepted bad
-    window would let the oldest hashes rot unnoticed for a round."""
-    import json
-    import os as _os
-    import shutil
-    import subprocess
-    import sys as _sys
-
-    repo = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    (tmp_path / "tools").mkdir()
-    shutil.copy(
-        _os.path.join(repo, "tools", "staleness_ledger.py"),
-        tmp_path / "tools" / "staleness_ledger.py",
-    )
-    # r1 hashed q00..q49 (the oldest cohort), r2 (landed) hashed q50..q99
-    names = [f"q{i:02d}" for i in range(100)]
-    def window(rows):
-        return "[\n" + "".join(f'    "{n}",\n' for n in rows) + "]\n"
-    (tmp_path / "__spark_entry__.py").write_text(
-        f"_R2_WINDOW = {window(names[50:])}"        # landed: no bump
-        f"_R3_WINDOW = {window(names[1:51])}"       # misses q00
-        f"_R4_WINDOW = {window(names[:49] + ['q_typo'])}"  # unknown name
-        f"_R5_WINDOW = {window(names[:2])}"         # wrong size
-    )
-    (tmp_path / "CORRECTNESS_r01.json").write_text(
-        json.dumps({n: {} for n in names[:50]})
-    )
-    (tmp_path / "CORRECTNESS_r02.json").write_text(
-        json.dumps({n: {} for n in names[50:]})
-    )
-
-    def run(check):
-        return subprocess.run(
-            [_sys.executable, str(tmp_path / "tools" / "staleness_ledger.py"),
-             "--pending", "_R2_WINDOW", "--check", check],
-            capture_output=True, text=True, timeout=60,
-        )
-
-    missed = run("_R3_WINDOW")
-    assert missed.returncode == 1, missed.stdout + missed.stderr
-    assert "_R3_WINDOW: FAIL" in missed.stdout, missed.stdout
-    assert "oldest cohort r1 not fully covered" in missed.stdout
-    assert "q00" in missed.stdout
-
-    typo = run("_R4_WINDOW")
-    assert typo.returncode == 1, typo.stdout + typo.stderr
-    assert "never driver-hashed" in typo.stdout and "q_typo" in typo.stdout
-
-    short = run("_R5_WINDOW")
-    assert short.returncode == 1, short.stdout + short.stderr
-    assert "2 names, want 50" in short.stdout
-
-
-def test_staleness_tool_empty_correctness_clean_error(tmp_path):
-    """ADVICE r9: with no CORRECTNESS_r*.json present the tool must exit
-    with a clear message, not a ValueError traceback."""
-    import os as _os
-    import shutil
-    import subprocess
-    import sys as _sys
-
-    repo = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    (tmp_path / "tools").mkdir()
-    shutil.copy(
-        _os.path.join(repo, "tools", "staleness_ledger.py"),
-        tmp_path / "tools" / "staleness_ledger.py",
-    )
-    (tmp_path / "__spark_entry__.py").write_text(
-        '_R1_WINDOW = [\n    "a",\n]\n'
-    )
-    proc = subprocess.run(
-        [_sys.executable, str(tmp_path / "tools" / "staleness_ledger.py")],
-        capture_output=True, text=True, timeout=60,
-    )
-    assert proc.returncode == 2, proc.stdout + proc.stderr
-    assert "no CORRECTNESS" in proc.stdout, proc.stdout + proc.stderr
-    assert "Traceback" not in proc.stderr, proc.stderr

@@ -1,5 +1,6 @@
-"""Entry-module hardening tests: the cached-samples spread scale guard and
-the streaming-dedup staging trust checks (r8/r9 advisor findings)."""
+"""Entry-module hardening tests: the cached-samples spread scale guard,
+the streaming-dedup staging trust checks (r8/r9 advisor findings), and
+the family_warmup persist allowlist."""
 
 from __future__ import annotations
 
@@ -25,7 +26,7 @@ def test_samples_spread_guard(spark):
     assert entry._samples_spread(400) is None
     # provable local no-op: at local parallelism the cached samples frame
     # still holds exactly the knee partition count the r8 sweep measured
-    # (this is what keeps the r8-hashed tsdb cohort's driver rows valid)
+    # (so the guard leaves every tsdb query's local result unchanged)
     df = entry._samples(spark, SF_SMOKE)
     assert df.rdd.getNumPartitions() == entry._SAMPLES_SPREAD
 
@@ -97,3 +98,40 @@ def test_staging_reuses_published_dir(spark):
     entry._DEDUP_STREAM_STAGING.setdefault(spark, {}).pop(SF_SMOKE, None)
     again = entry.stage_dedup_stream_input(spark, SF_SMOKE)
     assert again == final
+
+
+def test_family_warmup_persists_only_its_allowlist(spark):
+    """family_warmup's rule 1 allows only the index-side build frames its
+    docstring names to be persisted.  After a clearCache, each family's
+    warmup must leave exactly those frames in the CacheManager, so a new
+    persist (or a listed frame that stops being cached) fails here."""
+    allowlist = {
+        "tsdb": lambda: [entry._samples(spark, SF_SMOKE)],
+        "streaming": lambda: [],
+        "dedup": lambda: [
+            *entry._dedup_shingle_frames(spark, SF_SMOKE),
+            entry._lsh_pairs(spark, SF_SMOKE),
+            entry._jaccard_pairs(spark, SF_SMOKE),
+        ],
+        "sim": lambda: [
+            entry._bf_corpus_df(spark, SF_SMOKE),
+            entry._mat_corpus_df(spark, SF_SMOKE),
+            entry._lsh_corpus4_df(spark, SF_SMOKE),
+            entry._ivf_lists_df(spark, SF_SMOKE),
+            entry._trained_ivf_lists_df(spark, SF_SMOKE),
+        ],
+    }
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    try:
+        for family, frames in allowlist.items():
+            spark.catalog.clearCache()
+            entry.family_warmup(spark, SF_SMOKE, family)
+            n_cached = cache_manager.numCachedEntries()
+            # the memo getters return the warmup's own (memoized) objects
+            listed = frames()
+            assert n_cached == len(listed), (family, n_cached, len(listed))
+            for df in listed:
+                assert df.is_cached, family
+                assert cache_manager.lookupCachedData(df._jdf).isDefined(), family
+    finally:
+        spark.catalog.clearCache()

@@ -379,11 +379,11 @@ def test_negative_ms_bound_truncates_toward_zero_on_both_legs(spark):
 
 
 def test_driver_row_read_bounds_are_nonnegative():
-    """Staleness no-op proof for the r12 trunc-division fix: every
-    ReadQuery bound any driver row constructs is a non-negative constant
-    (resolved through module-level names and simple arithmetic), and
-    trunc == floor on non-negative ms (pinned above) — so the read_plan/
-    clickhouse diff cannot change any driver row's result."""
+    """Every ReadQuery bound any queries() entry constructs is a
+    non-negative constant (resolved through module-level names and simple
+    arithmetic), and trunc == floor on non-negative ms (pinned above) — so
+    the read_plan/clickhouse trunc-toward-zero division gives every query
+    the same result the floor spelling would."""
     import ast
     import os as _os
 

@@ -78,9 +78,8 @@ KILLED, zero INVALID/TIMEOUT, pristine-tree baseline green over all 20
 killer files.  r19 re-ran the full register in one pass on the
 committed tree (after the refuse-on-unreadable-git tightening):
 104/104 KILLED, zero INVALID/TIMEOUT, baseline green.  r20 re-ran the
-full register in one pass on the committed tree (after the _R20_WINDOW
-hoist flip and the pregate oracle-validation/stop fixes): 104/104
-KILLED, zero INVALID/TIMEOUT, baseline green.  The screen earned its
+full register in one pass on the committed tree: 104/104 KILLED, zero
+INVALID/TIMEOUT, baseline green.  The screen earned its
 keep on first contact, surviving six times before the gaps were closed
 (plus one killer-list correction: M50's CH-leg trunc test lives in
 test_read_plan.py, not the sink file):
