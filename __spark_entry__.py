@@ -407,7 +407,7 @@ def q_tsdb_downsample_range_clamp(spark: SparkSession, sf_dir: str) -> DataFrame
 
 def q_tsdb_series_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = ReadQuery(start_ms=T0, matchers=(LabelMatcher(EQ, "__name__", "signup"),))
-    assembled = read_query_df(_samples(spark, sf_dir), q, series_partitioned=True)
+    assembled = read_query_df(_samples(spark, sf_dir), q)
     first_s = F.element_at("samples", 1)
     last_s = F.element_at("samples", -1)
     return assembled.select(

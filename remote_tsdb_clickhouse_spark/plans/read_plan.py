@@ -23,19 +23,24 @@ re-expressed Spark-first:
 
 Scale notes: the A1 grouping hashes on (metric_name, labels, t) while
 every per-series consumer (the O1/O2 assembly, the X1-X4 windows) needs
-(metric_name, labels) — two different exchanges in the naive plan.  At
-raw resolution the A1 key is near-unique (one sample per series-second),
-so its map-side partial max reduces nothing and the first shuffle moves
-~every row; ``series_partitioned=True`` therefore establishes the
-(metric_name, labels) partitioning ONCE before the grouping (guide §2.4:
-a window partitioned by a prefix of a preceding aggregation's key can
-share its exchange) — one exchange of raw rows instead of two exchanges
-of near-raw rows, and the consumer's window/regroup is exchange-free.
-When a downsampling hint IS active the A1 bucket key collapses many
-samples per group and the map-side partial is worth a second (tiny)
-exchange, so the pre-partitioning is automatically skipped.  Series keys
-are naturally high-cardinality, so skew is bounded by the per-series
-sample count — the downsampling bucket caps that.
+(metric_name, labels) — two different exchanges in the naive plan.
+:func:`read_query_df` always establishes the (metric_name, labels)
+partitioning ONCE before the grouping (guide §2.4: a window or
+aggregation keyed by a prefix of the preceding aggregation's key can
+share its exchange), at raw and at hinted resolution alike, because its
+own O2 regroup keys on exactly that: one exchange of projected rows and
+one stage fewer than the two-exchange shape.  At raw resolution nothing
+is given up — the A1 key is near-unique (one sample per series-second),
+so a map-side partial max would reduce nothing.  Under a downsampling
+hint the read gives up the map-side partial max: every projected row
+crosses the exchange instead of one per (series, bucket) and map task.
+A bucket is step/2, so a 60 s dashboard panel over 15 s scrapes reduces
+only 2x per (series, bucket); the saved exchange, stage and scheduling
+round outweigh that.  :func:`read_query_grouped` keeps its opt-in,
+raw-only ``series_partitioned`` policy for the tsdb_* consumers, whose
+hinted windows can span far more samples per bucket.  Series keys are
+naturally high-cardinality, so skew is bounded by the per-series sample
+count — the downsampling bucket caps that.
 """
 
 from __future__ import annotations
@@ -192,6 +197,38 @@ def partition_pruning_filter(samples: DataFrame, q: ReadQuery):
     return _expr_memo(("prune", q.start_ms, q.end_ms), build)
 
 
+def _read_projection(
+    samples: DataFrame,
+    q: ReadQuery,
+    *,
+    ignore_label: str | None,
+    ignore_hints: bool,
+) -> tuple[DataFrame, int | None]:
+    """Pruned, filtered ``(metric_name, slb, t, value)`` rows of one query,
+    and the active downsampling interval (``None`` at raw resolution)."""
+    pruning = partition_pruning_filter(samples, q)
+    if pruning is not None:
+        samples = samples.where(pruning)
+    interval_s = downsample_interval_seconds(q.hints, ignore_hints=ignore_hints)
+    t_col = _expr_memo(
+        ("t_aliased", interval_s),
+        lambda: time_expr(q, ignore_hints=ignore_hints).alias("t"),
+    )
+    projected = samples.where(read_filter(q, ignore_label=ignore_label)).select(
+        "metric_name",
+        _expr_memo(("slb",), lambda: F.array_sort("labels").alias("slb")),
+        t_col,
+        "value",
+    )
+    return projected, interval_s
+
+
+def _grouped_max(projected: DataFrame) -> DataFrame:
+    """A1: ``GROUP BY metric_name, slb, t`` with ``max(value) AS max_0``."""
+    grouped = projected.groupBy("metric_name", "slb", "t")
+    return grouped.agg(_expr_memo(("max_0",), lambda: F.max("value").alias("max_0")))
+
+
 def read_query_grouped(
     samples: DataFrame,
     q: ReadQuery,
@@ -214,25 +251,13 @@ def read_query_grouped(
     is ignored and the classic partial-agg shape is kept.  Same rows
     either way; only the physical partitioning differs.
     """
-    pruning = partition_pruning_filter(samples, q)
-    if pruning is not None:
-        samples = samples.where(pruning)
-    interval_s = downsample_interval_seconds(q.hints, ignore_hints=ignore_hints)
-    t_col = _expr_memo(
-        ("t_aliased", interval_s),
-        lambda: time_expr(q, ignore_hints=ignore_hints).alias("t"),
-    )
-    projected = samples.where(read_filter(q, ignore_label=ignore_label)).select(
-        "metric_name",
-        _expr_memo(("slb",), lambda: F.array_sort("labels").alias("slb")),
-        t_col,
-        "value",
+    projected, interval_s = _read_projection(
+        samples, q, ignore_label=ignore_label, ignore_hints=ignore_hints
     )
     if series_partitioned and interval_s is None:
         # no numPartitions argument: AQE may coalesce (scale-adaptive)
         projected = projected.repartition("metric_name", "slb")
-    grouped = projected.groupBy("metric_name", "slb", "t")
-    return grouped.agg(_expr_memo(("max_0",), lambda: F.max("value").alias("max_0")))
+    return _grouped_max(projected)
 
 
 def read_query_df(
@@ -241,7 +266,6 @@ def read_query_df(
     *,
     ignore_label: str | None = DEFAULT_READ_IGNORE_LABEL,
     ignore_hints: bool = False,
-    series_partitioned: bool = False,
 ) -> DataFrame:
     """Full read path: grouped max + declarative series assembly (O2).
 
@@ -250,19 +274,19 @@ def read_query_df(
     samples ARRAY<STRUCT<t TIMESTAMP, v DOUBLE>>`` with samples
     time-ascending (array_sort on the struct sorts by first field), exactly
     the ordering the remote-read spec requires and the reference restores
-    via ORDER BY + adjacent-row regrouping.
+    via ORDER BY + adjacent-row regrouping.  Rows come in no particular
+    order; the server orders the series (``service.handle_read_request``).
 
-    The O2 assembly re-keys by (metric_name, slb), so
-    ``series_partitioned=True`` makes the whole read path a single
-    exchange at raw resolution (see :func:`read_query_grouped`).
+    The O2 assembly re-keys by (metric_name, slb), so the rows are
+    partitioned by that key before the grouped max, at raw and hinted
+    resolution alike: the whole read is one hash exchange (module
+    docstring, scale notes).
     """
-    grouped = read_query_grouped(
-        samples,
-        q,
-        ignore_label=ignore_label,
-        ignore_hints=ignore_hints,
-        series_partitioned=series_partitioned,
+    projected, _ = _read_projection(
+        samples, q, ignore_label=ignore_label, ignore_hints=ignore_hints
     )
+    # no numPartitions argument: AQE may coalesce (scale-adaptive)
+    grouped = _grouped_max(projected.repartition("metric_name", "slb"))
     return grouped.groupBy("metric_name", "slb").agg(
         _expr_memo(("samples_assembly",), _assembly_col)
     )

@@ -514,6 +514,7 @@ def pushdown_read_request(
     from datetime import datetime, timezone
 
     from remote_tsdb_clickhouse_spark import prompb
+    from remote_tsdb_clickhouse_spark.server.service import series_labels
 
     resp = prompb.ReadResponse()
     for q in req.queries:
@@ -527,10 +528,15 @@ def pushdown_read_request(
         # read_query_sql so the emitted query text keeps byte-parity with
         # read.go:57.  Needs ClickHouse >= 23.6; on older servers drop the
         # setting and run the server in UTC like the reference deploy.
+        # output_format_json_quote_denormals=1 writes NaN/±Inf max_0 as
+        # "nan"/"inf"/"-inf" instead of null, so a staleness marker (a NaN)
+        # decodes through float() like any other value.
         raw = store._http(
             query_url(
                 store.base_url,
-                sql + " SETTINGS session_timezone='UTC' FORMAT JSONEachRow",
+                sql
+                + " SETTINGS session_timezone='UTC', output_format_json_quote_denormals=1"
+                + " FORMAT JSONEachRow",
                 store.database,
             ),
             None,
@@ -545,10 +551,7 @@ def pushdown_read_request(
             key = (r["metric_name"], tuple(r["slb"]))
             if ts_msg is None or key != last_key:
                 last_key = key
-                labels = [prompb.Label("__name__", r["metric_name"])] + [
-                    prompb.Label(*s.split("=", 1)) for s in r["slb"]
-                ]
-                ts_msg = prompb.TimeSeries(labels=labels)
+                ts_msg = prompb.TimeSeries(labels=series_labels(r["metric_name"], r["slb"]))
                 result.timeseries.append(ts_msg)
             # ClickHouse DateTime over JSONEachRow: "YYYY-MM-DD hh:mm:ss"
             # in the server zone (UTC here, matching the reference deploy)

@@ -222,3 +222,47 @@ def test_pushdown_read_request_assembly(spark):
     ]
     assert len(ts[1].samples) == 1
     assert "FORMAT+JSONEachRow" in seen_urls[0] or "FORMAT%20JSONEachRow" in seen_urls[0]
+
+
+def test_pushdown_read_request_decodes_nonfinite_max(spark):
+    """Staleness markers are NaNs: the pushdown URL asks ClickHouse to
+    quote NaN/±Inf ("nan"/"inf"/"-inf") instead of writing null, and those
+    strings decode to the doubles.  The setting rides the SETTINGS suffix
+    after ``read_query_sql``, so the query text keeps its read.go:57
+    parity."""
+    import math
+    from urllib.parse import parse_qs, urlparse
+
+    from remote_tsdb_clickhouse_spark.plans.matchers import LabelMatcher, MatcherType
+    from remote_tsdb_clickhouse_spark.plans.read_plan import ReadQuery
+    from remote_tsdb_clickhouse_spark import prompb
+    from remote_tsdb_clickhouse_spark.sources.clickhouse import (
+        ClickHouseStore,
+        pushdown_read_request,
+        read_query_sql,
+    )
+
+    rows = [
+        {"metric_name": "up", "slb": ["job=a"], "t": "2024-01-01 00:00:00", "max_0": "nan"},
+        {"metric_name": "up", "slb": ["job=a"], "t": "2024-01-01 00:00:15", "max_0": "inf"},
+        {"metric_name": "up", "slb": ["job=a"], "t": "2024-01-01 00:00:30", "max_0": "-inf"},
+    ]
+    seen_urls = []
+
+    def fake_http(url, payload=None, headers=None):
+        seen_urls.append(url)
+        return "\n".join(json.dumps(r) for r in rows).encode()
+
+    store = ClickHouseStore(spark, table="metrics.samples", http=fake_http)
+    q = ReadQuery(start_ms=1704067200000, matchers=(LabelMatcher(MatcherType.EQ, "__name__", "up"),))
+    resp = pushdown_read_request(store, prompb.ReadRequest(queries=[q]))
+    [ts] = resp.results[0].timeseries
+    values = [s.value for s in ts.samples]
+    assert math.isnan(values[0]) and values[1:] == [math.inf, -math.inf]
+    assert [s.timestamp for s in ts.samples] == [1704067200000, 1704067215000, 1704067230000]
+    [sql] = parse_qs(urlparse(seen_urls[0]).query)["query"]
+    assert sql == (
+        read_query_sql(q, store.table)
+        + " SETTINGS session_timezone='UTC', output_format_json_quote_denormals=1"
+        + " FORMAT JSONEachRow"
+    )

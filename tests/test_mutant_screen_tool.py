@@ -15,6 +15,7 @@ import importlib.util
 import os
 import subprocess
 import sys
+import types
 
 import pytest
 
@@ -438,18 +439,26 @@ def test_every_mutant_original_snippet_canonical_at_head():
     The r15 snapshot shipped mutant M60 at HEAD for a full round because
     nothing checked committed state (the working tree was correct, so
     pytest stayed green).  This test fails loudly and cheaply on any
-    future committed mutant, independent of working-tree state."""
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "mutant_screen_head_check",
-        os.path.join(repo, "tools", "mutant_screen.py"))
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    future committed mutant, independent of working-tree state.
 
+    The rules are read from ``HEAD:tools/mutant_screen.py`` too, so rule
+    and source always come from the same commit: a change that edits a
+    guarded line and its screen rule together is checked as one unit
+    once committed, not working-tree rules against the previous
+    commit's source."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     head = subprocess.run(["git", "rev-parse", "--verify", "HEAD"],
                           cwd=repo, capture_output=True, text=True)
     if head.returncode != 0:
         pytest.skip("not a git checkout")
+
+    screen_path = "tools/mutant_screen.py"
+    r = subprocess.run(["git", "show", f"HEAD:{screen_path}"], cwd=repo,
+                       capture_output=True, text=True)
+    assert r.returncode == 0, f"{screen_path} missing at HEAD"
+    mod = types.ModuleType("mutant_screen_head_check")
+    mod.__file__ = os.path.join(repo, screen_path)
+    exec(compile(r.stdout, f"HEAD:{screen_path}", "exec"), mod.__dict__)
 
     blobs: dict[str, str] = {}
     problems: list[str] = []

@@ -618,3 +618,29 @@ def test_no_cartesian_or_unlisted_bnlj_anywhere(spark):
         if hits:
             violations[name] = hits
     assert not violations, violations
+
+
+@pytest.mark.parametrize("step_ms", [0, 60000], ids=["raw", "hinted"])
+def test_read_query_df_one_series_exchange(spark, samples_df, step_ms):
+    # the /read plan: the grouped max and the O2 series assembly share one
+    # hash exchange on the series key, at raw and at hinted resolution, and
+    # nothing range-partitions (the series order is the driver's job)
+    from remote_tsdb_clickhouse_spark.plans.matchers import LabelMatcher, MatcherType
+    from remote_tsdb_clickhouse_spark.plans.read_plan import (
+        ReadHints,
+        ReadQuery,
+        downsample_interval_seconds,
+        read_query_df,
+    )
+
+    hints = ReadHints(step_ms=step_ms)
+    assert (downsample_interval_seconds(hints) is None) == (step_ms == 0)
+    q = ReadQuery(
+        start_ms=1704067200000,
+        matchers=(LabelMatcher(MatcherType.RE, "__name__", "go_.*"),),
+        hints=hints,
+    )
+    plan = read_query_df(samples_df, q)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning(metric_name") == 1, plan
+    assert plan.count("Exchange") == 1, plan
+    assert "rangepartitioning" not in plan, plan

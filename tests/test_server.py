@@ -7,6 +7,8 @@ import urllib.error
 import urllib.request
 
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 
 from remote_tsdb_clickhouse_spark import codec, prompb
 from remote_tsdb_clickhouse_spark.plans.matchers import LabelMatcher, MatcherType
@@ -947,21 +949,162 @@ def test_label_reexpansion_splits_at_first_equals():
     plants ``job=a=b`` but no response-assembly test did (the r13
     mutation screen's M40 — rpartition — survived), so pin the leg
     directly, including an empty value and a value that is ONLY '='."""
-    from datetime import datetime, timezone
-
     from remote_tsdb_clickhouse_spark.server.service import row_to_timeseries
 
-    row = {
-        "metric_name": "up",
-        "slb": ["env=", "eq==", "job=a=b"],
-        "samples": [
-            {"v": 1.5, "t": datetime(2024, 1, 1, tzinfo=timezone.utc).replace(tzinfo=None)}
-        ],
-    }
-    ts = row_to_timeseries(row)
+    ts = row_to_timeseries("up", ["env=", "eq==", "job=a=b"], [1704067200000], [1.5])
     assert [(l.name, l.value) for l in ts.labels] == [
         ("__name__", "up"),
         ("env", ""),
         ("eq", "="),
         ("job", "a=b"),
     ]
+
+
+def test_read_runs_at_most_two_jobs(spark, tmp_path):
+    """One /read query is one hash exchange and one bounded pull: at most
+    two Spark jobs (the shuffle-map job and the Arrow collect), raw and
+    hinted alike — no range-exchange sampling job, no sort job."""
+    import uuid
+
+    store = SamplesStore(spark, str(tmp_path / "samples"))
+    writer = TimeseriesWriter(store)
+    writer.write(prompb.WriteRequest(timeseries=[
+        prompb.TimeSeries(
+            labels=[prompb.Label("__name__", "up"), prompb.Label("job", j)],
+            samples=[prompb.Sample(float(i), 1704067200000 + 15000 * i) for i in range(8)],
+        )
+        for j in ("a", "b", "c")
+    ]))
+    app = AdapterApp(writer, store.read)
+    sc = spark.sparkContext
+    for kind, hints in (("raw", ReadHints()), ("hinted", ReadHints(step_ms=60000))):
+        rr = prompb.ReadRequest(queries=[ReadQuery(
+            start_ms=1704067200000,
+            end_ms=1704070800000,
+            matchers=(LabelMatcher(MatcherType.EQ, "__name__", "up"),),
+            hints=hints,
+        )])
+        body = codec.encode_read_request(rr)
+        group = f"read-{kind}-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            status, payload = app.handle_read(body)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert status == 200, payload
+        resp = prompb.decode_read_response(codec.snappy_decompress(payload))
+        assert len(resp.results[0].timeseries) == 3
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert 1 <= len(jobs) <= 2, (kind, jobs)
+
+
+# -- response order: the driver-side series sort vs Spark's ORDER BY ---------
+#: Names and labelsets chosen where code-point, UTF-16 and byte order could
+#: disagree: case-only twins, non-ASCII, astral-plane (𝄞, 4 UTF-8 bytes,
+#: a surrogate pair in UTF-16) next to BMP characters above the surrogate
+#: range (ｕ), labelsets that are prefixes of each other, empty labelsets.
+_ORDER_NAMES = ["up", "Up", "uP", "é", "误差", "𝄞", "ｕp", "u"]
+_ORDER_LABELSETS = [
+    [], ["a=1"], ["a=1", "b=2"], ["a=1", "b=2", "c=𝄞"], ["B=1"], ["a=A"],
+    ["a=a"], ["a=é"], ["a=𝄞"], ["a=ｕ"], ["a=1=2"], ["b="],
+]
+_BASE_S = 1704067200  # 2024-01-01
+_ALL = (LabelMatcher(MatcherType.RE, "__name__", ".*"),)
+_NOTHING = (LabelMatcher(MatcherType.EQ, "__name__", "absent"),)
+
+_order_stores = st.lists(
+    st.tuples(
+        st.sampled_from(_ORDER_NAMES),
+        st.sampled_from(range(len(_ORDER_LABELSETS))),
+        st.lists(
+            st.tuples(st.integers(0, 599), st.sampled_from([-1.5, 0.0, 1.0, 2.5, 1e300])),
+            min_size=1, max_size=6,
+        ),
+    ),
+    min_size=1, max_size=12,
+)
+_order_queries = st.lists(
+    st.builds(
+        lambda m, lo, span, step: ReadQuery(
+            start_ms=(_BASE_S + lo) * 1000,
+            end_ms=(_BASE_S + lo + span) * 1000,
+            matchers=m,
+            hints=ReadHints(step_ms=step),
+        ),
+        st.sampled_from([
+            _ALL,
+            (LabelMatcher(MatcherType.EQ, "__name__", "up"),),
+            (LabelMatcher(MatcherType.NEQ, "__name__", "up"),),
+            (LabelMatcher(MatcherType.RE, "a", "1|A|a"),),
+            (LabelMatcher(MatcherType.RE, "__name__", "[uU].*"), LabelMatcher(MatcherType.NEQ, "b", "2")),
+            _NOTHING,
+        ]),
+        st.integers(0, 300),
+        st.integers(0, 600),
+        st.sampled_from([0, 60000]),
+    ),
+    min_size=1, max_size=3,
+)
+#: every name under every labelset — an order no hash-partition accident
+#: can reproduce — read raw, by a query that matches nothing, and hinted
+_EVERY_SERIES = [
+    (n, ls, [(i % 600, 1.0), ((7 * i) % 600, 2.5)])
+    for i, (n, ls) in enumerate(
+        (n, ls) for n in _ORDER_NAMES for ls in range(len(_ORDER_LABELSETS))
+    )
+]
+
+
+@settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
+@given(store=_order_stores, queries=_order_queries)
+@example(
+    store=_EVERY_SERIES,
+    queries=[
+        ReadQuery(start_ms=_BASE_S * 1000, matchers=_ALL),
+        ReadQuery(start_ms=0, matchers=_NOTHING),
+        ReadQuery(start_ms=_BASE_S * 1000, matchers=_ALL, hints=ReadHints(step_ms=60000)),
+    ],
+)
+def test_response_series_order_matches_spark_order_by(spark, store, queries):
+    """handle_read_request orders series on the driver; the order (and
+    every sample) must equal Spark's ``read_query_df(...).orderBy(
+    "metric_name", "slb")`` over random stores and multi-query requests,
+    with samples time-ascending."""
+    from datetime import datetime, timezone
+
+    from remote_tsdb_clickhouse_spark.model import SAMPLES_SCHEMA
+    from remote_tsdb_clickhouse_spark.plans.read_plan import read_query_df
+    from remote_tsdb_clickhouse_spark.server.service import handle_read_request
+
+    rows = [
+        (datetime.fromtimestamp(_BASE_S + s, timezone.utc).replace(tzinfo=None),
+         name, _ORDER_LABELSETS[ls], v)
+        for name, ls, samples in store
+        for s, v in samples
+    ]
+    df = spark.createDataFrame(rows, SAMPLES_SCHEMA)
+    resp = handle_read_request(df, prompb.ReadRequest(queries=list(queries)))
+    assert len(resp.results) == len(queries)
+    for q, result in zip(queries, resp.results):
+        want = [
+            (
+                r["metric_name"],
+                list(r["slb"]),
+                [(int(s["t"].replace(tzinfo=timezone.utc).timestamp() * 1000), s["v"])
+                 for s in r["samples"]],
+            )
+            for r in read_query_df(df, q).orderBy("metric_name", "slb").collect()
+        ]
+        assert all(ts.labels[0].name == "__name__" for ts in result.timeseries)
+        got = [
+            (
+                ts.labels[0].value,
+                [f"{lb.name}={lb.value}" for lb in ts.labels[1:]],
+                [(s.timestamp, s.value) for s in ts.samples],
+            )
+            for ts in result.timeseries
+        ]
+        assert got == want, q
+        for _, _, samples in got:
+            stamps = [t for t, _ in samples]
+            assert stamps == sorted(set(stamps))  # time-ascending, one per t

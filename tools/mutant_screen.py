@@ -382,7 +382,7 @@ MUTANTS = [
     # -- batch 7 (r13): response assembly, graph convergence, metrics ------
     ("M39", "P3 __name__ prepend dropped from response labels (read.go:84-89)",
      "remote_tsdb_clickhouse_spark/server/service.py",
-     'labels = [prompb.Label(NAME_LABEL, row["metric_name"])]',
+     "labels = [prompb.Label(NAME_LABEL, metric_name)]",
      "labels = []",
      ["tests/test_server.py"]),
     ("M40", "P3 label split first-'=' -> last-'=' (values containing '=')",
@@ -733,6 +733,12 @@ MUTANTS = [
      'keys = (PARTITION_COLUMN, "metric_name", "labels", "ts")',
      'keys = ("metric_name", "labels", "ts")',
      ["tests/test_store_writer.py"]),
+    # -- batch 20: the driver-side series order of /read responses ----------
+    ("M106", "/read series sort key loses slb (same-name series in hash order)",
+     "remote_tsdb_clickhouse_spark/server/service.py",
+     "order = sorted(range(len(names)), key=lambda i: (names[i], slbs[i]))",
+     "order = sorted(range(len(names)), key=lambda i: names[i])",
+     ["tests/test_server.py"]),
 ]
 
 
