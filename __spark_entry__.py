@@ -19,6 +19,7 @@ Conventions keeping the hash comparison stable across engines:
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import os
 import sys
@@ -70,7 +71,7 @@ from remote_tsdb_clickhouse_spark.plans.read_plan import (
     read_query_grouped,
 )
 from remote_tsdb_clickhouse_spark.session import ensure_query_confs
-from remote_tsdb_clickhouse_spark.util import spread
+from remote_tsdb_clickhouse_spark.util import SESSION_CACHE, spread
 from remote_tsdb_clickhouse_spark.sources.events import (
     SAMPLES_ORACLE_CTE,
     events_to_samples,
@@ -89,6 +90,25 @@ SF_SMOKE = "/root/testdata/sf0.001"
 T0 = 1704067200000  # 2024-01-01
 T5 = 1704412800000  # 2024-01-05
 T20 = 1705708800000  # 2024-01-20
+
+
+def _session_memo(namespace: str):
+    """Memoize ``fn(spark, *args)`` in ``namespace`` of the one session
+    cache (util.SessionCache), keyed by ``(fn name, *args)``: built once
+    per SparkContext, dropped when the context changes.  Namespaces:
+    ``table`` holds DataFrames (table frames and shared plan frames),
+    ``index`` trained or collected index builds, ``staging`` setup
+    written to disk (staging dirs, stores, bucketed tables)."""
+
+    def deco(fn):
+        @functools.wraps(fn)
+        def memo(spark: SparkSession, *args):
+            return SESSION_CACHE.get(namespace, (fn.__name__, *args), lambda: fn(spark, *args))
+
+        return memo
+
+    return deco
+
 
 #: Cached-samples partition count at LOCAL-BENCH scale — the measured knee
 #: of the spread sweep documented in _samples().  Scope guard (r8 advisor):
@@ -128,12 +148,20 @@ def _samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hot-table cache for a query family (MEMORY_AND_DISK default spills
     # rather than OOMs); bench.py clears cache at family boundaries so the
     # entry doesn't tax unrelated queries' plan lookups.  The DataFrame
-    # OBJECT is additionally memoized per session/sf (_TABLE_CACHE, same
+    # OBJECT is additionally memoized per session/sf (_samples_frame, same
     # catalog-metastore argument as _tbl): rebuilding it per call re-ran
     # the parquet file-listing + footer-schema driver job every query.
     # is_cached is a driver-side flag that clearCache does not reset, so
     # after a clearCache only an explicit persist() re-registers the frame
     # (family_warmup does that at the bench's family boundaries).
+    df = _samples_frame(spark, sf_dir)
+    if not df.is_cached:
+        df.persist()
+    return df
+
+
+@_session_memo("table")
+def _samples_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread() BEFORE the label derivation (r7 verdict task 1): the
     # testdata events table is a single parquet row group, so the scan is
     # ONE partition and the family's first map stage (regexp label
@@ -150,22 +178,15 @@ def _samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1 (no spread) 6.21 s, 4 -> 5.92 s, 8 -> 6.10 s, 16 -> 6.67 s,
     # 32 -> 7.49 s.  Same knee-sweep method as streaming_dedup's
     # shuffle-partition knob.
-    per = _TABLE_CACHE.setdefault(spark, {})
-    key = (sf_dir, "__samples")
-    df = per.get(key)
-    if df is None:
-        df = samples_from_events(
-            spread(
-                _events(spark, sf_dir),
-                _samples_spread(spark.sparkContext.defaultParallelism),
-            )
+    return samples_from_events(
+        spread(
+            _events(spark, sf_dir),
+            _samples_spread(spark.sparkContext.defaultParallelism),
         )
-        per[key] = df
-    if not df.is_cached:
-        df.persist()
-    return df
+    )
 
 
+@_session_memo("table")
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized :func:`read_events` frame (same rationale as
     :func:`_tbl`: the timestamp-normalized relation is immutable per
@@ -173,39 +194,27 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from remote_tsdb_clickhouse_spark.sources.events import read_events
 
     ensure_query_confs(spark)
-    per = _TABLE_CACHE.setdefault(spark, {})
-    key = (sf_dir, "__events_normalized")
-    if key not in per:
-        per[key] = read_events(spark, sf_dir)
-    return per[key]
+    return read_events(spark, sf_dir)
 
 
 #: Fixed Column-tree memo (r21, guide §5): these helpers build the same
 #: immutable expression trees on every query call (py4j round-trips);
-#: share one instance per distinct input — expressions only, never data
-#: (the _SIMHASH_EXPR_CACHE / read_plan._EXPR_MEMO precedent).  r22:
-#: bounded + gateway-aware via the shared ExprMemo (r21 verdict item 3).
-from remote_tsdb_clickhouse_spark.util import ExprMemo as _ExprMemo
-
-_ENTRY_EXPR_MEMO = _ExprMemo(maxsize=256)
+#: share one instance per distinct input — expressions only, never data.
+_expr_memo = functools.partial(SESSION_CACHE.get, "entry")
 
 
 def _lbl(col: str = "slb") -> F.Column:
-    return _ENTRY_EXPR_MEMO.get(
-        ("lbl", col), lambda: F.array_join(col, ",").alias("labels_str")
-    )
+    return _expr_memo(("lbl", col), lambda: F.array_join(col, ",").alias("labels_str"))
 
 
 def _epoch(col: str = "t") -> F.Column:
-    return _ENTRY_EXPR_MEMO.get(
-        ("epoch", col), lambda: F.col(col).cast("long").alias(col)
-    )
+    return _expr_memo(("epoch", col), lambda: F.col(col).cast("long").alias(col))
 
 
 def _slb_value(name: str) -> F.Column:
     """Memoized ``label_value(F.col("slb"), name)`` — the X2 extraction is
     a fixed HOF chain per label name (~25 ms of py4j per build)."""
-    return _ENTRY_EXPR_MEMO.get(("slbv", name), lambda: label_value(F.col("slb"), name))
+    return _expr_memo(("slbv", name), lambda: label_value(F.col("slb"), name))
 
 
 def _dsum(col: F.Column) -> F.Column:
@@ -279,25 +288,23 @@ def q_tsdb_downsample_30s(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _flat_grouped(read_query_grouped(_samples(spark, sf_dir), q))
 
 
+@_session_memo("staging")
 def _rollup_store(spark: SparkSession, sf_dir: str):
-    # _ROLLUP_STORES (a WeakKeyDictionary) is defined beside _STREAM_STAGING
-    per = _ROLLUP_STORES.setdefault(spark, {})
-    rs = per.get(sf_dir)
-    if rs is None:
-        from remote_tsdb_clickhouse_spark.sources.rollup import RollupStore
-        from remote_tsdb_clickhouse_spark.sources.samples_store import SamplesStore
+    """The store build (base parquet write + 60 s and 1 h rollups) is
+    ingest-side setup for q_tsdb_rollup_serve."""
+    from remote_tsdb_clickhouse_spark.sources.rollup import RollupStore
+    from remote_tsdb_clickhouse_spark.sources.samples_store import SamplesStore
 
-        ensure_query_confs(spark)
-        root = tempfile.mkdtemp(prefix="graft_rollup_")
-        base = SamplesStore(spark, f"{root}/samples")
-        base.append(events_to_samples(spark, sf_dir))
-        rs = RollupStore(spark, base, f"{root}/rollups")
-        rs.build(60)
-        # hierarchy: 1 h built FROM the 1 min rollup (60x less input than
-        # raw; exact because max composes) — q_tsdb_rollup_hierarchy
-        # serves from it via coarsest-exact routing
-        rs.build(3600, source_interval_s=60)
-        per[sf_dir] = rs
+    ensure_query_confs(spark)
+    root = tempfile.mkdtemp(prefix="graft_rollup_")
+    base = SamplesStore(spark, f"{root}/samples")
+    base.append(events_to_samples(spark, sf_dir))
+    rs = RollupStore(spark, base, f"{root}/rollups")
+    rs.build(60)
+    # hierarchy: 1 h built FROM the 1 min rollup (60x less input than
+    # raw; exact because max composes) — q_tsdb_rollup_hierarchy
+    # serves from it via coarsest-exact routing
+    rs.build(3600, source_interval_s=60)
     return rs
 
 
@@ -319,6 +326,7 @@ def q_tsdb_rollup_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _flat_grouped(rs.read_query_grouped(q))
 
 
+@_session_memo("staging")
 def _compacted_store(spark: SparkSession, sf_dir: str):
     """Samples store appended in three micro-batches (the small-file shape
     streaming ingest produces) then compacted to one file per date
@@ -326,19 +334,29 @@ def _compacted_store(spark: SparkSession, sf_dir: str):
     the build is ingest-side maintenance, the query serves from it."""
     from remote_tsdb_clickhouse_spark.sources.samples_store import SamplesStore
 
-    per = _COMPACT_STORES.setdefault(spark, {})
-    st = per.get(sf_dir)
-    if st is None:
-        ensure_query_confs(spark)
-        root = tempfile.mkdtemp(prefix="graft_compact_")
-        st = SamplesStore(spark, f"{root}/samples")
-        s = events_to_samples(spark, sf_dir).where(F.col("metric_name") == "click")
-        cut1, cut2 = "2024-01-07 00:00:00", "2024-01-14 00:00:00"
-        st.append(s.where(F.col("ts") < cut1))
-        st.append(s.where((F.col("ts") >= cut1) & (F.col("ts") < cut2)))
-        st.append(s.where(F.col("ts") >= cut2))
-        st.compact(files_per_partition=1)
-        per[sf_dir] = st
+    ensure_query_confs(spark)
+    root = tempfile.mkdtemp(prefix="graft_compact_")
+    st = SamplesStore(spark, f"{root}/samples")
+    s = events_to_samples(spark, sf_dir).where(F.col("metric_name") == "click")
+    cut1, cut2 = "2024-01-07 00:00:00", "2024-01-14 00:00:00"
+    st.append(s.where(F.col("ts") < cut1))
+    st.append(s.where((F.col("ts") >= cut1) & (F.col("ts") < cut2)))
+    st.append(s.where(F.col("ts") >= cut2))
+    st.compact(files_per_partition=1)
+    return st
+
+
+@_session_memo("staging")
+def _retention_store(spark: SparkSession, sf_dir: str):
+    """Store built off the purchase series, then swept by the TTL job
+    (append + delete_time_range) — setup for q_tsdb_retention_serve."""
+    from remote_tsdb_clickhouse_spark.sources.samples_store import SamplesStore
+
+    ensure_query_confs(spark)
+    root = tempfile.mkdtemp(prefix="graft_retention_")
+    st = SamplesStore(spark, f"{root}/samples")
+    st.append(events_to_samples(spark, sf_dir).where(F.col("metric_name") == "purchase"))
+    st.delete_time_range("2024-01-03 12:00:00", "2024-01-06 12:00:00")
     return st
 
 
@@ -350,19 +368,7 @@ def q_tsdb_retention_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the deleted window excluded — the delete is proven
     semantics-exact, not just file-count-plausible.  Store build + sweep
     are memoized setup; the timed query is the serve."""
-    from remote_tsdb_clickhouse_spark.sources.samples_store import SamplesStore
-
-    per = _RETENTION_STORES.setdefault(spark, {})
-    st = per.get(sf_dir)
-    if st is None:
-        ensure_query_confs(spark)
-        root = tempfile.mkdtemp(prefix="graft_retention_")
-        st = SamplesStore(spark, f"{root}/samples")
-        st.append(
-            events_to_samples(spark, sf_dir).where(F.col("metric_name") == "purchase")
-        )
-        st.delete_time_range("2024-01-03 12:00:00", "2024-01-06 12:00:00")
-        per[sf_dir] = st
+    st = _retention_store(spark, sf_dir)
     q = ReadQuery(start_ms=T0, end_ms=T20, matchers=(LabelMatcher(EQ, "__name__", "purchase"),))
     return _flat_grouped(read_query_grouped(st.read(with_partition_col=False), q))
 
@@ -836,23 +842,14 @@ def q_events_salted_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session -> {sf_dir: (clicks_table, purchases_table)} — the bucketed
-#: fact tables are a WRITE-time layout decision (the Spark analog of
-#: pre-partitioned MergeTree tables); building them is ingest setup the
-#: join query consumes, memoized like the streaming staging
-#: (WeakKeyDictionary for the same id-reuse reason).
-from weakref import WeakKeyDictionary
-
-_BUCKETED_TABLES: WeakKeyDictionary = WeakKeyDictionary()
-
-
-def _bucketed_user_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+@_session_memo("staging")
+def _bucketed_user_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
+    """(clicks, purchases, daily clicks) bucketed table names.  The
+    bucketed fact tables are a WRITE-time layout decision (the Spark
+    analog of pre-partitioned MergeTree tables); building them is ingest
+    setup the join query consumes, memoized like the streaming staging."""
     from remote_tsdb_clickhouse_spark.operators.layout import write_bucketed
-    from remote_tsdb_clickhouse_spark.sources.events import read_events
 
-    per = _BUCKETED_TABLES.setdefault(spark, {})
-    if sf_dir in per:
-        return per[sf_dir]
     ev = _events(spark, sf_dir)
     micro = F.floor(F.col("value") * 1000000.0).cast("long")
     clicks = (
@@ -894,8 +891,7 @@ def _bucketed_user_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         daily.repartition(16, "user_id"), dt, ["user_id"], 16,
         sort_cols=["user_id", "day"], path=f"{base}/d",
     )
-    per[sf_dir] = (ct, pt, dt)
-    return per[sf_dir]
+    return ct, pt, dt
 
 
 def q_events_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2113,24 +2109,18 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-#: session -> {(sf_dir, table): DataFrame}.  Path-based ``read.parquet``
-#: re-lists files and re-reads the footer schema on EVERY call — a
-#: driver-side job that cost ~0.3-0.5 s of the ~1 s fixed overhead each
-#: bench query paid.  A real deployment reads through a catalog whose
-#: metastore caches exactly this metadata, so memoizing the (unresolved,
-#: immutable) DataFrame per session/sf is the faithful analog, not a
-#: bench trick: every query still plans, optimizes, and executes its own
-#: job from the shared relation.  WeakKeyDictionary for session lifetime.
-_TABLE_CACHE: WeakKeyDictionary = WeakKeyDictionary()
-
-
+@_session_memo("table")
 def _tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Session-memoized table frame.  Path-based ``read.parquet`` re-lists
+    files and re-reads the footer schema on EVERY call — a driver-side job
+    that cost ~0.3-0.5 s of the ~1 s fixed overhead each bench query paid.
+    A real deployment reads through a catalog whose metastore caches
+    exactly this metadata, so memoizing the (unresolved, immutable)
+    DataFrame per session/sf is the faithful analog, not a bench trick:
+    every query still plans, optimizes, and executes its own job from the
+    shared relation."""
     ensure_query_confs(spark)
-    per = _TABLE_CACHE.setdefault(spark, {})
-    key = (sf_dir, name)
-    if key not in per:
-        per[key] = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    return per[key]
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2163,60 +2153,43 @@ def q_sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.pq_adc_topk(_embs(spark, sf_dir), n_queries=10, topk=10)
 
 
-#: session -> {(kind, sf_dir): trained codebook/centroids}.  Training is
-#: deterministic (fixed-iteration integer Lloyd's), so the assignment and
-#: recall queries of one family share one training run instead of each
-#: retraining — an index BUILD is setup the serving queries consume.
-#: WeakKeyDictionary for the same session-lifetime reason as the staging
-#: caches below; correctness runs stay self-contained (first call trains).
-from weakref import WeakKeyDictionary
-
-_TRAIN_CACHE: WeakKeyDictionary = WeakKeyDictionary()
-
-
+@_session_memo("index")
 def _trained_pq_codebook(spark: SparkSession, sf_dir: str):
-    per = _TRAIN_CACHE.setdefault(spark, {})
-    key = ("pq", sf_dir)
-    if key not in per:
-        per[key] = similarity.pq_train_codebook(_embs(spark, sf_dir), m=4, k=16, n_iters=2)
-    return per[key]
+    """Trained PQ codebook.  Training is deterministic (fixed-iteration
+    integer Lloyd's), so the assignment and recall queries of one family
+    share one training run instead of each retraining — an index BUILD is
+    setup the serving queries consume; correctness runs stay
+    self-contained (first call trains)."""
+    return similarity.pq_train_codebook(_embs(spark, sf_dir), m=4, k=16, n_iters=2)
 
 
+@_session_memo("index")
 def _trained_ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    per = _TRAIN_CACHE.setdefault(spark, {})
-    key = ("ivf", sf_dir)
-    if key not in per:
-        per[key] = similarity.ivf_train_centroids(
-            _embs(spark, sf_dir), n_centroids=16, n_iters=2
-        )
-    return per[key]
+    return similarity.ivf_train_centroids(
+        _embs(spark, sf_dir), n_centroids=16, n_iters=2
+    )
 
 
+@_session_memo("index")
 def _ivf_coarse_rows(spark: SparkSession, sf_dir: str) -> list:
     """Collected smallest-id coarse-quantizer rows, memoized per
     session/sf like the k-means training above: the collect is the IVF
     index BUILD (one corpus top-n job), and the topk/recall/balance
     serving queries share one build instead of re-collecting per call."""
-    per = _TRAIN_CACHE.setdefault(spark, {})
-    key = ("ivf_coarse_rows", sf_dir)
-    if key not in per:
-        per[key] = similarity.coarse_cent_rows(_embs(spark, sf_dir), n_centroids=16)
-    return per[key]
+    return similarity.coarse_cent_rows(_embs(spark, sf_dir), n_centroids=16)
 
 
+@_session_memo("index")
 def _trained_ivf_rows(spark: SparkSession, sf_dir: str) -> list:
     """Collected rows of the TRAINED coarse quantizer (same memo shape)."""
-    per = _TRAIN_CACHE.setdefault(spark, {})
-    key = ("ivf_trained_rows", sf_dir)
-    if key not in per:
-        per[key] = similarity.coarse_cent_rows(
-            _embs(spark, sf_dir),
-            n_centroids=16,
-            centroids=_trained_ivf_centroids(spark, sf_dir),
-        )
-    return per[key]
+    return similarity.coarse_cent_rows(
+        _embs(spark, sf_dir),
+        n_centroids=16,
+        centroids=_trained_ivf_centroids(spark, sf_dir),
+    )
 
 
+@_session_memo("table")
 def _ivf_lists_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized IVF inverted-list serving frame (vid, vec, nrm,
     cent_id) under the smallest-id coarse quantizer — the index the
@@ -2225,82 +2198,63 @@ def _ivf_lists_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment projection materializes once per session instead of once
     per serving query — the sim-family twin of _dedup_shingle_frames
     (r21, guide §2.4: identical repeated stage removed from every
-    consumer).  Keyed in _TABLE_CACHE so the plan-shape suite's
+    consumer).  In the ``table`` namespace, so the plan-shape suite's
     _plan_cold drops it alongside the other plan memos."""
-    per = _TABLE_CACHE.setdefault(spark, {})
-    key = (sf_dir, "__ivf_lists")
-    if key not in per:
-        per[key] = similarity.ivf_lists(
-            _embs(spark, sf_dir), n_centroids=16,
-            cent_rows=_ivf_coarse_rows(spark, sf_dir),
-        )
-    return per[key]
+    return similarity.ivf_lists(
+        _embs(spark, sf_dir), n_centroids=16,
+        cent_rows=_ivf_coarse_rows(spark, sf_dir),
+    )
 
 
+@_session_memo("table")
 def _trained_ivf_lists_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverted-list serving frame under the k-means-TRAINED quantizer
     (same memo shape as :func:`_ivf_lists_df`)."""
-    per = _TABLE_CACHE.setdefault(spark, {})
-    key = (sf_dir, "__ivf_lists_trained")
-    if key not in per:
-        per[key] = similarity.ivf_lists(
-            _embs(spark, sf_dir), n_centroids=16,
-            cent_rows=_trained_ivf_rows(spark, sf_dir),
-        )
-    return per[key]
+    return similarity.ivf_lists(
+        _embs(spark, sf_dir), n_centroids=16,
+        cent_rows=_trained_ivf_rows(spark, sf_dir),
+    )
 
 
+@_session_memo("table")
 def _lsh_corpus4_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized LSH index side at the family's n_bits=4: the
     bucketed corpus (vid, vec, nrm, bucket) shared by the four LSH
     serving rows (same memo rationale as :func:`_ivf_lists_df`)."""
-    per = _TABLE_CACHE.setdefault(spark, {})
-    key = (sf_dir, "__lsh_corpus4")
-    if key not in per:
-        per[key] = similarity.lsh_corpus(_embs(spark, sf_dir), n_bits=4)
-    return per[key]
+    return similarity.lsh_corpus(_embs(spark, sf_dir), n_bits=4)
 
 
+@_session_memo("table")
 def _bf_corpus_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized normed brute-force corpus (vid, vec, nrm) — the
     exact-search serving frame shared by the bruteforce row and the
     memoized exact-top-10 baseline build."""
-    per = _TABLE_CACHE.setdefault(spark, {})
-    key = (sf_dir, "__bf_corpus")
-    if key not in per:
-        from remote_tsdb_clickhouse_spark.operators.similarity import _with_norm
+    from remote_tsdb_clickhouse_spark.operators.similarity import _with_norm
 
-        per[key] = _with_norm(_embs(spark, sf_dir), "vec_id", "embedding")
-    return per[key]
+    return _with_norm(_embs(spark, sf_dir), "vec_id", "embedding")
 
 
+@_session_memo("table")
 def _mat_corpus_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized Matryoshka serving corpus: the 16-dim prefix slice,
     normed — shared by the truncated topk and its recall diagnostic."""
-    per = _TABLE_CACHE.setdefault(spark, {})
-    key = (sf_dir, "__mat_corpus")
-    if key not in per:
-        from remote_tsdb_clickhouse_spark.operators.similarity import _with_norm
+    from remote_tsdb_clickhouse_spark.operators.similarity import _with_norm
 
-        per[key] = _with_norm(
-            _embs(spark, sf_dir).withColumn("embedding", F.slice("embedding", 1, 16)),
-            "vec_id",
-            "embedding",
-        )
-    return per[key]
+    return _with_norm(
+        _embs(spark, sf_dir).withColumn("embedding", F.slice("embedding", 1, 16)),
+        "vec_id",
+        "embedding",
+    )
 
 
+@_session_memo("index")
 def _ivf_pq_index(spark: SparkSession, sf_dir: str) -> dict:
     """Memoized IVF-PQ index build (centroids + residual codebook + ADC
     tables — three metadata-sized collects) shared by the topk and recall
     rows, same memo shape as the other ANN builds."""
-    per = _TRAIN_CACHE.setdefault(spark, {})
-    key = ("ivf_pq", sf_dir)
-    if key not in per:
-        per[key] = similarity.ivf_pq_build(
-            _embs(spark, sf_dir), n_queries=10, n_centroids=16, nprobe=2
-        )
-    return per[key]
+    return similarity.ivf_pq_build(
+        _embs(spark, sf_dir), n_queries=10, n_centroids=16, nprobe=2
+    )
 
 
 def q_sim_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2373,6 +2327,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.simhash_pairs(_docs(spark, sf_dir), max_hamming=3)
 
 
+@_session_memo("table")
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental dedup: docs with id >= 400 arrive as a 'new batch' and
     are matched against the signature index of the id < 400 corpus —
@@ -2389,33 +2344,27 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan itself is memoized too (r21, guide §5: rebuilding the
     signature-index probe pipeline measured 0.6-0.8 s of py4j plan
     construction per call — a serving process plans once, serves many)."""
-    per = _TABLE_CACHE.setdefault(spark, {})
-    key = (sf_dir, "__incremental_pairs")
-    if key not in per:
-        exploded, sigs = _dedup_shingle_frames(spark, sf_dir)
-        exploded.persist()
-        sigs = sigs.persist()
-        per[key] = dedup.incremental_minhash_pairs_sigs(
-            sigs.where(F.col("doc_id") >= 400),
-            sigs.where(F.col("doc_id") < 400),
-            min_est_jaccard=0.5,
-        )
-    return per[key]
+    exploded, sigs = _dedup_shingle_frames(spark, sf_dir)
+    exploded.persist()
+    sigs = sigs.persist()
+    return dedup.incremental_minhash_pairs_sigs(
+        sigs.where(F.col("doc_id") >= 400),
+        sigs.where(F.col("doc_id") < 400),
+        min_est_jaccard=0.5,
+    )
 
 
+@_session_memo("table")
 def _norm_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized ``dedup.normalized_docs`` frame (r21): the
     tokenize->shingle plan is a wide HOF expression tree whose PYTHON-side
     construction + analysis measured ~0.1-0.2 s per call — the same
     driver-latency argument as :func:`_tbl`/:func:`_samples`.  Same plan,
     same results; only the per-query rebuild goes away."""
-    per = _TABLE_CACHE.setdefault(spark, {})
-    key = (sf_dir, "__norm_docs")
-    if key not in per:
-        per[key] = dedup.normalized_docs(_docs(spark, sf_dir))
-    return per[key]
+    return dedup.normalized_docs(_docs(spark, sf_dir))
 
 
+@_session_memo("table")
 def _dedup_shingle_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Session-memoized (exploded-shingle, MinHash-signature) frames — the
     dedup family's shared build, as DataFrame OBJECTS so every consumer
@@ -2423,37 +2372,28 @@ def _dedup_shingle_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, 
     (measured ~0.6 s of py4j plan construction per rebuild, pure driver
     overhead).  family_warmup persists these same objects, so the bench's
     family cache and the memo always refer to one plan."""
-    per = _TABLE_CACHE.setdefault(spark, {})
-    key = (sf_dir, "__dedup_shingle_frames")
-    if key not in per:
-        exploded = _norm_docs(spark, sf_dir).select(
-            "doc_id", F.explode("shingles").alias("sh")
-        )
-        per[key] = (exploded, dedup.minhash_signatures_from(exploded))
-    return per[key]
+    exploded = _norm_docs(spark, sf_dir).select(
+        "doc_id", F.explode("shingles").alias("sh")
+    )
+    return (exploded, dedup.minhash_signatures_from(exploded))
 
 
+@_session_memo("table")
 def _lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized MinHash-LSH pair frame (threshold 0.8) — shared by
     the LSH query, the recall diagnostic, and the connected-components
     build (same driver-latency memo rationale as above)."""
-    per = _TABLE_CACHE.setdefault(spark, {})
-    key = (sf_dir, "__lsh_pairs")
-    if key not in per:
-        per[key] = dedup.minhash_lsh_pairs(_docs(spark, sf_dir), threshold=0.8)
-    return per[key]
+    return dedup.minhash_lsh_pairs(_docs(spark, sf_dir), threshold=0.8)
 
 
+@_session_memo("table")
 def _jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized exact n-gram-Jaccard pair frame (threshold 0.8) —
     shared by the Jaccard query and the recall diagnostic's ground truth."""
-    per = _TABLE_CACHE.setdefault(spark, {})
-    key = (sf_dir, "__jaccard_pairs")
-    if key not in per:
-        per[key] = dedup.ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.8)
-    return per[key]
+    return dedup.ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.8)
 
 
+@_session_memo("index")
 def _dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the MinHash-LSH pair graph, memoized per
     session/sf like the ANN index builds: the iterative min-label rounds
@@ -2461,11 +2401,7 @@ def _dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized artifact — the shared build consumed by both the group
     assignment and the cluster-size report (each used to re-run the
     full propagation)."""
-    per = _TRAIN_CACHE.setdefault(spark, {})
-    key = ("dedup_components", sf_dir)
-    if key not in per:
-        per[key] = dedup.connected_components(_lsh_pairs(spark, sf_dir))
-    return per[key]
+    return dedup.connected_components(_lsh_pairs(spark, sf_dir))
 
 
 def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2504,6 +2440,7 @@ def q_dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_session_memo("table")
 def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed shingle containment |A∩B|/|A| >= 0.9
     (dedup.containment_pairs): the sub-document dedup signal symmetric
@@ -2515,11 +2452,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     an eager one-aggregate Spark job at PLAN-BUILD time, so rebuilding
     the frame per call measured 0.8-1.1 s of driver latency — the probe
     decides once per corpus, exactly like a serving process."""
-    per = _TABLE_CACHE.setdefault(spark, {})
-    key = (sf_dir, "__containment_pairs")
-    if key not in per:
-        per[key] = dedup.containment_pairs(_docs(spark, sf_dir), threshold=0.9)
-    return per[key]
+    return dedup.containment_pairs(_docs(spark, sf_dir), threshold=0.9)
 
 
 def q_dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2589,12 +2522,17 @@ def q_sim_pq_opq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     what the subspace regrouping does to PQ quality, on the same recall
     axis as sim_pq_recall / sim_pq_trained_recall."""
     emb2 = similarity.interleave_permute(_embs(spark, sf_dir))
-    per = _TRAIN_CACHE.setdefault(spark, {})
-    key = ("pq_opq", sf_dir)
-    if key not in per:
-        per[key] = similarity.pq_train_codebook(emb2, m=4, k=16, n_iters=2)
-    adc = similarity.pq_adc_topk(emb2, n_queries=10, topk=10, codebook=per[key])
+    cb = _trained_opq_codebook(spark, sf_dir)
+    adc = similarity.pq_adc_topk(emb2, n_queries=10, topk=10, codebook=cb)
     return _recall_at_10(spark, sf_dir, adc)
+
+
+@_session_memo("index")
+def _trained_opq_codebook(spark: SparkSession, sf_dir: str):
+    """PQ codebook trained on the interleaved embeddings (same memo shape
+    as :func:`_trained_pq_codebook`)."""
+    emb2 = similarity.interleave_permute(_embs(spark, sf_dir))
+    return similarity.pq_train_codebook(emb2, m=4, k=16, n_iters=2)
 
 
 def q_sim_topk_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2610,23 +2548,21 @@ def q_sim_topk_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("rnk", F.col("rank").cast("long")).drop("rank")
 
 
+@_session_memo("index")
 def _exact_topk_rows(spark: SparkSession, sf_dir: str) -> list:
     """Collected exact cosine top-10 baseline (n_queries*10 = 100 rows —
     metadata-sized by contract), memoized per session/sf like the ANN
     index builds: every recall diagnostic compares against the SAME
     exact baseline, so the eight recall queries share one brute-force
     corpus scan instead of re-executing it each."""
-    per = _TRAIN_CACHE.setdefault(spark, {})
-    key = ("exact_topk_rows", sf_dir)
-    if key not in per:
-        per[key] = (
-            q_sim_topk_bruteforce(spark, sf_dir)
-            .select("query_id", "neighbor_id")
-            .collect()
-        )
-    return per[key]
+    return (
+        q_sim_topk_bruteforce(spark, sf_dir)
+        .select("query_id", "neighbor_id")
+        .collect()
+    )
 
 
+@_session_memo("index")
 def _exact_topk_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100-row exact baseline as a local-relation DataFrame, memoized
     per session/sf beside the collected rows it wraps (r21, guide §5):
@@ -2634,14 +2570,10 @@ def _exact_topk_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     query's every (re-)build — a driver-side job submission each time.
     The memo shares one local relation plan; every consumer still joins
     and aggregates it per query."""
-    per = _TRAIN_CACHE.setdefault(spark, {})
-    key = ("exact_topk_df", sf_dir)
-    if key not in per:
-        per[key] = spark.createDataFrame(
-            [(int(r[0]), int(r[1])) for r in _exact_topk_rows(spark, sf_dir)],
-            "query_id LONG, neighbor_id LONG",
-        )
-    return per[key]
+    return spark.createDataFrame(
+        [(int(r[0]), int(r[1])) for r in _exact_topk_rows(spark, sf_dir)],
+        "query_id LONG, neighbor_id LONG",
+    )
 
 
 def _recall_at_10(spark: SparkSession, sf_dir: str, approx: DataFrame) -> DataFrame:
@@ -3731,28 +3663,7 @@ def q_doc_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Staging-input dirs for the streaming query, one per (session, sf_dir).
-#: WeakKeyDictionary so entries die with their session (id() reuse after a
-#: session is garbage-collected could otherwise serve a stale path).
-from weakref import WeakKeyDictionary
-
-_STREAM_STAGING: WeakKeyDictionary = WeakKeyDictionary()
-
-#: session -> {sf_dir: RollupStore} — the store build (base parquet write +
-#: 60 s rollup) is ingest-side setup for q_tsdb_rollup_serve, memoized like
-#: the streaming staging above.
-_ROLLUP_STORES: WeakKeyDictionary = WeakKeyDictionary()
-
-#: session -> {sf_dir: SamplesStore} — the compacted store build (3
-#: micro-batch appends + compact()) for q_tsdb_compact_serve, memoized
-#: like the rollup store above.
-_COMPACT_STORES: WeakKeyDictionary = WeakKeyDictionary()
-
-#: session -> {sf_dir: SamplesStore} — the retention-swept store for
-#: q_tsdb_retention_serve (append + delete_time_range), same memo shape.
-_RETENTION_STORES: WeakKeyDictionary = WeakKeyDictionary()
-
-
+@_session_memo("staging")
 def stage_streaming_input(spark: SparkSession, sf_dir: str) -> str:
     """Write the streaming query's pre-aggregated staging input, memoized
     per (session, sf_dir).
@@ -3769,10 +3680,6 @@ def stage_streaming_input(spark: SparkSession, sf_dir: str) -> str:
     one row per (series, second) like A1 so the stream sees no duplicate
     timestamps and the result is engine-deterministic.
     """
-    per = _STREAM_STAGING.setdefault(spark, {})
-    staging = per.get(sf_dir)
-    if staging is not None:
-        return staging
     staging = tempfile.mkdtemp(prefix="graft_stream_")
     keep = F.array_sort(F.filter("labels", lambda x: ~x.startswith("k=")))
     grouped = (
@@ -3785,7 +3692,6 @@ def stage_streaming_input(spark: SparkSession, sf_dir: str) -> str:
     # 8-way parallel write (r3 used coalesce(1), serializing the write onto
     # one core); availableNow still consumes all 8 files as one micro-batch
     grouped.repartition(8).write.mode("overwrite").parquet(f"{staging}/in")
-    per[sf_dir] = staging
     return staging
 
 
@@ -3886,10 +3792,7 @@ def q_streaming_windowed_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session -> {sf_dir: staging dir} for the streaming-dedup input chunks.
-_DEDUP_STREAM_STAGING: WeakKeyDictionary = WeakKeyDictionary()
-
-
+@_session_memo("staging")
 def stage_dedup_stream_input(spark: SparkSession, sf_dir: str) -> str:
     """Write the streaming-dedup input: the documents table as 2 ascending
     ``doc_id``-range parquet chunks whose file mtimes pin the micro-batch
@@ -3918,10 +3821,6 @@ def stage_dedup_stream_input(spark: SparkSession, sf_dir: str) -> str:
     import shutil
     import time
 
-    per = _DEDUP_STREAM_STAGING.setdefault(spark, {})
-    staging = per.get(sf_dir)
-    if staging is not None:
-        return staging
     # uid-scoped name + ownership check: the shared path is otherwise
     # predictable, and on a multi-user host another user could pre-create
     # it with a _STAGED marker to poison the streaming input (r7 advisor).
@@ -3953,7 +3852,6 @@ def stage_dedup_stream_input(spark: SparkSession, sf_dir: str) -> str:
             return False
 
     if _owned_and_staged(final):
-        per[sf_dir] = final
         return final
     staging = tempfile.mkdtemp(prefix="graft_dedup_stream_build_")
     docs = _docs(spark, sf_dir).select(
@@ -3993,7 +3891,6 @@ def stage_dedup_stream_input(spark: SparkSession, sf_dir: str) -> str:
         if _owned_and_staged(final):
             shutil.rmtree(staging, ignore_errors=True)
             staging = final
-    per[sf_dir] = staging
     return staging
 
 
@@ -4372,19 +4269,13 @@ _LANG_FILTERS = {
 
 _PROTO_SLICE = "metric_name = 'signup' AND ts < TIMESTAMP '2024-01-03 00:00:00'"
 
-#: both protocol queries start from the same wire round-trip; build it once
-#: per (session, sf_dir) — the cache holds one small local-relation frame
-_PROTO_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+@_session_memo("table")
 def _protocol_samples_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events slice -> prompb WriteRequest -> snappy wire bytes -> decode ->
     flatten writer (S2+S5): the write path the reference runs per request
-    (``codec.go:28-45``, ``write.go:11-63``), surfaced as a DataFrame."""
-    key = (id(spark), sf_dir)
-    cached = _PROTO_CACHE.get(key)
-    if cached is not None:
-        return cached
+    (``codec.go:28-45``, ``write.go:11-63``), surfaced as a DataFrame.
+    Both protocol queries start from this round-trip, so it is built once
+    per (session, sf_dir): one small local-relation frame."""
     ensure_query_confs(spark)
     sl = (
         events_to_samples(spark, sf_dir)
@@ -4398,7 +4289,7 @@ def _protocol_samples_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert len(sl) <= 50_000, f"protocol slice unexpectedly large: {len(sl)} rows"
     series: dict[tuple, prompb.TimeSeries] = {}
     for r in sl:
-        skey = (r.metric_name, tuple(r.labels))  # do NOT shadow the cache key
+        skey = (r.metric_name, tuple(r.labels))
         ts_msg = series.get(skey)
         if ts_msg is None:
             labels = [prompb.Label("__name__", r.metric_name)] + [
@@ -4409,9 +4300,7 @@ def _protocol_samples_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     req = prompb.WriteRequest(timeseries=[series[k] for k in sorted(series)])
     wire = codec.encode_write_request(req)  # snappy + proto encode
     decoded = codec.decode_write_request(wire)  # S2: the server's decode path
-    df = write_request_df(spark, decoded)  # S5: flatten to canonical rows
-    _PROTO_CACHE[key] = df
-    return df
+    return write_request_df(spark, decoded)  # S5: flatten to canonical rows
 
 
 def q_protocol_roundtrip_read(spark: SparkSession, sf_dir: str) -> DataFrame:

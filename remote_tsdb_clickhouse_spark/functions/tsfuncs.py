@@ -10,20 +10,19 @@ is *more* correct than ClickHouse's partition-order-dependent
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from remote_tsdb_clickhouse_spark.util import ExprMemo
+from remote_tsdb_clickhouse_spark.util import SESSION_CACHE
 
 #: Plan-construction memo (r21, guide §5 driver latency): the per-series
 #: window specs, lag projections, and (r22) the histogram / regression /
 #: bucket-aggregate expression lists below are fixed immutable trees over
 #: fixed column names and frozen parameters, rebuilt by every consumer —
-#: share one instance (the read_plan._EXPR_MEMO precedent); expressions
-#: only, never data.  r22: bounded + gateway-aware + TypeError-safe via
-#: the shared :class:`ExprMemo` (r21 verdict item 3 / ADVICE r21).
-_EXPR_MEMO = ExprMemo(maxsize=256)
-_expr_memo = _EXPR_MEMO.get
+#: share one instance; expressions only, never data.
+_expr_memo = partial(SESSION_CACHE.get, "tsfuncs")
 
 
 def series_window(extra_order: list[str] | None = None) -> Window:

@@ -8,10 +8,10 @@ very wide vectors (>4k dims) a Pandas-UDF/numpy path wins on SIMD; see
 
 from __future__ import annotations
 
-from collections import OrderedDict
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from remote_tsdb_clickhouse_spark.util import SESSION_CACHE
 
 
 def as_double(vec: Column | str) -> Column:
@@ -24,26 +24,6 @@ def as_double(vec: Column | str) -> Column:
 #: any other length takes the general fold.  Guarded by a runtime
 #: ``size(a)`` check, so the specialization is transparent to callers.
 _UNROLL_DIMS = (16, 64)
-
-#: (str(a), str(b)) -> fully-built unrolled ``dot`` Column (see the memo
-#: note inside :func:`dot`).  Bounded LRU so adversarial/pathological call
-#: patterns cannot grow it without bound.
-_UNROLL_BUILD_CACHE: OrderedDict[tuple[str, str], Column] = OrderedDict()
-_UNROLL_BUILD_MAX = 64
-
-#: Active SparkContext the cache above was built under (r22, ADVICE r21):
-#: cached Columns wrap py4j JavaObjects — clear on context change so a
-#: relaunched gateway can never be served stale references.
-_UNROLL_CTX: list = [None]
-
-
-def _unroll_ctx_check() -> None:
-    from pyspark import SparkContext
-
-    ctx = SparkContext._active_spark_context
-    if ctx is not _UNROLL_CTX[0]:
-        _UNROLL_BUILD_CACHE.clear()
-        _UNROLL_CTX[0] = ctx
 
 
 def _unrolled_dot(a: Column, b: Column, dim: int) -> Column:
@@ -92,23 +72,17 @@ def dot(a: Column, b: Column, *, unroll: bool = False) -> Column:
     # NOTE unroll callers must keep passing top-level named/cast columns
     # (the documented contract above); lambda variables render positionally
     # and must not reach this cache.
-    _unroll_ctx_check()
-    key = (str(a), str(b))
-    hit = _UNROLL_BUILD_CACHE.get(key)
-    if hit is not None:
-        _UNROLL_BUILD_CACHE.move_to_end(key)
-        return hit
-    expr = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    for d in _UNROLL_DIMS:
-        expr = F.when(F.size(a) == d, _unrolled_dot(a, b, d)).otherwise(expr)
-    _UNROLL_BUILD_CACHE[key] = expr
-    while len(_UNROLL_BUILD_CACHE) > _UNROLL_BUILD_MAX:
-        _UNROLL_BUILD_CACHE.popitem(last=False)
-    return expr
+    def build() -> Column:
+        expr = F.aggregate(
+            F.zip_with(a, b, lambda x, y: x * y),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+        for d in _UNROLL_DIMS:
+            expr = F.when(F.size(a) == d, _unrolled_dot(a, b, d)).otherwise(expr)
+        return expr
+
+    return SESSION_CACHE.get("vecfuncs", (str(a), str(b)), build)
 
 
 def norm(a: Column, *, unroll: bool = False) -> Column:

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from remote_tsdb_clickhouse_spark.functions.textfuncs import hash32, tokens, word_shingles
-from remote_tsdb_clickhouse_spark.util import spread
+from remote_tsdb_clickhouse_spark.util import SESSION_CACHE, spread
 
 #: MinHash parameters: NUM_HASHES = BANDS * ROWS_PER_BAND.
 #: Operating point (r6, from the `dedup_minhash_recall` diagnostic, which
@@ -593,22 +593,16 @@ def simhash_values(docs: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     return votes.select("doc_id", _simhash_pack_col().alias("simhash"))
 
 
-#: Plan-construction memos (r21, guide §5): the 32 vote aggregates and the
-#: 32-term pack expression are fixed Column trees over fixed column names
-#: ("h", "b0".."b31") — building them issued ~500 py4j round-trips per
-#: simhash_values call (~0.6 s of the query's measured 1.1-1.8 s driver
-#: build time).  Columns are immutable expression wrappers, safe to share
-#: across plans; expressions only, never data.  r22: gateway-aware bounded
-#: memo (a relaunched JVM gateway invalidates cached JavaObjects —
-#: ADVICE r21).
-from remote_tsdb_clickhouse_spark.util import ExprMemo as _ExprMemo
-
-_SIMHASH_EXPR_CACHE = _ExprMemo(maxsize=16)
-
-
+# Plan-construction memos (r21, guide §5): the 32 vote aggregates and the
+# 32-term pack expression are fixed Column trees over fixed column names
+# ("h", "b0".."b31") — building them issued ~500 py4j round-trips per
+# simhash_values call (~0.6 s of the query's measured 1.1-1.8 s driver
+# build time).  Columns are immutable expression wrappers, safe to share
+# across plans; expressions only, never data.
 def _simhash_vote_cols() -> list:
-    return _SIMHASH_EXPR_CACHE.get(
-        "votes",
+    return SESSION_CACHE.get(
+        "dedup",
+        "simhash_votes",
         lambda: [
             F.sum(
                 F.when(
@@ -630,7 +624,7 @@ def _simhash_pack_col():
             packed = term if packed is None else packed + term
         return packed
 
-    return _SIMHASH_EXPR_CACHE.get("pack", build)
+    return SESSION_CACHE.get("dedup", "simhash_pack", build)
 
 
 def simhash_pairs(

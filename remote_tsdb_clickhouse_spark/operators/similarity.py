@@ -23,8 +23,6 @@ codegen and avoids all Arrow transfer.
 
 from __future__ import annotations
 
-from collections import OrderedDict
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -34,11 +32,7 @@ from remote_tsdb_clickhouse_spark.functions.vecfuncs import (
     norm,
     sign_bucket,
 )
-from remote_tsdb_clickhouse_spark.util import ExprMemo
-
-#: Bounded gateway-aware Column memo for this module's fixed expression
-#: trees (r22, guide §5 — the util.ExprMemo story).
-_SIM_EXPR_MEMO = ExprMemo(maxsize=64)
+from remote_tsdb_clickhouse_spark.util import SESSION_CACHE
 
 
 def _with_norm(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -329,42 +323,16 @@ def coarse_cent_rows(
     return _collected_cents(_coarse_cents(emb, n_centroids, centroids, id_col, vec_col))
 
 
-#: id(rows) -> parsed centroid-literal Column.  The 16×64 literal is a
-#: ~20 KB SQL string; parsing it per _nearest_cents_col call (twice per
-#: ivf_topk: assignment + probes, and once more per serving call against
-#: a memoized row list) is measurable driver overhead — a Column is an
-#: immutable expression wrapper, safe to share across plans in a session.
-#: Keyed by id() with the rows object retained in the value to keep the
-#: id stable.  BOUNDED LRU (r6 review finding): a self-building call path
-#: creates a fresh rows list per invocation, whose entry could never be
-#: hit again but pinned its list + JVM Column handle forever — a
-#: long-lived serving process would grow without bound.
-_CENTS_LIT_MAX = 16
-_CENTS_LIT_CACHE: "OrderedDict[int, tuple[object, object]]" = OrderedDict()
+def _cents_sql(rows: list[tuple[int, list[float], float]]) -> tuple[str, str, str]:
+    """The (ids, matrix, norms) SQL literals of collected centroid rows.
 
-#: Active SparkContext the Column caches below were built under (r22,
-#: ADVICE r21): cached Columns wrap py4j JavaObjects, so a relaunched
-#: JVM gateway would serve stale references — clear on context change
-#: (the util.ExprMemo rule, applied to these id()-keyed LRUs).
-_CACHES_CTX: list = [None]
-
-
-def _caches_ctx_check() -> None:
-    from pyspark import SparkContext
-
-    ctx = SparkContext._active_spark_context
-    if ctx is not _CACHES_CTX[0]:
-        _CENTS_LIT_CACHE.clear()
-        _PROBE_COL_CACHE.clear()
-        _CACHES_CTX[0] = ctx
-
-
-def _cents_literal(rows: list[tuple[int, list[float], float]]):
-    _caches_ctx_check()
-    hit = _CENTS_LIT_CACHE.get(id(rows))
-    if hit is not None and hit[0] is rows:
-        _CENTS_LIT_CACHE.move_to_end(id(rows))
-        return hit[1]
+    They are also the session-cache key of every Column built from the
+    rows: the 16×64 literal is a ~20 KB SQL string, and parsing it per
+    :func:`_nearest_cents_col` call (twice per ivf_topk: assignment +
+    probes, once more per serving call) is measurable driver overhead.
+    The key is exact — a built Column is a pure function of these
+    strings — where a key on the float tuples would equate 0.0 with -0.0.
+    """
 
     def d(x: float) -> str:  # exact double literal (repr = shortest round-trip)
         return repr(float(x)) + "d"
@@ -376,23 +344,7 @@ def _cents_literal(rows: list[tuple[int, list[float], float]]):
         + ")"
     )
     nrm_sql = "array(" + ",".join(d(cnrm) for _, _, cnrm in rows) + ")"
-    col = F.arrays_zip(
-        F.expr(ids_sql).alias("cent_id"),
-        F.expr(mat_sql).alias("cvec"),
-        F.expr(nrm_sql).alias("cnrm"),
-    )
-    _CENTS_LIT_CACHE[id(rows)] = (rows, col)
-    while len(_CENTS_LIT_CACHE) > _CENTS_LIT_MAX:
-        _CENTS_LIT_CACHE.popitem(last=False)
-    return col
-
-
-#: (id(rows), str(vec), str(nrm), n) -> built probe Column (same memo
-#: rationale and id-stability/LRU-bounding story as _CENTS_LIT_CACHE one
-#: screen up; r21 guide §5 — the transform+struct lambda chain measured
-#: ~66 ms of py4j-bound driver time per build, paid 2-3x per IVF query).
-_PROBE_COL_MAX = 32
-_PROBE_COL_CACHE: "OrderedDict[tuple, tuple[object, object]]" = OrderedDict()
+    return ids_sql, mat_sql, nrm_sql
 
 
 def _nearest_cents_col(
@@ -423,26 +375,31 @@ def _nearest_cents_col(
     ``Double.parseDouble`` (correctly rounded), so the literal values are
     still bit-exact."""
 
-    _caches_ctx_check()
-    key = (id(rows), str(vec), str(nrm), n)
-    hit = _PROBE_COL_CACHE.get(key)
-    if hit is not None and hit[0] is rows:
-        _PROBE_COL_CACHE.move_to_end(key)
-        return hit[1]
+    sql = _cents_sql(rows)
 
-    cents = _cents_literal(rows)
-    scored = F.transform(
-        cents,
-        lambda c: F.struct(
-            (-cosine_with_norms(vec, c["cvec"], nrm, c["cnrm"])).alias("negcos"),
-            c["cent_id"].alias("cent_id"),
-        ),
-    )
-    col = F.slice(F.array_sort(scored), 1, n)
-    _PROBE_COL_CACHE[key] = (rows, col)
-    while len(_PROBE_COL_CACHE) > _PROBE_COL_MAX:
-        _PROBE_COL_CACHE.popitem(last=False)
-    return col
+    def build():
+        ids_sql, mat_sql, nrm_sql = sql
+        cents = SESSION_CACHE.get(
+            "similarity",
+            ("cents", sql),
+            lambda: F.arrays_zip(
+                F.expr(ids_sql).alias("cent_id"),
+                F.expr(mat_sql).alias("cvec"),
+                F.expr(nrm_sql).alias("cnrm"),
+            ),
+        )
+        scored = F.transform(
+            cents,
+            lambda c: F.struct(
+                (-cosine_with_norms(vec, c["cvec"], nrm, c["cnrm"])).alias("negcos"),
+                c["cent_id"].alias("cent_id"),
+            ),
+        )
+        return F.slice(F.array_sort(scored), 1, n)
+
+    # the transform+struct lambda chain measured ~66 ms of py4j-bound
+    # driver time per build, paid 2-3x per IVF query (r21 guide §5)
+    return SESSION_CACHE.get("similarity", ("probe", sql, str(vec), str(nrm), n), build)
 
 
 def ivf_lists(
@@ -1072,7 +1029,7 @@ def interleave_permute(emb: DataFrame, vec_col: str = "embedding", m: int = 4) -
     # r22 (guide §5): the 64-element gather is ~130 py4j round-trips per
     # build; one immutable Column per (vec_col, m) — expressions only
     return emb.withColumn(
-        vec_col, _SIM_EXPR_MEMO.get(("interleave", vec_col, m, d), build)
+        vec_col, SESSION_CACHE.get("similarity", ("interleave", vec_col, m, d), build)
     )
 
 

@@ -46,13 +46,14 @@ count — the downsampling bucket caps that.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from remote_tsdb_clickhouse_spark.model import DEFAULT_READ_IGNORE_LABEL
 from remote_tsdb_clickhouse_spark.plans.matchers import LabelMatcher, compile_matchers
-from remote_tsdb_clickhouse_spark.util import ExprMemo
+from remote_tsdb_clickhouse_spark.util import SESSION_CACHE
 
 #: Only downsample when the step hint exceeds this (``read.go:13``).
 MIN_STEP_HINT_MS = 2000
@@ -123,14 +124,11 @@ def bucket_time(ts_col, interval_s: int):
 #: hashable inputs (ReadQuery, ReadHints, literals), yet building them
 #: issued dozens of py4j round-trips per query call — measured ~0.06-0.1 s
 #: of every tsdb consumer's ~0.16 s driver build.  Columns are immutable
-#: expression wrappers, safe to share across plans (the established
-#: ``_SIMHASH_EXPR_CACHE`` precedent in operators/dedup.py); the memo
-#: holds expressions only, never data.  r22: bounded + gateway-aware +
-#: TypeError-safe via the shared :class:`ExprMemo` (the ``/read`` server
-#: path sees one distinct ReadQuery per remote-read request, so an
-#: unbounded dict was a slow driver-memory leak — r21 verdict item 3).
-_EXPR_MEMO = ExprMemo(maxsize=256)
-_expr_memo = _EXPR_MEMO.get
+#: expression wrappers, safe to share across plans; the memo holds
+#: expressions only, never data.  The ``/read`` server path sees one
+#: distinct ReadQuery per remote-read request, so the namespace's bound
+#: is what keeps a long-lived server's driver memory flat.
+_expr_memo = partial(SESSION_CACHE.get, "read_plan")
 
 
 def time_expr(q: ReadQuery, *, ignore_hints: bool = False):

@@ -3,17 +3,10 @@
 from __future__ import annotations
 
 import os
-from weakref import WeakKeyDictionary
 
 from pyspark.sql import SparkSession
 
-#: Sessions already configured by :func:`ensure_query_confs`.  Every query
-#: entrypoint (and several shared helpers they call) invokes the ensure —
-#: 68 call sites, several per query call — and each invocation used to pay
-#: ~6 py4j conf round-trips re-setting values that cannot change between
-#: calls (nothing in the engine mutates them).  Weak-keyed so entries die
-#: with their session (r22, guide §5 driver latency).
-_CONFS_ENSURED: WeakKeyDictionary = WeakKeyDictionary()
+from remote_tsdb_clickhouse_spark.util import SESSION_CACHE
 
 
 def ensure_query_confs(spark: SparkSession) -> SparkSession:
@@ -24,13 +17,19 @@ def ensure_query_confs(spark: SparkSession) -> SparkSession:
     comparisons); AQE re-plans shuffles at runtime (skew joins, coalesced
     partitions) — essential at 100 TB, harmless locally.
 
-    The confs are set once per session (``_CONFS_ENSURED``): a later call
-    returns at once, so it will NOT re-apply a conf that other code unset
-    or changed mid-session.  Code that changes one of these confs must
-    restore it itself.
+    The confs are set once per session (the ``confs`` namespace of
+    :data:`~remote_tsdb_clickhouse_spark.util.SESSION_CACHE`): every query
+    entrypoint calls this, often several times per query, and each call
+    used to pay ~6 py4j conf round-trips.  A later call returns at once,
+    so it will NOT re-apply a conf that other code unset or changed
+    mid-session.  Code that changes one of these confs must restore it
+    itself.
     """
-    if _CONFS_ENSURED.get(spark):
-        return spark
+    SESSION_CACHE.get("confs", "ensured", lambda: _set_query_confs(spark))
+    return spark
+
+
+def _set_query_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -55,8 +54,6 @@ def ensure_query_confs(spark: SparkSession) -> SparkSession:
     # normalize in the source adapters (sources/events.py floors ns -> us,
     # byte-matching DuckDB's coercion).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    _CONFS_ENSURED[spark] = True
-    return spark
 
 
 def get_spark(app_name: str = "remote-tsdb-clickhouse-spark") -> SparkSession:

@@ -2,59 +2,81 @@
 
 from __future__ import annotations
 
-from weakref import WeakKeyDictionary
+import threading
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 
+#: Entries per :class:`SessionCache` namespace; past it the oldest-inserted
+#: entry is evicted.  Bench and oracle key sets are small and fixed; the
+#: bound matters for the long-lived ``/read`` server, which builds one
+#: filter per distinct remote-read request.
+SESSION_CACHE_BOUND = 256
 
-class ExprMemo:
-    """Bounded, context-aware memo for driver-side expression trees
-    (Columns / WindowSpecs / tuples of either) keyed by their frozen build
-    inputs — the r21 ``_EXPR_MEMO`` precedents unified and hardened
-    (guide §5 driver latency; expressions only, never data: sharing an
-    immutable expression tree across plans is semantics-free, every query
-    still executes from its own inputs).
+_MISS = object()
 
-    Hardening over the r21 plain dicts (r21 verdict item 3, ADVICE r21):
 
-    - **Bounded**: at most ``maxsize`` entries, oldest-inserted evicted
-      first.  Bench/oracle key sets are tiny and fixed, but the long-lived
-      ``/read`` server path builds one filter per distinct remote-read
-      request — an unbounded dict is a slow driver-memory leak there.
-    - **Gateway-aware**: cached objects wrap py4j JavaObjects.  If the
-      SparkContext (and with it the JVM gateway) is torn down and
-      relaunched, a cached expression would be a stale JavaObject raising
-      confusing py4j errors far from the cause; the memo tracks the active
-      SparkContext and self-clears when it changes.
-    - **TypeError-safe**: an unhashable key component falls back to direct
-      construction (read_plan had this; tsfuncs did not — ADVICE r21).
+class SessionCache:
+    """The engine's one driver-side memo: values that are pure functions
+    of their key for the life of a SparkContext — expression trees
+    (Columns, WindowSpecs), session-memoized DataFrames (the table-frame
+    memo, the catalog-metastore analog for path-based reads), trained
+    index builds and staged setup directories.
+
+    - **Namespaces**: one dict per namespace, so equal keys from
+      different modules never collide.
+    - **Bounded**: at most ``bound`` entries per namespace,
+      oldest-inserted evicted first.  An evicted value is rebuilt on its
+      next use.
+    - **One invalidation rule**: everything is dropped when
+      ``SparkContext._active_spark_context`` changes.  Cached values wrap
+      py4j JavaObjects or hold their SparkSession, so after a stop and
+      relaunch they would raise py4j errors far from the cause — and
+      pin the stopped session.  Keying by context is exact because the
+      engine runs one session per context (``get_spark`` uses
+      ``getOrCreate``).
+    - **TypeError-safe**: an unhashable key component falls back to
+      direct construction, uncached.
     """
 
-    def __init__(self, maxsize: int = 256):
-        self._maxsize = maxsize
-        self._data: dict = {}
+    def __init__(self, bound: int = SESSION_CACHE_BOUND):
+        self.bound = bound
+        self._spaces: dict[str, dict] = {}
         self._ctx = None
+        self._lock = threading.Lock()
 
-    def __len__(self) -> int:
-        return len(self._data)
-
-    def get(self, key, build):
-        from pyspark import SparkContext
-
+    def _space(self, namespace: str) -> dict:
         ctx = SparkContext._active_spark_context
         if ctx is not self._ctx:
-            self._data.clear()
+            self._spaces = {}
             self._ctx = ctx
+        return self._spaces.setdefault(namespace, {})
+
+    def get(self, namespace: str, key, build):
+        space = self._space(namespace)
         try:
-            val = self._data.get(key)
+            val = space.get(key, _MISS)
         except TypeError:  # unhashable component in the key
             return build()
-        if val is None:
+        if val is _MISS:
             val = build()
-            if len(self._data) >= self._maxsize:
-                self._data.pop(next(iter(self._data)))
-            self._data[key] = val
+            with self._lock:
+                if key not in space and len(space) >= self.bound:
+                    del space[next(iter(space))]
+                space[key] = val
         return val
+
+    def size(self, namespace: str) -> int:
+        return len(self._space(namespace))
+
+    def clear(self, namespace: str | None = None) -> None:
+        if namespace is None:
+            self._spaces = {}
+        else:
+            self._spaces.pop(namespace, None)
+
+
+SESSION_CACHE = SessionCache()
 
 
 def _bytes_conf(spark, key: str, default: int) -> int:
@@ -116,26 +138,15 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     return df
 
 
-#: session -> {semanticHash: partition count}.  The RDD probe forces
-#: physical planning (driver-only but ~tens of ms); operator entrypoints call
-#: spread() on the same scans once per query, so memoize by plan semantics —
-#: semantically-equal plans are guaranteed equal hashes, and the hash covers
-#: the relation's file listing, so an appended table re-probes.  Weak-keyed
-#: by the session object so entries die with their session: a dict keyed by
-#: ``id(session)`` could serve stale counts after the id is reused by a new
-#: session (e.g. bench's stopped suite session followed by the cold-pass
-#: one), and would also grow without bound.
-_NPART_CACHE: WeakKeyDictionary = WeakKeyDictionary()
-
-
 def _num_partitions(df: DataFrame) -> int:
+    """Memoized ``df.rdd.getNumPartitions()``.  The RDD probe forces
+    physical planning (driver-only but ~tens of ms); operator entrypoints
+    call spread() on the same scans once per query, so memoize by plan
+    semantics — semantically-equal plans are guaranteed equal hashes, and
+    the hash covers the relation's file listing, so an appended table
+    re-probes."""
     try:
-        sess = df.sparkSession
         h = df.semanticHash()
     except Exception:
         return df.rdd.getNumPartitions()
-    per = _NPART_CACHE.setdefault(sess, {})
-    n = per.get(h)
-    if n is None:
-        n = per[h] = df.rdd.getNumPartitions()
-    return n
+    return SESSION_CACHE.get("npart", h, lambda: df.rdd.getNumPartitions())

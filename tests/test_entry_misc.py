@@ -12,6 +12,7 @@ import tempfile
 from conftest import SF_SMOKE
 
 import __spark_entry__ as entry
+from remote_tsdb_clickhouse_spark.util import SESSION_CACHE
 
 
 def test_samples_spread_guard(spark):
@@ -38,8 +39,8 @@ def _published_staging_path(sf_dir: str) -> str:
 
 
 def _drop_published(spark, sf_dir: str) -> str:
-    """Forget the session memo and remove any published staging dir."""
-    entry._DEDUP_STREAM_STAGING.setdefault(spark, {}).pop(sf_dir, None)
+    """Forget the staging memos and remove any published staging dir."""
+    SESSION_CACHE.clear("staging")
     final = _published_staging_path(sf_dir)
     if os.path.islink(final):
         os.unlink(final)
@@ -94,8 +95,8 @@ def test_staging_reuses_published_dir(spark):
     final = _drop_published(spark, SF_SMOKE)
     first = entry.stage_dedup_stream_input(spark, SF_SMOKE)
     assert first == final and os.path.isfile(os.path.join(final, "_STAGED"))
-    # a fresh "session" view: clear only the memo, keep the dir
-    entry._DEDUP_STREAM_STAGING.setdefault(spark, {}).pop(SF_SMOKE, None)
+    # a fresh "session" view: clear only the staging memos, keep the dir
+    SESSION_CACHE.clear("staging")
     again = entry.stage_dedup_stream_input(spark, SF_SMOKE)
     assert again == final
 

@@ -9,6 +9,7 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entrymod
+from remote_tsdb_clickhouse_spark.util import SESSION_CACHE
 
 from conftest import SF_SMOKE
 
@@ -462,13 +463,11 @@ def _plan_cold(spark, name: str) -> str:
     OBJECTS (plan reuse, not result reuse), and a memoized DataFrame
     carries its first QueryExecution — if that plan already EXECUTED, its
     string embeds every nested AQE-final cached-stage dump, inflating node
-    counts far past the cold shape.  Drop the per-session plan memo along
-    with the cache so the build is genuinely cold, which is exactly the
-    shape a fresh driver session plans and executes."""
+    counts far past the cold shape.  Drop the whole session cache along
+    with Spark's cache so the build is genuinely cold, which is exactly
+    the shape a fresh driver session plans and executes."""
     spark.catalog.clearCache()
-    table_memo = getattr(entrymod, "_TABLE_CACHE", None)
-    if table_memo is not None:
-        table_memo.pop(spark, None)
+    SESSION_CACHE.clear()
     return _plan(spark, name)
 
 

@@ -1,8 +1,15 @@
-"""util.spread: the partition-floor guard for explode-heavy operators."""
+"""util: the partition-floor guard for explode-heavy operators (spread)
+and the one driver-side session cache (SessionCache)."""
 
 from __future__ import annotations
 
-from remote_tsdb_clickhouse_spark.util import _bytes_conf, spread
+from remote_tsdb_clickhouse_spark.util import (
+    SESSION_CACHE,
+    SESSION_CACHE_BOUND,
+    SessionCache,
+    _bytes_conf,
+    spread,
+)
 
 
 def test_spread_repartitions_single_file_scan(spark, tmp_path):
@@ -111,51 +118,89 @@ def test_bench_stdout_json_fits_driver_capture_window():
     assert len(line) < 1200, f"bench stdout line {len(line)}B nears the ~2.2KB window"
 
 
-def test_expr_memo_bounded_fifo_eviction():
-    """r21 verdict item 3: the expression memos must not grow without
-    bound — the /read server path builds one filter per distinct
-    remote-read request, so an uncapped dict is a slow driver-memory
-    leak.  ExprMemo evicts oldest-inserted past maxsize."""
-    from remote_tsdb_clickhouse_spark.util import ExprMemo
-
-    m = ExprMemo(maxsize=8)
+def test_session_cache_bounded_fifo_eviction():
+    """The session cache must not grow without bound — the /read server
+    path builds one filter per distinct remote-read request, so an
+    uncapped namespace is a slow driver-memory leak.  Each namespace
+    evicts oldest-inserted past the bound, and namespaces are separate:
+    an equal key in two namespaces holds two values."""
+    m = SessionCache(bound=8)
     for i in range(100):
-        m.get(("k", i), lambda i=i: f"v{i}")
-    assert len(m) == 8
+        m.get("ns", ("k", i), lambda i=i: f"v{i}")
+        m.get("other", ("k", i), lambda i=i: f"other-v{i}")
+    assert m.size("ns") == 8 and m.size("other") == 8
     # oldest evicted, newest retained (a re-get of a retained key is a hit)
     calls = []
-    assert m.get(("k", 99), lambda: calls.append(1) or "rebuilt") == "v99"
+    assert m.get("ns", ("k", 99), lambda: calls.append(1) or "rebuilt") == "v99"
+    assert m.get("other", ("k", 99), lambda: calls.append(1) or "rebuilt") == "other-v99"
     assert not calls
-    assert m.get(("k", 0), lambda: "rebuilt-0") == "rebuilt-0"
+    assert m.get("ns", ("k", 0), lambda: "rebuilt-0") == "rebuilt-0"
+    # a cached None is a hit too (misses are detected by a sentinel)
+    for _ in range(2):
+        m.get("ns", "none", lambda: calls.append(1))
+    assert calls == [1]
 
 
-def test_expr_memo_typeerror_fallback():
-    """ADVICE r21: an unhashable key component (e.g. a Column slipping
-    into series_window's extra_order) must fall back to direct
-    construction, not raise — tsfuncs' r21 memo lacked this."""
-    from remote_tsdb_clickhouse_spark.util import ExprMemo
-
-    m = ExprMemo(maxsize=8)
+def test_session_cache_typeerror_fallback():
+    """An unhashable key component (e.g. a Column slipping into
+    series_window's extra_order) must fall back to direct construction,
+    not raise."""
+    m = SessionCache(bound=8)
     built = []
     for _ in range(3):
-        m.get(("k", ["unhashable"]), lambda: built.append(1) or "v")
+        m.get("ns", ("k", ["unhashable"]), lambda: built.append(1) or "v")
     assert len(built) == 3  # built every time, never cached
-    assert len(m) == 0
+    assert m.size("ns") == 0
 
 
-def test_expr_memo_clears_on_context_change():
-    """ADVICE r21: cached Columns wrap py4j JavaObjects; a relaunched
-    JVM gateway (new SparkContext) would leave stale references.  The
-    memo tracks the active SparkContext and self-clears on change."""
-    from remote_tsdb_clickhouse_spark.util import ExprMemo
-
-    m = ExprMemo(maxsize=8)
-    m.get(("k",), lambda: "v1")
-    assert len(m) == 1
+def test_session_cache_clears_on_context_change():
+    """Cached values wrap py4j JavaObjects or hold their session; a
+    relaunched SparkContext would leave stale references.  The cache
+    tracks the active SparkContext and drops every namespace on change."""
+    m = SessionCache(bound=8)
+    m.get("ns", ("k",), lambda: "v1")
+    m.get("other", ("k",), lambda: "w1")
+    assert m.size("ns") == 1
     m._ctx = object()  # simulate: entries were cached under another context
     built = []
-    assert m.get(("k",), lambda: built.append(1) or "v2") == "v2"
+    assert m.get("ns", ("k",), lambda: built.append(1) or "v2") == "v2"
     assert built  # rebuilt: the old entry was dropped, not served stale
+    assert m.size("other") == 0
+
+
+def test_session_cache_concurrent_gets_stay_bounded():
+    """The /read server's handler threads share the cache: concurrent
+    misses past the bound must neither raise (two threads evicting the
+    same oldest key) nor serve one key's value for another."""
+    import sys
+    import threading
+
+    m = SessionCache(bound=16)
+    errors = []
+
+    def work(t):
+        try:
+            for i in range(3000):
+                k = (t, i % 40)
+                got = m.get("ns", k, lambda k=k: k)
+                if got != k:
+                    errors.append((k, got))
+        except Exception as exc:  # recorded, asserted below
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(t,)) for t in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors, errors[:3]
+    assert m.size("ns") <= 16
 
 
 def test_read_filter_memo_bounded_under_distinct_queries(spark):
@@ -165,7 +210,7 @@ def test_read_filter_memo_bounded_under_distinct_queries(spark):
 
     for i in range(600):
         rp.read_filter(rp.ReadQuery(start_ms=i * 1000, end_ms=i * 1000 + 500))
-    assert len(rp._EXPR_MEMO) <= 256
+    assert SESSION_CACHE.size("read_plan") <= SESSION_CACHE_BOUND
 
 
 def test_read_filter_memo_ignores_hint_only_differences(spark):
@@ -177,3 +222,98 @@ def test_read_filter_memo_ignores_hint_only_differences(spark):
     q1 = rp.ReadQuery(start_ms=1000, end_ms=2000, hints=rp.ReadHints(step_ms=0))
     q2 = rp.ReadQuery(start_ms=1000, end_ms=2000, hints=rp.ReadHints(step_ms=60000))
     assert rp.read_filter(q1) is rp.read_filter(q2)
+
+
+def test_no_private_driver_caches():
+    """Every driver-side memo goes through util.SESSION_CACHE (one bound,
+    one invalidation rule).  A weak-keyed dict pins its session through
+    values that hold it, and an id()-keyed dict pins every session it has
+    seen, so neither may creep back, nor a module-level OrderedDict LRU;
+    function-local worker memos (plain dicts keyed by payload bytes) do
+    not match."""
+    import ast
+    import glob
+    import os
+
+    def name(node):
+        return getattr(node, "id", None) or getattr(node, "attr", None) or getattr(node, "name", None)
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    files = glob.glob(os.path.join(repo, "remote_tsdb_clickhouse_spark", "**", "*.py"), recursive=True)
+    files.append(os.path.join(repo, "__spark_entry__.py"))
+    hits = []
+    for path in files:
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        for node in ast.walk(tree):
+            if name(node) == "WeakKeyDictionary" or (isinstance(node, ast.Call) and name(node.func) == "id"):
+                hits.append(f"{path}:{node.lineno}: {ast.unparse(node)}")
+        for stmt in tree.body:
+            value = getattr(stmt, "value", None)
+            if isinstance(value, ast.Call) and name(value.func) == "OrderedDict":
+                hits.append(f"{path}:{stmt.lineno}: {ast.unparse(stmt)}")
+    assert len(files) > 20
+    assert not hits, hits
+
+
+_RELAUNCH_SCRIPT = r"""
+import gc, json, sys, weakref
+sys.path.insert(0, sys.argv[1])
+sf = sys.argv[2]
+import __spark_entry__ as entry
+from remote_tsdb_clickhouse_spark.plans import read_plan as rp
+from remote_tsdb_clickhouse_spark.plans.matchers import LabelMatcher, MatcherType
+from remote_tsdb_clickhouse_spark.session import get_spark
+
+q = rp.ReadQuery(start_ms=entry.T0, end_ms=entry.T20,
+                 matchers=(LabelMatcher(MatcherType.EQ, "__name__", "view"),),
+                 hints=rp.ReadHints(step_ms=60000))
+
+def run(spark):
+    frames = [entry.queries()["q6_revenue_delta"](spark, sf),
+              entry.queries()["tsdb_read_eq"](spark, sf),
+              rp.read_query_df(entry._samples(spark, sf), q)]
+    return [sorted(repr(tuple(r)) for r in df.collect()) for df in frames]
+
+spark = get_spark("relaunch")
+spark.sparkContext.setLogLevel("ERROR")
+first = run(spark)
+old = weakref.ref(spark)
+spark.stop()
+del spark
+spark = get_spark("relaunch")  # first session-cache access after the stop
+spark.sparkContext.setLogLevel("ERROR")
+gc.collect()
+old_alive = old() is not None
+second = run(spark)
+spark.stop()
+print("RESULT " + json.dumps({"sizes": [len(r) for r in first],
+                              "equal": first == second, "old_alive": old_alive}))
+"""
+
+
+def test_session_cache_survives_gateway_relaunch(tmp_path):
+    """Stop the session and get a new one in the same process: every
+    memoized frame and expression is rebuilt against the new context (no
+    py4j error from a stale JavaObject, equal results), and the stopped
+    session is released once the cache has been touched.  A subprocess,
+    so the suite's shared session is never stopped."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    from conftest import SF_SMOKE
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_DRIVER_MEMORY="1g")
+    r = subprocess.run(
+        [sys.executable, "-c", _RELAUNCH_SCRIPT, repo, SF_SMOKE],
+        cwd=str(tmp_path), env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-4000:]
+    assert "Py4J" not in r.stderr, r.stderr[-4000:]
+    out = json.loads(r.stdout.split("RESULT ", 1)[1])
+    assert all(out["sizes"]), out  # every query returned rows
+    assert out["equal"], out
+    assert not out["old_alive"], out

@@ -739,6 +739,12 @@ MUTANTS = [
      "order = sorted(range(len(names)), key=lambda i: (names[i], slbs[i]))",
      "order = sorted(range(len(names)), key=lambda i: names[i])",
      ["tests/test_server.py"]),
+    # -- batch 21: the session cache's one invalidation rule ---------------
+    ("M107", "SessionCache never clears on a SparkContext change (stale frames pin the stopped session)",
+     "remote_tsdb_clickhouse_spark/util.py",
+     "if ctx is not self._ctx:",
+     "if ctx is not self._ctx and False:",
+     ["tests/test_util.py"]),
 ]
 
 
