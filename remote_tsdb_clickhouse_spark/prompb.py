@@ -27,6 +27,8 @@ from __future__ import annotations
 import struct
 from dataclasses import dataclass, field
 
+import numpy as np
+
 from remote_tsdb_clickhouse_spark.plans.matchers import LabelMatcher, MatcherType
 from remote_tsdb_clickhouse_spark.plans.read_plan import ReadHints, ReadQuery
 
@@ -205,20 +207,64 @@ def encode_sample(m: Sample) -> bytes:
     return bytes(out)
 
 
-def encode_timeseries(m: TimeSeries) -> bytes:
+def _encode_samples(values: np.ndarray, stamps: np.ndarray) -> tuple[bytes, np.ndarray]:
+    """Every ``Sample`` field (tag 2 of a TimeSeries) of the given float64
+    values and int64 timestamps, in order, in one numpy pass; returns the
+    bytes and each field's length.
+
+    Each field is laid out in a row of 22 columns — tag, length, the
+    value's tag and 8 little-endian bytes, the timestamp's tag and a
+    10-column varint — and a mask keeps the bytes proto3 emits: the value
+    unless its bits are all zero (``+0.0``; ``-0.0`` and NaN payloads are
+    kept), the timestamp unless it is 0, and a varint's significant
+    groups (a negative int64 takes all 10, two's-complement)."""
+    bits = np.ascontiguousarray(values, dtype=np.float64).view("<u8")
+    stamps = np.ascontiguousarray(stamps, dtype=np.int64).view(np.uint64)
+    keep_value = bits != 0  # +0.0 omitted; -0.0 has its sign bit set
+    keep_stamp = stamps != 0
+    shifted = [stamps >> np.uint64(7 * k) for k in range(10)]
+    width = 1 + sum(g != 0 for g in shifted[1:])  # significant 7-bit groups
+    payload = 9 * keep_value + keep_stamp * (1 + width)
+    rows = np.empty((len(bits), 22), dtype=np.uint8)
+    rows[:, 0] = _tag(2, _WT_LEN)
+    rows[:, 1] = payload  # at most 20: a one-byte varint
+    rows[:, 2] = _tag(1, _WT_FIXED64)
+    rows[:, 3:11] = bits.view(np.uint8).reshape(-1, 8)
+    rows[:, 11] = _tag(2, _WT_VARINT)
+    for k, g in enumerate(shifted):
+        # low 7 bits, and the continuation bit on all but the last byte
+        rows[:, 12 + k] = (g & np.uint64(0x7F)) | np.where(k < width - 1, 0x80, 0).astype(np.uint64)
+    keep = np.empty(rows.shape, dtype=bool)
+    keep[:, :2] = True
+    keep[:, 2:11] = keep_value[:, None]
+    keep[:, 11:] = keep_stamp[:, None]
+    keep[:, 12:] &= np.arange(10) < width[:, None]
+    return rows[keep].tobytes(), 2 + payload
+
+
+def _encode_series(series: list[TimeSeries]) -> bytes:
+    """``series`` as repeated TimeSeries fields (tag 1): labels one by
+    one, the samples of every series in one :func:`_encode_samples` pass,
+    cut per series at the cumulative field lengths."""
+    samples = [s for ts in series for s in ts.samples]
+    data, lengths = _encode_samples(
+        np.array([s.value for s in samples], dtype=np.float64),
+        np.array([s.timestamp for s in samples], dtype=np.int64),
+    )
+    firsts = np.cumsum([0] + [len(ts.samples) for ts in series])
+    cuts = np.concatenate(([0], np.cumsum(lengths)))[firsts].tolist()
     out = bytearray()
-    for lb in m.labels:
-        _emit_len(out, 1, encode_label(lb))
-    for s in m.samples:
-        _emit_len(out, 2, encode_sample(s))
+    for i, ts in enumerate(series):
+        body = bytearray()
+        for lb in ts.labels:
+            _emit_len(body, 1, encode_label(lb))
+        body += data[cuts[i] : cuts[i + 1]]
+        _emit_len(out, 1, body)
     return bytes(out)
 
 
 def encode_write_request(m: WriteRequest) -> bytes:
-    out = bytearray()
-    for ts in m.timeseries:
-        _emit_len(out, 1, encode_timeseries(ts))
-    return bytes(out)
+    return _encode_series(m.timeseries)
 
 
 def encode_matcher(m: LabelMatcher) -> bytes:
@@ -255,10 +301,7 @@ def encode_read_request(m: ReadRequest) -> bytes:
 
 
 def encode_query_result(m: QueryResult) -> bytes:
-    out = bytearray()
-    for ts in m.timeseries:
-        _emit_len(out, 1, encode_timeseries(ts))
-    return bytes(out)
+    return _encode_series(m.timeseries)
 
 
 def encode_read_response(m: ReadResponse) -> bytes:

@@ -8,7 +8,8 @@ starts the Prometheus remote-storage adapter as a process: flag surface,
 Two storage legs, matching the reference's flag surface (``main.go:82-90``):
 
 - ``--store PATH`` — the Spark-native parquet samples store (engine and
-  storage both Spark; ``-table``'s role is the path).
+  storage both Spark; ``-table``'s role is the path).  A local path or
+  ``file:`` URI: ``/write`` commits by local rename.
 - ``--db ADDR`` (+ ``--db.database/--db.username/--db.password``,
   ``--table``) — the reference's exact deployment shape: Spark is the
   engine, ClickHouse is the storage.  ``ADDR`` is the ClickHouse **HTTP
@@ -101,9 +102,10 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
 
 
 def _store_exists(spark, path: str) -> bool:
-    """Probe the store path through the Hadoop FileSystem API so non-local
-    URIs (s3a://, hdfs://) that Spark can serve are accepted — a plain
-    ``os.path.isdir`` would spuriously reject them."""
+    """Probe the store path through the Hadoop FileSystem API, which
+    resolves a relative path or a ``file:`` URI the way Spark's reads do.
+    Only local stores get this far: ``build_server`` refuses any other
+    scheme first, because ``/write`` commits by local rename."""
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(path)
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -160,9 +162,20 @@ def build_server(args: argparse.Namespace, spark=None, http=None):
                 ignore_hints=args.read_ignore_hints,
             )
     else:
-        from remote_tsdb_clickhouse_spark.sources.samples_store import SamplesStore
+        from remote_tsdb_clickhouse_spark.sources.samples_store import (
+            SamplesStore,
+            local_store_path,
+        )
         from remote_tsdb_clickhouse_spark.sources.writer import TimeseriesWriter
 
+        # a /write is published by an atomic rename and fsynced before the
+        # 200, which needs a local POSIX filesystem
+        if local_store_path(args.store) is None:
+            raise SystemExit(
+                f"store {args.store!r} is not a local path or file: URI; the HTTP "
+                "/write commit needs a local filesystem.  Remote stores are fed "
+                "by the streaming ingest (remote_tsdb_clickhouse_spark.streaming.ingest.StreamingIngest)"
+            )
         store = SamplesStore(spark, args.store)
         # fail-fast storage check, the db.Ping() analog: an unreadable or
         # absent table is a config error surfaced at startup, not on the

@@ -19,9 +19,18 @@ The reference's storage is one ClickHouse MergeTree table ordered by
   files unsorted.  With ``ts_date`` first the requirement is already met,
   no sort is added, and since ``ts_date`` is constant within a file the
   file order is ``(metric_name, labels, ts)``.
-- **Append-atomicity**: each ``append()`` lands via parquet's committed-file
-  protocol — readers never see partial batches, the analog of the
-  reference's per-request transaction (``write.go:14-22,60``).
+- **Append-atomicity**: a request's rows (one ``pyarrow.Table``, already
+  in store order) commit without Spark, the analog of the reference's
+  per-request transaction (``write.go:14-22,60``).  Each date partition is
+  written by ``pq.write_table`` to a dot-prefixed temp name, which Spark's
+  file index ignores, and fsynced; only when every temp file is written
+  are they renamed (``os.replace``) to ``part-00000-<request uuid>`` names,
+  and their directories and the store root fsynced.  Readers see each file whole or not at
+  all (a multi-day request's files appear one rename apart), and the 200
+  waits for the rows to be durable; a failure unlinks what the commit
+  wrote.  This needs a local POSIX filesystem
+  (:func:`local_store_path`).  DataFrame appends (streaming micro-batches,
+  TSV imports) keep Spark's committed-file protocol.
 - **Range delete (S8)**: the reference uses ``ALTER TABLE ... DELETE WHERE
   updated_at > a AND updated_at <= b`` for day reimports
   (``README.md:163-167``); here it is a partition-scoped rewrite using
@@ -38,6 +47,15 @@ The reference's storage is one ClickHouse MergeTree table ordered by
 
 from __future__ import annotations
 
+import contextlib
+import os
+import threading
+import uuid
+from urllib.parse import unquote, urlparse
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 
@@ -56,35 +74,88 @@ def sorted_partitioned_write(df: DataFrame) -> DataFrameWriter:
     return df.sortWithinPartitions(*keys).write.partitionBy(PARTITION_COLUMN)
 
 
+def local_store_path(path: str) -> str | None:
+    """The local filesystem path of a store given as a path or a ``file:``
+    URI; None for any other scheme (``s3a://``, ``hdfs://``, ...)."""
+    url = urlparse(path)
+    if url.scheme == "file":
+        return unquote(url.path)
+    return path if url.scheme == "" else None
+
+
+def _fsync(path: str) -> None:
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
 class SamplesStore:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        # concurrent appends to one parquet root race on the shared
-        # `_temporary` commit-staging dir (one job's cleanup deletes the
-        # other's in-flight task files -> silently lost rows; observed under
-        # threaded HTTP writers).  Appends are serialized per store process —
-        # the reference has the same discipline (one adapter process, inserts
-        # serialized by ClickHouse server-side); multi-writer deployments go
-        # through the streaming ingest, whose micro-batches serialize anyway.
-        # A cluster-grade multi-writer store swaps this for a table format
-        # with a transactional commit protocol (Delta/Iceberg).
-        import threading
-
+        # concurrent DataFrame appends to one parquet root race on Spark's
+        # shared `_temporary` commit-staging dir (one job's cleanup deletes
+        # the other's in-flight task files -> silently lost rows), so they
+        # are serialized per store process.  Table commits stage nothing
+        # shared (each writes its own temp names) and take no lock.
         self._append_lock = threading.Lock()
 
     # -- write path ---------------------------------------------------------
 
-    def append(self, df: DataFrame) -> None:
-        """Append canonical-schema rows (one micro-batch / one request).
+    def append(self, rows: DataFrame | pa.Table) -> None:
+        """Append canonical-schema rows (one request / one micro-batch).
 
-        Each task writes one file per date partition it holds, in the
-        MergeTree-like physical order; partitionBy(date) keeps time pruning.
+        A ``pyarrow.Table`` (one request, rows in store order) is committed
+        by :meth:`_commit_table`: one file per date partition, no Spark job.
+        A DataFrame is written by Spark: each task writes one file per date
+        partition it holds, in the MergeTree-like physical order.
         """
+        if isinstance(rows, pa.Table):
+            self._commit_table(rows)
+            return
         with self._append_lock:
             sorted_partitioned_write(
-                df.select(*SAMPLES_FIELDS).withColumn(PARTITION_COLUMN, F.to_date("ts"))
+                rows.select(*SAMPLES_FIELDS).withColumn(PARTITION_COLUMN, F.to_date("ts"))
             ).mode("append").parquet(self.path)
+
+    def _commit_table(self, table: pa.Table) -> None:
+        """Write each date partition of ``table`` to a temp file, then
+        publish them all by rename; on any exception, unlink every file
+        this commit wrote and re-raise."""
+        root = local_store_path(self.path)
+        if root is None:
+            raise ValueError(f"store {self.path!r} is not on a local filesystem")
+        days = table.column("ts").cast(pa.int64()).to_numpy() // 86_400_000_000
+        bounds = [0, *(np.flatnonzero(np.diff(days)) + 1).tolist(), len(days)]
+        name = f"part-00000-{uuid.uuid4()}.c000.snappy.parquet"
+        # the directories whose entries this commit may change.  The root
+        # is synced on every commit, not only by the one that makes a
+        # partition: a concurrent commit may have made it and not synced yet
+        synced = {root}
+        if not os.path.isdir(root):
+            synced.add(os.path.dirname(os.path.abspath(root)))
+        moves: list[tuple[str, str]] = []
+        try:
+            for lo, hi in zip(bounds, bounds[1:]):
+                day = np.datetime64(int(days[lo]), "D")  # YYYY-MM-DD, like Spark's
+                part_dir = os.path.join(root, f"{PARTITION_COLUMN}={day}")
+                os.makedirs(part_dir, exist_ok=True)
+                synced.add(part_dir)
+                tmp = os.path.join(part_dir, f".{name}.tmp")
+                moves.append((tmp, os.path.join(part_dir, name)))
+                pq.write_table(table.slice(lo, hi - lo), tmp)
+                _fsync(tmp)
+            for tmp, final in moves:
+                os.replace(tmp, final)
+            for d in sorted(synced):
+                _fsync(d)
+        except BaseException:
+            for p in (p for move in moves for p in move):
+                with contextlib.suppress(FileNotFoundError):
+                    os.unlink(p)
+            raise
 
     # -- read path ----------------------------------------------------------
 

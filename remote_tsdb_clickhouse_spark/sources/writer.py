@@ -11,13 +11,18 @@ Here the flatten runs driver-side over the decoded request (requests are
 bounded — 32 MiB wire cap — so this is not a scale risk).  One pass over
 the series collects the per-series name and labelset and the per-sample
 timestamps and values; the result is one ``pyarrow.Table`` in
-``SAMPLES_SCHEMA`` column order, with the series columns ``take``-n out to
-their samples.  ``createDataFrame`` ships that table to the JVM as an Arrow
-stream, so no Python worker unpickles and re-pickles the rows, and
-:class:`TimeseriesWriter` appends it as one task: one parquet file per date
-partition per request, committed atomically.  The ingest *volume* path is
-Structured Streaming over many requests (``streaming/ingest.py``), where
-the same row shape arrives via staged batches.
+``SAMPLES_SCHEMA`` column order, already in the store's row order
+``(ts_date, metric_name, labels, ts)``: the series keys are sorted once,
+and one ``np.lexsort`` over (day, series rank, second) orders the samples.
+That order is the one Spark's sort would give, because prompb decodes
+strict UTF-8, on which Python's code-point string order (and its
+element-wise list order) equals Spark's byte order.
+
+:class:`TimeseriesWriter` hands that table to :meth:`SamplesStore.append`,
+which commits it without Spark: one parquet file per date partition,
+published by an atomic rename before the 200.  The ingest *volume* path
+is Structured Streaming over many requests (``streaming/ingest.py``),
+which appends DataFrames through Spark.
 """
 
 from __future__ import annotations
@@ -46,7 +51,8 @@ def write_request_rows(req: prompb.WriteRequest) -> pa.Table:
 
     One row per sample: ``ts`` is the ms timestamp floored to whole UTC
     seconds, ``__name__`` becomes ``metric_name`` and the other labels the
-    ``"name=value"`` list, per the reference semantics.  Raises
+    ``"name=value"`` list, per the reference semantics.  Rows come in
+    store order ``(ts_date, metric_name, labels, ts)``.  Raises
     ``ValueError`` if a timestamp falls outside years 1-9999.
     """
     names: list[str] = []
@@ -73,14 +79,22 @@ def write_request_rows(req: prompb.WriteRequest) -> pa.Table:
     secs = np.array(ts_ms, dtype=np.int64) // 1000
     if len(secs) and not (_MIN_TS_S <= secs.min() and secs.max() <= _MAX_TS_S):
         raise ValueError(f"sample timestamp outside years 1-9999: {secs.min()}s..{secs.max()}s")
+    # store order: rank the distinct series keys once, then sort the
+    # samples by (day, series rank, second); lexsort is stable, so equal
+    # keys keep their request order
+    series_keys = list(zip(names, map(tuple, labelsets)))
+    rank_of = {k: r for r, k in enumerate(sorted(set(series_keys)))}
+    series_rank = np.array([rank_of[k] for k in series_keys], dtype=np.int64)
     series_of_sample = np.repeat(np.arange(len(names)), counts)
+    order = np.lexsort((secs, series_rank[series_of_sample], secs // 86_400))
+    series_of_sample = series_of_sample[order]
     types = _ARROW_SCHEMA.types
     return pa.Table.from_arrays(
         [
-            pa.array(secs * 1_000_000, types[0]),
+            pa.array(secs[order] * 1_000_000, types[0]),
             pa.array(names, types[1]).take(series_of_sample),
             pa.array(labelsets, types[2]).take(series_of_sample),
-            pa.array(np.array(values, dtype=np.float64), types[3]),
+            pa.array(np.array(values, dtype=np.float64)[order], types[3]),
         ],
         schema=_ARROW_SCHEMA,
     )
@@ -99,9 +113,6 @@ class TimeseriesWriter:
 
     def write(self, req: prompb.WriteRequest) -> int:
         table = write_request_rows(req)
-        if not table.num_rows:
-            return 0
-        # one task writes the request: one file per date partition
-        df = self.store.spark.createDataFrame(table, SAMPLES_SCHEMA).coalesce(1)
-        self.store.append(df)
+        if table.num_rows:
+            self.store.append(table)
         return table.num_rows

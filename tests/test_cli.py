@@ -46,6 +46,36 @@ def test_fail_fast_on_missing_store(spark, tmp_path):
         build_server(args, spark=spark)
 
 
+@pytest.mark.parametrize("store", ["s3a://bucket/samples", "hdfs://namenode:8020/samples"])
+def test_non_local_store_refused(spark, store):
+    """``/write`` publishes by a local atomic rename, so a remote store is
+    a startup error that points at the streaming ingest."""
+    args = parse_args(["--store", store, "--http", "127.0.0.1:0", "--create-if-missing"])
+    with pytest.raises(SystemExit, match="streaming ingest"):
+        build_server(args, spark=spark)
+
+
+def test_file_uri_store_commits_locally(spark, tmp_path):
+    import urllib.request
+
+    root = tmp_path / "samples"
+    args = parse_args(["--store", root.as_uri(), "--http", "127.0.0.1:0", "--create-if-missing"])
+    srv = build_server(args, spark=spark).start()
+    try:
+        wr = prompb.WriteRequest(timeseries=[prompb.TimeSeries(
+            labels=[prompb.Label("__name__", "up")], samples=[prompb.Sample(1.0, 1704067200000)],
+        )])
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{srv.port}/write", data=codec.encode_write_request(wr), method="POST"
+        )
+        with urllib.request.urlopen(req) as r:
+            assert r.status == 200
+    finally:
+        srv.stop()
+    [f] = root.rglob("*.parquet")
+    assert f.parent.name == "ts_date=2024-01-01" and f.name.startswith("part-00000-")
+
+
 def test_cli_server_write_read_roundtrip(spark, tmp_path):
     import urllib.request
 

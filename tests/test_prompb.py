@@ -2,7 +2,11 @@
 
 from __future__ import annotations
 
+import struct
+
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 
 from remote_tsdb_clickhouse_spark import codec, prompb
 from remote_tsdb_clickhouse_spark.plans.matchers import LabelMatcher, MatcherType
@@ -219,3 +223,58 @@ def test_snappy_golden_vector():
     # spec rules (leading uvarint == decompressed length)
     out = codec.snappy_compress(b"abcabcabc")
     assert codec._snappy_uncompressed_len(out) == 9
+
+
+def per_sample_encode(series: list[prompb.TimeSeries]) -> bytes:
+    """The encoder the vectorized one replaced: every TimeSeries field
+    built label by label and Sample by Sample (``encode_sample``)."""
+    out = bytearray()
+    for ts in series:
+        body = bytearray()
+        for lb in ts.labels:
+            prompb._emit_len(body, 1, prompb.encode_label(lb))
+        for s in ts.samples:
+            prompb._emit_len(body, 2, prompb.encode_sample(s))
+        prompb._emit_len(out, 1, bytes(body))
+    return bytes(out)
+
+
+def _f64(bits: int) -> float:
+    return struct.unpack("<d", struct.pack("<Q", bits))[0]
+
+
+_enc_value = st.one_of(
+    st.floats(width=64),
+    st.sampled_from([0.0, -0.0, float("inf"), float("-inf"), 5e-324]),
+    # NaNs with payloads: the staleness marker, quiet and signalling, signed
+    st.integers(1, 2**52 - 1).flatmap(
+        lambda m: st.sampled_from([_f64(0x7FF0000000000000 | m), _f64(0xFFF0000000000000 | m)])
+    ),
+)
+_enc_stamp = st.one_of(
+    st.just(0), st.integers(-(2**63), 2**63 - 1), st.integers(-1000, 1000),
+    st.sampled_from([2**7 * k - 1 for k in (1, 2**7, 2**14, 2**21, 2**28, 2**35, 2**42, 2**49, 2**56)]),
+)
+_enc_series = st.builds(
+    prompb.TimeSeries,
+    labels=st.lists(st.builds(prompb.Label, name=st.text(max_size=3), value=st.text(max_size=3)), max_size=3),
+    samples=st.lists(st.builds(prompb.Sample, value=_enc_value, timestamp=_enc_stamp), max_size=6),
+)
+
+
+@settings(max_examples=400, deadline=None)
+@given(series=st.lists(_enc_series, max_size=5))
+@example(series=[prompb.TimeSeries(samples=[
+    prompb.Sample(-0.0, 0), prompb.Sample(0.0, 0), prompb.Sample(0.0, -1),
+    prompb.Sample(_f64(0x7FF0000000000002), 2**63 - 1), prompb.Sample(float("nan"), -(2**63)),
+])])
+@example(series=[prompb.TimeSeries(labels=[prompb.Label("a", "b")]), prompb.TimeSeries()])
+def test_vectorized_encoder_matches_per_sample_model(series):
+    """``encode_write_request`` and ``encode_query_result`` encode every
+    sample of the message in one numpy pass; their bytes must equal the
+    per-sample encoder's: proto3 omits ``+0.0`` and ``ts == 0`` but keeps
+    ``-0.0``, negative timestamps are 10-byte two's-complement varints, and
+    NaN payload bits are copied as they are."""
+    want = per_sample_encode(series)
+    assert prompb.encode_write_request(prompb.WriteRequest(timeseries=series)) == want
+    assert prompb.encode_query_result(prompb.QueryResult(timeseries=series)) == want

@@ -3,6 +3,7 @@ HTTP (S1-S5 + read path + S9 metrics), mirroring a Prometheus client."""
 
 from __future__ import annotations
 
+import struct
 import urllib.error
 import urllib.request
 
@@ -132,6 +133,82 @@ def test_out_of_range_timestamp_write_is_500_and_stores_nothing(server, tmp_path
     assert app.metrics.write_errors_total.value == errs0 + 1
     assert sorted(tuple(r) for r in app.samples_provider().collect()) == before
     assert sorted((tmp_path / "samples").rglob("*.parquet")) == files_before
+
+
+def _f64(bits: int) -> float:
+    return struct.unpack("<d", struct.pack("<Q", bits))[0]
+
+
+def _bits(v: float) -> int:
+    return struct.unpack("<Q", struct.pack("<d", v))[0]
+
+
+def test_staleness_marker_bits_survive_write_and_read(server):
+    """Prometheus marks a stale series with the NaN ``0x7ff0000000000002``.
+    ClickHouse keeps those bits; so must the store: ``/read`` returns them
+    raw, and as the bucket max of a step-hinted read (Spark's max orders
+    NaN above every number).  A Spark-written store holds the canonical
+    NaN ``0x7ff8000000000000`` instead."""
+    srv, _ = server
+    marker = 0x7FF0000000000002
+    t0 = 1704067200000
+    wr = prompb.WriteRequest(timeseries=[prompb.TimeSeries(
+        labels=[prompb.Label("__name__", "up"), prompb.Label("job", "a")],
+        samples=[prompb.Sample(1.0, t0), prompb.Sample(_f64(marker), t0 + 10_000)],
+    )])
+    assert _post(srv.port, "/write", codec.encode_write_request(wr))[0] == 200
+
+    def read(hints):
+        rr = prompb.ReadRequest(queries=[ReadQuery(
+            start_ms=t0, end_ms=t0 + 60_000,
+            matchers=(LabelMatcher(MatcherType.EQ, "__name__", "up"),), hints=hints,
+        )])
+        status, body = _post(srv.port, "/read", codec.encode_read_request(rr))
+        assert status == 200
+        [series] = prompb.decode_read_response(codec.snappy_decompress(body)).results[0].timeseries
+        return [(s.timestamp, _bits(s.value)) for s in series.samples]
+
+    assert read(ReadHints()) == [(t0, _bits(1.0)), (t0 + 10_000, marker)]
+    # step 60 s -> 30 s buckets: both samples share the first one
+    assert read(ReadHints(step_ms=60_000)) == [(t0, marker)]
+
+
+def test_failed_commit_leaves_nothing(server, tmp_path, monkeypatch):
+    """A commit that fails while writing its second date partition answers
+    500 and counts one write error, and leaves the store as it was: no new
+    parquet file, no temp file, the same rows."""
+    import pyarrow.parquet as pq
+
+    srv, app = server
+    root = tmp_path / "samples"
+    day = prompb.WriteRequest(timeseries=[prompb.TimeSeries(
+        labels=[prompb.Label("__name__", "up")], samples=[prompb.Sample(1.0, 1704067200000)],
+    )])
+    assert _post(srv.port, "/write", codec.encode_write_request(day))[0] == 200
+    files = sorted(p for p in root.rglob("*") if p.is_file())
+    rows = sorted(tuple(r) for r in app.samples_provider().collect())
+
+    written = []
+    real_write = pq.write_table
+
+    def write_table(table, where, *args, **kwargs):
+        written.append(where)
+        if len(written) == 2:
+            raise OSError("no space left on device")
+        return real_write(table, where, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "write_table", write_table)
+    two_days = prompb.WriteRequest(timeseries=[prompb.TimeSeries(
+        labels=[prompb.Label("__name__", "up")],
+        samples=[prompb.Sample(2.0, 1704067215000), prompb.Sample(3.0, 1704153600000)],
+    )])
+    errs0 = app.metrics.write_errors_total.value
+    status, body = _post(srv.port, "/write", codec.encode_write_request(two_days))
+    assert status == 500 and b"no space left" in body
+    assert app.metrics.write_errors_total.value == errs0 + 1
+    assert len(written) == 2  # the first partition's temp file was written
+    assert sorted(p for p in root.rglob("*") if p.is_file()) == files
+    assert sorted(tuple(r) for r in app.samples_provider().collect()) == rows
 
 
 def test_canceled_read_not_counted_as_error(spark, tmp_path):

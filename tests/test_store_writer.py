@@ -3,12 +3,15 @@ compaction, partition layout."""
 
 from __future__ import annotations
 
+import struct
 from datetime import datetime, timezone
 
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from remote_tsdb_clickhouse_spark import prompb
-from remote_tsdb_clickhouse_spark.model import PARTITION_COLUMN, SAMPLES_FIELDS
+from remote_tsdb_clickhouse_spark.model import PARTITION_COLUMN, SAMPLES_FIELDS, SAMPLES_SCHEMA
 from remote_tsdb_clickhouse_spark.sources.samples_store import SamplesStore
 from remote_tsdb_clickhouse_spark.sources.writer import TimeseriesWriter, write_request_rows
 
@@ -457,3 +460,74 @@ def test_every_write_path_lands_sorted_files(spark, tmp_path):
     rollups = RollupStore(spark, store, str(tmp_path / "rollup"))
     rollups.build(300)
     _assert_files_sorted(tmp_path / "rollup")
+
+
+def _bits(v: float) -> int:
+    return struct.unpack("<Q", struct.pack("<d", v))[0]
+
+
+def _keyed_bits(table) -> list[tuple]:
+    """(ts, metric_name, labels, value bits) of every row, sorted."""
+    cols = [table.column(c).to_pylist() for c in SAMPLES_FIELDS]
+    return sorted((t.timestamp(), n, lb, _bits(v)) for t, n, lb, v in zip(*cols))
+
+
+_DAY_MS = 86_400_000
+_STALE = struct.unpack("<d", struct.pack("<Q", 0x7FF0000000000002))[0]
+_eq_series = st.builds(
+    prompb.TimeSeries,
+    labels=st.lists(
+        st.builds(prompb.Label, name=st.sampled_from(["__name__", "job", "i", "é"]),
+                  value=st.sampled_from(["", "up", "a=b", "ä€😀", "z"])),
+        max_size=3,
+    ),
+    samples=st.lists(
+        st.builds(
+            prompb.Sample,
+            value=st.one_of(st.floats(width=64), st.sampled_from([_STALE, -0.0, 0.0])),
+            timestamp=st.one_of(
+                st.integers(-3 * _DAY_MS, 3 * _DAY_MS),  # pre-1970 and multi-day
+                st.integers(1_704_067_200_000, 1_704_067_200_000 + 2 * _DAY_MS),
+                st.sampled_from([-62_135_596_800_000, 253_402_300_799_999, -12_219_292_800_001]),
+            ),
+        ),
+        min_size=1, max_size=5,
+    ),
+)
+
+
+def _series(name, labels, samples):
+    return prompb.TimeSeries(
+        labels=[prompb.Label("__name__", name)] + [prompb.Label(k, v) for k, v in labels],
+        samples=[prompb.Sample(v, t) for v, t in samples],
+    )
+
+
+@settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
+@given(req=st.builds(prompb.WriteRequest, timeseries=st.lists(_eq_series, min_size=1, max_size=4)))
+@example(req=prompb.WriteRequest(timeseries=[
+    # one series twice in the request, over three days around 1970
+    _series("up", [("job", "a")], [(1.0, -_DAY_MS - 1), (_STALE, 5), (3.0, _DAY_MS)]),
+    _series("", [], [(float("nan"), -1), (-0.0, 0)]),  # no name, empty labelset
+    _series("up", [("job", "a")], [(4.0, 5), (5.0, -1_000)]),
+    _series("up", [], [(6.0, 1_704_067_200_000)]),
+]))
+def test_committed_store_equals_spark_written_store(spark, tmp_path_factory, req):
+    """A request committed by pyarrow reads back through ``SamplesStore.read``
+    exactly like the same table appended by Spark's DataFrame write: equal
+    schemas (the explicit one and the one Spark infers from the files), no
+    row in one and not the other, and on the committed side every value's
+    bits, NaN payloads included (Spark's own write stores the canonical
+    NaN instead)."""
+    table = write_request_rows(req)
+    d = tmp_path_factory.mktemp("equivalence")
+    committed = SamplesStore(spark, str(d / "committed"))
+    committed.append(table)
+    written = SamplesStore(spark, str(d / "spark"))
+    written.append(spark.createDataFrame(table, SAMPLES_SCHEMA))
+
+    a, b = committed.read(), written.read()
+    assert a.schema == b.schema
+    assert spark.read.parquet(committed.path).schema == spark.read.parquet(written.path).schema
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    assert _keyed_bits(committed.read(with_partition_col=False).toArrow()) == _keyed_bits(table)

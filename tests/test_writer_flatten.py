@@ -2,11 +2,13 @@
 sent through the wire codec, must flatten to exactly the rows of a
 pure-Python model of the reference semantics — one row per sample,
 ``__name__`` split out, the other labels as ``"name=value"`` in request
-order, the ms timestamp floored to a whole UTC second — with values
+order, the ms timestamp floored to a whole UTC second, and the rows in
+the store's order ``(ts_date, metric_name, labels, ts)`` — with values
 compared by their IEEE bits and the same set of requests rejected.
 
 The model is the per-sample ``datetime`` tuple flatten the Arrow table
-replaced, so agreement means the table is a drop-in for it.
+replaced, its rows stably sorted by the store key, so agreement means the
+table is a drop-in for it in the order Spark's sort would give.
 """
 
 from __future__ import annotations
@@ -35,7 +37,8 @@ def _bits(v: float) -> int:
 
 
 def tuple_model(req: prompb.WriteRequest) -> list[tuple]:
-    """The reference flatten, one Python tuple per sample."""
+    """The reference flatten, one Python tuple per sample, in store order
+    (a stable sort: equal keys keep their request order)."""
     rows = []
     for ts_msg in req.timeseries:
         name = ""
@@ -48,7 +51,7 @@ def tuple_model(req: prompb.WriteRequest) -> list[tuple]:
         for s in ts_msg.samples:
             ts = datetime.fromtimestamp(s.timestamp // 1000, tz=timezone.utc).replace(tzinfo=None)
             rows.append((ts, name, labels, _bits(float(s.value))))
-    return rows
+    return sorted(rows, key=lambda r: (r[0].date(), r[1], r[2], r[0]))
 
 
 def table_rows(req: prompb.WriteRequest) -> list[tuple]:
@@ -134,13 +137,13 @@ def test_corner_request_rows():
     also pass if model and table were wrong the same way."""
     rows = table_rows(_CORNERS)
     assert [(r[0].isoformat(), r[1], r[2]) for r in rows] == [
-        ("2024-01-01T00:00:00", "", []),
-        ("1969-12-31T23:59:59", "", ["job=ä€😀", "名前=误差"]),
+        ("0001-01-01T00:00:00", "stale", ["i=0"]),
         ("1969-12-31T23:59:58", "", ["job=ä€😀", "名前=误差"]),
+        ("1969-12-31T23:59:59", "", ["job=ä€😀", "名前=误差"]),
         ("1970-01-01T00:00:00", "", ["job=ä€😀", "名前=误差"]),
         ("1970-01-01T00:00:00", "stale", ["i=0"]),
         ("1970-01-01T00:00:01", "stale", ["i=0"]),
-        ("0001-01-01T00:00:00", "stale", ["i=0"]),
+        ("2024-01-01T00:00:00", "", []),
         ("9999-12-31T23:59:59", "stale", ["i=0"]),
     ]
     assert rows[4][3] == 0x7FF0000000000002  # the stale marker's payload is kept

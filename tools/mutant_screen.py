@@ -745,6 +745,16 @@ MUTANTS = [
      "if ctx is not self._ctx:",
      "if ctx is not self._ctx and False:",
      ["tests/test_util.py"]),
+    # -- batch 22: the Spark-free /write commit and the vectorized encoder --
+    ("M108", "write flatten's series rank ignores labels (same-name series interleave by ts)", WR,
+     "series_keys = list(zip(names, map(tuple, labelsets)))",
+     "series_keys = [(n, ()) for n in names]",
+     ["tests/test_store_writer.py"]),
+    ("M109", "sample encoder drops -0.0 like +0.0 (proto3 keeps the sign bit)",
+     "remote_tsdb_clickhouse_spark/prompb.py",
+     "keep_value = bits != 0  # +0.0 omitted; -0.0 has its sign bit set",
+     "keep_value = bits.view(np.float64) != 0.0",
+     ["tests/test_prompb.py"]),
 ]
 
 
