@@ -19,9 +19,11 @@ Conventions keeping the hash comparison stable across engines:
 
 from __future__ import annotations
 
+import atexit
 import functools
 import hashlib
 import os
+import shutil
 import sys
 import tempfile
 from collections.abc import Callable
@@ -108,6 +110,26 @@ def _session_memo(namespace: str):
         return memo
 
     return deco
+
+
+@functools.cache
+def _scratch_root() -> str:
+    """The one directory of this process under which every staging build
+    makes its temp directories (stores, bucketed tables, streaming inputs
+    and checkpoints); removed when the process exits."""
+    root = tempfile.mkdtemp(prefix="graft_")
+    pid = os.getpid()
+
+    def remove() -> None:
+        if os.getpid() == pid:  # a forked child exiting must not remove it
+            shutil.rmtree(root, ignore_errors=True)
+
+    atexit.register(remove)
+    return root
+
+
+def _mkdtemp(prefix: str) -> str:
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root())
 
 
 #: Cached-samples partition count at LOCAL-BENCH scale — the measured knee
@@ -296,7 +318,7 @@ def _rollup_store(spark: SparkSession, sf_dir: str):
     from remote_tsdb_clickhouse_spark.sources.samples_store import SamplesStore
 
     ensure_query_confs(spark)
-    root = tempfile.mkdtemp(prefix="graft_rollup_")
+    root = _mkdtemp(prefix="rollup_")
     base = SamplesStore(spark, f"{root}/samples")
     base.append(events_to_samples(spark, sf_dir))
     rs = RollupStore(spark, base, f"{root}/rollups")
@@ -335,14 +357,14 @@ def _compacted_store(spark: SparkSession, sf_dir: str):
     from remote_tsdb_clickhouse_spark.sources.samples_store import SamplesStore
 
     ensure_query_confs(spark)
-    root = tempfile.mkdtemp(prefix="graft_compact_")
+    root = _mkdtemp(prefix="compact_")
     st = SamplesStore(spark, f"{root}/samples")
     s = events_to_samples(spark, sf_dir).where(F.col("metric_name") == "click")
     cut1, cut2 = "2024-01-07 00:00:00", "2024-01-14 00:00:00"
     st.append(s.where(F.col("ts") < cut1))
     st.append(s.where((F.col("ts") >= cut1) & (F.col("ts") < cut2)))
     st.append(s.where(F.col("ts") >= cut2))
-    st.compact(files_per_partition=1)
+    st.compact()
     return st
 
 
@@ -353,7 +375,7 @@ def _retention_store(spark: SparkSession, sf_dir: str):
     from remote_tsdb_clickhouse_spark.sources.samples_store import SamplesStore
 
     ensure_query_confs(spark)
-    root = tempfile.mkdtemp(prefix="graft_retention_")
+    root = _mkdtemp(prefix="retention_")
     st = SamplesStore(spark, f"{root}/samples")
     st.append(events_to_samples(spark, sf_dir).where(F.col("metric_name") == "purchase"))
     st.delete_time_range("2024-01-03 12:00:00", "2024-01-06 12:00:00")
@@ -862,7 +884,7 @@ def _bucketed_user_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str, s
         .groupBy("user_id")
         .agg(F.count("*").alias("n_purchases"), F.sum(micro).alias("purchase_micro"))
     )
-    base = tempfile.mkdtemp(prefix="graft_bucketed_")
+    base = _mkdtemp(prefix="bucketed_")
     # table names carry an sf_dir tag: catalog names are session-global,
     # so two scale dirs in one session must not overwrite each other
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
@@ -3680,7 +3702,7 @@ def stage_streaming_input(spark: SparkSession, sf_dir: str) -> str:
     one row per (series, second) like A1 so the stream sees no duplicate
     timestamps and the result is engine-deterministic.
     """
-    staging = tempfile.mkdtemp(prefix="graft_stream_")
+    staging = _mkdtemp(prefix="stream_")
     keep = F.array_sort(F.filter("labels", lambda x: ~x.startswith("k=")))
     grouped = (
         events_to_samples(spark, sf_dir)
@@ -3713,7 +3735,7 @@ def q_streaming_stateful_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint must be FRESH per call (staging is memoized per session): a
     # reused completed checkpoint under availableNow would see no new files
     # and emit an empty result
-    ckpt = tempfile.mkdtemp(prefix="graft_stream_ckpt_")
+    ckpt = _mkdtemp(prefix="stream_ckpt_")
     # each stateful shuffle partition instantiates a state store; at this
     # series cardinality 8 stores beat 32 by ~2x wall clock (the knob one
     # sizes to live-series count / executor count on a cluster).  The
@@ -3766,7 +3788,7 @@ def q_streaming_windowed_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     staging = stage_streaming_input(spark, sf_dir)
     stream = spark.readStream.schema(SAMPLES_SCHEMA).parquet(f"{staging}/in")
     qname = f"winmax_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="graft_stream_ckpt_")
+    ckpt = _mkdtemp(prefix="stream_ckpt_")
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
@@ -3853,7 +3875,7 @@ def stage_dedup_stream_input(spark: SparkSession, sf_dir: str) -> str:
 
     if _owned_and_staged(final):
         return final
-    staging = tempfile.mkdtemp(prefix="graft_dedup_stream_build_")
+    staging = _mkdtemp(prefix="dedup_stream_build_")
     docs = _docs(spark, sf_dir).select(
         "doc_id", F.md5(F.concat_ws(" ", tx.tokens(F.col("text")))).alias("content_hash")
     )
@@ -3919,7 +3941,7 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(f"{staging}/in")
     )
     qname = f"dedup_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="graft_dedup_ckpt_")
+    ckpt = _mkdtemp(prefix="dedup_ckpt_")
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     # one state store per shuffle partition per batch: size to the live
     # key cardinality / core count, not the session default (same knob
@@ -3965,7 +3987,7 @@ def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     staging = stage_streaming_input(spark, sf_dir)
     stream = spark.readStream.schema(SAMPLES_SCHEMA).parquet(f"{staging}/in")
     qname = f"sess_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="graft_sess_ckpt_")
+    ckpt = _mkdtemp(prefix="sess_ckpt_")
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
@@ -4006,7 +4028,7 @@ def q_streaming_dropduplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(f"{staging}/in")
     )
     qname = f"ddup_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="graft_ddup_ckpt_")
+    ckpt = _mkdtemp(prefix="ddup_ckpt_")
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
@@ -4415,7 +4437,7 @@ def q_ch_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from remote_tsdb_clickhouse_spark.sources.clickhouse import ClickHouseSink
 
     ensure_query_confs(spark)
-    spool = tempfile.mkdtemp(prefix="graft_ch_spool_")
+    spool = _mkdtemp(prefix="ch_spool_")
 
     def post(url: str, payload: bytes) -> None:
         import os

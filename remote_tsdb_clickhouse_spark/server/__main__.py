@@ -125,10 +125,7 @@ def build_server(args: argparse.Namespace, spark=None, http=None):
         spark.sparkContext.setLogLevel("INFO")
 
     if args.db is not None:
-        from remote_tsdb_clickhouse_spark.sources.clickhouse import (
-            ClickHouseRequestWriter,
-            ClickHouseStore,
-        )
+        from remote_tsdb_clickhouse_spark.sources.clickhouse import ClickHouseStore
 
         addr = args.db if ":" in args.db else f"{args.db}:8123"
         store = ClickHouseStore(
@@ -146,8 +143,8 @@ def build_server(args: argparse.Namespace, spark=None, http=None):
             store.ping()
         except ConnectionError as e:
             raise SystemExit(str(e)) from e
-        writer = ClickHouseRequestWriter(store)
-        # executor-side range-split scan, not the driver-side bring-up fetch
+        writer = store
+        # executor-side range-split scan
         provider = store.read_parallel
         from remote_tsdb_clickhouse_spark.sources.clickhouse import pushdown_read_request
 

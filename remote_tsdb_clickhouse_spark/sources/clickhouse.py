@@ -178,15 +178,17 @@ class ClickHouseStore:
 
     - ``ping()`` — fail-fast connectivity+auth check at startup, the
       ``db.Ping()`` analog (reference ``conn.go:62-64``).
-    - ``write_request(req)`` — flatten a decoded WriteRequest and POST it as
+    - ``write(req)`` — flatten a decoded WriteRequest and POST it as
       JSONEachRow batches (the HTTP-interface bulk path; requests are
       bounded by the 32 MiB wire cap, so driver-side encode is the
-      protocol's own materialization).  Volume ingest goes through
-      :class:`ClickHouseSink` (partition-parallel ``foreachPartition``).
-    - ``read()`` — the canonical samples frame fetched over HTTP as
-      JSONEachRow.  This plain full fetch is the bring-up/small-store path;
-      a production read ships the matcher+downsample plan to ClickHouse via
-      :func:`read_pushdown_sql` so only the aggregated series come back.
+      protocol's own materialization).  This is the S5 writer interface
+      of ``TimeseriesWriter``, so the store is the ``AdapterApp`` writer
+      itself.  Volume ingest goes through :class:`ClickHouseSink`
+      (partition-parallel ``foreachPartition``).
+    - ``read_parallel()`` — the canonical samples frame, fetched
+      executor-side in time ranges; the ``/read`` route ships the
+      matcher+downsample plan to ClickHouse via :func:`read_pushdown_sql`
+      so only the aggregated series come back.
 
     Auth rides ClickHouse HTTP headers (``X-ClickHouse-User/-Key``); all
     network I/O goes through an injectable ``http`` callable so tests run
@@ -244,7 +246,7 @@ class ClickHouseStore:
                 f"unexpected ping response from {self.base_url}: {out[:100]!r}"
             )
 
-    def write_request(self, req) -> int:
+    def write(self, req) -> int:
         """Decoded WriteRequest -> JSONEachRow INSERT batches; returns the
         written-sample count (A3)."""
         from remote_tsdb_clickhouse_spark.sources.writer import write_request_rows
@@ -258,33 +260,6 @@ class ClickHouseStore:
         for payload in rows_to_jsoneachrow(rows, self.batch_rows):
             self._http(url, payload, {**self._headers, "Content-Type": "application/x-ndjson"})
         return len(rows)
-
-    def read(self) -> DataFrame:
-        """Samples table -> canonical Spark frame in ONE driver-side fetch.
-
-        Bring-up/small-store path only: the whole table rides a single HTTP
-        response through the driver.  :meth:`read_parallel` is the S6 analog
-        at any real table size (executor-side range-split fetch), and
-        :func:`read_pushdown_sql` the production ``/read`` route (the scan
-        never leaves ClickHouse, reference ``read.go:57``).
-        """
-        from datetime import datetime, timezone
-
-        from remote_tsdb_clickhouse_spark.model import SAMPLES_SCHEMA
-
-        sql = (
-            "SELECT toUnixTimestamp(updated_at) AS es, metric_name, labels, value "
-            f"FROM {self.table} FORMAT JSONEachRow"
-        )
-        raw = self._http(query_url(self.base_url, sql, self.database), None, self._headers)
-        rows = []
-        for line in raw.splitlines():
-            if not line.strip():
-                continue
-            r = json.loads(line)
-            ts = datetime.fromtimestamp(int(r["es"]), tz=timezone.utc).replace(tzinfo=None)
-            rows.append((ts, r["metric_name"], list(r["labels"]), float(r["value"])))
-        return self.spark.createDataFrame(rows, SAMPLES_SCHEMA)
 
     def read_parallel(self, num_splits: int = 32) -> DataFrame:
         """Partition-parallel samples scan — the honest S6 analog for the
@@ -378,19 +353,6 @@ class ClickHouseStore:
             "lo LONG, hi LONG",
         )
         return ranges.mapInPandas(fetch, schema=SAMPLES_SCHEMA)
-
-
-class ClickHouseRequestWriter:
-    """S5 writer interface (``write(req) -> int``) bound to a
-    :class:`ClickHouseStore` — drop-in for ``TimeseriesWriter`` in
-    :class:`~...server.http.AdapterApp` when ClickHouse is the storage
-    backend."""
-
-    def __init__(self, store: ClickHouseStore):
-        self.store = store
-
-    def write(self, req) -> int:
-        return self.store.write_request(req)
 
 
 def read_pushdown_sql(

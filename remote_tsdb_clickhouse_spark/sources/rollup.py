@@ -17,10 +17,17 @@ scanning ``interval_ratio``× less data.  Queries that don't match any
 rollup (raw reads, non-divisible intervals) fall through to the base store
 unchanged.
 
-Layout mirrors the base store: parquet partitioned by ``ts_date`` (time
-pruning works identically), rows ``(ts, metric_name, labels, value)`` where
-``ts`` is the bucket start and ``value`` the bucket max — so every existing
-read-plan operator runs on a rollup unmodified.
+Each resolution is a :class:`SamplesStore` over ``<path>/res=<n>``: parquet
+partitioned by ``ts_date`` (time pruning works identically), rows
+``(ts, metric_name, labels, value)`` where ``ts`` is the bucket start and
+``value`` the bucket max — so every existing read-plan operator runs on a
+rollup unmodified.  A (re)build is that store's one rewrite rule
+(:meth:`SamplesStore.rewrite`): the rolled rows are appended, then exactly
+the files listed before the append are deleted.  Readers during a rebuild
+see the old and the new rows of the resolution together, and the read
+path's ``max`` takes the larger per bucket; a crash between the two steps
+leaves both until the next build of that resolution removes the old ones.
+When the base only grew between builds, that is the new value.
 """
 
 from __future__ import annotations
@@ -36,7 +43,7 @@ from remote_tsdb_clickhouse_spark.plans.read_plan import (
     downsample_interval_seconds,
     read_query_grouped,
 )
-from remote_tsdb_clickhouse_spark.sources.samples_store import SamplesStore, sorted_partitioned_write
+from remote_tsdb_clickhouse_spark.sources.samples_store import SamplesStore
 
 
 class RollupStore:
@@ -47,8 +54,8 @@ class RollupStore:
         self.base = base
         self.path = path
 
-    def _res_path(self, interval_s: int) -> str:
-        return f"{self.path}/res={int(interval_s)}"
+    def _store(self, interval_s: int) -> SamplesStore:
+        return SamplesStore(self.spark, f"{self.path}/res={int(interval_s)}")
 
     def build(self, interval_s: int, source_interval_s: int | None = None) -> None:
         """(Re)build one resolution.
@@ -68,17 +75,12 @@ class RollupStore:
         )
         epoch = F.col("ts").cast("long")
         bucket = F.timestamp_seconds(epoch - epoch % interval_s)
-        rolled = (
-            src.groupBy(
-                "metric_name",
-                F.array_sort("labels").alias("labels"),
-                bucket.alias("ts"),
-            )
-            .agg(F.max("value").alias("value"))
-            .select("ts", "metric_name", "labels", "value")
-            .withColumn(PARTITION_COLUMN, F.to_date("ts"))
-        )
-        sorted_partitioned_write(rolled).mode("overwrite").parquet(self._res_path(interval_s))
+        rolled = src.groupBy(
+            "metric_name",
+            F.array_sort("labels").alias("labels"),
+            bucket.alias("ts"),
+        ).agg(F.max("value").alias("value"))
+        self._store(interval_s).rewrite(lambda _old: rolled)
 
     def resolutions(self) -> list[int]:
         if not os.path.isdir(self.path):
@@ -90,7 +92,7 @@ class RollupStore:
         return sorted(out)
 
     def read(self, interval_s: int) -> DataFrame:
-        return self.spark.read.parquet(self._res_path(interval_s))
+        return self._store(interval_s).read()
 
     # -- query routing -------------------------------------------------------
 

@@ -10,9 +10,9 @@ The reference's storage is one ClickHouse MergeTree table ordered by
 - **Sorted within files by** ``(metric_name, labels, ts)`` via
   ``sortWithinPartitions`` at write — parquet row-group min/max statistics
   on ``metric_name`` then prune like the MergeTree primary-key prefix, and
-  series rows are physically adjacent (cheap grouping).  Every write goes
-  through :func:`sorted_partitioned_write`, whose sort keys lead with
-  ``ts_date``: a ``partitionBy`` write needs its rows ordered by the
+  series rows are physically adjacent (cheap grouping).  Every Spark write
+  goes through the DataFrame :meth:`SamplesStore.append`, whose sort keys
+  lead with ``ts_date``: a ``partitionBy`` write needs its rows ordered by the
   partition column, and Spark's planned write
   (``spark.sql.optimizer.plannedWrite.enabled``) otherwise adds its own
   sort on ``ts_date`` alone, which replaces the series sort and leaves the
@@ -31,18 +31,30 @@ The reference's storage is one ClickHouse MergeTree table ordered by
   wrote.  This needs a local POSIX filesystem
   (:func:`local_store_path`).  DataFrame appends (streaming micro-batches,
   TSV imports) keep Spark's committed-file protocol.
+- **One rewrite rule**: every change other than an append — the range
+  delete, compaction, a rollup rebuild — is a :meth:`SamplesStore.rewrite`:
+  list the published files, read exactly those and *append* their
+  rewritten rows, then delete exactly those files and any partition
+  directory that leaves empty (non-recursively).  A file a ``/write`` or a
+  streaming batch publishes meanwhile was never listed, so it is never
+  deleted.  Readers see the old and the new rows together until the
+  deletes finish, and a crash between the append and the deletes leaves
+  both: rows are duplicated, never lost, and the read path's
+  ``max(value)`` collapses the duplicates (the reference's at-least-once
+  contract).  A ``/write`` into a partition whose emptied directory is
+  removed under it fails (a 5xx the sender retries), never half-commits.
 - **Range delete (S8)**: the reference uses ``ALTER TABLE ... DELETE WHERE
   updated_at > a AND updated_at <= b`` for day reimports
-  (``README.md:163-167``); here it is a partition-scoped rewrite using
-  dynamic partition overwrite — only partitions intersecting the range are
-  rewritten, the rest of the table is untouched.
+  (``README.md:163-167``); here the files of the date partitions the range
+  touches are replaced by their rows outside it — the rest of the table
+  is untouched, and a day with no rows left loses its directory.
 - **Bulk import (S7)**: the reference pipes ``promtool tsdb dump`` TSV into
   ClickHouse (``README.md:144-161``); here ``import_tsv`` reads the same
   shape with ``spark.read.csv(sep='\\t')``.
 - **Compaction**: per-request micro-batches create small files — ClickHouse
   "Too many parts" (``README.md:49-51``) has the exact Spark analog of the
-  small-file problem; ``compact()`` rewrites chosen partitions at target
-  file counts.
+  small-file problem; ``compact()`` replaces every file by its rows
+  repartitioned by date: one sorted file per date partition.
 """
 
 from __future__ import annotations
@@ -51,12 +63,15 @@ import contextlib
 import os
 import threading
 import uuid
+from collections.abc import Callable
 from urllib.parse import unquote, urlparse
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from remote_tsdb_clickhouse_spark.model import (
@@ -64,14 +79,6 @@ from remote_tsdb_clickhouse_spark.model import (
     PARTITIONED_SAMPLES_SCHEMA,
     SAMPLES_FIELDS,
 )
-
-
-def sorted_partitioned_write(df: DataFrame) -> DataFrameWriter:
-    """The writer of a date-partitioned samples table whose every file is
-    sorted by ``(metric_name, labels, ts)``; ``df`` carries ``ts_date``.
-    Callers pick the mode and the path."""
-    keys = (PARTITION_COLUMN, "metric_name", "labels", "ts")
-    return df.sortWithinPartitions(*keys).write.partitionBy(PARTITION_COLUMN)
 
 
 def local_store_path(path: str) -> str | None:
@@ -115,10 +122,12 @@ class SamplesStore:
         if isinstance(rows, pa.Table):
             self._commit_table(rows)
             return
+        keys = (PARTITION_COLUMN, "metric_name", "labels", "ts")
+        df = rows.select(*SAMPLES_FIELDS).withColumn(PARTITION_COLUMN, F.to_date("ts"))
         with self._append_lock:
-            sorted_partitioned_write(
-                rows.select(*SAMPLES_FIELDS).withColumn(PARTITION_COLUMN, F.to_date("ts"))
-            ).mode("append").parquet(self.path)
+            df.sortWithinPartitions(*keys).write.partitionBy(PARTITION_COLUMN).parquet(
+                self.path, "append"
+            )
 
     def _commit_table(self, table: pa.Table) -> None:
         """Write each date partition of ``table`` to a temp file, then
@@ -171,61 +180,60 @@ class SamplesStore:
         df = self.spark.read.schema(PARTITIONED_SAMPLES_SCHEMA).parquet(self.path)
         return df if with_partition_col else df.select(*SAMPLES_FIELDS)
 
-    def is_empty(self) -> bool:
-        try:
-            return self.read().limit(1).count() == 0
-        except Exception:
-            return True
-
     # -- maintenance (S7/S8) ------------------------------------------------
+
+    def rewrite(self, rewrite: Callable[[DataFrame], DataFrame], days: tuple | None = None) -> None:
+        """Replace the published files — of the date partitions ``days =
+        (first, last)`` spans, or all — by ``rewrite`` of their rows: the
+        one rule of every change but an append (module docstring)."""
+        try:
+            files = self.read().inputFiles()
+        except AnalysisException as e:  # no table yet: nothing to replace
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
+            files = []
+        if days is not None:
+            lo, hi = (f"{PARTITION_COLUMN}={d.isoformat()}" for d in days)
+            files = [f for f in files if lo <= f.rsplit("/", 2)[-2] <= hi]
+        old = (
+            self.spark.read.schema(PARTITIONED_SAMPLES_SCHEMA)
+            .option("basePath", self.path)
+            .parquet(*files)
+            if files
+            else self.spark.createDataFrame([], PARTITIONED_SAMPLES_SCHEMA)
+        )
+        self.append(rewrite(old))
+        jvm = self.spark._jvm
+        Path, URI = jvm.org.apache.hadoop.fs.Path, jvm.java.net.URI
+        fs = Path(self.path).getFileSystem(self.spark._jsc.hadoopConfiguration())
+        for f in files:
+            fs.delete(Path(URI(f)), False)
+        for d in {f.rsplit("/", 1)[0] for f in files}:
+            # non-recursive: a directory still holding a file (the rewrite's
+            # own, or one a concurrent write published) stays.  Locally by
+            # rmdir, which checks and removes in one step; Hadoop's local
+            # delete checks first and then deletes recursively
+            local = local_store_path(d)
+            with contextlib.suppress(OSError, Py4JJavaError):
+                if local is not None:
+                    os.rmdir(local)
+                else:
+                    fs.delete(Path(URI(d)), False)
 
     def delete_time_range(self, start_exclusive, end_inclusive) -> None:
         """S8: delete rows with ``ts > start AND ts <= end``.
 
-        Partition-scoped rewrite: with dynamic partition overwrite only the
-        date partitions intersecting the range are replaced (with their
-        surviving rows); all other partitions are untouched files.
-
-        A partition whose rows are *all* in the range has no survivors, so
-        the dynamic overwrite never rewrites it (overwrite only touches
-        partitions present in the written data) — exactly the day-reimport
-        case (reference ``README.md:163-167``).  Those partitions are
-        removed explicitly via the Hadoop FileSystem API.  The two distinct
-        partition lists collected here are bounded by the number of calendar
-        days in the delete range — driver-safe at any corpus size.
+        A :meth:`rewrite` of the date partitions the range touches into
+        their rows outside it; a partition with none left loses its
+        directory — the day-reimport case (reference ``README.md:163-167``).
         """
         cond = (F.col("ts") > F.lit(start_exclusive)) & (F.col("ts") <= F.lit(end_inclusive))
-        affected = (
-            self.read()
-            .withColumn(PARTITION_COLUMN, F.to_date("ts"))
-            .where(
-                (F.col(PARTITION_COLUMN) >= F.to_date(F.lit(start_exclusive)))
-                & (F.col(PARTITION_COLUMN) <= F.to_date(F.lit(end_inclusive)))
-            )
+        days = (
+            self.spark.range(1)
+            .select(F.to_date(F.lit(start_exclusive)), F.to_date(F.lit(end_inclusive)))
+            .first()
         )
-        affected_dates = {
-            r[0] for r in affected.select(PARTITION_COLUMN).distinct().collect()
-        }
-        # localCheckpoint severs lineage from self.path so the overwrite is
-        # not a read-from-target (at fleet scale: stage to a fresh dir and
-        # swap, same pattern one level up)
-        survivors = affected.where(~cond).localCheckpoint()
-        survivor_dates = {
-            r[0] for r in survivors.select(PARTITION_COLUMN).distinct().collect()
-        }
-        if survivor_dates:
-            (
-                sorted_partitioned_write(survivors)
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .parquet(self.path)
-            )
-        jvm = self.spark._jvm
-        hconf = self.spark._jsc.hadoopConfiguration()
-        for d in sorted(affected_dates - survivor_dates):
-            p = jvm.org.apache.hadoop.fs.Path(f"{self.path}/{PARTITION_COLUMN}={d.isoformat()}")
-            fs = p.getFileSystem(hconf)
-            fs.delete(p, True)
+        self.rewrite(lambda rows: rows.where(~cond), tuple(days))
 
     def import_tsv(self, tsv_path: str) -> int:
         """S7: bulk import ``promtool tsdb dump``-shaped TSV:
@@ -290,13 +298,8 @@ class SamplesStore:
         ).csv(out_path)
         return int(obs.get["n"])
 
-    def compact(self, files_per_partition: int = 1) -> None:
-        """Rewrite the table at a target file count per date partition —
-        the OPTIMIZE analog for the micro-batch small-file problem."""
-        df = self.read().withColumn(PARTITION_COLUMN, F.to_date("ts")).localCheckpoint()
-        (
-            sorted_partitioned_write(df.repartition(files_per_partition, F.col(PARTITION_COLUMN)))
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(self.path)
-        )
+    def compact(self) -> None:
+        """Replace every file by its rows repartitioned by date, one file
+        per date partition — the OPTIMIZE analog for the micro-batch
+        small-file problem."""
+        self.rewrite(lambda rows: rows.repartition(PARTITION_COLUMN))

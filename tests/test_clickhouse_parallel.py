@@ -165,7 +165,7 @@ def test_backend_transport_error_is_storage_error(spark):
 
     app = AdapterApp(
         NoWriter(),
-        store.read,
+        store.read_parallel,
         read_request_handler=lambda req: pushdown_read_request(store, req),
     )
     rr = prompb.ReadRequest(
@@ -191,4 +191,4 @@ def test_backend_transport_error_is_storage_error(spark):
         ]
     )
     with pytest.raises(RuntimeError, match="transport error"):
-        store.write_request(wreq)
+        store.write(wreq)

@@ -1,12 +1,15 @@
 """Entry-module hardening tests: the cached-samples spread scale guard,
-the streaming-dedup staging trust checks (r8/r9 advisor findings), and
-the family_warmup persist allowlist."""
+the streaming-dedup staging trust checks (r8/r9 advisor findings), the
+family_warmup persist allowlist, and the removal of staging directories
+at process exit."""
 
 from __future__ import annotations
 
 import hashlib
 import os
 import shutil
+import subprocess
+import sys
 import tempfile
 
 from conftest import SF_SMOKE
@@ -136,3 +139,40 @@ def test_family_warmup_persists_only_its_allowlist(spark):
                 assert cache_manager.lookupCachedData(df._jdf).isDefined(), family
     finally:
         spark.catalog.clearCache()
+
+
+_STAGING_SCRIPT = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+import __spark_entry__ as entry
+from remote_tsdb_clickhouse_spark.session import get_spark
+
+spark = get_spark("staging-cleanup")
+store = entry._compacted_store(spark, sys.argv[2])
+staging = entry.stage_streaming_input(spark, sys.argv[2])
+assert store.read().count() > 0
+print("RESULT " + json.dumps([store.path, staging]))
+"""
+
+
+def test_staging_dirs_removed_at_exit(tmp_path):
+    """Every temp directory a staging build makes lives under the process's
+    one scratch root, removed when the process exits: a process that built
+    the compacted store and the streaming staging leaves no ``graft_*``
+    entry in its temp dir but the published streaming-dedup one."""
+    import json
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tmpdir = tmp_path / "tmp"
+    tmpdir.mkdir()
+    env = dict(os.environ, TMPDIR=str(tmpdir), SPARK_GRAFT_CPUS="2", SPARK_DRIVER_MEMORY="1g")
+    r = subprocess.run(
+        [sys.executable, "-c", _STAGING_SCRIPT, repo, SF_SMOKE],
+        cwd=str(tmp_path), env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-4000:]
+    built = json.loads(r.stdout.split("RESULT ", 1)[1])
+    assert all(p.startswith(str(tmpdir)) and not os.path.exists(p) for p in built), built
+    left = [n for n in os.listdir(tmpdir)
+            if n.startswith("graft_") and not n.startswith("graft_dedup_stream2_")]
+    assert left == []

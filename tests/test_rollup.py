@@ -215,3 +215,43 @@ def test_rollup_routing_randomized_sweep(spark, tmp_path):
     # the sweep must actually exercise the rollup path, not just fallbacks
     # (seed 907 yields 5 rollup-served trials out of 16)
     assert trials == 16 and rollup_served >= 5
+
+
+def test_rollup_rebuild_equals_fresh_build(spark, tmp_path):
+    """Rebuilding a resolution after the base grew gives exactly a fresh
+    build: the rebuild deletes the files of the previous one, so no row
+    is duplicated and no stale bucket max survives."""
+    import datetime as dt
+
+    from pyspark.sql import Row
+
+    from remote_tsdb_clickhouse_spark.model import SAMPLES_SCHEMA
+
+    def rows(offsets_values, name="m"):
+        t0 = dt.datetime(2024, 1, 1)
+        return spark.createDataFrame(
+            [Row(ts=t0 + dt.timedelta(seconds=off), metric_name=name, labels=["job=a"], value=v)
+             for off, v in offsets_values],
+            SAMPLES_SCHEMA,
+        )
+
+    base = SamplesStore(spark, str(tmp_path / "s"))
+    base.append(rows([(10, 1.0), (70, 2.0), (86_400 + 5, 3.0)]))
+    rs = RollupStore(spark, base, str(tmp_path / "r"))
+    rs.build(60)
+    # a larger value into an existing bucket, a smaller one into another,
+    # a new bucket, a new series and a new day
+    base.append(rows([(20, 9.0), (80, 0.5), (130, 4.0), (2 * 86_400, 6.0)]))
+    base.append(rows([(10, 8.0)], name="n"))
+    rs.build(60)
+    fresh = RollupStore(spark, base, str(tmp_path / "fresh"))
+    fresh.build(60)
+
+    def content(store):
+        return sorted(
+            (r.ts, r.metric_name, tuple(r.labels), r.value) for r in store.read(60).collect()
+        )
+
+    got = content(rs)
+    assert got == content(fresh)
+    assert len(got) == len(set(got)) == 6

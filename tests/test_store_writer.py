@@ -82,13 +82,10 @@ def test_range_delete(spark, tmp_path):
 
 
 def test_range_delete_full_partitions(spark, tmp_path):
-    """A delete range fully covering whole date partitions must remove them.
-
-    Zero-survivor partitions are invisible to dynamic partition overwrite
-    (nothing is written for them), so they need explicit directory removal —
-    the reference's day-reimport case (README.md:163-167): delete the day,
-    re-import it; stale rows surviving here would win at read time via the
-    max(value) dedup."""
+    """A delete range fully covering whole date partitions must remove them,
+    files and directory — the reference's day-reimport case
+    (README.md:163-167): delete the day, re-import it; stale rows surviving
+    here would win at read time via the max(value) dedup."""
     store = make_store(spark, tmp_path)
     writer = TimeseriesWriter(store)
     base = 1704067200000  # 2024-01-01 00:00 UTC
@@ -132,7 +129,7 @@ def test_compact_reduces_files(spark, tmp_path):
     for i in range(5):  # five appends -> many small files
         writer.write(wr("m", [("i", str(i))], [(1.0, 1704067200000 + i * 1000)]))
     files_before = list((tmp_path / "samples").glob("ts_date=*/*.parquet"))
-    store.compact(files_per_partition=1)
+    store.compact()
     files_after = list((tmp_path / "samples").glob("ts_date=*/*.parquet"))
     assert len(files_after) < len(files_before)
     assert store.read().count() == 5
@@ -339,11 +336,11 @@ def test_delete_time_range_randomized_sweep(spark, tmp_path):
 def test_compact_randomized_content_identity_sweep(spark, tmp_path):
     """Seeded randomized compaction sweep: many small appends across 3
     days (including duplicate (series, ts) rows from overlapping writes
-    and extreme doubles), then compact at random files_per_partition
-    targets.  Compaction is a physical rewrite only — the multiset of
-    rows must be bit-identical before and after (values compared via
-    IEEE bit patterns), every remaining day must hit the file target,
-    and a post-compaction write must still append cleanly."""
+    and extreme doubles), then compact twice.  Compaction is a physical
+    rewrite only — the multiset of rows must be bit-identical before and
+    after (values compared via IEEE bit patterns), every day must be
+    exactly one file, also after compacting a compacted store, and a
+    post-compaction write must still append cleanly."""
     import random
     import struct
 
@@ -371,15 +368,108 @@ def test_compact_randomized_content_identity_sweep(spark, tmp_path):
         )
 
     before = canon()
-    for target in [rng.randint(1, 3), 1]:
-        store.compact(files_per_partition=target)
-        assert canon() == before, target
-        for day_dir in (tmp_path / "samples").glob("ts_date=*"):
-            n_files = len(list(day_dir.glob("*.parquet")))
-            assert n_files <= target, (day_dir.name, n_files, target)
+    days = {r[0].date().isoformat() for r in before}
+    for trial in range(2):
+        store.compact()
+        assert canon() == before, trial
+        per_day = {d.name[len("ts_date="):]: len(list(d.glob("*.parquet")))
+                   for d in (tmp_path / "samples").glob("ts_date=*")}
+        assert per_day == dict.fromkeys(days, 1), (trial, per_day)
 
     writer.write(wr("up", [("job", "a")], [(42.0, base_ms + 1000)]))
     assert len(canon()) == len(before) + 1
+
+
+def _rows(store) -> list[tuple]:
+    return sorted(
+        (r["ts"], r["metric_name"], tuple(r["labels"]), r["value"])
+        for r in store.read().collect()
+    )
+
+
+def _commit_late_write_before_rewrite(monkeypatch, store, late) -> list:
+    """Make the next Spark parquet write first commit ``late`` through
+    ``TimeseriesWriter``: a ``/write`` acknowledged after a maintenance
+    job read its source and before its write commits.  Returns a list
+    that holds one entry once the late write has committed."""
+    from pyspark.sql import DataFrameWriter
+
+    parquet = DataFrameWriter.parquet
+    fired: list = []
+
+    def late_then_parquet(self, *args, **kwargs):
+        if not fired:
+            assert TimeseriesWriter(store).write(late) == 1
+            fired.append(late)
+        return parquet(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", late_then_parquet)
+    return fired
+
+
+_H = 3_600_000
+_JAN1 = 1704067200000  # 2024-01-01 00:00 UTC
+
+
+def _hourly_store(spark, tmp_path, hours):
+    store = make_store(spark, tmp_path)
+    writer = TimeseriesWriter(store)
+    for lo in range(0, len(hours), 6):  # one request per 6 samples: several files a day
+        writer.write(wr("m", [("job", "a")], [(float(h), _JAN1 + h * _H) for h in hours[lo:lo + 6]]))
+    return store
+
+
+def _late_row(late):
+    (series,) = late.timeseries
+    (sample,) = series.samples
+    return (
+        datetime.fromtimestamp(sample.timestamp // 1000, timezone.utc).replace(tzinfo=None),
+        "m",
+        ("job=late",),
+        sample.value,
+    )
+
+
+def test_compaction_keeps_a_write_committed_during_it(spark, tmp_path, monkeypatch):
+    """A /write committed into a day while compaction rewrites that day
+    stays readable: the rewrite deletes only the files it read.  (A
+    dynamic partition overwrite replaces the whole partition and drops
+    it.)"""
+    store = _hourly_store(spark, tmp_path, list(range(48)))
+    before = _rows(store)
+    late = wr("m", [("job", "late")], [(7.5, _JAN1 + 5 * _H + 30_000)])
+    fired = _commit_late_write_before_rewrite(monkeypatch, store, late)
+    store.compact()
+    assert fired
+    assert _rows(store) == sorted([*before, _late_row(late)])
+
+
+def test_partial_day_delete_keeps_a_write_committed_during_it(spark, tmp_path, monkeypatch):
+    """S8 of part of a day beside a /write into the same day, outside the
+    range: the late sample survives and every other row is exact."""
+    store = _hourly_store(spark, tmp_path, list(range(24)))
+    late = wr("m", [("job", "late")], [(-1.0, _JAN1 + 20 * _H + 30_000)])
+    fired = _commit_late_write_before_rewrite(monkeypatch, store, late)
+    store.delete_time_range(datetime(2024, 1, 1, 6), datetime(2024, 1, 1, 12))
+    assert fired
+    want = [(datetime(2024, 1, 1, h), "m", ("job=a",), float(h)) for h in range(24)
+            if not 6 < h <= 12]
+    assert _rows(store) == sorted([*want, _late_row(late)])
+
+
+def test_delete_emptying_a_day_keeps_a_write_committed_during_it(spark, tmp_path, monkeypatch):
+    """S8 whose range leaves survivors in its first day and none in its
+    last, beside a /write into the last day after the range end: the
+    emptied day keeps its directory for the late file (the directory is
+    removed only when empty), and every other row is exact."""
+    hours = list(range(24)) + list(range(24, 36))  # day 2 holds 00:00-11:00 only
+    store = _hourly_store(spark, tmp_path, hours)
+    late = wr("m", [("job", "late")], [(99.0, _JAN1 + 42 * _H)])  # day 2, 18:00
+    fired = _commit_late_write_before_rewrite(monkeypatch, store, late)
+    store.delete_time_range(datetime(2024, 1, 1, 12), datetime(2024, 1, 2, 12))
+    assert fired
+    want = [(datetime(2024, 1, 1, h), "m", ("job=a",), float(h)) for h in range(13)]
+    assert _rows(store) == sorted([*want, _late_row(late)])
 
 
 def test_partition_pruning_keeps_the_end_instant_day(spark, tmp_path):
@@ -454,7 +544,7 @@ def test_every_write_path_lands_sorted_files(spark, tmp_path):
     assert store.read().where(F.col(PARTITION_COLUMN) == "2024-01-01").count() == 2 * 30 * 8
     _assert_files_sorted(root)
 
-    store.compact(files_per_partition=1)
+    store.compact()
     assert _assert_files_sorted(root) == 2
 
     rollups = RollupStore(spark, store, str(tmp_path / "rollup"))

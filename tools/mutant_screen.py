@@ -755,6 +755,17 @@ MUTANTS = [
      "keep_value = bits != 0  # +0.0 omitted; -0.0 has its sign bit set",
      "keep_value = bits.view(np.float64) != 0.0",
      ["tests/test_prompb.py"]),
+    # -- batch 23: the samples store's one rewrite rule ---------------------
+    ("M110", "rewrite removes its partition directories recursively (a write committed meanwhile is lost)",
+     "remote_tsdb_clickhouse_spark/sources/samples_store.py",
+     "os.rmdir(local)",
+     '__import__("shutil").rmtree(local)',
+     ["tests/test_store_writer.py"]),
+    ("M111", "rewrite skips deleting the files it read (rows duplicated)",
+     "remote_tsdb_clickhouse_spark/sources/samples_store.py",
+     "fs.delete(Path(URI(f)), False)",
+     "None",
+     ["tests/test_store_writer.py", "tests/test_rollup.py"]),
 ]
 
 
