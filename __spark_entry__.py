@@ -4424,7 +4424,7 @@ def _ch_fake_transport():
 def q_ch_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ClickHouse sink under the oracle compare: a deterministic samples
     slice flows through the partition-parallel JSONEachRow encoder
-    (``ClickHouseSink.write`` — the reference's bulk insert path,
+    (``ClickHouseStore.append`` — the reference's bulk insert path,
     ``write.go:25-60``) into a spool-capturing transport, and the spooled
     payloads parse back to EXACTLY the source multiset — proving the wire
     encoding lossless (json float repr round-trips doubles bit-exactly;
@@ -4434,22 +4434,23 @@ def q_ch_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     transport is the injection point)."""
     import glob
 
-    from remote_tsdb_clickhouse_spark.sources.clickhouse import ClickHouseSink
+    from remote_tsdb_clickhouse_spark.sources.clickhouse import ClickHouseStore
 
     ensure_query_confs(spark)
     spool = _mkdtemp(prefix="ch_spool_")
 
-    def post(url: str, payload: bytes) -> None:
+    def spool_http(url, payload=None, headers=None):
         import os
         import uuid as _uuid
 
         with open(os.path.join(spool, f"{_uuid.uuid4().hex}.jsonl"), "wb") as f:
             f.write(payload)
+        return b""
 
     src = events_to_samples(spark, sf_dir).where(
         (F.col("metric_name") == "signup") & (F.col("ts") < F.lit("2024-01-03 00:00:00"))
     )
-    ClickHouseSink(post=post, batch_rows=500).write(src)
+    ClickHouseStore(spark, http=spool_http).append(src)
     assert glob.glob(f"{spool}/*.jsonl"), "sink produced no payloads"
     parsed = spark.read.schema(
         "updated_at STRING, metric_name STRING, labels ARRAY<STRING>, value DOUBLE"

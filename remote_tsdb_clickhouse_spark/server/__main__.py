@@ -23,6 +23,7 @@ Two storage legs, matching the reference's flag surface (``main.go:82-90``):
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
 
@@ -101,17 +102,6 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     return args
 
 
-def _store_exists(spark, path: str) -> bool:
-    """Probe the store path through the Hadoop FileSystem API, which
-    resolves a relative path or a ``file:`` URI the way Spark's reads do.
-    Only local stores get this far: ``build_server`` refuses any other
-    scheme first, because ``/write`` commits by local rename."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
-
-
 def build_server(args: argparse.Namespace, spark=None, http=None):
     """Construct (but don't start) the AdapterServer — separable for tests.
 
@@ -144,20 +134,11 @@ def build_server(args: argparse.Namespace, spark=None, http=None):
         except ConnectionError as e:
             raise SystemExit(str(e)) from e
         writer = store
-        # executor-side range-split scan
-        provider = store.read_parallel
-        from remote_tsdb_clickhouse_spark.sources.clickhouse import pushdown_read_request
-
+        provider = None
         # the reference's serving loop: /read ships matcher+downsample SQL
         # to ClickHouse and run-length assembles the ordered rows
         # (read.go:15-101); Spark keeps ingest/analytics
-        def read_handler(req):
-            return pushdown_read_request(
-                store,
-                req,
-                ignore_label=args.read_ignore_label or None,
-                ignore_hints=args.read_ignore_hints,
-            )
+        read_handler = store.read_request
     else:
         from remote_tsdb_clickhouse_spark.sources.samples_store import (
             SamplesStore,
@@ -177,7 +158,7 @@ def build_server(args: argparse.Namespace, spark=None, http=None):
         # fail-fast storage check, the db.Ping() analog: an unreadable or
         # absent table is a config error surfaced at startup, not on the
         # first request
-        if not args.create_if_missing and not _store_exists(spark, args.store):
+        if not args.create_if_missing and not os.path.exists(local_store_path(args.store)):
             raise SystemExit(
                 f"store path {args.store!r} does not exist (use --create-if-missing)"
             )

@@ -70,7 +70,7 @@ class AdapterApp:
     def __init__(
         self,
         writer: TimeseriesWriter,
-        samples_provider,
+        samples_provider=None,
         *,
         ignore_label: str | None = DEFAULT_READ_IGNORE_LABEL,
         ignore_hints: bool = False,
@@ -80,10 +80,11 @@ class AdapterApp:
         self.samples_provider = samples_provider  # () -> DataFrame
         self.ignore_label = ignore_label
         self.ignore_hints = ignore_hints
-        # optional (req) -> ReadResponse override: the ClickHouse-storage leg
-        # pushes the whole matcher+downsample query to the store
-        # (sources/clickhouse.py pushdown_read_request, read.go:15-101)
-        # instead of planning it on the samples frame
+        # optional (req, *, ignore_label, ignore_hints) -> ReadResponse
+        # override: the ClickHouse-storage leg pushes the whole
+        # matcher+downsample query to the store
+        # (sources/clickhouse.py ClickHouseStore.read_request,
+        # read.go:15-101) instead of planning it on a samples frame
         self.read_request_handler = read_request_handler
         self.metrics = MetricsRegistry()
 
@@ -103,7 +104,9 @@ class AdapterApp:
         try:
             req = codec.decode_read_request(body)
             if self.read_request_handler is not None:
-                resp = self.read_request_handler(req)
+                resp = self.read_request_handler(
+                    req, ignore_label=self.ignore_label, ignore_hints=self.ignore_hints
+                )
             else:
                 samples: DataFrame = self.samples_provider()
                 resp = handle_read_request(

@@ -1,42 +1,47 @@
-"""ClickHouse JDBC sink/source — the external-storage leg of the north star
-(Structured Streaming + ClickHouse JDBC).
+"""ClickHouse storage leg: the reference's deployment shape, Spark as the
+engine and ClickHouse as the store (reference ``main.go:102-112``).
 
-The reference writes samples over clickhouse-go's native TCP protocol into
-one MergeTree table (reference ``write.go:11-63``, DDL ``README.md:17-27``,
-pool limits ``conn.go:52,57-59``).  The Spark-native leg keeps ClickHouse as
-the external serving store while Spark owns ingest and analytics:
+The reference reaches ClickHouse through one client configured once by
+``-db``, ``-db.database``, ``-db.username`` and ``-db.password``
+(``main.go:82-90``, ``conn.go:52-64``).  Here that client is
+:class:`ClickHouseStore`, and every request it makes — ping, the ``/write``
+insert, the volume and streaming ``append``, the ``/read`` pushdown and the
+range scan — goes through its one injectable ``http(url, payload, headers)``
+transport with its credentials headers and its database:
 
 - **DDL parity**: :func:`create_table_ddl` emits the reference's exact
   MergeTree schema — ``DateTime`` time column, ``LowCardinality(String)``
   name, ``Array(LowCardinality(String))`` labels, Gorilla/DoubleDelta
   codecs, the ``set(0)`` labelset skipping index, and
   ``ORDER BY (metric_name, labels, updated_at)``.
-- **Array mapping is the integration risk** (SURVEY §7): generic JDBC has no
-  portable ``Array(String)`` binding.  The writer therefore does not use
-  ``df.write.jdbc`` row binding for labels; it ships batches as
-  ``INSERT ... FORMAT JSONEachRow`` payloads over the HTTP interface —
-  ClickHouse's own bulk path, array-safe, and exactly what the reference's
+- **Inserts are JSONEachRow over HTTP**: generic JDBC has no portable
+  ``Array(String)`` binding (SURVEY §7), so rows ship as
+  ``INSERT ... FORMAT JSONEachRow`` payloads of at most :data:`BATCH_ROWS`
+  rows — ClickHouse's own bulk path, array-safe, and what the reference's
   bulk-import recipe does with TSV (``README.md:144-161``).
-- **Partition-parallel**: each Spark partition posts its own insert batches
-  (``foreachPartition``), so a 1000-executor cluster fans into ClickHouse
-  with bounded per-connection batch sizes — the reference's "10,000 samples
-  per send, larger batches preferred" guidance (``README.md:43-51``)
-  becomes ``batch_rows``.
-- **No ClickHouse in this environment**: everything network-touching takes
-  an injectable ``post`` callable; tests exercise DDL text, JSONEachRow
-  encoding, batching boundaries, and read-pushdown SQL without a server.
+- **Partition-parallel**: ``append(df)`` posts each Spark partition's rows
+  from its own task (``foreachPartition``), and ``read_parallel`` fetches
+  each time range from its own task, so a cluster fans into and out of
+  ClickHouse without materializing on the driver.
+- **No ClickHouse in this environment**: tests inject the transport and
+  check DDL text, JSONEachRow encoding, batching, headers and the emitted
+  SQL without a server.
 """
 
 from __future__ import annotations
 
 import json
 from collections.abc import Callable, Iterator
+from functools import partial
 
 from pyspark.sql import DataFrame
 
 #: Reference DDL constants (README.md:17-27)
 TABLE_REGEX = r"^[A-Za-z0-9_.]+$"
 DEFAULT_TABLE = "metrics.samples"
+#: Rows per JSONEachRow insert payload: the reference's "10,000 samples per
+#: send, larger batches preferred" (README.md:43-51)
+BATCH_ROWS = 10_000
 
 
 def validate_table(table: str) -> str:
@@ -66,7 +71,7 @@ SETTINGS index_granularity = 8192"""
 
 def rows_to_jsoneachrow(rows: Iterator, batch_rows: int) -> Iterator[bytes]:
     """Encode canonical-schema rows into JSONEachRow insert payloads of at
-    most ``batch_rows`` rows each (10k default per ``README.md:43-51``)."""
+    most ``batch_rows`` rows each (the store sends :data:`BATCH_ROWS`)."""
     buf: list[str] = []
     for r in rows:
         ts = r["ts"]
@@ -91,67 +96,8 @@ def rows_to_jsoneachrow(rows: Iterator, batch_rows: int) -> Iterator[bytes]:
         yield ("\n".join(buf) + "\n").encode()
 
 
-def insert_url(base_url: str, table: str) -> str:
-    from urllib.parse import quote
-
-    validate_table(table)
-    q = quote(f"INSERT INTO {table} (updated_at, metric_name, labels, value) FORMAT JSONEachRow")
-    return f"{base_url}/?query={q}"
-
-
-def default_post(url: str, payload: bytes) -> None:  # pragma: no cover - network
-    from urllib.request import Request, urlopen
-
-    req = Request(url, data=payload, headers={"Content-Type": "application/x-ndjson"})
-    with urlopen(req, timeout=30) as resp:
-        if resp.status >= 300:
-            raise RuntimeError(f"clickhouse insert failed: HTTP {resp.status}")
-
-
-class ClickHouseSink:
-    """Partition-parallel bulk writer for the canonical samples frame.
-
-    ``write(df)`` runs one ``foreachPartition`` pass: each task encodes its
-    rows into <=``batch_rows`` JSONEachRow payloads and posts them.  With
-    N partitions this is the distributed analog of the reference's prepared
-    batch insert (``write.go:25-60``), including its at-least-once contract:
-    a failed task retries whole payloads, and re-inserted duplicate rows
-    collapse at read time under ``max(value)`` (SURVEY §2.8).
-    """
-
-    def __init__(
-        self,
-        base_url: str = "http://localhost:8123",
-        table: str = DEFAULT_TABLE,
-        batch_rows: int = 10_000,
-        post: Callable[[str, bytes], None] | None = None,
-    ):
-        self.url = insert_url(base_url, table)
-        self.batch_rows = batch_rows
-        self.post = post or default_post
-
-    def write(self, df: DataFrame) -> None:
-        url, batch_rows, post = self.url, self.batch_rows, self.post
-
-        def send(rows: Iterator) -> None:
-            for payload in rows_to_jsoneachrow(rows, batch_rows):
-                post(url, payload)
-
-        df.select("ts", "metric_name", "labels", "value").foreachPartition(send)
-
-    def foreach_batch(self):
-        """Adapter for Structured Streaming: ``writeStream.foreachBatch(
-        sink.foreach_batch())`` — one sink transaction per micro-batch, the
-        streaming analog of the reference's per-request transaction."""
-
-        def fn(batch_df: DataFrame, batch_id: int) -> None:
-            self.write(batch_df)
-
-        return fn
-
-
 def query_url(base_url: str, sql: str, database: str | None = None) -> str:
-    """SELECT-over-HTTP URL for the ClickHouse HTTP interface."""
+    """SQL-over-HTTP URL for the ClickHouse HTTP interface."""
     from urllib.parse import quote
 
     url = f"{base_url}/?query={quote(sql)}"
@@ -160,39 +106,75 @@ def query_url(base_url: str, sql: str, database: str | None = None) -> str:
     return url
 
 
+def insert_url(base_url: str, table: str, database: str | None = None) -> str:
+    validate_table(table)
+    return query_url(
+        base_url,
+        f"INSERT INTO {table} (updated_at, metric_name, labels, value) FORMAT JSONEachRow",
+        database,
+    )
+
+
 def default_http(
     url: str, payload: bytes | None = None, headers: dict[str, str] | None = None
 ) -> bytes:  # pragma: no cover - network
     from urllib.request import Request, urlopen
 
     req = Request(url, data=payload, headers=headers or {})
-    with urlopen(req, timeout=10) as resp:
+    with urlopen(req, timeout=30) as resp:
         if resp.status >= 300:
             raise RuntimeError(f"clickhouse request failed: HTTP {resp.status}")
         return resp.read()
 
 
+def _call(http: Callable[..., bytes], url: str, payload: bytes | None, headers) -> bytes:
+    """One transport call with socket errors re-raised as RuntimeError.
+
+    The HTTP shell maps ConnectionError to 499 client-closed-request
+    (main.go:147-152 context.Canceled parity); a ConnectionResetError
+    from the *backend* transport must not ride that branch — storage
+    failures are 500s with the error counter bumped, like the
+    reference's storage-error path (main.go:147-152 else-branch).
+    Module-level so the executor-side closures call it too.
+    """
+    try:
+        return http(url, payload, headers)
+    except ConnectionError as e:
+        raise RuntimeError(f"clickhouse transport error: {e}") from e
+
+
+def _insert(http: Callable[..., bytes], url: str, headers, rows: Iterator) -> None:
+    """POST canonical-schema rows as JSONEachRow batches of BATCH_ROWS: the
+    one insert routine of ``ClickHouseStore.write`` and ``append``."""
+    for payload in rows_to_jsoneachrow(rows, BATCH_ROWS):
+        _call(http, url, payload, headers)
+
+
 class ClickHouseStore:
-    """The reference's exact deployment shape: Spark engine, ClickHouse
-    storage (``main.go:102-112`` wiring a ``ClickHouseAdapter``).
+    """The one ClickHouse client (reference ``conn.go:52-64``): a base URL,
+    a table, a database, credentials carried as ClickHouse HTTP headers
+    (``X-ClickHouse-User``/``-Key``), and an injectable ``http(url,
+    payload, headers)`` transport that every request goes through.
 
     - ``ping()`` — fail-fast connectivity+auth check at startup, the
       ``db.Ping()`` analog (reference ``conn.go:62-64``).
-    - ``write(req)`` — flatten a decoded WriteRequest and POST it as
-      JSONEachRow batches (the HTTP-interface bulk path; requests are
-      bounded by the 32 MiB wire cap, so driver-side encode is the
-      protocol's own materialization).  This is the S5 writer interface
-      of ``TimeseriesWriter``, so the store is the ``AdapterApp`` writer
-      itself.  Volume ingest goes through :class:`ClickHouseSink`
-      (partition-parallel ``foreachPartition``).
-    - ``read_parallel()`` — the canonical samples frame, fetched
-      executor-side in time ranges; the ``/read`` route ships the
-      matcher+downsample plan to ClickHouse via :func:`read_pushdown_sql`
-      so only the aggregated series come back.
+    - ``write(req)`` — the ``/write`` path: flatten a decoded WriteRequest
+      and insert it (requests are bounded by the 32 MiB wire cap, so the
+      driver-side encode is the protocol's own materialization).  This is
+      the ``TimeseriesWriter`` interface, so the store is the
+      ``AdapterApp`` writer itself.
+    - ``append(df)`` — the volume and streaming path: each partition of a
+      samples frame inserts from its own task.  ``StreamingIngest`` calls
+      it once per micro-batch, as it calls ``SamplesStore.append``.
+    - ``read_request(req)`` — the ``/read`` path: each query ships to
+      ClickHouse as the reference's SQL and the ordered rows are assembled
+      into series (``read.go:15-101``).
+    - ``read_parallel()`` — the samples frame, fetched executor-side in
+      time ranges, for Spark-side analytics over the store.
 
-    Auth rides ClickHouse HTTP headers (``X-ClickHouse-User/-Key``); all
-    network I/O goes through an injectable ``http`` callable so tests run
-    without a server.
+    Insert retries are at-least-once like the reference's batch insert
+    (``write.go:25-60``): a re-sent payload duplicates rows, which collapse
+    at read time under ``max(value)`` (SURVEY §2.8).
     """
 
     def __init__(
@@ -203,40 +185,26 @@ class ClickHouseStore:
         database: str = "default",
         username: str = "default",
         password: str = "",
-        batch_rows: int = 10_000,
         http: Callable[..., bytes] | None = None,
     ):
-        validate_table(table)
         self.spark = spark
         self.base_url = base_url.rstrip("/")
         self.table = table
         self.database = database
-        self.batch_rows = batch_rows
         self.http = http or default_http
         self._headers = {"X-ClickHouse-User": username}
         if password:
             self._headers["X-ClickHouse-Key"] = password
+        self._insert_url = insert_url(self.base_url, table, database)
+        self._insert_headers = {**self._headers, "Content-Type": "application/x-ndjson"}
 
-    def _http(self, url: str, payload: bytes | None = None, headers=None) -> bytes:
-        """Transport call with socket errors re-raised as RuntimeError.
-
-        The HTTP shell maps ConnectionError to 499 client-closed-request
-        (main.go:147-152 context.Canceled parity); a ConnectionResetError
-        from the *backend* transport must not ride that branch — storage
-        failures are 500s with the error counter bumped, like the
-        reference's storage-error path (main.go:147-152 else-branch).
-        """
-        try:
-            return self.http(url, payload, headers)
-        except ConnectionError as e:
-            raise RuntimeError(f"clickhouse transport error: {e}") from e
+    def _query(self, sql: str) -> bytes:
+        return _call(self.http, query_url(self.base_url, sql, self.database), None, self._headers)
 
     def ping(self) -> None:
         """Fail fast on an unreachable/unauthorized server (conn.go:62-64)."""
         try:
-            out = self.http(
-                query_url(self.base_url, "SELECT 1", self.database), None, self._headers
-            )
+            out = self._query("SELECT 1")
         except Exception as e:
             raise ConnectionError(
                 f"unable to connect to clickhouse server at {self.base_url}: {e}"
@@ -252,14 +220,70 @@ class ClickHouseStore:
         from remote_tsdb_clickhouse_spark.sources.writer import write_request_rows
 
         rows = write_request_rows(req).to_pylist()
-        url = insert_url(self.base_url, self.table)
-        if self.database:
-            from urllib.parse import quote
-
-            url += f"&database={quote(self.database)}"
-        for payload in rows_to_jsoneachrow(rows, self.batch_rows):
-            self._http(url, payload, {**self._headers, "Content-Type": "application/x-ndjson"})
+        _insert(self.http, self._insert_url, self._insert_headers, rows)
         return len(rows)
+
+    def append(self, df: DataFrame) -> None:
+        """Insert a samples frame partition-parallel: one ``foreachPartition``
+        pass in which each task posts its own rows.  The task closure holds
+        the URL, the headers and the transport, never the store (which
+        holds the SparkSession)."""
+        df.select("ts", "metric_name", "labels", "value").foreachPartition(
+            partial(_insert, self.http, self._insert_url, self._insert_headers)
+        )
+
+    def read_request(
+        self, req, *, ignore_label: str | None = None, ignore_hints: bool = False
+    ):
+        """Serve a full ``prompb.ReadRequest`` by shipping each query to
+        ClickHouse and run-length assembling the ordered rows into
+        TimeSeries — the reference's serving loop (``read.go:15-101``), for
+        the deployment where ClickHouse is both storage and scan engine.
+        """
+        from datetime import datetime, timezone
+
+        from remote_tsdb_clickhouse_spark import prompb
+        from remote_tsdb_clickhouse_spark.server.service import series_labels
+
+        resp = prompb.ReadResponse()
+        for q in req.queries:
+            result = prompb.QueryResult()
+            sql = read_query_sql(
+                q, self.table, ignore_label=ignore_label, ignore_hints=ignore_hints
+            )
+            # session_timezone pins the DateTime JSON rendering to UTC whatever
+            # the server's zone is (the strptime below would otherwise shift
+            # every timestamp on a non-UTC deploy).  Appended OUTSIDE
+            # read_query_sql so the emitted query text keeps byte-parity with
+            # read.go:57.  Needs ClickHouse >= 23.6; on older servers drop the
+            # setting and run the server in UTC like the reference deploy.
+            # output_format_json_quote_denormals=1 writes NaN/±Inf max_0 as
+            # "nan"/"inf"/"-inf" instead of null, so a staleness marker (a NaN)
+            # decodes through float() like any other value.
+            raw = self._query(
+                sql
+                + " SETTINGS session_timezone='UTC', output_format_json_quote_denormals=1"
+                + " FORMAT JSONEachRow"
+            )
+            last_key = None
+            ts_msg = None
+            for line in raw.splitlines():
+                if not line.strip():
+                    continue
+                r = json.loads(line)
+                key = (r["metric_name"], tuple(r["slb"]))
+                if ts_msg is None or key != last_key:
+                    last_key = key
+                    ts_msg = prompb.TimeSeries(labels=series_labels(r["metric_name"], r["slb"]))
+                    result.timeseries.append(ts_msg)
+                # ClickHouse DateTime over JSONEachRow: "YYYY-MM-DD hh:mm:ss"
+                # in the server zone (UTC here, matching the reference deploy)
+                t = datetime.strptime(r["t"], "%Y-%m-%d %H:%M:%S").replace(tzinfo=timezone.utc)
+                ts_msg.samples.append(
+                    prompb.Sample(float(r["max_0"]), int(t.timestamp() * 1000))
+                )
+            resp.results.append(result)
+        return resp
 
     def read_parallel(self, num_splits: int = 32) -> DataFrame:
         """Partition-parallel samples scan — the honest S6 analog for the
@@ -288,7 +312,7 @@ class ClickHouseStore:
             "toUnixTimestamp(max(updated_at)) AS mx, count() AS n "
             f"FROM {self.table} FORMAT JSONEachRow"
         )
-        raw = self._http(query_url(self.base_url, meta_sql, self.database), None, self._headers)
+        raw = self._query(meta_sql)
         meta = json.loads(raw.splitlines()[0])
         if not int(meta["n"]):
             return self.spark.createDataFrame([], SAMPLES_SCHEMA)
@@ -315,10 +339,7 @@ class ClickHouseStore:
                         f"WHERE updated_at >= toDateTime({int(lo)}) "
                         f"AND updated_at < toDateTime({int(hi)}) FORMAT JSONEachRow"
                     )
-                    try:
-                        raw = http(query_url(base_url, sql, database), None, headers)
-                    except ConnectionError as e:  # same 500-path contract as _http
-                        raise RuntimeError(f"clickhouse transport error: {e}") from e
+                    raw = _call(http, query_url(base_url, sql, database), None, headers)
                     text = raw.decode() if isinstance(raw, (bytes, bytearray)) else raw
                     if not text.strip():
                         yield pd.DataFrame(
@@ -353,28 +374,6 @@ class ClickHouseStore:
             "lo LONG, hi LONG",
         )
         return ranges.mapInPandas(fetch, schema=SAMPLES_SCHEMA)
-
-
-def read_pushdown_sql(
-    table: str,
-    where_clauses: list[str],
-    bucket_seconds: int | None = None,
-) -> str:
-    """Remote-read pushdown: when ClickHouse is the serving store, the whole
-    matcher+downsample query ships as one SQL string — the reference's exact
-    emitted shape (``read.go:57``), so ClickHouse does the heavy scan and
-    Spark (or the HTTP shell) only re-assembles series."""
-    validate_table(table)
-    t_expr = (
-        f"toStartOfInterval(updated_at, INTERVAL {int(bucket_seconds)} second)"
-        if bucket_seconds and bucket_seconds > 1
-        else "updated_at"
-    )
-    where = " AND ".join(where_clauses) if where_clauses else "1"
-    return (
-        f"SELECT metric_name, arraySort(labels) AS slb, {t_expr} AS t, max(value) AS max_0 "
-        f"FROM {table} WHERE {where} GROUP BY metric_name, slb, t ORDER BY metric_name, slb, t"
-    )
 
 
 def ch_string_literal(s: str) -> str:
@@ -449,6 +448,7 @@ def read_query_sql(
         trunc_ms_to_s,
     )
 
+    validate_table(table)
     # trunc-toward-zero like Go's StartTimestampMs/1000 (read.go:24-28);
     # divergent from // only for out-of-domain pre-1970 bounds
     clauses = [f"t >= {trunc_ms_to_s(q.start_ms)}"]
@@ -456,70 +456,14 @@ def read_query_sql(
         clauses.append(f"t <= {trunc_ms_to_s(q.end_ms)}")
     clauses.extend(matcher_where_clauses(q.matchers, ignore_label))
     interval_s = downsample_interval_seconds(q.hints, ignore_hints=ignore_hints)
-    return read_pushdown_sql(table, clauses, interval_s)
+    t_expr = (
+        f"toStartOfInterval(updated_at, INTERVAL {int(interval_s)} second)"
+        if interval_s and interval_s > 1
+        else "updated_at"
+    )
+    return (
+        f"SELECT metric_name, arraySort(labels) AS slb, {t_expr} AS t, max(value) AS max_0 "
+        f"FROM {table} WHERE {' AND '.join(clauses)} "
+        "GROUP BY metric_name, slb, t ORDER BY metric_name, slb, t"
+    )
 
-
-def pushdown_read_request(
-    store: ClickHouseStore,
-    req,
-    *,
-    ignore_label: str | None = None,
-    ignore_hints: bool = False,
-):
-    """Serve a full ``prompb.ReadRequest`` by shipping each query to
-    ClickHouse and run-length assembling the ordered rows into TimeSeries —
-    the reference's serving loop (``read.go:15-101``), for the deployment
-    where ClickHouse is both storage and scan engine.  The Spark plan path
-    (:func:`~...server.service.handle_read_request`) remains the engine
-    route; this is byte-parity for the external-storage leg.
-    """
-    from datetime import datetime, timezone
-
-    from remote_tsdb_clickhouse_spark import prompb
-    from remote_tsdb_clickhouse_spark.server.service import series_labels
-
-    resp = prompb.ReadResponse()
-    for q in req.queries:
-        result = prompb.QueryResult()
-        sql = read_query_sql(
-            q, store.table, ignore_label=ignore_label, ignore_hints=ignore_hints
-        )
-        # session_timezone pins the DateTime JSON rendering to UTC whatever
-        # the server's zone is (the strptime below would otherwise shift
-        # every timestamp on a non-UTC deploy).  Appended OUTSIDE
-        # read_query_sql so the emitted query text keeps byte-parity with
-        # read.go:57.  Needs ClickHouse >= 23.6; on older servers drop the
-        # setting and run the server in UTC like the reference deploy.
-        # output_format_json_quote_denormals=1 writes NaN/±Inf max_0 as
-        # "nan"/"inf"/"-inf" instead of null, so a staleness marker (a NaN)
-        # decodes through float() like any other value.
-        raw = store._http(
-            query_url(
-                store.base_url,
-                sql
-                + " SETTINGS session_timezone='UTC', output_format_json_quote_denormals=1"
-                + " FORMAT JSONEachRow",
-                store.database,
-            ),
-            None,
-            store._headers,
-        )
-        last_key = None
-        ts_msg = None
-        for line in raw.splitlines():
-            if not line.strip():
-                continue
-            r = json.loads(line)
-            key = (r["metric_name"], tuple(r["slb"]))
-            if ts_msg is None or key != last_key:
-                last_key = key
-                ts_msg = prompb.TimeSeries(labels=series_labels(r["metric_name"], r["slb"]))
-                result.timeseries.append(ts_msg)
-            # ClickHouse DateTime over JSONEachRow: "YYYY-MM-DD hh:mm:ss"
-            # in the server zone (UTC here, matching the reference deploy)
-            t = datetime.strptime(r["t"], "%Y-%m-%d %H:%M:%S").replace(tzinfo=timezone.utc)
-            ts_msg.samples.append(
-                prompb.Sample(float(r["max_0"]), int(t.timestamp() * 1000))
-            )
-        resp.results.append(result)
-    return resp

@@ -7,7 +7,8 @@ surface as 500s so Prometheus retries (at-least-once), and read-time
 
     HTTP frontends decode prompb -> append canonical-schema parquet files
     to a staging drop-zone  ->  Structured Streaming file source  ->
-    foreachBatch -> SamplesStore.append (atomic per micro-batch)
+    foreachBatch -> store.append (SamplesStore: atomic per micro-batch;
+    ClickHouseStore: partition-parallel JSONEachRow inserts)
 
 Properties preserved:
 - **at-least-once + idempotent-at-read**: redelivered staging batches insert
@@ -26,18 +27,25 @@ continuous per-series 1-minute max, the streaming analog of A2's bucket).
 
 from __future__ import annotations
 
+from typing import Protocol
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from remote_tsdb_clickhouse_spark.model import SAMPLES_SCHEMA
-from remote_tsdb_clickhouse_spark.sources.samples_store import SamplesStore
+
+
+class AppendStore(Protocol):
+    def append(self, df: DataFrame) -> None: ...
 
 
 class StreamingIngest:
-    """File-drop-zone streaming ingest into a :class:`SamplesStore`."""
+    """File-drop-zone streaming ingest into any store with ``append(df)``:
+    a :class:`~..sources.samples_store.SamplesStore` or a
+    :class:`~..sources.clickhouse.ClickHouseStore`."""
 
-    def __init__(self, spark: SparkSession, staging_dir: str, store: SamplesStore,
+    def __init__(self, spark: SparkSession, staging_dir: str, store: AppendStore,
                  checkpoint_dir: str):
         self.spark = spark
         self.staging_dir = staging_dir

@@ -17,10 +17,7 @@ from datetime import datetime, timezone
 
 import pytest
 
-from remote_tsdb_clickhouse_spark.sources.clickhouse import (
-    ClickHouseStore,
-    pushdown_read_request,
-)
+from remote_tsdb_clickhouse_spark.sources.clickhouse import ClickHouseStore
 
 BASE_EPOCH = 1704067200  # 2024-01-01 UTC
 N_ROWS = 40
@@ -163,11 +160,7 @@ def test_backend_transport_error_is_storage_error(spark):
         def write(self, req):  # pragma: no cover - not exercised
             raise AssertionError("unused")
 
-    app = AdapterApp(
-        NoWriter(),
-        store.read_parallel,
-        read_request_handler=lambda req: pushdown_read_request(store, req),
-    )
+    app = AdapterApp(NoWriter(), read_request_handler=store.read_request)
     rr = prompb.ReadRequest(
         queries=[
             ReadQuery(

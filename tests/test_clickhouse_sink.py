@@ -1,17 +1,18 @@
-"""ClickHouse JDBC/HTTP sink: DDL parity, JSONEachRow encoding, batching,
-pushdown SQL — all server-free (the post callable is injected)."""
+"""ClickHouse storage leg: DDL parity, JSONEachRow encoding, batching, the
+partition-parallel and streaming inserts, pushdown SQL — all server-free
+(the store's ``http`` transport is injected)."""
 
 import json
+import os
 from datetime import datetime
 
 import pytest
-from pyspark.sql import functions as F
 
+from remote_tsdb_clickhouse_spark.model import SAMPLES_SCHEMA
 from remote_tsdb_clickhouse_spark.sources.clickhouse import (
-    ClickHouseSink,
+    ClickHouseStore,
     create_table_ddl,
     insert_url,
-    read_pushdown_sql,
     rows_to_jsoneachrow,
     validate_table,
 )
@@ -62,38 +63,102 @@ def test_insert_url_encodes_query():
     assert "JSONEachRow" in url
 
 
-def test_sink_partition_parallel_write(spark):
-    df = spark.createDataFrame(
-        [(datetime(2024, 1, 1), "m", ["k=v"], 1.0)],
-        "ts TIMESTAMP, metric_name STRING, labels ARRAY<STRING>, value DOUBLE",
-    ).repartition(2)
-    # injectable post: collected on the driver via an accumulator-free trick —
-    # run in local mode, append to a local list through a file-less queue
-    posted = []
+def recording_transport(record_dir: str):
+    """Fake ClickHouse HTTP endpoint as a self-contained closure (cloudpickle
+    ships it by value to the executors): each call writes its URL, headers
+    and payload to one JSON file under ``record_dir`` (local-mode executors
+    share the driver's filesystem)."""
 
-    sink = ClickHouseSink(post=lambda url, payload: posted.append((url, payload)))
-    # local mode: foreachPartition closures run in the driver's Python workers;
-    # the side list is not visible across processes, so exercise the encoding
-    # path directly per partition instead
-    parts = df.rdd.glom().collect()
-    for part in parts:
-        for payload in rows_to_jsoneachrow(iter([r.asDict() for r in part]), 10000):
-            sink.post(sink.url, payload)
-    assert len(posted) == 1
-    assert b'"metric_name":"m"' in posted[0][1]
+    def transport(url, payload=None, headers=None):
+        import json as _json
+        import os as _os
+        import uuid as _uuid
+
+        with open(_os.path.join(record_dir, _uuid.uuid4().hex), "w") as f:
+            _json.dump(
+                {"url": url, "headers": dict(headers or {}), "payload": payload.decode()},
+                f,
+            )
+        return b""
+
+    return transport
 
 
-def test_read_pushdown_sql_shape():
-    sql = read_pushdown_sql(
-        "metrics.samples",
-        ["t >= 100", "has(labels, 'job=x')"],
-        bucket_seconds=30,
+def _recorded(record_dir) -> list[dict]:
+    return [json.load(open(os.path.join(record_dir, f))) for f in os.listdir(record_dir)]
+
+
+def _credentialed_store(spark, record_dir) -> ClickHouseStore:
+    return ClickHouseStore(
+        spark,
+        base_url="http://ch.example.internal:8123",
+        database="metrics",
+        username="writer",
+        password="hunter2",
+        http=recording_transport(str(record_dir)),
     )
-    assert "toStartOfInterval(updated_at, INTERVAL 30 second)" in sql
-    assert "arraySort(labels) AS slb" in sql
-    assert "max(value) AS max_0" in sql
-    assert "GROUP BY metric_name, slb, t" in sql
-    assert "has(labels, 'job=x')" in sql
+
+
+def _assert_inserts_carry_store_credentials(recs):
+    for r in recs:
+        assert "INSERT" in r["url"] and "&database=metrics" in r["url"], r["url"]
+        assert r["headers"]["X-ClickHouse-User"] == "writer"
+        assert r["headers"]["X-ClickHouse-Key"] == "hunter2"
+
+
+def _posted_rows(recs) -> list[tuple]:
+    rows = [json.loads(line) for r in recs for line in r["payload"].splitlines()]
+    return sorted(
+        (r["updated_at"], r["metric_name"], tuple(r["labels"]), r["value"]) for r in rows
+    )
+
+
+def test_append_partition_parallel_with_credentials(spark, tmp_path):
+    """``ClickHouseStore.append`` inserts from each partition's task through
+    the store's transport, with its credentials and database on every
+    request."""
+    src = [
+        (datetime(2024, 1, 1, 0, 0, i), f"m{i % 2}", [f"k={i}", "job=a"], i / 4.0)
+        for i in range(6)
+    ]
+    df = spark.createDataFrame(src, SAMPLES_SCHEMA).repartition(2)
+    assert df.rdd.getNumPartitions() == 2
+    _credentialed_store(spark, tmp_path).append(df)
+
+    recs = _recorded(tmp_path)
+    assert len(recs) == 2  # one insert per non-empty partition
+    _assert_inserts_carry_store_credentials(recs)
+    assert _posted_rows(recs) == sorted(
+        (ts.strftime("%Y-%m-%d %H:%M:%S"), m, tuple(lb), v) for ts, m, lb, v in src
+    )
+
+
+def test_streaming_ingest_into_clickhouse_store(spark, tmp_path):
+    """``StreamingIngest`` feeds any store with ``append(df)``: a staged
+    parquet batch lands in ClickHouse with the store's credentials."""
+    from remote_tsdb_clickhouse_spark.streaming.ingest import StreamingIngest
+
+    rec = tmp_path / "recs"
+    rec.mkdir()
+    staging = str(tmp_path / "staging")
+    src = [
+        (datetime(2024, 1, 1, 0, 0, 0), "up", ["job=a"], 1.0),
+        (datetime(2024, 1, 2, 0, 0, 15), "up", ["job=b"], 0.5),
+    ]
+    spark.createDataFrame(src, SAMPLES_SCHEMA).coalesce(1).write.parquet(staging)
+    store = _credentialed_store(spark, rec)
+    q = StreamingIngest(spark, staging, store, str(tmp_path / "ckpt")).start(
+        available_now=True
+    )
+    q.awaitTermination(120)
+
+    recs = _recorded(rec)
+    assert recs
+    _assert_inserts_carry_store_credentials(recs)
+    assert _posted_rows(recs) == [
+        ("2024-01-01 00:00:00", "up", ("job=a",), 1.0),
+        ("2024-01-02 00:00:15", "up", ("job=b",), 0.5),
+    ]
 
 
 def test_matcher_where_clauses_reference_parity():
@@ -183,16 +248,31 @@ def test_read_query_sql_full_shape():
     assert "toStartOfInterval" not in sql2
 
 
+def test_read_pushdown_sql_shape():
+    """The emitted pushdown statement's shape (read.go:57)."""
+    from remote_tsdb_clickhouse_spark.plans.matchers import LabelMatcher, MatcherType
+    from remote_tsdb_clickhouse_spark.plans.read_plan import ReadHints, ReadQuery
+    from remote_tsdb_clickhouse_spark.sources.clickhouse import read_query_sql
+
+    q = ReadQuery(
+        start_ms=100_000,
+        matchers=(LabelMatcher(MatcherType.EQ, "job", "x"),),
+        hints=ReadHints(step_ms=60000),
+    )
+    assert read_query_sql(q, "metrics.samples") == (
+        "SELECT metric_name, arraySort(labels) AS slb, "
+        "toStartOfInterval(updated_at, INTERVAL 30 second) AS t, max(value) AS max_0 "
+        "FROM metrics.samples WHERE t >= 100 AND has(labels, 'job=x') "
+        "GROUP BY metric_name, slb, t ORDER BY metric_name, slb, t"
+    )
+
+
 def test_pushdown_read_request_assembly(spark):
     """The serving loop end-to-end against a fake HTTP transport: run-length
     series assembly of ordered rows (read.go:62-93)."""
     from remote_tsdb_clickhouse_spark.plans.matchers import LabelMatcher, MatcherType
     from remote_tsdb_clickhouse_spark.plans.read_plan import ReadQuery
     from remote_tsdb_clickhouse_spark import prompb
-    from remote_tsdb_clickhouse_spark.sources.clickhouse import (
-        ClickHouseStore,
-        pushdown_read_request,
-    )
 
     rows = [
         {"metric_name": "view", "slb": ["k=1", "user=7"], "t": "2024-01-01 00:00:00", "max_0": 1.5},
@@ -210,7 +290,7 @@ def test_pushdown_read_request_assembly(spark):
         queries=[ReadQuery(start_ms=1704067200000, end_ms=0,
                            matchers=(LabelMatcher(MatcherType.EQ, "__name__", "view"),))]
     )
-    resp = pushdown_read_request(store, req)
+    resp = store.read_request(req)
     assert len(resp.results) == 1
     ts = resp.results[0].timeseries
     assert len(ts) == 2  # run-length split on (metric, labels)
@@ -236,11 +316,7 @@ def test_pushdown_read_request_decodes_nonfinite_max(spark):
     from remote_tsdb_clickhouse_spark.plans.matchers import LabelMatcher, MatcherType
     from remote_tsdb_clickhouse_spark.plans.read_plan import ReadQuery
     from remote_tsdb_clickhouse_spark import prompb
-    from remote_tsdb_clickhouse_spark.sources.clickhouse import (
-        ClickHouseStore,
-        pushdown_read_request,
-        read_query_sql,
-    )
+    from remote_tsdb_clickhouse_spark.sources.clickhouse import read_query_sql
 
     rows = [
         {"metric_name": "up", "slb": ["job=a"], "t": "2024-01-01 00:00:00", "max_0": "nan"},
@@ -255,7 +331,7 @@ def test_pushdown_read_request_decodes_nonfinite_max(spark):
 
     store = ClickHouseStore(spark, table="metrics.samples", http=fake_http)
     q = ReadQuery(start_ms=1704067200000, matchers=(LabelMatcher(MatcherType.EQ, "__name__", "up"),))
-    resp = pushdown_read_request(store, prompb.ReadRequest(queries=[q]))
+    resp = store.read_request(prompb.ReadRequest(queries=[q]))
     [ts] = resp.results[0].timeseries
     values = [s.value for s in ts.samples]
     assert math.isnan(values[0]) and values[1:] == [math.inf, -math.inf]

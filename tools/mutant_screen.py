@@ -766,6 +766,12 @@ MUTANTS = [
      "fs.delete(Path(URI(f)), False)",
      "None",
      ["tests/test_store_writer.py", "tests/test_rollup.py"]),
+    # -- batch 24: the one ClickHouse client --------------------------------
+    ("M112", "ClickHouse insert routine drops the store's headers (no credentials on inserts)",
+     "remote_tsdb_clickhouse_spark/sources/clickhouse.py",
+     "_call(http, url, payload, headers)",
+     "_call(http, url, payload, {})",
+     ["tests/test_clickhouse_sink.py"]),
 ]
 
 
