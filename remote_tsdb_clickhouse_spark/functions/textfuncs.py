@@ -3,7 +3,7 @@
 All functions are pure Catalyst expressions (JVM-side, whole-stage
 codegen'd) — no Python UDFs in the hot path — so they scale to 100 TB
 document corpora with zero serialization overhead.  Each has an exact ANSI
-SQL twin used by the DuckDB oracle in ``__spark_entry__.py``.
+SQL twin used by the DuckDB oracles in ``queries/``.
 """
 
 from __future__ import annotations
@@ -31,11 +31,6 @@ def tokens(text: Column | str) -> Column:
     c = F.col(text) if isinstance(text, str) else text
     cleaned = F.lower(F.regexp_replace(c, "[^a-zA-Z0-9 ]", " "))
     return F.filter(F.split(cleaned, r"\s+"), lambda x: x != "")
-
-
-def token_count_ws(text: Column | str) -> Column:
-    """Whitespace token count."""
-    return F.size(tokens(text))
 
 
 def token_count_bpe_ish(text: Column | str) -> Column:

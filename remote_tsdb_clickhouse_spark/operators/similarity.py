@@ -1172,50 +1172,10 @@ def ivf_pq_topk(
             "id_col": id_col,
             "vec_col": vec_col,
         }
-        got = index.get("params")
-        # params are REQUIRED, not optional: an index dict without them
-        # has unknown provenance and could silently serve different
-        # parameters than requested (r7 advisor finding)
-        if got is None:
-            raise ValueError(
-                "prebuilt index lacks 'params'; build it with ivf_pq_build"
-            )
-        # compare key-wise rather than dict-equality so indexes persisted
-        # BEFORE a params key existed (e.g. pre-id_col/vec_col) stay
-        # servable when otherwise compatible (r8 advisor follow-up); the
-        # numeric core keys are mandatory, newer keys checked if recorded
-        core = ("n_queries", "n_centroids", "nprobe", "m", "k")
-        missing = [kk for kk in core if kk not in got]
-        if missing:
-            raise ValueError(f"prebuilt index params lack {missing}; rebuild it")
-        mismatched = {
-            kk: (got[kk], want[kk]) for kk in want if kk in got and got[kk] != want[kk]
-        }
-        if mismatched:
-            raise ValueError(f"index built with {got}, serve requested {want}")
-        if "id_col" not in got or "vec_col" not in got:
-            # legacy index persisted before column provenance was recorded
-            # in params: the key-wise relaxation above would let one built
-            # from a DIFFERENT vector column serve silently (wrong
-            # centroids/codebook -> plausible wrong neighbors).  Cheap
-            # structural guard (r9 advisor): the caller's vector
-            # dimensionality must match the index centroids' width and m
-            # must divide it.  One-row metadata probe, legacy path only —
-            # indexes built by ivf_pq_build since record both columns and
-            # never reach here.
-            width = int(index["c_mat"].shape[1])
-            if width % m != 0:
-                raise ValueError(
-                    f"legacy index centroid width {width} not divisible by m={m};"
-                    " rebuild it with ivf_pq_build"
-                )
-            probe = emb.select(F.size(F.col(vec_col)).alias("d")).first()
-            if probe is not None and probe["d"] != width:
-                raise ValueError(
-                    f"legacy index built over {width}-dim vectors but column"
-                    f" {vec_col!r} has {probe['d']}-dim vectors; rebuild it"
-                    " with ivf_pq_build"
-                )
+        # a missing or different params dict (another build, other
+        # columns) must raise, not silently serve other parameters
+        if index.get("params") != want:
+            raise ValueError(f"index built with {index.get('params')}, serve requested {want}")
     idx = index or ivf_pq_build(
         emb, n_queries, n_centroids, nprobe, m, k, id_col, vec_col
     )

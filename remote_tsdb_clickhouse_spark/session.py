@@ -54,6 +54,10 @@ def _set_query_confs(spark: SparkSession) -> None:
     # normalize in the source adapters (sources/events.py floors ns -> us,
     # byte-matching DuckDB's coercion).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # One ts encoding in the samples store: Spark-written files
+    # (compaction, rollups, DataFrame appends) store INT64 micros like the
+    # pyarrow /write commits, not Spark's default INT96.
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
 
 
 def get_spark(app_name: str = "remote-tsdb-clickhouse-spark") -> SparkSession:

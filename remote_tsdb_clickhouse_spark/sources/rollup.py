@@ -71,7 +71,7 @@ class RollupStore:
         src = (
             self.read(source_interval_s)
             if source_interval_s is not None
-            else self.base.read(with_partition_col=False)
+            else self.base.read()
         )
         epoch = F.col("ts").cast("long")
         bucket = F.timestamp_seconds(epoch - epoch % interval_s)

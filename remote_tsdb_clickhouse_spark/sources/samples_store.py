@@ -168,17 +168,16 @@ class SamplesStore:
 
     # -- read path ----------------------------------------------------------
 
-    def read(self, with_partition_col: bool = True) -> DataFrame:
+    def read(self) -> DataFrame:
         """Scan the table.
 
-        Keeps ``ts_date`` by default so the read plan can attach its
+        Keeps ``ts_date`` so the read plan can attach its
         partition-pruning predicate (``plans.read_plan
         .partition_pruning_filter``); metric_name/ts predicates additionally
         prune row groups via parquet stats (``PushedFilters`` in
         ``.explain``).
         """
-        df = self.spark.read.schema(PARTITIONED_SAMPLES_SCHEMA).parquet(self.path)
-        return df if with_partition_col else df.select(*SAMPLES_FIELDS)
+        return self.spark.read.schema(PARTITIONED_SAMPLES_SCHEMA).parquet(self.path)
 
     # -- maintenance (S7/S8) ------------------------------------------------
 

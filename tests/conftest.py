@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import glob
 import os
 import sys
 from datetime import datetime, timezone
@@ -12,6 +13,19 @@ if REPO_ROOT not in sys.path:
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
+
+
+def entry_sources() -> list[str]:
+    """Paths of the query contract's source: the ``__spark_entry__``
+    registry and every ``queries/*.py`` module.  Fails closed: every family
+    module the registry looks queries up in must be among them, so a moved
+    or renamed family cannot drop out of the source-walking tests."""
+    import __spark_entry__ as entry
+
+    paths = sorted(glob.glob(os.path.join(REPO_ROOT, "queries", "*.py")))
+    missing = {os.path.abspath(m.__file__) for m in entry.FAMILIES} - set(paths)
+    assert not missing, f"family modules outside queries/: {missing}"
+    return [os.path.join(REPO_ROOT, "__spark_entry__.py"), *paths]
 
 
 @pytest.fixture(scope="session")

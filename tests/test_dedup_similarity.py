@@ -360,52 +360,20 @@ def test_ivf_serve_paths_match_self_built(spark):
             n_queries=5, topk=3, n_centroids=8, m=4, k=8,
             id_col="other_id", index=idx,
         )
-    with pytest.raises(ValueError, match="lacks 'params'"):
+    with pytest.raises(ValueError, match="index built with"):
         similarity.ivf_pq_topk(
             emb, n_queries=5, topk=3, n_centroids=8, m=4, k=8,
             index={k2: v for k2, v in idx.items() if k2 != "params"},
         )
-    # a LEGACY index persisted before id_col/vec_col were recorded must
-    # stay servable when otherwise compatible (key-wise compare, r8) ...
-    legacy = dict(idx)
-    legacy["params"] = {
-        k2: v for k2, v in idx["params"].items() if k2 not in ("id_col", "vec_col")
-    }
-    r = sorted(
-        map(
-            tuple,
+    # params missing the column names (or a numeric key) are not the
+    # requested build either: every recorded param must match
+    for dropped in ("vec_col", "m"):
+        partial = dict(idx)
+        partial["params"] = {k2: v for k2, v in idx["params"].items() if k2 != dropped}
+        with pytest.raises(ValueError, match="index built with"):
             similarity.ivf_pq_topk(
-                emb, n_queries=5, topk=3, n_centroids=8, m=4, k=8, index=legacy
-            ).collect(),
-        )
-    )
-    assert r == q
-    # ... but one missing a NUMERIC core key has unknown provenance
-    nocore = dict(idx)
-    nocore["params"] = {k2: v for k2, v in idx["params"].items() if k2 != "m"}
-    with pytest.raises(ValueError, match="lack"):
-        similarity.ivf_pq_topk(
-            emb, n_queries=5, topk=3, n_centroids=8, m=4, k=8, index=nocore
-        )
-    # ... and a legacy index must still fail LOUDLY on structural
-    # mismatch (r9 advisor): vectors of a different dimensionality than
-    # the index centroids (the built-from-a-different-column case), or a
-    # centroid width m doesn't divide, must raise instead of serving
-    # plausible wrong neighbors
-    emb4 = spark.createDataFrame(
-        [(i, [float(i + j) for j in range(4)]) for i in range(20)],
-        "vec_id LONG, embedding ARRAY<DOUBLE>",
-    )
-    with pytest.raises(ValueError, match="dim vectors"):
-        similarity.ivf_pq_topk(
-            emb4, n_queries=5, topk=3, n_centroids=8, m=4, k=8, index=legacy
-        )
-    ragged = dict(legacy)
-    ragged["c_mat"] = idx["c_mat"][:, :7]
-    with pytest.raises(ValueError, match="not divisible"):
-        similarity.ivf_pq_topk(
-            emb, n_queries=5, topk=3, n_centroids=8, m=4, k=8, index=ragged
-        )
+                emb, n_queries=5, topk=3, n_centroids=8, m=4, k=8, index=partial
+            )
 
     # the assignment serve path must also be result-identical and treat
     # an EMPTY cent_rows list as present (it used `or`, which silently

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta
 
-import __spark_entry__ as entry
+from queries import events, sim, text, tpch, tsdb
 
 EV_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
@@ -39,7 +39,7 @@ def test_sessionize_gap_boundary_exactly_1800s(spark, tmp_path):
         (3, t0, 2, "click", 1.0, '{"k": 1}'),
         (4, t0 + timedelta(seconds=1801), 2, "click", 1.0, '{"k": 1}'),
     ])
-    out = entry.q_events_sessionize(spark, str(tmp_path)).collect()
+    out = events.q_events_sessionize(spark, str(tmp_path)).collect()
     per_user = {}
     for r in out:
         per_user.setdefault(r["user_id"], []).append(r["n_events"])
@@ -69,7 +69,7 @@ def test_funnel_stage_window_boundaries(spark, tmp_path):
         (6, t0, 3, "signup", 1.0, '{"k": 1}'),
         (7, t0 + day + timedelta(seconds=1), 3, "click", 1.0, '{"k": 1}'),
     ])
-    row = entry.q_events_funnel(spark, str(tmp_path)).collect()[0]
+    row = events.q_events_funnel(spark, str(tmp_path)).collect()[0]
     assert (row["n_signup"], row["n_click_after"], row["n_purchase_after"]) == (
         3, 2, 2,
     ), row
@@ -86,7 +86,7 @@ def test_dataset_split_hash_bucket_boundaries(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
     got = {
         r["split"]: r["n_docs"]
-        for r in entry.q_dataset_split(spark, str(tmp_path)).collect()
+        for r in text.q_dataset_split(spark, str(tmp_path)).collect()
     }
     assert got == {"train": 1, "val": 2, "test": 1}, got
 
@@ -103,7 +103,7 @@ def test_market_basket_support_boundary_and_no_self_pairs(spark, tmp_path):
     ).write.mode("overwrite").parquet(f"{tmp_path}/lineitem.parquet")
     got = [
         (r["part_a"], r["part_b"], r["support"])
-        for r in entry.q_orders_market_basket(spark, str(tmp_path)).collect()
+        for r in tpch.q_orders_market_basket(spark, str(tmp_path)).collect()
     ]
     assert got == [(10, 20, 2)], got
 
@@ -127,7 +127,7 @@ def test_matryoshka_prefix_is_the_leading_16_dims(spark, tmp_path):
         rows, "vec_id long, embedding array<float>, label int"
     ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
     out = (
-        entry.q_sim_matryoshka_topk(spark, str(tmp_path))
+        sim.q_sim_matryoshka_topk(spark, str(tmp_path))
         .orderBy("rnk")
         .collect()
     )
@@ -145,7 +145,7 @@ def test_stale_series_boundary_exactly_24h(spark, tmp_path):
         (3, datetime(2024, 1, 10), 2, "view", 1.0, '{"k": 1}'),   # stale
         (4, datetime(2024, 1, 19, 12), 3, "purchase", 1.0, '{"k": 1}'),
     ])
-    out = entry.q_tsdb_stale_series(spark, str(tmp_path)).collect()
+    out = tsdb.q_tsdb_stale_series(spark, str(tmp_path)).collect()
     assert {r["metric_name"] for r in out} == {"view"}, out
 
 
@@ -167,7 +167,7 @@ def test_doc_packing_bin_is_pre_doc_cumulative(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
     got = {
         (r["lang"], r["bin"]): (r["n_docs"], r["sum_tokens"])
-        for r in entry.q_doc_packing(spark, str(tmp_path)).collect()
+        for r in text.q_doc_packing(spark, str(tmp_path)).collect()
     }
     assert got == {("en", 0): (2, 5000), ("en", 1): (1, 2000)}, got
 
@@ -182,7 +182,7 @@ def test_moving_avg_frame_is_trailing_five_points(spark, tmp_path):
         (i, t0 + timedelta(hours=i), 7, "view", float(i + 1), '{"k": 1}')
         for i in range(6)
     ])
-    out = entry.q_tsdb_moving_avg(spark, str(tmp_path)).orderBy("t").collect()
+    out = tsdb.q_tsdb_moving_avg(spark, str(tmp_path)).orderBy("t").collect()
     assert [r["avg5"] for r in out] == [1.0, 1.5, 2.0, 2.5, 3.0, 4.0], out
 
 
@@ -201,7 +201,7 @@ def test_quality_filter_token_count_boundaries(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
     got = {
         (r["lang"], r["fail_mask"]): (r["n_docs"], r["sum_tokens"])
-        for r in entry.q_text_quality_filter(spark, str(tmp_path)).collect()
+        for r in text.q_text_quality_filter(spark, str(tmp_path)).collect()
     }
     assert got == {("en", 0): (2, 532), ("en", 1): (1, 5)}, got
 
@@ -220,7 +220,7 @@ def test_tfidf_tie_breaks_on_document_frequency_asc(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
     got = {
         r["term"]: r["rk"]
-        for r in entry.q_text_tfidf_keywords(spark, str(tmp_path)).collect()
+        for r in text.q_text_tfidf_keywords(spark, str(tmp_path)).collect()
         if r["doc_id"] == 1
     }
     assert got == {"banana": 1, "apple": 2, "cherry": 3}, got
@@ -235,7 +235,7 @@ def test_vocab_rank_tie_breaks_on_term_asc(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
     got = {
         r["term"]: r["rnk"]
-        for r in entry.q_text_vocab(spark, str(tmp_path)).collect()
+        for r in text.q_text_vocab(spark, str(tmp_path)).collect()
     }
     assert got == {"aa": 1, "zz": 2, "bb": 3}, got
 
@@ -252,7 +252,7 @@ def test_interleave_positions_round_robin_across_sources(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
     got = {
         r["position"]: r["source"]
-        for r in entry.q_dataset_interleave(spark, str(tmp_path)).collect()
+        for r in text.q_dataset_interleave(spark, str(tmp_path)).collect()
     }
     assert got == {0: "a", 1: "b", 2: "a", 3: "b"}, got
 
@@ -266,7 +266,7 @@ def test_sliding_range_max_excludes_exactly_one_hour_old(spark, tmp_path):
         (1, t0, 9, "signup", 10.0, '{"k": 1}'),
         (2, t0 + timedelta(seconds=3600), 9, "signup", 1.0, '{"k": 1}'),
     ])
-    out = entry.q_tsdb_sliding_range_max(spark, str(tmp_path)).orderBy("t").collect()
+    out = tsdb.q_tsdb_sliding_range_max(spark, str(tmp_path)).orderBy("t").collect()
     assert [r["max_1h"] for r in out] == [10.0, 1.0], out
 
 
@@ -285,7 +285,7 @@ def test_topk_series_tie_breaks_on_labelset_asc(spark, tmp_path):
     _write_events(spark, str(tmp_path), rows)
     got = {
         r["labels_str"]: r["rk"]
-        for r in entry.q_tsdb_topk_series(spark, str(tmp_path)).collect()
+        for r in tsdb.q_tsdb_topk_series(spark, str(tmp_path)).collect()
     }
     assert got == {"k=1,user=1": 1, "k=1,user=2": 2, "k=1,user=4": 3}, got
 
@@ -301,7 +301,7 @@ def test_value_histogram_floor_buckets_negative_values(spark, tmp_path):
     ).parquet(f"{tmp_path}/events.parquet")
     got = {
         r["bucket"]: r["n"]
-        for r in entry.q_events_value_histogram(spark, str(tmp_path)).collect()
+        for r in events.q_events_value_histogram(spark, str(tmp_path)).collect()
     }
     assert got == {-1: 1, 1: 1}, got
 
@@ -315,7 +315,7 @@ def test_max_gap_drops_single_sample_series(spark, tmp_path):
         (2, t0 + timedelta(hours=2), 1, "purchase", 1.0, '{"k": 1}'),
         (3, t0, 2, "purchase", 1.0, '{"k": 1}'),  # single sample: no row
     ])
-    out = entry.q_tsdb_max_gap(spark, str(tmp_path)).collect()
+    out = tsdb.q_tsdb_max_gap(spark, str(tmp_path)).collect()
     assert [(r["labels_str"], r["max_gap_s"]) for r in out] == [
         ("k=1,user=1", 7200),
     ], out
@@ -333,7 +333,7 @@ def test_customers_lapsed_set_difference_direction(spark, tmp_path):
     spark.createDataFrame(
         rows, "o_orderkey long, o_custkey long, o_orderdate timestamp"
     ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/orders.parquet")
-    got = [r["o_custkey"] for r in entry.q_customers_lapsed(spark, str(tmp_path)).collect()]
+    got = [r["o_custkey"] for r in tpch.q_customers_lapsed(spark, str(tmp_path)).collect()]
     assert got == [100], got
 
 
@@ -344,7 +344,7 @@ def test_count_values_floors_the_gauge_key(spark, tmp_path):
     _write_events(spark, str(tmp_path), [
         (1, t0, 1, "view", -2.5, '{"k": 1}'),
     ])
-    out = entry.q_tsdb_count_values(spark, str(tmp_path)).collect()
+    out = tsdb.q_tsdb_count_values(spark, str(tmp_path)).collect()
     assert [(r["value"], r["n_samples"]) for r in out] == [(-3, 1)], out
 
 
@@ -359,7 +359,7 @@ def test_label_centroids_floor_quantize_negative_components(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
     out = {
         (r["label"], r["dim"]): r["centroid_v"]
-        for r in entry.q_emb_label_centroids(spark, str(tmp_path)).collect()
+        for r in sim.q_emb_label_centroids(spark, str(tmp_path)).collect()
     }
     assert out[(7, 0)] == -3e-6, out
 
@@ -372,7 +372,7 @@ def test_offset_ratio_compares_today_with_yesterday(spark, tmp_path):
         (1, datetime(2024, 1, 6, 0, 15), 1, "view", 2.0, '{"k": 1}'),
         (2, datetime(2024, 1, 7, 0, 20), 1, "view", 3.0, '{"k": 1}'),
     ])
-    out = entry.q_tsdb_offset_ratio(spark, str(tmp_path)).collect()
+    out = tsdb.q_tsdb_offset_ratio(spark, str(tmp_path)).collect()
     assert [
         (r["bucket_t"], r["sum_micro"], r["prev_sum_micro"], r["dod_ratio_micro"])
         for r in out
@@ -387,7 +387,7 @@ def test_dataset_sample_membership_boundary_bucket_10(spark, tmp_path):
     spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
-    out = entry.q_dataset_sample(spark, str(tmp_path)).collect()
+    out = text.q_dataset_sample(spark, str(tmp_path)).collect()
     assert [(r["lang"], r["n_docs"], r["n_sampled"]) for r in out] == [
         ("en", 2, 1)
     ], out

@@ -23,6 +23,19 @@ def test_queries_are_callables():
         assert callable(fn), name
 
 
+def test_each_family_holds_its_queries_oracles():
+    """Each family module's query names are exactly its own oracle names,
+    no name is in two families, and the registry order lists every name
+    the families define, once."""
+    seen: list[str] = []
+    for family in entry.FAMILIES:
+        names = set(family.queries())
+        assert names == set(family.oracle_sql()), family.__name__
+        seen += names
+    assert len(seen) == len(set(seen)), "a query name in two families"
+    assert sorted(seen) == sorted(entry.ORDER)
+
+
 def test_registry_order_is_pinned():
     """queries() dict order is a contract: bench.py runs the families in
     order of first appearance, and perfbench's tsdb_analytics workload
@@ -49,6 +62,32 @@ def test_registry_order_is_pinned():
     ]
 
 
+def test_registry_applies_query_confs(spark):
+    """Every ``queries()`` callable sets the session confs the queries
+    assume before it builds anything: in a session whose time zone is not
+    UTC and whose conf memo is empty, a query still returns its oracle's
+    rows.  The whole session cache is dropped, not only the ``confs``
+    namespace, because the memoized frames were analyzed under UTC and
+    would hide the zone."""
+    from test_oracle_parity import SF_DIR, _duck_df, _row_multiset
+
+    from remote_tsdb_clickhouse_spark.session import ensure_query_confs
+    from remote_tsdb_clickhouse_spark.util import SESSION_CACHE
+
+    name = "tsdb_read_eq"
+    spark.catalog.clearCache()
+    SESSION_CACHE.clear()
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        got = _row_multiset(entry.queries()[name](spark, SF_DIR).toPandas())
+    finally:
+        spark.catalog.clearCache()
+        SESSION_CACHE.clear()
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        ensure_query_confs(spark)
+    assert got == _row_multiset(_duck_df(entry.oracle_sql()[name]))
+
+
 def test_oracle_sql_compiles_in_duckdb():
     """Each oracle must at least parse/bind against empty tables of the
     driver's schemas — catches typos without running Spark."""
@@ -66,23 +105,24 @@ def test_oracle_sql_compiles_in_duckdb():
 
 def _driver_regex_patterns(src: str | None = None) -> list[str]:
     """Extract the pattern of EVERY RE/NRE ``LabelMatcher`` in the entry
-    source, failing CLOSED (ADVICE r12): the previous extraction matched
-    only bare-Name-type positional calls with a constant third argument,
-    so a future matcher spelled ``MatcherType.RE``, via keyword args, or
-    with a non-literal pattern would have been silently excluded from the
-    regex checks below.  This walker classifies every LabelMatcher call and
+    source (the registry and every ``queries/`` module), failing CLOSED:
+    an extraction that matched only bare-Name-type positional calls with
+    a constant third argument would silently exclude a matcher spelled
+    ``MatcherType.RE``, via keyword args, or with a non-literal pattern
+    from the regex checks below.  This walker classifies every LabelMatcher call and
     raises on any spelling it cannot prove is either non-regex or a
     constant-pattern regex.  ``src`` overrides the entry source so the
     fail-closed promise is itself testable."""
     import ast
-    import os as _os
+
+    from conftest import entry_sources
 
     if src is None:
-        repo = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-        src = open(_os.path.join(repo, "__spark_entry__.py")).read()
-    tree = ast.parse(src)
+        srcs = [open(path).read() for path in entry_sources()]
+    else:
+        srcs = [src]
     patterns = []
-    for node in ast.walk(tree):
+    for node in (n for s in srcs for n in ast.walk(ast.parse(s))):
         if not isinstance(node, ast.Call):
             continue
         fn = node.func

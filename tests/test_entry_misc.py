@@ -15,6 +15,7 @@ import tempfile
 from conftest import SF_SMOKE
 
 import __spark_entry__ as entry
+from queries import dedup, sim, streaming, tsdb
 from remote_tsdb_clickhouse_spark.util import SESSION_CACHE
 
 
@@ -23,16 +24,16 @@ def test_samples_spread_guard(spark):
     # parallelism, spread()'s own defaultParallelism target beyond it —
     # a mid-scale deployment whose events table is a handful of large
     # files must NOT be capped at 4 partitions (r8 advisor)
-    assert entry._samples_spread(1) == entry._SAMPLES_SPREAD
-    assert entry._samples_spread(8) == entry._SAMPLES_SPREAD
-    assert entry._samples_spread(entry._LOCAL_BENCH_PARALLELISM) == entry._SAMPLES_SPREAD
-    assert entry._samples_spread(entry._LOCAL_BENCH_PARALLELISM + 1) is None
-    assert entry._samples_spread(400) is None
+    assert tsdb._samples_spread(1) == tsdb._SAMPLES_SPREAD
+    assert tsdb._samples_spread(8) == tsdb._SAMPLES_SPREAD
+    assert tsdb._samples_spread(tsdb._LOCAL_BENCH_PARALLELISM) == tsdb._SAMPLES_SPREAD
+    assert tsdb._samples_spread(tsdb._LOCAL_BENCH_PARALLELISM + 1) is None
+    assert tsdb._samples_spread(400) is None
     # provable local no-op: at local parallelism the cached samples frame
     # still holds exactly the knee partition count the r8 sweep measured
     # (so the guard leaves every tsdb query's local result unchanged)
-    df = entry._samples(spark, SF_SMOKE)
-    assert df.rdd.getNumPartitions() == entry._SAMPLES_SPREAD
+    df = tsdb._samples(spark, SF_SMOKE)
+    assert df.rdd.getNumPartitions() == tsdb._SAMPLES_SPREAD
 
 
 def _published_staging_path(sf_dir: str) -> str:
@@ -63,7 +64,7 @@ def test_staging_rejects_symlink_alias(spark, tmp_path):
     (decoy / "_STAGED").write_text(os.path.abspath(SF_SMOKE))  # even a "right" marker
     os.symlink(decoy, final)
     try:
-        got = entry.stage_dedup_stream_input(spark, SF_SMOKE)
+        got = streaming.stage_dedup_stream_input(spark, SF_SMOKE)
         assert not os.path.islink(got)
         assert os.path.realpath(got) != os.path.realpath(str(decoy))
         with open(os.path.join(got, "_STAGED")) as fh:
@@ -84,7 +85,7 @@ def test_staging_marker_binds_dataset(spark):
     with open(os.path.join(final, "_STAGED"), "w") as fh:
         fh.write("/somewhere/else")
     try:
-        got = entry.stage_dedup_stream_input(spark, SF_SMOKE)
+        got = streaming.stage_dedup_stream_input(spark, SF_SMOKE)
         assert got != final
         with open(os.path.join(got, "_STAGED")) as fh:
             assert fh.read() == os.path.abspath(SF_SMOKE)
@@ -96,11 +97,11 @@ def test_staging_reuses_published_dir(spark):
     """The happy path must still share across processes/sessions: a prior
     publication with the right marker is reused verbatim."""
     final = _drop_published(spark, SF_SMOKE)
-    first = entry.stage_dedup_stream_input(spark, SF_SMOKE)
+    first = streaming.stage_dedup_stream_input(spark, SF_SMOKE)
     assert first == final and os.path.isfile(os.path.join(final, "_STAGED"))
     # a fresh "session" view: clear only the staging memos, keep the dir
     SESSION_CACHE.clear("staging")
-    again = entry.stage_dedup_stream_input(spark, SF_SMOKE)
+    again = streaming.stage_dedup_stream_input(spark, SF_SMOKE)
     assert again == final
 
 
@@ -110,19 +111,19 @@ def test_family_warmup_persists_only_its_allowlist(spark):
     warmup must leave exactly those frames in the CacheManager, so a new
     persist (or a listed frame that stops being cached) fails here."""
     allowlist = {
-        "tsdb": lambda: [entry._samples(spark, SF_SMOKE)],
+        "tsdb": lambda: [tsdb._samples(spark, SF_SMOKE)],
         "streaming": lambda: [],
         "dedup": lambda: [
-            *entry._dedup_shingle_frames(spark, SF_SMOKE),
-            entry._lsh_pairs(spark, SF_SMOKE),
-            entry._jaccard_pairs(spark, SF_SMOKE),
+            *dedup._dedup_shingle_frames(spark, SF_SMOKE),
+            dedup._lsh_pairs(spark, SF_SMOKE),
+            dedup._jaccard_pairs(spark, SF_SMOKE),
         ],
         "sim": lambda: [
-            entry._bf_corpus_df(spark, SF_SMOKE),
-            entry._mat_corpus_df(spark, SF_SMOKE),
-            entry._lsh_corpus4_df(spark, SF_SMOKE),
-            entry._ivf_lists_df(spark, SF_SMOKE),
-            entry._trained_ivf_lists_df(spark, SF_SMOKE),
+            sim._bf_corpus_df(spark, SF_SMOKE),
+            sim._mat_corpus_df(spark, SF_SMOKE),
+            sim._lsh_corpus4_df(spark, SF_SMOKE),
+            sim._ivf_lists_df(spark, SF_SMOKE),
+            sim._trained_ivf_lists_df(spark, SF_SMOKE),
         ],
     }
     cache_manager = spark._jsparkSession.sharedState().cacheManager()
@@ -144,12 +145,12 @@ def test_family_warmup_persists_only_its_allowlist(spark):
 _STAGING_SCRIPT = """
 import json, sys
 sys.path.insert(0, sys.argv[1])
-import __spark_entry__ as entry
+from queries import streaming, tsdb
 from remote_tsdb_clickhouse_spark.session import get_spark
 
 spark = get_spark("staging-cleanup")
-store = entry._compacted_store(spark, sys.argv[2])
-staging = entry.stage_streaming_input(spark, sys.argv[2])
+store = tsdb._compacted_store(spark, sys.argv[2])
+staging = streaming.stage_streaming_input(spark, sys.argv[2])
 assert store.read().count() > 0
 print("RESULT " + json.dumps([store.path, staging]))
 """

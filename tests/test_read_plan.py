@@ -379,35 +379,39 @@ def test_negative_ms_bound_truncates_toward_zero_on_both_legs(spark):
 
 
 def test_driver_row_read_bounds_are_nonnegative():
-    """Every ReadQuery bound any queries() entry constructs is a
-    non-negative constant (resolved through module-level names and simple
-    arithmetic), and trunc == floor on non-negative ms (pinned above) — so
+    """Every ReadQuery bound the entry source (the registry and every
+    ``queries/`` module) constructs is a non-negative constant (resolved
+    through module-level names and simple arithmetic), and trunc == floor
+    on non-negative ms (pinned above) — so
     the read_plan/clickhouse trunc-toward-zero division gives every query
     the same result the floor spelling would."""
     import ast
-    import os as _os
 
-    repo = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    tree = ast.parse(open(_os.path.join(repo, "__spark_entry__.py")).read())
+    from conftest import entry_sources
 
-    consts: dict[str, int] = {}
-    for node in tree.body:
-        if (
-            isinstance(node, ast.Assign)
-            and len(node.targets) == 1
-            and isinstance(node.targets[0], ast.Name)
-        ):
-            try:
-                consts[node.targets[0].id] = int(
-                    ast.literal_eval(node.value)
-                )
-            except Exception:
-                pass
+    trees = [ast.parse(open(path).read()) for path in entry_sources()]
+
+    # module-level constants of every file; a name two files bind to
+    # different values resolves to nothing (fails closed below)
+    consts: dict[str, int | None] = {}
+    for tree in trees:
+        for node in tree.body:
+            if (
+                isinstance(node, ast.Assign)
+                and len(node.targets) == 1
+                and isinstance(node.targets[0], ast.Name)
+            ):
+                try:
+                    value = int(ast.literal_eval(node.value))
+                except Exception:
+                    continue
+                name = node.targets[0].id
+                consts[name] = value if consts.get(name, value) == value else None
 
     def resolve(expr) -> int:
         if isinstance(expr, ast.Constant):
             return int(expr.value)
-        if isinstance(expr, ast.Name) and expr.id in consts:
+        if isinstance(expr, ast.Name) and consts.get(expr.id) is not None:
             return consts[expr.id]
         if isinstance(expr, ast.BinOp):
             left, right = resolve(expr.left), resolve(expr.right)
@@ -420,7 +424,7 @@ def test_driver_row_read_bounds_are_nonnegative():
         raise AssertionError(f"unresolvable ReadQuery bound: {ast.dump(expr)}")
 
     bounds = []
-    for node in ast.walk(tree):
+    for node in (n for tree in trees for n in ast.walk(tree)):
         if (
             isinstance(node, ast.Call)
             and isinstance(node.func, ast.Name)

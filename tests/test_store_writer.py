@@ -620,4 +620,12 @@ def test_committed_store_equals_spark_written_store(spark, tmp_path_factory, req
     assert a.schema == b.schema
     assert spark.read.parquet(committed.path).schema == spark.read.parquet(written.path).schema
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    assert _keyed_bits(committed.read(with_partition_col=False).toArrow()) == _keyed_bits(table)
+    assert _keyed_bits(committed.read().select(*SAMPLES_FIELDS).toArrow()) == _keyed_bits(table)
+    # one ts encoding on disk: INT64 micros in UTC from both writers
+    # (Spark's default INT96 would read back as timestamp[ns])
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for root in (d / "committed", d / "spark"):
+        first = min(root.glob("ts_date=*/*.parquet"))
+        assert pq.read_schema(first).field("ts").type == pa.timestamp("us", tz="UTC")

@@ -238,9 +238,11 @@ def test_no_private_driver_caches():
     def name(node):
         return getattr(node, "id", None) or getattr(node, "attr", None) or getattr(node, "name", None)
 
+    from conftest import entry_sources
+
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     files = glob.glob(os.path.join(repo, "remote_tsdb_clickhouse_spark", "**", "*.py"), recursive=True)
-    files.append(os.path.join(repo, "__spark_entry__.py"))
+    files += entry_sources()
     hits = []
     for path in files:
         with open(path) as fh:
@@ -261,18 +263,20 @@ import gc, json, sys, weakref
 sys.path.insert(0, sys.argv[1])
 sf = sys.argv[2]
 import __spark_entry__ as entry
+from queries import tsdb
+from queries._common import T0, T20
 from remote_tsdb_clickhouse_spark.plans import read_plan as rp
 from remote_tsdb_clickhouse_spark.plans.matchers import LabelMatcher, MatcherType
 from remote_tsdb_clickhouse_spark.session import get_spark
 
-q = rp.ReadQuery(start_ms=entry.T0, end_ms=entry.T20,
+q = rp.ReadQuery(start_ms=T0, end_ms=T20,
                  matchers=(LabelMatcher(MatcherType.EQ, "__name__", "view"),),
                  hints=rp.ReadHints(step_ms=60000))
 
 def run(spark):
     frames = [entry.queries()["q6_revenue_delta"](spark, sf),
               entry.queries()["tsdb_read_eq"](spark, sf),
-              rp.read_query_df(entry._samples(spark, sf), q)]
+              rp.read_query_df(tsdb._samples(spark, sf), q)]
     return [sorted(repr(tuple(r)) for r in df.collect()) for df in frames]
 
 spark = get_spark("relaunch")

@@ -585,37 +585,37 @@ MUTANTS = [
     # only through the oracles (which need corpus luck to land ON a
     # boundary) — direct planted-fixture killers in test_entry_clauses.py
     ("M77", "sessionize gap boundary > 1800 -> >= (exact-1800 gap splits)",
-     "__spark_entry__.py",
+     "queries/events.py",
      "F.when(gap.isNull() | (gap > 1800.0), 1)",
      "F.when(gap.isNull() | (gap >= 1800.0), 1)",
      ["tests/test_entry_clauses.py"]),
     ("M78", "funnel click-at-signup-instant excluded (>= t_signup -> >)",
-     "__spark_entry__.py",
+     "queries/events.py",
      '(F.col("ts") >= F.col("t_signup"))',
      '(F.col("ts") > F.col("t_signup"))',
      ["tests/test_entry_clauses.py"]),
     ("M79", "funnel 24h stage window inclusive -> exclusive (<= day -> <)",
-     "__spark_entry__.py",
+     "queries/events.py",
      '& (F.col("ts").cast("double") - F.col("t_signup").cast("double") <= day)',
      '& (F.col("ts").cast("double") - F.col("t_signup").cast("double") < day)',
      ["tests/test_entry_clauses.py"]),
     ("M80", "split train boundary h < 80 -> <= (bucket 80 leaks into train)",
-     "__spark_entry__.py",
+     "queries/text.py",
      'F.when(h < 80, F.lit("train"))',
      'F.when(h <= 80, F.lit("train"))',
      ["tests/test_entry_clauses.py"]),
     ("M81", "basket support floor >= 2 -> > 2 (support-2 pairs lost)",
-     "__spark_entry__.py",
+     "queries/tpch.py",
      '.where(F.col("support") >= 2)',
      '.where(F.col("support") > 2)',
      ["tests/test_entry_clauses.py"]),
     ("M82", "basket pair slice from i+2 -> i+1 (self-pairs, M58 analog)",
-     "__spark_entry__.py",
+     "queries/tpch.py",
      "F.slice(F.col(\"parts\"), i + F.lit(2), F.size(F.col(\"parts\")))",
      "F.slice(F.col(\"parts\"), i + F.lit(1), F.size(F.col(\"parts\")))",
      ["tests/test_entry_clauses.py"]),
     ("M83", "Matryoshka prefix shifts off the leading dim (slice 1 -> 2)",
-     "__spark_entry__.py",
+     "queries/sim.py",
      'emb = _embs(spark, sf_dir).withColumn("embedding", F.slice("embedding", 1, 16))',
      'emb = _embs(spark, sf_dir).withColumn("embedding", F.slice("embedding", 2, 16))',
      ["tests/test_entry_clauses.py"]),
@@ -630,84 +630,84 @@ MUTANTS = [
      'cond = (F.col("ts") > F.lit(start_exclusive)) & (F.col("ts") < F.lit(end_inclusive))',
      ["tests/test_store_writer.py"]),
     ("M86", "stale-series cut < end-24h -> <= (boundary series goes stale)",
-     "__spark_entry__.py",
+     "queries/tsdb.py",
      '.where(F.col("last_t") < F.lit(end_s - 86400))',
      '.where(F.col("last_t") <= F.lit(end_s - 86400))',
      ["tests/test_entry_clauses.py"]),
     # -- batch 16 (r16): arithmetic / frame / tie-break clauses ------------
     ("M87", "packing bin from post-doc cumulative (boundary doc jumps bins)",
-     "__spark_entry__.py",
+     "queries/text.py",
      'F.floor((cum - F.col("n_tokens")) / F.lit(4096.0))',
      "F.floor(cum / F.lit(4096.0))",
      ["tests/test_entry_clauses.py"]),
     ("M88", "moving-avg frame widens to six rows (rowsBetween -4 -> -5)",
-     "__spark_entry__.py",
+     "queries/tsdb.py",
      ".rowsBetween(-4, 0)",
      ".rowsBetween(-5, 0)",
      ["tests/test_entry_clauses.py"]),
     ("M89", "quality gate flags exactly-20-token docs (< 20 -> <= 20)",
-     "__spark_entry__.py",
+     "queries/text.py",
      "F.when(n_tok < 20, F.lit(1))",
      "F.when(n_tok <= 20, F.lit(1))",
      ["tests/test_entry_clauses.py"]),
     ("M90", "quality gate flags exactly-512-token docs (> 512 -> >= 512)",
-     "__spark_entry__.py",
+     "queries/text.py",
      "F.when(n_tok > 512, F.lit(2))",
      "F.when(n_tok >= 512, F.lit(2))",
      ["tests/test_entry_clauses.py"]),
     ("M91", "tf-idf tie-break df asc -> desc (common term outranks rare)",
-     "__spark_entry__.py",
+     "queries/text.py",
      'F.col("tf").desc(), F.col("df").asc(), F.col("term").asc()',
      'F.col("tf").desc(), F.col("df").desc(), F.col("term").asc()',
      ["tests/test_entry_clauses.py"]),
     ("M92", "vocab rank tie-break term asc dropped (desc on count ties)",
-     "__spark_entry__.py",
+     "queries/text.py",
      'w = Window.orderBy(F.col("cnt").desc(), F.col("term"))',
      'w = Window.orderBy(F.col("cnt").desc(), F.col("term").desc())',
      ["tests/test_entry_clauses.py"]),
     ("M93", "interleave position blocks by source (rnk*n+idx -> rnk+n*idx)",
-     "__spark_entry__.py",
+     "queries/text.py",
      '(F.col("rnk") * n_src + F.col("src_idx"))',
      '(F.col("rnk") + n_src * F.col("src_idx"))',
      ["tests/test_entry_clauses.py"]),
     ("M94", "sliding-hour RANGE frame admits the exactly-3600s-old sample",
-     "__spark_entry__.py",
+     "queries/tsdb.py",
      ".rangeBetween(-3599, 0)",
      ".rangeBetween(-3600, 0)",
      ["tests/test_entry_clauses.py"]),
     # -- batch 17 (r16): floor-vs-trunc, set direction, null-drop, ties ----
     ("M95", "topk_series tie-break labelset asc dropped (M30 analog)",
-     "__spark_entry__.py",
+     "queries/tsdb.py",
      '.orderBy(F.col("avg_v").desc(), F.col("labels_str"))',
      '.orderBy(F.col("avg_v").desc(), F.col("labels_str").desc())',
      ["tests/test_entry_clauses.py"]),
     ("M96", "value-histogram bucket floor -> toward-zero cast (negatives)",
-     "__spark_entry__.py",
+     "queries/events.py",
      'F.floor(F.col("value") / 10.0).cast("long").alias("bucket")',
      '(F.col("value") / 10.0).cast("long").alias("bucket")',
      ["tests/test_entry_clauses.py"]),
     ("M97", "max_gap keeps single-sample series as null-gap rows",
-     "__spark_entry__.py",
+     "queries/tsdb.py",
      '.where(F.col("max_gap_s").isNotNull())',
      '.where(F.lit(True))',
      ["tests/test_entry_clauses.py"]),
     ("M98", "customers_lapsed set difference direction flipped",
-     "__spark_entry__.py",
+     "queries/tpch.py",
      "return year_keys(1996).subtract(year_keys(1997))",
      "return year_keys(1997).subtract(year_keys(1996))",
      ["tests/test_entry_clauses.py"]),
     ("M99", "count_values key floor -> toward-zero cast (negative gauges)",
-     "__spark_entry__.py",
+     "queries/tsdb.py",
      'floored = grouped.withColumn("max_0", F.floor(F.col("max_0")).cast("long"))',
      'floored = grouped.withColumn("max_0", F.col("max_0").cast("long"))',
      ["tests/test_entry_clauses.py"]),
     ("M100", "centroid micro-quantize floor -> toward-zero cast",
-     "__spark_entry__.py",
+     "queries/sim.py",
      'q = F.floor(F.col("v").cast("double") * 1000000.0).cast("long")',
      'q = (F.col("v").cast("double") * 1000000.0).cast("long")',
      ["tests/test_entry_clauses.py"]),
     ("M101", "funnel purchase-stage 24h window inclusive -> exclusive",
-     "__spark_entry__.py",
+     "queries/events.py",
      '& (F.col("ts").cast("double") - F.col("t_click").cast("double") <= day)',
      '& (F.col("ts").cast("double") - F.col("t_click").cast("double") < day)',
      ["tests/test_entry_clauses.py"]),
@@ -718,12 +718,12 @@ MUTANTS = [
      'F.when(F.col("__na") >= 0.3, F.lit("zh"))',
      ["tests/test_textfuncs.py"]),
     ("M103", "offset_ratio joins tomorrow instead of yesterday (+86400 -> -)",
-     "__spark_entry__.py",
+     "queries/tsdb.py",
      '(F.col("bucket_t") + 86400).alias("bucket_t")',
      '(F.col("bucket_t") - 86400).alias("bucket_t")',
      ["tests/test_entry_clauses.py"]),
     ("M104", "sample membership h < 10 -> <= (bucket 10 leaks in)",
-     "__spark_entry__.py",
+     "queries/text.py",
      'F.sum(F.when(F.col("hv") < 10, 1).otherwise(0))',
      'F.sum(F.when(F.col("hv") <= 10, 1).otherwise(0))',
      ["tests/test_entry_clauses.py"]),
@@ -772,6 +772,12 @@ MUTANTS = [
      "_call(http, url, payload, headers)",
      "_call(http, url, payload, {})",
      ["tests/test_clickhouse_sink.py"]),
+    # -- batch 25: the registry applies the query confs --------------------
+    ("M113", "registry hands out the family query functions without the session confs",
+     "__spark_entry__.py",
+     "return {name: _with_confs(fns[name]) for name in ORDER}",
+     "return {name: fns[name] for name in ORDER}",
+     ["tests/test_entry_contract.py"]),
 ]
 
 
