@@ -31,6 +31,12 @@ to stay within the common dialect; see :func:`check_re2_portable`.
 All predicates are pure Catalyst expressions (no UDFs): name/time predicates
 push down to the Parquet scan, and array predicates run inside whole-stage
 codegen before the aggregation shuffle.
+
+:class:`ArrowMatchers` evaluates the same algebra without Spark, over
+Arrow string arrays of distinct names and label lists (the local store's
+``/read``, ``SamplesStore.read_request``).  Its regexes run in RE2
+(``pyarrow.compute.match_substring_regex``), the reference's own dialect,
+with the same portability check and concat-anchoring.
 """
 
 from __future__ import annotations
@@ -39,6 +45,9 @@ import re
 from dataclasses import dataclass
 from enum import IntEnum
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -167,7 +176,12 @@ def _anchored(pattern: str) -> str:
     every alternation-free or group-wrapped pattern but not this edge),
     and matching the reference's results is the assignment — pinned by
     tests/test_matchers.py::test_top_level_alternation_anchors_like_reference."""
-    return "^" + _to_java_dialect(check_re2_portable(pattern)) + "$"
+    return _to_java_dialect(re2_anchored(pattern))
+
+
+def re2_anchored(pattern: str) -> str:
+    """The anchored pattern in RE2 spelling, before the Java translation."""
+    return "^" + check_re2_portable(pattern) + "$"
 
 
 def joined_label(name: str, value: str) -> str:
@@ -243,3 +257,61 @@ def compile_matchers(
     for c in conds[1:]:
         out = out & c
     return out
+
+
+class ArrowMatchers:
+    """One query's matchers evaluated over Arrow arrays, with the semantics
+    of :func:`compile_matcher`: ``__name__`` matchers per distinct metric
+    name (:meth:`name_mask`), the others per distinct label list
+    (:meth:`labels_mask`), where ``k=v``/``k=~v`` holds when some element
+    matches and ``k!=v``/``k!~v`` when none does (F9/F11), and the
+    ignore-label EQ matcher is dropped (F8).  Patterns are checked and
+    anchored when the query is built, before any scan."""
+
+    def __init__(
+        self,
+        matchers: tuple[LabelMatcher, ...],
+        *,
+        ignore_label: str | None = DEFAULT_READ_IGNORE_LABEL,
+    ):
+        # (negated, is_regex, operand) per matcher
+        self.on_name: list[tuple[bool, bool, str]] = []
+        self.on_labels: list[tuple[bool, bool, str]] = []
+        for m in matchers:
+            if m.type not in (MatcherType.EQ, MatcherType.NEQ, MatcherType.RE, MatcherType.NRE):
+                raise UnsupportedMatcherError(f"unsupported LabelMatcher type {m.type!r}")
+            if m.name == NAME_LABEL:
+                operand, target = m.value, self.on_name
+            else:
+                operand, target = joined_label(m.name, m.value), self.on_labels
+                if m.type == MatcherType.EQ and operand == ignore_label:
+                    continue  # F8
+            regex = m.type in (MatcherType.RE, MatcherType.NRE)
+            negated = m.type in (MatcherType.NEQ, MatcherType.NRE)
+            target.append((negated, regex, re2_anchored(operand) if regex else operand))
+
+    @staticmethod
+    def _hits(values: pa.Array, regex: bool, operand: str) -> np.ndarray:
+        hit = pc.match_substring_regex(values, operand) if regex else pc.equal(values, operand)
+        return hit.to_numpy(zero_copy_only=False)
+
+    def name_mask(self, names: pa.Array) -> np.ndarray:
+        """Which metric names (a string array) every ``__name__`` matcher
+        accepts."""
+        ok = np.ones(len(names), dtype=bool)
+        for negated, regex, operand in self.on_name:
+            ok &= self._hits(names, regex, operand) != negated
+        return ok
+
+    def labels_mask(self, labelsets: pa.ListArray) -> np.ndarray:
+        """Which label lists (``name=value`` strings) every label matcher
+        accepts."""
+        ok = np.ones(len(labelsets), dtype=bool)
+        if self.on_labels:
+            flat = pc.list_flatten(labelsets)
+            owner = pc.list_parent_indices(labelsets).to_numpy()
+        for negated, regex, operand in self.on_labels:
+            has = np.zeros(len(labelsets), dtype=bool)
+            has[owner[self._hits(flat, regex, operand)]] = True
+            ok &= has != negated
+        return ok

@@ -125,9 +125,11 @@ def bucket_time(ts_col, interval_s: int):
 #: issued dozens of py4j round-trips per query call — measured ~0.06-0.1 s
 #: of every tsdb consumer's ~0.16 s driver build.  Columns are immutable
 #: expression wrappers, safe to share across plans; the memo holds
-#: expressions only, never data.  The ``/read`` server path sees one
-#: distinct ReadQuery per remote-read request, so the namespace's bound
-#: is what keeps a long-lived server's driver memory flat.
+#: expressions only, never data.  Its users are the ``tsdb_*`` analytics
+#: and the tests' oracle reads: the server builds no read plan per request
+#: (``SamplesStore.read_request`` serves ``/read`` without Spark), so the
+#: namespace's bound no longer stands between remote-read traffic and the
+#: driver's memory.
 _expr_memo = partial(SESSION_CACHE.get, "read_plan")
 
 

@@ -7,9 +7,10 @@ starts the Prometheus remote-storage adapter as a process: flag surface,
 
 Two storage legs, matching the reference's flag surface (``main.go:82-90``):
 
-- ``--store PATH`` — the Spark-native parquet samples store (engine and
-  storage both Spark; ``-table``'s role is the path).  A local path or
-  ``file:`` URI: ``/write`` commits by local rename.
+- ``--store PATH`` — the parquet samples store (``-table``'s role is the
+  path).  A local path or ``file:`` URI: ``/write`` commits by local
+  rename and ``/read`` scans the published files, neither through Spark;
+  Spark runs the analytics and the store's maintenance.
 - ``--db ADDR`` (+ ``--db.database/--db.username/--db.password``,
   ``--table``) — the reference's exact deployment shape: Spark is the
   engine, ClickHouse is the storage.  ``ADDR`` is the ClickHouse **HTTP
@@ -134,11 +135,6 @@ def build_server(args: argparse.Namespace, spark=None, http=None):
         except ConnectionError as e:
             raise SystemExit(str(e)) from e
         writer = store
-        provider = None
-        # the reference's serving loop: /read ships matcher+downsample SQL
-        # to ClickHouse and run-length assembles the ordered rows
-        # (read.go:15-101); Spark keeps ingest/analytics
-        read_handler = store.read_request
     else:
         from remote_tsdb_clickhouse_spark.sources.samples_store import (
             SamplesStore,
@@ -163,15 +159,16 @@ def build_server(args: argparse.Namespace, spark=None, http=None):
                 f"store path {args.store!r} does not exist (use --create-if-missing)"
             )
         writer = TimeseriesWriter(store)
-        provider = store.read
-        read_handler = None
 
+    # /read is served by the store itself: ClickHouse runs the matcher and
+    # downsample SQL (read.go:15-101), the parquet store scans its
+    # published files without Spark.  Spark keeps ingest, maintenance and
+    # the analytics
     app = AdapterApp(
         writer,
-        provider,
         ignore_label=args.read_ignore_label or None,
         ignore_hints=args.read_ignore_hints,
-        read_request_handler=read_handler,
+        read_request_handler=store.read_request,
     )
     host, _, port = args.http.rpartition(":")
     return AdapterServer(app, host=host or "0.0.0.0", port=int(port))

@@ -11,10 +11,10 @@ The reference's endpoint surface (``main.go:116-153``):
 - ``GET /metrics`` — the five self-counters, Prometheus text format.
 - anything else — 404 banner (main.go:116-120).
 
-Threaded stdlib server: handlers submit work to the shared SparkSession
-(Spark is thread-safe for job submission; scheduling fairness is Spark's).
-Kept deliberately thin and separable from the engine — the intelligence is
-in plans/, this file only moves bytes.
+Threaded stdlib server: each request runs on its own handler thread.  A
+``/read`` goes to the storage leg's ``read_request_handler``: the parquet
+store's own Spark-free scan, or the ClickHouse pushdown.  Kept deliberately
+thin and separable from the engine — this file only moves bytes.
 """
 
 from __future__ import annotations
@@ -23,12 +23,13 @@ import re
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-from pyspark.sql import DataFrame
-
 from remote_tsdb_clickhouse_spark import codec
 from remote_tsdb_clickhouse_spark.model import DEFAULT_READ_IGNORE_LABEL
 from remote_tsdb_clickhouse_spark.server.metrics import MetricsRegistry
-from remote_tsdb_clickhouse_spark.server.service import handle_read_request
+
+# the Spark read leg, served by no app here: perfbench's traced runs still
+# wrap it under this module's name
+from remote_tsdb_clickhouse_spark.server.service import handle_read_request  # noqa: F401
 from remote_tsdb_clickhouse_spark.sources.writer import TimeseriesWriter
 
 BANNER = b"remote-tsdb-clickhouse-spark\n"
@@ -70,22 +71,19 @@ class AdapterApp:
     def __init__(
         self,
         writer: TimeseriesWriter,
-        samples_provider=None,
+        read_request_handler,
         *,
         ignore_label: str | None = DEFAULT_READ_IGNORE_LABEL,
         ignore_hints: bool = False,
-        read_request_handler=None,
     ):
         self.writer = writer
-        self.samples_provider = samples_provider  # () -> DataFrame
+        # (req, *, ignore_label, ignore_hints) -> ReadResponse, served by
+        # the store: the parquet store's Spark-free scan
+        # (SamplesStore.read_request) or the ClickHouse pushdown
+        # (ClickHouseStore.read_request, read.go:15-101)
+        self.read_request_handler = read_request_handler
         self.ignore_label = ignore_label
         self.ignore_hints = ignore_hints
-        # optional (req, *, ignore_label, ignore_hints) -> ReadResponse
-        # override: the ClickHouse-storage leg pushes the whole
-        # matcher+downsample query to the store
-        # (sources/clickhouse.py ClickHouseStore.read_request,
-        # read.go:15-101) instead of planning it on a samples frame
-        self.read_request_handler = read_request_handler
         self.metrics = MetricsRegistry()
 
     def handle_write(self, body: bytes) -> tuple[int, bytes]:
@@ -103,15 +101,9 @@ class AdapterApp:
         self.metrics.read_requests_total.inc()
         try:
             req = codec.decode_read_request(body)
-            if self.read_request_handler is not None:
-                resp = self.read_request_handler(
-                    req, ignore_label=self.ignore_label, ignore_hints=self.ignore_hints
-                )
-            else:
-                samples: DataFrame = self.samples_provider()
-                resp = handle_read_request(
-                    samples, req, ignore_label=self.ignore_label, ignore_hints=self.ignore_hints
-                )
+            resp = self.read_request_handler(
+                req, ignore_label=self.ignore_label, ignore_hints=self.ignore_hints
+            )
             return 200, codec.encode_read_response(resp)
         except ConnectionError:
             # context.Canceled parity (main.go:147-152): a client that went
@@ -319,6 +311,7 @@ class AdapterServer:
     thread (``serve_forever`` analog of main.go:162-164)."""
 
     def __init__(self, app: AdapterApp, host: str = "127.0.0.1", port: int = 0):
+        self.app = app
         self.httpd = ThreadingHTTPServer((host, port), make_handler(app))
         self.port = self.httpd.server_address[1]
         self._thread: threading.Thread | None = None

@@ -1,4 +1,4 @@
-"""Request-level service: prompb requests -> engine plans -> prompb responses.
+"""The Spark read leg: prompb requests -> engine plans -> prompb responses.
 
 The Spark re-expression of the reference's per-query loop
 (``read.go:15-101``): each ``prompb.Query`` becomes one DataFrame plan
@@ -7,6 +7,12 @@ assembly), and the collected per-series rows are re-expanded into
 ``prompb.TimeSeries`` — labels split at the first ``=`` with ``__name__``
 prepended (``read.go:84-89``, P3) and timestamps re-expanded to ms
 (``read.go:92``).
+
+The server does not run this leg: a ``/read`` on the parquet store is
+served without Spark by ``SamplesStore.read_request``, whose answer
+:func:`handle_read_request` over ``SamplesStore.read()`` defines (it is
+that path's test oracle).  :func:`series_labels` and
+:func:`row_to_timeseries` build the response series of every leg.
 """
 
 from __future__ import annotations

@@ -43,6 +43,12 @@ The reference's storage is one ClickHouse MergeTree table ordered by
   ``max(value)`` collapses the duplicates (the reference's at-least-once
   contract).  A ``/write`` into a partition whose emptied directory is
   removed under it fails (a 5xx the sender retries), never half-commits.
+- **Serving reads without Spark**: :meth:`SamplesStore.read_request`
+  answers a remote-read request from the published files of the queried
+  days with pyarrow alone — the reference's one-scan-per-query read
+  (``read.go:15-101``), with matching done per distinct value the way its
+  ``LowCardinality`` columns and ``set(0)`` labelset index do.  Spark's
+  read plan (:meth:`read`, ``plans.read_plan``) keeps every other reader.
 - **Range delete (S8)**: the reference uses ``ALTER TABLE ... DELETE WHERE
   updated_at > a AND updated_at <= b`` for day reimports
   (``README.md:163-167``); here the files of the date partitions the range
@@ -74,11 +80,20 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from remote_tsdb_clickhouse_spark import prompb
 from remote_tsdb_clickhouse_spark.model import (
+    DEFAULT_READ_IGNORE_LABEL,
     PARTITION_COLUMN,
     PARTITIONED_SAMPLES_SCHEMA,
     SAMPLES_FIELDS,
 )
+from remote_tsdb_clickhouse_spark.plans.matchers import ArrowMatchers
+from remote_tsdb_clickhouse_spark.plans.read_plan import (
+    ReadQuery,
+    downsample_interval_seconds,
+    trunc_ms_to_s,
+)
+from remote_tsdb_clickhouse_spark.server.service import row_to_timeseries
 
 
 def local_store_path(path: str) -> str | None:
@@ -88,6 +103,14 @@ def local_store_path(path: str) -> str | None:
     if url.scheme == "file":
         return unquote(url.path)
     return path if url.scheme == "" else None
+
+
+_I64 = np.iinfo(np.int64)
+_US_PER_DAY = 86_400_000_000
+
+#: Listings of one ``/read`` query's partitions while rewrites keep deleting
+#: files it listed (:meth:`SamplesStore._open_files`).
+_LISTINGS = 10
 
 
 def _fsync(path: str) -> None:
@@ -178,6 +201,114 @@ class SamplesStore:
         ``.explain``).
         """
         return self.spark.read.schema(PARTITIONED_SAMPLES_SCHEMA).parquet(self.path)
+
+    def read_request(
+        self,
+        req: prompb.ReadRequest,
+        *,
+        ignore_label: str | None = DEFAULT_READ_IGNORE_LABEL,
+        ignore_hints: bool = False,
+    ) -> prompb.ReadResponse:
+        """Serve a remote-read request from the published files, without
+        Spark: the answer of ``service.handle_read_request(self.read(),
+        req)``, the Spark plan that stays this path's test oracle.
+
+        Each query streams the files of the date partitions its bounds
+        span (:meth:`_open_files`) one record batch at a time, with the
+        name and label columns dictionary-decoded.  Within a batch a series
+        is a run of rows with the same dictionary indices; the matchers are
+        evaluated once per distinct metric name and once per new distinct
+        series, keyed by its ``array_sort``-ed labels (:class:`ArrowMatchers`,
+        RE2).  The ``ts`` bounds compare in microseconds, as Spark compares
+        ``ts``.
+        """
+        resp = prompb.ReadResponse()
+        for q in req.queries:
+            matchers = ArrowMatchers(q.matchers, ignore_label=ignore_label)
+            interval_s = downsample_interval_seconds(q.hints, ignore_hints=ignore_hints)
+            resp.results.append(prompb.QueryResult(_assemble(*self._scan(q, matchers), interval_s)))
+        return resp
+
+    def _open_files(self, first_day: int, last_day: int):
+        """Yield each published parquet file of the date partitions from
+        ``first_day`` to ``last_day`` (days since the epoch), open.
+
+        A listed file that is gone when it is opened was deleted by a
+        :meth:`rewrite`, which publishes its new file before it deletes the
+        files it read: the partitions are listed again and the files not yet
+        yielded follow.  A row may then be read twice, which ``max``
+        collapses; none is missed.
+        """
+        root = local_store_path(self.path)
+        seen: set[str] = set()
+        for _ in range(_LISTINGS):
+            vanished = False
+            for path in _list_files(root, first_day, last_day):
+                if path in seen:
+                    continue
+                seen.add(path)
+                try:
+                    pf = pq.ParquetFile(
+                        path,
+                        read_dictionary=["metric_name", "labels.list.element"],
+                        coerce_int96_timestamp_unit="us",
+                    )
+                except FileNotFoundError:
+                    vanished = True
+                    continue
+                with pf:
+                    yield pf
+            if not vanished:
+                return
+        raise RuntimeError(f"files of {self.path!r} were still being replaced after {_LISTINGS} listings")
+
+    def _scan(
+        self, q: ReadQuery, matchers: ArrowMatchers
+    ) -> tuple[list[tuple[str, tuple[str, ...]]], np.ndarray, np.ndarray, np.ndarray]:
+        """One query's matching rows: the matched series keys ``(name,
+        sorted labels)``, and per row its index into them, ``ts`` in
+        microseconds and the value."""
+        lo = max(trunc_ms_to_s(q.start_ms) * 1_000_000, _I64.min)
+        hi = min(trunc_ms_to_s(q.end_ms) * 1_000_000, _I64.max) if q.end_ms > 0 else _I64.max
+        ids: dict[tuple[str, tuple[str, ...]], int] = {}  # -1: no match
+        series: list[tuple[str, tuple[str, ...]]] = []
+        out: list[tuple[np.ndarray, np.ndarray, np.ndarray]] = []
+        for pf in self._open_files(lo // _US_PER_DAY, hi // _US_PER_DAY):
+            for batch in pf.iter_batches(batch_size=8192, use_threads=False):
+                t = batch.column("ts").cast(pa.int64()).to_numpy()
+                names = batch.column("metric_name")
+                name_idx = names.indices.to_numpy()
+                name_ok = matchers.name_mask(names.dictionary)[name_idx]
+                rows = np.flatnonzero((t >= lo) & (t <= hi) & name_ok)
+                if not len(rows):
+                    continue
+                name_idx = name_idx[rows]
+                labels = batch.column("labels").take(rows)
+                off = labels.offsets.to_numpy()
+                elem = labels.values.indices.to_numpy()
+                starts = _series_runs(name_idx, off, elem)
+                name_dict = names.dictionary.to_pylist()
+                label_dict = labels.values.dictionary.to_pylist()
+                elem, off = elem.tolist(), off.tolist()
+                keys = [
+                    (name_dict[n], tuple(sorted([label_dict[e] for e in elem[off[r] : off[r + 1]]])))
+                    for r, n in zip(starts.tolist(), name_idx[starts].tolist())
+                ]
+                new = list(dict.fromkeys(k for k in keys if k not in ids))
+                if new:
+                    ok = matchers.labels_mask(pa.array([k[1] for k in new], pa.list_(pa.string())))
+                    for k, matched in zip(new, ok.tolist()):
+                        ids[k] = len(series) if matched else -1
+                        if matched:
+                            series.append(k)
+                sid = np.repeat([ids[k] for k in keys], np.diff(np.append(starts, len(rows))))
+                hit = sid >= 0
+                value = batch.column("value").to_numpy()
+                out.append((sid[hit], t[rows][hit], value[rows][hit]))
+        if not out:
+            return series, *(np.empty(0, dtype) for dtype in (np.int64, np.int64, np.float64))
+        sid, ts, values = (np.concatenate(cols) for cols in zip(*out))
+        return series, sid, ts, values
 
     # -- maintenance (S7/S8) ------------------------------------------------
 
@@ -302,3 +433,75 @@ class SamplesStore:
         per date partition — the OPTIMIZE analog for the micro-batch
         small-file problem."""
         self.rewrite(lambda rows: rows.repartition(PARTITION_COLUMN))
+
+
+def _list_files(root: str, first_day: int, last_day: int) -> list[str]:
+    """The parquet files under ``root`` in the date partitions from
+    ``first_day`` to ``last_day``.  Names starting with ``.`` or ``_`` are
+    skipped, as Spark's file index skips them; so is a partition directory
+    removed meanwhile (only an empty one is removed)."""
+    try:
+        parts = [e for e in os.scandir(root) if e.name.startswith(f"{PARTITION_COLUMN}=")]
+    except FileNotFoundError:  # nothing written yet
+        return []
+    files = []
+    for part in parts:
+        day = int(np.datetime64(part.name.partition("=")[2], "D").astype(np.int64))
+        if first_day <= day <= last_day:
+            with contextlib.suppress(FileNotFoundError):
+                files += sorted(e.path for e in os.scandir(part.path) if e.name[0] not in "._")
+    return files
+
+
+def _series_runs(name_idx: np.ndarray, off: np.ndarray, elem: np.ndarray) -> np.ndarray:
+    """First row of each run of rows with equal metric-name index and equal
+    label index lists (``off``: the list offsets into ``elem``)."""
+    lens = np.diff(off)
+    new = np.ones(len(name_idx), dtype=bool)
+    new[1:] = (name_idx[1:] != name_idx[:-1]) | (lens[1:] != lens[:-1])
+    # a row as long as the one before it: compare its labels element-wise
+    k = np.flatnonzero(np.repeat(~new, lens))
+    row = np.repeat(np.arange(len(name_idx)), lens)[k]
+    pos = off[0] + k
+    new[row[elem[pos] != elem[pos - lens[row]]]] = True
+    return np.flatnonzero(new)
+
+
+def _assemble(
+    series: list[tuple[str, tuple[str, ...]]],
+    sid: np.ndarray,
+    ts: np.ndarray,
+    values: np.ndarray,
+    interval_s: int | None,
+) -> list[prompb.TimeSeries]:
+    """The grouped max per (series, ``t``), as ``prompb.TimeSeries`` in
+    ``(name, sorted labels)`` order with samples time-ascending.
+
+    ``t`` is ``ts`` at raw resolution, else its bucket start, computed as
+    Spark's ``bucket_time`` does: whole seconds floored, minus their
+    remainder (which keeps the dividend's sign).  The max is taken as
+    Spark's ``max`` takes it: NaN above every number, and of equal values
+    (two NaNs, ``0.0`` and ``-0.0``) the first scanned.  It is the last row
+    of each group sorted by value, then by descending scan position; taking
+    a row keeps a NaN's bits (the staleness marker), where a ufunc
+    reduction would quiet it.
+    """
+    if not len(sid):
+        return []
+    if interval_s is not None:
+        secs = ts // 1_000_000
+        ts = (secs - np.fmod(secs, interval_s)) * 1_000_000
+    by_rank = sorted(range(len(series)), key=series.__getitem__)
+    rank = np.empty(len(series), dtype=np.int64)
+    rank[by_rank] = np.arange(len(series))
+    rank = rank[sid]
+    order = np.lexsort((-np.arange(len(values)), values, ts, rank))
+    rank, ts, values = rank[order], ts[order], values[order]
+    last = np.ones(len(rank), dtype=bool)
+    last[:-1] = (rank[1:] != rank[:-1]) | (ts[1:] != ts[:-1])
+    rank, ts_ms, values = rank[last], (ts[last] // 1000).tolist(), values[last].tolist()
+    bounds = [0, *(np.flatnonzero(np.diff(rank)) + 1).tolist(), len(rank)]
+    return [
+        row_to_timeseries(*series[by_rank[rank[a]]], ts_ms[a:b], values[a:b])
+        for a, b in zip(bounds, bounds[1:])
+    ]

@@ -21,8 +21,10 @@ from remote_tsdb_clickhouse_spark.sources.writer import TimeseriesWriter
 
 @pytest.fixture()
 def server(spark, tmp_path):
+    """The parquet leg as ``build_server`` wires it: ``/read`` is the store's
+    own scan."""
     store = SamplesStore(spark, str(tmp_path / "samples"))
-    app = AdapterApp(TimeseriesWriter(store), store.read)
+    app = AdapterApp(TimeseriesWriter(store), read_request_handler=store.read_request)
     srv = AdapterServer(app).start()
     yield srv, app
     srv.stop()
@@ -120,7 +122,7 @@ def test_out_of_range_timestamp_write_is_500_and_stores_nothing(server, tmp_path
         labels=[prompb.Label("__name__", "up")], samples=[prompb.Sample(1.0, 1704067200000)],
     )])
     assert _post(srv.port, "/write", codec.encode_write_request(ok))[0] == 200
-    before = sorted(tuple(r) for r in app.samples_provider().collect())
+    before = sorted(tuple(r) for r in app.writer.store.read().collect())
     files_before = sorted((tmp_path / "samples").rglob("*.parquet"))
 
     bad = prompb.WriteRequest(timeseries=[prompb.TimeSeries(
@@ -131,7 +133,7 @@ def test_out_of_range_timestamp_write_is_500_and_stores_nothing(server, tmp_path
     status, body = _post(srv.port, "/write", codec.encode_write_request(bad))
     assert status == 500 and b"outside years 1-9999" in body
     assert app.metrics.write_errors_total.value == errs0 + 1
-    assert sorted(tuple(r) for r in app.samples_provider().collect()) == before
+    assert sorted(tuple(r) for r in app.writer.store.read().collect()) == before
     assert sorted((tmp_path / "samples").rglob("*.parquet")) == files_before
 
 
@@ -147,14 +149,20 @@ def test_staleness_marker_bits_survive_write_and_read(server):
     """Prometheus marks a stale series with the NaN ``0x7ff0000000000002``.
     ClickHouse keeps those bits; so must the store: ``/read`` returns them
     raw, and as the bucket max of a step-hinted read (Spark's max orders
-    NaN above every number).  A Spark-written store holds the canonical
-    NaN ``0x7ff8000000000000`` instead."""
+    NaN above every number), whether the marker comes before or after the
+    bucket's other sample.  A Spark-written store holds the canonical NaN
+    ``0x7ff8000000000000`` instead."""
     srv, _ = server
     marker = 0x7FF0000000000002
     t0 = 1704067200000
     wr = prompb.WriteRequest(timeseries=[prompb.TimeSeries(
         labels=[prompb.Label("__name__", "up"), prompb.Label("job", "a")],
-        samples=[prompb.Sample(1.0, t0), prompb.Sample(_f64(marker), t0 + 10_000)],
+        samples=[
+            prompb.Sample(1.0, t0),
+            prompb.Sample(_f64(marker), t0 + 10_000),
+            prompb.Sample(_f64(marker), t0 + 30_000),
+            prompb.Sample(2.0, t0 + 40_000),
+        ],
     )])
     assert _post(srv.port, "/write", codec.encode_write_request(wr))[0] == 200
 
@@ -168,9 +176,11 @@ def test_staleness_marker_bits_survive_write_and_read(server):
         [series] = prompb.decode_read_response(codec.snappy_decompress(body)).results[0].timeseries
         return [(s.timestamp, _bits(s.value)) for s in series.samples]
 
-    assert read(ReadHints()) == [(t0, _bits(1.0)), (t0 + 10_000, marker)]
-    # step 60 s -> 30 s buckets: both samples share the first one
-    assert read(ReadHints(step_ms=60_000)) == [(t0, marker)]
+    assert read(ReadHints()) == [
+        (t0, _bits(1.0)), (t0 + 10_000, marker), (t0 + 30_000, marker), (t0 + 40_000, _bits(2.0)),
+    ]
+    # step 60 s -> 30 s buckets of two samples each
+    assert read(ReadHints(step_ms=60_000)) == [(t0, marker), (t0 + 30_000, marker)]
 
 
 def test_failed_commit_leaves_nothing(server, tmp_path, monkeypatch):
@@ -186,7 +196,7 @@ def test_failed_commit_leaves_nothing(server, tmp_path, monkeypatch):
     )])
     assert _post(srv.port, "/write", codec.encode_write_request(day))[0] == 200
     files = sorted(p for p in root.rglob("*") if p.is_file())
-    rows = sorted(tuple(r) for r in app.samples_provider().collect())
+    rows = sorted(tuple(r) for r in app.writer.store.read().collect())
 
     written = []
     real_write = pq.write_table
@@ -208,7 +218,7 @@ def test_failed_commit_leaves_nothing(server, tmp_path, monkeypatch):
     assert app.metrics.write_errors_total.value == errs0 + 1
     assert len(written) == 2  # the first partition's temp file was written
     assert sorted(p for p in root.rglob("*") if p.is_file()) == files
-    assert sorted(tuple(r) for r in app.samples_provider().collect()) == rows
+    assert sorted(tuple(r) for r in app.writer.store.read().collect()) == rows
 
 
 def test_canceled_read_not_counted_as_error(spark, tmp_path):
@@ -217,11 +227,11 @@ def test_canceled_read_not_counted_as_error(spark, tmp_path):
     from remote_tsdb_clickhouse_spark.plans.matchers import LabelMatcher, MatcherType
     from remote_tsdb_clickhouse_spark.plans.read_plan import ReadQuery
 
-    def gone_provider():
+    def gone(req, **_):
         raise ConnectionResetError("client went away")
 
     store = SamplesStore(spark, str(tmp_path / "samples"))
-    app = AdapterApp(TimeseriesWriter(store), gone_provider)
+    app = AdapterApp(TimeseriesWriter(store), gone)
     rr = prompb.ReadRequest(
         queries=[ReadQuery(start_ms=0, matchers=(LabelMatcher(MatcherType.EQ, "__name__", "x"),))]
     )
@@ -230,10 +240,10 @@ def test_canceled_read_not_counted_as_error(spark, tmp_path):
     assert app.metrics.read_requests_total.value == 1
     assert app.metrics.read_errors_total.value == 0
     # a genuine failure still counts
-    def broken_provider():
+    def broken(req, **_):
         raise RuntimeError("boom")
 
-    app2 = AdapterApp(TimeseriesWriter(store), broken_provider)
+    app2 = AdapterApp(TimeseriesWriter(store), broken)
     status, _ = app2.handle_read(codec.encode_read_request(rr))
     assert status == 500
     assert app2.metrics.read_errors_total.value == 1
@@ -1037,22 +1047,36 @@ def test_label_reexpansion_splits_at_first_equals():
     ]
 
 
-def test_read_runs_at_most_two_jobs(spark, tmp_path):
-    """One /read query is one hash exchange and one bounded pull: at most
-    two Spark jobs (the shuffle-map job and the Arrow collect), raw and
-    hinted alike — no range-exchange sampling job, no sort job."""
+def test_read_runs_no_spark_job(spark, tmp_path, monkeypatch):
+    """A /read on the parquet leg ``build_server`` wires runs no Spark job
+    and sends the JVM nothing, raw and hinted alike: the only py4j commands
+    allowed are the memory deletes (``m``/``d``) that py4j's finalizers send
+    when the garbage collector frees a Java object's wrapper."""
     import uuid
 
-    store = SamplesStore(spark, str(tmp_path / "samples"))
-    writer = TimeseriesWriter(store)
-    writer.write(prompb.WriteRequest(timeseries=[
+    from py4j.clientserver import ClientServerConnection
+
+    from remote_tsdb_clickhouse_spark.server.__main__ import build_server, parse_args
+
+    args = parse_args(["--http", "127.0.0.1:0", "--store", str(tmp_path / "samples"), "--create-if-missing"])
+    srv = build_server(args, spark=spark)
+    srv.httpd.server_close()  # the requests go to its app directly
+    app = srv.app
+    status, _ = app.handle_write(codec.encode_write_request(prompb.WriteRequest(timeseries=[
         prompb.TimeSeries(
             labels=[prompb.Label("__name__", "up"), prompb.Label("job", j)],
             samples=[prompb.Sample(float(i), 1704067200000 + 15000 * i) for i in range(8)],
         )
         for j in ("a", "b", "c")
-    ]))
-    app = AdapterApp(writer, store.read)
+    ])))
+    assert status == 200
+    sent = []
+    send_command = ClientServerConnection.send_command
+
+    def counting(conn, command, *a, **kw):
+        sent.append(command)
+        return send_command(conn, command, *a, **kw)
+
     sc = spark.sparkContext
     for kind, hints in (("raw", ReadHints()), ("hinted", ReadHints(step_ms=60000))):
         rr = prompb.ReadRequest(queries=[ReadQuery(
@@ -1064,15 +1088,18 @@ def test_read_runs_at_most_two_jobs(spark, tmp_path):
         body = codec.encode_read_request(rr)
         group = f"read-{kind}-{uuid.uuid4().hex}"
         sc.setJobGroup(group, group)
+        sent.clear()
+        monkeypatch.setattr(ClientServerConnection, "send_command", counting)
         try:
             status, payload = app.handle_read(body)
         finally:
+            monkeypatch.undo()
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert status == 200, payload
         resp = prompb.decode_read_response(codec.snappy_decompress(payload))
         assert len(resp.results[0].timeseries) == 3
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-        assert 1 <= len(jobs) <= 2, (kind, jobs)
+        assert [c for c in sent if not c.startswith("m\nd\n")] == [], kind
+        assert sc.statusTracker().getJobIdsForGroup(group) == [], kind
 
 
 # -- response order: the driver-side series sort vs Spark's ORDER BY ---------
@@ -1146,7 +1173,10 @@ def test_response_series_order_matches_spark_order_by(spark, store, queries):
     """handle_read_request orders series on the driver; the order (and
     every sample) must equal Spark's ``read_query_df(...).orderBy(
     "metric_name", "slb")`` over random stores and multi-query requests,
-    with samples time-ascending."""
+    with samples time-ascending.  The served path, ``SamplesStore.
+    read_request`` over the same rows committed by ``/write``, must give
+    the same response."""
+    import tempfile
     from datetime import datetime, timezone
 
     from remote_tsdb_clickhouse_spark.model import SAMPLES_SCHEMA
@@ -1162,6 +1192,17 @@ def test_response_series_order_matches_spark_order_by(spark, store, queries):
     df = spark.createDataFrame(rows, SAMPLES_SCHEMA)
     resp = handle_read_request(df, prompb.ReadRequest(queries=list(queries)))
     assert len(resp.results) == len(queries)
+    with tempfile.TemporaryDirectory() as tmp:
+        served = SamplesStore(spark, tmp)
+        TimeseriesWriter(served).write(prompb.WriteRequest(timeseries=[
+            prompb.TimeSeries(
+                labels=[prompb.Label("__name__", name)]
+                + [prompb.Label(*lb.split("=", 1)) for lb in _ORDER_LABELSETS[ls]],
+                samples=[prompb.Sample(v, (_BASE_S + s) * 1000) for s, v in samples],
+            )
+            for name, ls, samples in store
+        ]))
+        assert served.read_request(prompb.ReadRequest(queries=list(queries))) == resp
     for q, result in zip(queries, resp.results):
         want = [
             (

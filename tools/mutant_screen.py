@@ -221,8 +221,8 @@ MUTANTS = [
      'return F.exists(arr, lambda x: x.startswith(f"{m.name}=") & (x != F.lit(label)))',
      ["tests/test_matchers.py", "tests/test_matcher_properties.py"]),
     ("M6", "concat-anchoring -> upstream ^(?:...)$ wrap (read.go:104)", MA,
-     'return "^" + _to_java_dialect(check_re2_portable(pattern)) + "$"',
-     'return "^(?:" + _to_java_dialect(check_re2_portable(pattern)) + ")$"',
+     'return "^" + check_re2_portable(pattern) + "$"',
+     'return "^(?:" + check_re2_portable(pattern) + ")$"',
      ["tests/test_matchers.py", "tests/test_matcher_properties.py"]),
     ("M7", "as-of backward tie inclusivity flipped", AS,
      '.orderBy(F.col("__t").asc(), F.col("__is_right").desc())',
@@ -778,6 +778,22 @@ MUTANTS = [
      "return {name: _with_confs(fns[name]) for name in ORDER}",
      "return {name: fns[name] for name in ORDER}",
      ["tests/test_entry_contract.py"]),
+    # -- batch 26: the local store's /read without Spark -------------------
+    ("M114", "served /read keys series by their stored label order, not array_sort's",
+     "remote_tsdb_clickhouse_spark/sources/samples_store.py",
+     "tuple(sorted([label_dict[e] for e in elem[off[r] : off[r + 1]]]))",
+     "tuple([label_dict[e] for e in elem[off[r] : off[r + 1]]])",
+     ["tests/test_local_read.py"]),
+    ("M115", "served /read compares the upper bound in whole seconds, not microseconds",
+     "remote_tsdb_clickhouse_spark/sources/samples_store.py",
+     "rows = np.flatnonzero((t >= lo) & (t <= hi) & name_ok)",
+     "rows = np.flatnonzero((t >= lo) & (t // 1_000_000 <= hi // 1_000_000) & name_ok)",
+     ["tests/test_local_read.py"]),
+    ("M116", "served /read orders NaN below every number in the group max (drops NaN, as np.fmax)",
+     "remote_tsdb_clickhouse_spark/sources/samples_store.py",
+     "order = np.lexsort((-np.arange(len(values)), values, ts, rank))",
+     "order = np.lexsort((-np.arange(len(values)), np.nan_to_num(values, nan=-np.inf), ts, rank))",
+     ["tests/test_local_read.py", "tests/test_server.py"]),
 ]
 
 
