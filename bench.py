@@ -89,9 +89,7 @@ def warm_streaming_machinery(spark) -> None:
 
 def warm_suite(spark, sf_dir: str) -> None:
     """The complete untimed warmup the suite runs before its first timed
-    query — shared with tools/targeted_probe.py so a targeted re-measure
-    of one watch query is bench-identical by construction (the r12/r13
-    clean-point probes replicated this block by hand)."""
+    query."""
     # Warmup outside the timed region: JIT/codegen, parquet footer reads and
     # page-cache touch for every input table, and one Python worker spin-up
     # (per-query timings then measure query work, not one-time machinery)

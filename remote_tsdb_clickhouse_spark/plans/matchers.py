@@ -193,8 +193,6 @@ def compile_matcher(
     m: LabelMatcher,
     *,
     ignore_label: str | None = DEFAULT_READ_IGNORE_LABEL,
-    metric_col: str = "metric_name",
-    labels_col: str = "labels",
 ) -> Column | None:
     """Compile one matcher to a boolean ``Column``.
 
@@ -202,7 +200,7 @@ def compile_matcher(
     matcher (F8): the caller emits no predicate for it.
     """
     if m.name == NAME_LABEL:
-        col = F.col(metric_col)
+        col = F.col("metric_name")
         if m.type == MatcherType.EQ:
             return col == F.lit(m.value)  # F3
         if m.type == MatcherType.NEQ:
@@ -214,7 +212,7 @@ def compile_matcher(
         raise UnsupportedMatcherError(f"unsupported LabelMatcher type {m.type!r}")
 
     label = joined_label(m.name, m.value)
-    arr = F.col(labels_col)
+    arr = F.col("labels")
     if m.type == MatcherType.EQ:
         if ignore_label is not None and label == ignore_label:
             return None  # F8: routing label, never stored — emit no clause
@@ -234,22 +232,13 @@ def compile_matchers(
     matchers: list[LabelMatcher],
     *,
     ignore_label: str | None = DEFAULT_READ_IGNORE_LABEL,
-    metric_col: str = "metric_name",
-    labels_col: str = "labels",
 ) -> Column:
     """AND all matcher predicates together (``sqlbuilder.go:20``).
 
     An empty (or fully-ignored) matcher list compiles to ``TRUE``.
     """
     conds = [
-        c
-        for m in matchers
-        if (
-            c := compile_matcher(
-                m, ignore_label=ignore_label, metric_col=metric_col, labels_col=labels_col
-            )
-        )
-        is not None
+        c for m in matchers if (c := compile_matcher(m, ignore_label=ignore_label)) is not None
     ]
     if not conds:
         return F.lit(True)

@@ -9,21 +9,23 @@ Two storage legs, matching the reference's flag surface (``main.go:82-90``):
 
 - ``--store PATH`` — the parquet samples store (``-table``'s role is the
   path).  A local path or ``file:`` URI: ``/write`` commits by local
-  rename and ``/read`` scans the published files, neither through Spark;
-  Spark runs the analytics and the store's maintenance.
+  rename and ``/read`` scans the published files with pyarrow.
 - ``--db ADDR`` (+ ``--db.database/--db.username/--db.password``,
-  ``--table``) — the reference's exact deployment shape: Spark is the
-  engine, ClickHouse is the storage.  ``ADDR`` is the ClickHouse **HTTP
-  interface** (default port 8123) because the writer ships JSONEachRow over
-  HTTP (``sources/clickhouse.py``), not clickhouse-go's native TCP.
+  ``--table``) — the reference's exact deployment shape, ClickHouse is the
+  storage.  ``ADDR`` is the ClickHouse **HTTP interface** (default port
+  8123) because the writer ships JSONEachRow over HTTP
+  (``sources/clickhouse.py``), not clickhouse-go's native TCP.
 
-``--read.*`` flags are kept verbatim; ``--debug`` maps to Spark INFO logs
-(zap debug analog, ``main.go:91``).
+Like the reference's one Go process, the server starts no JVM: neither
+leg's ``/write`` or ``/read`` calls Spark.  ``--read.*`` flags are kept
+verbatim; ``--debug`` logs one access line per request on stderr (zap debug
+analog, ``main.go:91``).
 """
 
 from __future__ import annotations
 
 import argparse
+import logging
 import os
 import sys
 
@@ -87,7 +89,7 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.add_argument(
         "--debug",
         action="store_true",
-        help="verbose engine logs (main.go:92)",
+        help="log every request to stderr (main.go:92)",
     )
     p.add_argument(
         "--create-if-missing",
@@ -106,14 +108,13 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
 def build_server(args: argparse.Namespace, spark=None, http=None):
     """Construct (but don't start) the AdapterServer — separable for tests.
 
-    ``http`` (optional) is injected into the ClickHouse leg so tests can run
-    against a fake transport."""
-    from remote_tsdb_clickhouse_spark.server.http import AdapterApp, AdapterServer
-    from remote_tsdb_clickhouse_spark.session import get_spark
+    ``spark`` (optional) is handed to the store, which serves no request
+    with it; ``main()`` passes none.  ``http`` (optional) is injected into
+    the ClickHouse leg so tests can run against a fake transport."""
+    from remote_tsdb_clickhouse_spark.server.http import AdapterApp, AdapterServer, access_log
 
-    spark = spark or get_spark("remote-tsdb-clickhouse-spark")
-    if args.debug:
-        spark.sparkContext.setLogLevel("INFO")
+    # INFO, not unset, without --debug: no root logger level turns it on
+    access_log.setLevel(logging.DEBUG if args.debug else logging.INFO)
 
     if args.db is not None:
         from remote_tsdb_clickhouse_spark.sources.clickhouse import ClickHouseStore
@@ -162,8 +163,7 @@ def build_server(args: argparse.Namespace, spark=None, http=None):
 
     # /read is served by the store itself: ClickHouse runs the matcher and
     # downsample SQL (read.go:15-101), the parquet store scans its
-    # published files without Spark.  Spark keeps ingest, maintenance and
-    # the analytics
+    # published files without Spark
     app = AdapterApp(
         writer,
         ignore_label=args.read_ignore_label or None,
@@ -176,10 +176,12 @@ def build_server(args: argparse.Namespace, spark=None, http=None):
 
 def main(argv: list[str] | None = None) -> None:
     args = parse_args(argv)
+    logging.basicConfig(format="%(message)s")
     server = build_server(args)
-    # the zap "listening" line (main.go:155-160)
+    # the zap "listening" line (main.go:155-160), with the bound port
+    host, port = server.httpd.server_address[:2]
     backend = f"db={args.db} table={args.table}" if args.db else f"store={args.store}"
-    print(f"listening addr={args.http} {backend}", file=sys.stderr, flush=True)
+    print(f"listening addr={host}:{port} {backend}", file=sys.stderr, flush=True)
     server.start()
     try:
         server.join()

@@ -19,6 +19,7 @@ thin and separable from the engine — this file only moves bytes.
 
 from __future__ import annotations
 
+import logging
 import re
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -33,6 +34,10 @@ from remote_tsdb_clickhouse_spark.server.service import handle_read_request  # n
 from remote_tsdb_clickhouse_spark.sources.writer import TimeseriesWriter
 
 BANNER = b"remote-tsdb-clickhouse-spark\n"
+
+#: The per-request access log: ``BaseHTTPRequestHandler``'s line, at DEBUG
+#: (``--debug`` turns it on).
+access_log = logging.getLogger("remote_tsdb_clickhouse_spark.access")
 
 #: RFC 9112 chunk-size: 1*HEXDIG, bare — no sign, no 0x prefix, no
 #: underscores (all of which Python's int(s, 16) would happily accept).
@@ -126,8 +131,14 @@ def make_handler(app: AdapterApp):
         # malformed-stream paths set close_connection
         protocol_version = "HTTP/1.1"
 
-        def log_message(self, *args):  # quiet
-            pass
+        def log_message(self, format, *args):
+            if access_log.isEnabledFor(logging.DEBUG):
+                access_log.debug(
+                    "%s - - [%s] %s",
+                    self.address_string(),
+                    self.log_date_time_string(),
+                    format % args,
+                )
 
         def handle_one_request(self):
             """A client that resets the connection — typically while this

@@ -172,6 +172,10 @@ class ClickHouseStore:
     - ``read_parallel()`` — the samples frame, fetched executor-side in
       time ranges, for Spark-side analytics over the store.
 
+    ``spark`` may be ``None``: ``ping``, ``write`` and ``read_request``, the
+    server's calls, never use it.  ``read_parallel`` needs it; ``append``
+    runs on its frame's own session.
+
     Insert retries are at-least-once like the reference's batch insert
     (``write.go:25-60``): a re-sent payload duplicates rows, which collapse
     at read time under ``max(value)`` (SURVEY §2.8).

@@ -122,7 +122,16 @@ def _fsync(path: str) -> None:
 
 
 class SamplesStore:
-    def __init__(self, spark: SparkSession, path: str):
+    """The samples table at ``path`` (see the module docstring).
+
+    ``spark`` may be ``None``: a ``/write`` (:meth:`append` of a
+    ``pyarrow.Table``) and a ``/read`` (:meth:`read_request`) never use it.
+    A DataFrame :meth:`append`, :meth:`read`, :meth:`rewrite` and the
+    maintenance built on it, :meth:`import_tsv` and :meth:`export_tsv` need
+    it.
+    """
+
+    def __init__(self, spark: SparkSession | None, path: str):
         self.spark = spark
         self.path = path
         # concurrent DataFrame appends to one parquet root race on Spark's

@@ -794,6 +794,12 @@ MUTANTS = [
      "order = np.lexsort((-np.arange(len(values)), values, ts, rank))",
      "order = np.lexsort((-np.arange(len(values)), np.nan_to_num(values, nan=-np.inf), ts, rank))",
      ["tests/test_local_read.py", "tests/test_server.py"]),
+    # -- batch 27: crash consistency of the /write commit ------------------
+    ("M117", "/write commit writes the final file name directly (no temp file, no rename)",
+     "remote_tsdb_clickhouse_spark/sources/samples_store.py",
+     'tmp = os.path.join(part_dir, f".{name}.tmp")',
+     "tmp = os.path.join(part_dir, name)",
+     ["tests/test_cli.py"]),
 ]
 
 
@@ -878,9 +884,8 @@ def main(argv: list[str] | None = None) -> int:
     # VERDICT r17 "what's wrong": the old ``set(sys.argv[1:])`` treated
     # ANY token (``--help``, a typo'd ID) as a mutant-ID filter, selected
     # zero mutants, and the empty selection produced a spurious
-    # whole-tree refusal.  argparse (the tools/targeted_probe.py pattern)
-    # makes ``--help`` print usage, and unknown IDs are rejected loudly
-    # instead of silently selecting nothing.
+    # whole-tree refusal.  argparse makes ``--help`` print usage, and
+    # unknown IDs are rejected loudly instead of silently selecting nothing.
     parser = argparse.ArgumentParser(
         description="Apply each registered mutant (one flipped semantic "
                     "clause), run its killer test files, and require a "
